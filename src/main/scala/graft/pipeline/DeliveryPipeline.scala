@@ -42,15 +42,18 @@ final class DeliveryPipeline(
   /** Process one change batch. `now` injectable for tests. */
   def deliver(changes: DataFrame,
               now: Timestamp = new Timestamp(System.currentTimeMillis())): Disposition = {
-    // client allowlist is re-read EVERY batch (config is never cached —
-    // ExecuteTriggerHelper.cs:49 reads the entity per invocation)
+    // the client allowlist's pointer is re-read every batch
+    // (ExecuteTriggerHelper.cs:49 reads the entity per invocation); an answer
+    // is reused only at the same snapshot version
     val client = clientAllowlist.get(table)
     val latest = ChangeFeed.dedupLatest(changes, pk, versionCol)
     val projected = AllowlistProjection(latest, allowlistConfig, client)
 
     val outcome = sink.executeAction(projected, sinkParams)
     if (outcome.success) {
-      lease.setAttemptCount(table, 0, now)
+      // a lease already at 0 is left as it is: only its updated_at would
+      // change, and nothing reads that
+      if (!lease.attemptCount(table).contains(0)) lease.setAttemptCount(table, 0, now)
       Delivered
     } else {
       lastError.save(table, outcome.markerString, now)

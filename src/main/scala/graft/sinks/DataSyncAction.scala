@@ -109,21 +109,30 @@ object HttpPostAction {
     def post(url: String, body: String, timeoutMs: Long): (Int, String)
   }
 
-  /** JDK HttpClient transport (no extra deps). */
+  /** JDK HttpClient transport (no extra deps). One client per distinct
+    * connect timeout is shared by every driver and executor thread of the
+    * JVM: a client owns a selector thread and a connection pool, so a client
+    * per POST would start a thread per POST and never reuse a keep-alive
+    * connection. */
   object javaHttpPoster extends Poster {
+    import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+    import java.net.URI
+    import java.time.Duration
+
+    private val clients = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, HttpClient]()
+
+    private def client(connectTimeoutMs: Long): HttpClient =
+      clients.computeIfAbsent(connectTimeoutMs,
+        ms => HttpClient.newBuilder().connectTimeout(Duration.ofMillis(ms)).build())
+
     override def post(url: String, body: String, timeoutMs: Long): (Int, String) = {
-      import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-      import java.net.URI
-      import java.time.Duration
-      val client = HttpClient.newBuilder()
-        .connectTimeout(Duration.ofMillis(math.min(timeoutMs, 60000))).build()
       val req = HttpRequest.newBuilder(URI.create(url))
         .timeout(Duration.ofMillis(timeoutMs))
         .header("Content-Type", "application/json")
         .POST(HttpRequest.BodyPublishers.ofString(body))
         .build()
       try {
-        val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
+        val resp = client(math.min(timeoutMs, 60000)).send(req, HttpResponse.BodyHandlers.ofString())
         (resp.statusCode(), Option(resp.body()).getOrElse(""))
       } catch {
         case e: java.net.http.HttpTimeoutException => (408, s"timeout: ${e.getMessage}")

@@ -4,7 +4,7 @@ import graft.SparkSpec
 import graft.sinks.{DataSyncAction, SinkOutcome}
 import graft.state.{KVStore, LeaseStore}
 import org.apache.spark.sql.DataFrame
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 class DeliveryPipelineSpec extends SparkSpec {
@@ -21,8 +21,8 @@ class DeliveryPipelineSpec extends SparkSpec {
     }
   }
 
-  private def pipeline(sink: DataSyncAction) = {
-    val dir = Files.createTempDirectory("dp").toString
+  private def pipeline(sink: DataSyncAction,
+                       dir: String = Files.createTempDirectory("dp").toString) = {
     val client = new KVStore(spark, s"$dir/allowed")
     client.save("demo", "id,version,name", ts(1))
     val err = new KVStore(spark, s"$dir/err")
@@ -80,5 +80,23 @@ class DeliveryPipelineSpec extends SparkSpec {
     p.deliver(changes, ts(20))
     assert(sink.received(1)._1 == Seq("id", "version"),
       "next batch re-resolves the allowlist (never cached)")
+  }
+
+  test("a success leaves a lease already at 0 unwritten; after a failure it writes 0") {
+    val ok = SinkOutcome(success = true, 200, retryable = false, "")
+    val sink = new ScriptedSink(ok, ok, SinkOutcome(success = false, 503, retryable = true, "boom"), ok)
+    val dir = Files.createTempDirectory("dp").toString
+    val (p, _, lease, _) = pipeline(sink, dir)
+    def leaseVersion = Files.readString(Paths.get(dir, "lease", "_CURRENT")).trim
+    assert(p.deliver(changes, ts(10)) == p.Delivered)
+    val first = leaseVersion
+    assert(lease.attemptCount("demo").contains(0))
+    assert(p.deliver(changes, ts(20)) == p.Delivered)
+    assert(leaseVersion == first, "second success rewrote a lease already at 0")
+    p.deliver(changes, ts(30))
+    assert(lease.attemptCount("demo").contains(1))
+    assert(p.deliver(changes, ts(40)) == p.Delivered)
+    assert(lease.attemptCount("demo").contains(0))
+    assert(leaseVersion.toInt > first.toInt + 1, "the failure and the next success both write")
   }
 }

@@ -128,4 +128,31 @@ class HttpPostActionSpec extends SparkSpec {
       assert(received.get().startsWith("[{\"Operation\""))
     } finally server.stop(0)
   }
+
+  test("the JDK transport shares one client: 50 POSTs start no selector threads") {
+    import com.sun.net.httpserver.HttpServer
+    import java.net.InetSocketAddress
+    import scala.jdk.CollectionConverters._
+    def selectorThreads = Thread.getAllStackTraces.keySet.asScala
+      .count(t => t.getName.startsWith("HttpClient-") && t.getName.endsWith("-SelectorManager"))
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/post", exchange => {
+      exchange.getRequestBody.readAllBytes()
+      exchange.sendResponseHeaders(200, 2)
+      exchange.getResponseBody.write("ok".getBytes)
+      exchange.close()
+    })
+    server.start()
+    try {
+      val url = s"http://127.0.0.1:${server.getAddress.getPort}/post"
+      // the first POST may build the shared client for this timeout
+      assert(HttpPostAction.javaHttpPoster.post(url, "[]", 10000)._1 == 200)
+      val before = selectorThreads
+      (1 to 50).foreach { _ =>
+        assert(HttpPostAction.javaHttpPoster.post(url, "[]", 10000)._1 == 200)
+      }
+      assert(selectorThreads <= before,
+        s"selector threads went from $before to $selectorThreads over 50 POSTs")
+    } finally server.stop(0)
+  }
 }
