@@ -22,6 +22,15 @@ import java.sql.Timestamp
   *
   * Only driver-side scalars cross out of the executors (the SinkOutcome);
   * every data transformation is a DataFrame op.
+  *
+  * One-task rule: a batch that [[ChangeFeed.fitsOneTask]] (its plan's size
+  * estimate is within `spark.sql.autoBroadcastJoinThreshold`) is coalesced
+  * to one partition before the dedup. One partition already satisfies the
+  * dedup's clustering, so no exchange is planned, and scan, dedup,
+  * allowlist projection and JSON serialization run as ONE Spark job — the
+  * reference's 500-row batch (`Sql_Trigger_MaxBatchSize`) is one small
+  * file, which a shuffle could only slow down. Above the threshold (or with
+  * it at -1) the rule is inert and the dedup plans its shuffle as before.
   */
 final class DeliveryPipeline(
     table: String,
@@ -46,7 +55,8 @@ final class DeliveryPipeline(
     // (ExecuteTriggerHelper.cs:49 reads the entity per invocation); an answer
     // is reused only at the same snapshot version
     val client = clientAllowlist.get(table)
-    val latest = ChangeFeed.dedupLatest(changes, pk, versionCol)
+    val batch = if (ChangeFeed.fitsOneTask(changes)) changes.coalesce(1) else changes
+    val latest = ChangeFeed.dedupLatest(batch, pk, versionCol)
     val projected = AllowlistProjection(latest, allowlistConfig, client)
 
     val outcome = sink.executeAction(projected, sinkParams)

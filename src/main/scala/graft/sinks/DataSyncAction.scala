@@ -54,6 +54,15 @@ object SinkOutcome {
   *    must be idempotent (the trigger's redelivery dedup, T9, is the
   *    matching consumer-side guard).
   *
+  * The payload is cached only when the batch does NOT
+  * [[ChangeFeed.fitsOneTask]]: the `take` probe then caches the partitions
+  * it reads, and if the batch turns out large the per-partition pass reads
+  * them from cache instead of re-running the upstream plan. A batch that fits
+  * one task is not cached — under adaptive execution a cache costs its own
+  * table-cache stage on every batch, while the rare small-input batch over
+  * `maxSingleDocRows` rows merely re-reads an input no larger than the
+  * broadcast threshold.
+  *
   * The reference's 960 s timeout (HttpPostAction.cs:39 — code wins over the
   * 60 s doc comment) is the default `timeoutMs`.
   */
@@ -69,12 +78,10 @@ class HttpPostAction(poster: HttpPostAction.Poster = HttpPostAction.javaHttpPost
     val spark = changes.sparkSession
     import spark.implicits._
 
-    // persisted for the probe: `take` materializes (and caches) only the
-    // partitions it needs; if the batch turns out large, the mapPartitions
-    // pass reads those partitions from cache instead of re-executing the
-    // whole upstream plan a second time. Both paths consume inside this
-    // method, so the release point is well-defined (finally).
-    val payload = ChangeFeed.toJsonPayload(changes).as[String].persist()
+    val payload = ChangeFeed.toJsonPayload(changes).as[String]
+    // released in finally: both paths consume inside this method
+    val cached = !ChangeFeed.fitsOneTask(changes)
+    if (cached) payload.persist()
     try {
       val head = payload.take(maxSingleDocRows + 1)
       if (head.length <= maxSingleDocRows) {
@@ -97,7 +104,7 @@ class HttpPostAction(poster: HttpPostAction.Poster = HttpPostAction.javaHttpPost
             if (!acc.success) acc else if (!o.success) o else acc
           }
       }
-    } finally payload.unpersist(false)
+    } finally if (cached) payload.unpersist(false)
   }
 }
 

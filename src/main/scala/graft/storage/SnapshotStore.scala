@@ -1904,7 +1904,10 @@ object SnapshotStore {
 
   private[graft] def headerInfoOf(spark: SparkSession, dir: String,
                                   version: Long): HeaderInfo =
-    readRaw(spark, dir, version) match {
+    headerOf(readRaw(spark, dir, version))
+
+  private def headerOf(entry: Either[Manifest, CommitDelta]): HeaderInfo =
+    entry match {
       case Right(d) => HeaderInfo(d.version, d.operation, d.ts, d.schema,
         d.partitionCols, d.bloomCols, d.dvs, d.droppedCols, d.properties)
       case Left(m) => HeaderInfo(m.version, m.operation, m.ts, m.schema,
@@ -2136,14 +2139,20 @@ object SnapshotStore {
 
   // ------------------------------------------------------------ change feed
 
-  /** The files ADDED by each commit in `(fromVersion, toVersion]`,
-    * excluding [[RewriteOps]] commits (compaction/clustering rewrite
-    * rows into new files without logical change — surfacing them would
-    * re-deliver the whole table). Every version in the range must still
-    * be retained (not vacuumed): the per-version delta is computed
-    * against its immediate predecessor's manifest. */
-  def changedFiles(spark: SparkSession, dir: String,
-                   fromVersion: Long, toVersion: Long): Seq[String] = {
+  /** The change feed's RANGE VIEW of `(fromVersion, toVersion]`: a
+    * [[Manifest]] whose files are those the range's commits ADDED
+    * (excluding [[RewriteOps]] commits — compaction/clustering rewrite
+    * rows into new files without logical change, so surfacing them would
+    * re-deliver the whole table), each with the stats its own commit
+    * recorded, under `toVersion`'s header: schema, partition layout,
+    * column mapping and the full-state deletion vectors, which every log
+    * entry carries whole. That is all [[readFiles]] and
+    * [[SnapshotFileIndex]] consult, so the view is built from one log
+    * entry per version and never reconstructs the table's file list: a
+    * drain costs O(versions in range), whatever the table's size. Every
+    * version in the range must still be retained (not vacuumed). */
+  private def changeRange(spark: SparkSession, dir: String,
+                          fromVersion: Long, toVersion: Long): Manifest = {
     require(fromVersion <= toVersion,
       s"fromVersion $fromVersion must be <= toVersion $toVersion")
     // per-version existence probes, NOT a full `_manifests` listing —
@@ -2153,24 +2162,45 @@ object SnapshotStore {
       .find(v => !manifestExists(spark, dir, v)).foreach(v => sys.error(
       s"version $v in ($fromVersion, $toVersion] is not retained at $dir — " +
         "the change feed needs every manifest in the range"))
-    (fromVersion + 1 to toVersion).flatMap { v =>
+    val added = Seq.newBuilder[(String, Option[FileStats])]
+    var header = Option.empty[HeaderInfo]
+    (fromVersion + 1 to toVersion).foreach { v =>
+      val entry = readRaw(spark, dir, v)
+      header = Some(headerOf(entry))
       // the action-delta encoding answers "what did v add" in ONE small
       // read; only legacy self-contained entries still diff against the
       // predecessor's reconstructed state
-      readRaw(spark, dir, v) match {
-        case Right(d) =>
-          if (RewriteOps(d.operation)) Seq.empty else d.adds.map(_._1)
+      added ++= (entry match {
+        case Right(d) => if (RewriteOps(d.operation)) Nil else d.adds
         case Left(m) =>
-          if (RewriteOps(m.operation)) Seq.empty
+          if (RewriteOps(m.operation)) Nil
           else {
             val prev: Set[String] =
               if (v - 1 >= 1) manifest(spark, dir, v - 1).files.toSet
               else Set.empty
-            m.files.filterNot(prev)
+            m.files.filterNot(prev).map(f => f -> m.stats.get(f))
           }
-      }
+      })
     }
+    val adds = added.result()
+    header.getOrElse(headerInfoOf(spark, dir, toVersion)).lite.copy(
+      files = adds.map(_._1),
+      stats = adds.collect { case (f, Some(st)) => f -> st }.toMap)
   }
+
+  /** The files ADDED by each commit in `(fromVersion, toVersion]` — the
+    * file list of [[changeRange]]. */
+  def changedFiles(spark: SparkSession, dir: String,
+                   fromVersion: Long, toVersion: Long): Seq[String] =
+    changeRange(spark, dir, fromVersion, toVersion).files
+
+  /** A range view's read of none of its files: the empty frame at
+    * `toVersion`'s schema, read through the same index a partitioned
+    * table's files read through. */
+  private def emptyRange(spark: SparkSession, dir: String,
+                         view: Manifest): DataFrame =
+    if (view.schema.isEmpty) readAsOf(spark, dir, view.version).limit(0)
+    else SnapshotFileIndex.readFilesOf(spark, dir, view, Seq.empty)
 
   /** File-grain CDC read: the rows added between two committed versions
     * (`(fromVersion, toVersion]`), delivered by scanning ONLY the files
@@ -2181,16 +2211,19 @@ object SnapshotStore {
     * README.md:19-23). Append-grain: full-snapshot `commit`s surface
     * their newly written files; rewrite commits surface nothing; row
     * deletions are not represented (this is an ADD feed — the snapshot
-    * diff [[diffVersions]] is the row-grain form). */
+    * diff [[diffVersions]] is the row-grain form), except that a
+    * deletion vector `toVersion` holds over an added file masks its
+    * deleted rows. Reads the [[changeRange]] view: one log entry per
+    * version in the range, no manifest reconstruction. */
   def readChangesSince(spark: SparkSession, dir: String,
                        fromVersion: Long, toVersion: Long): DataFrame = {
-    val files = changedFiles(spark, dir, fromVersion, toVersion)
-    if (files.isEmpty) readAsOf(spark, dir, toVersion).limit(0)
-    else readFiles(spark, dir, manifest(spark, dir, toVersion), files)
+    val view = changeRange(spark, dir, fromVersion, toVersion)
+    if (view.files.isEmpty) emptyRange(spark, dir, view)
+    else readFiles(spark, dir, view, view.files)
   }
 
   /** [[readChangesSince]] with data skipping: the added-file list is
-    * further pruned by each commit's per-file stats before the scan,
+    * further pruned by each file's commit-time stats before the scan,
     * and the predicate's row form applies as the residual filter — an
     * incremental consumer that only wants a slice (one language, one id
     * range) touches neither history NOR the off-slice files of the new
@@ -2198,23 +2231,11 @@ object SnapshotStore {
   def readChangesSinceWhere(spark: SparkSession, dir: String,
                             fromVersion: Long, toVersion: Long,
                             pred: FilePredicate): DataFrame = {
-    val files = changedFiles(spark, dir, fromVersion, toVersion)
-    // stats live in each file's OWN commit entry; toVersion's state
-    // carries them forward for append chains, but rewrite interleavings
-    // can drop carried stats, so consult the whole range — one small
-    // read per version (the delta's adds carry their stats inline)
-    val stats = (math.max(1L, fromVersion) to toVersion)
-      .flatMap(v => readRaw(spark, dir, v) match {
-        case Right(d) => d.adds.flatMap { case (f, st) => st.map(f -> _) }
-        case Left(m) => m.stats.toSeq
-      }).toMap
-    val toM = manifest(spark, dir, toVersion)
-    val physPred = toPhysicalPred(pred, mappingOf(toM))
-    val keep = pruneWithBlooms(spark, files, stats.get, physPred)
-    if (keep.isEmpty) readAsOf(spark, dir, toVersion)
-      .filter(pred.toColumn).limit(0)
-    else readFiles(spark, dir, manifest(spark, dir, toVersion), keep)
-      .filter(pred.toColumn)
+    val view = changeRange(spark, dir, fromVersion, toVersion)
+    val keep = pruneWithBlooms(spark, view.files, view.stats.get,
+      toPhysicalPred(pred, mappingOf(view)))
+    (if (keep.isEmpty) emptyRange(spark, dir, view)
+     else readFiles(spark, dir, view, keep)).filter(pred.toColumn)
   }
 
   // ---------------------------------------------------------------- writers

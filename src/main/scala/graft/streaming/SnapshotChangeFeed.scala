@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.storage.SnapshotStore
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** High-water-mark consumer of the snapshot store's file-grain change
@@ -10,8 +10,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * failed delivery redelivers the same batch):
   *
   *  - the high-water mark is the last successfully delivered VERSION,
-  *    persisted as a one-line checkpoint file via the same temp-write +
-  *    atomic-rename protocol as the store's manifests;
+  *    persisted as a one-line checkpoint file: the new mark is written
+  *    to a temp file and renamed over the old one in ONE step, so a
+  *    crash or a failed rename leaves the previous mark readable — never
+  *    no mark, which would read as 0 and redeliver all of history;
   *  - each [[drainOnce]] delivers the rows of versions
   *    `(hwm, latest]` through [[SnapshotStore.readChangesSince]] —
   *    scanning ONLY the files those commits added, never history — and
@@ -22,14 +24,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - rewrite commits (compaction / re-clustering) never surface, so
   *    maintenance cannot re-deliver the corpus.
   *
-  * Scale shape: a drain reads one checkpoint line + the range's
-  * manifests (driver-side, O(versions in range)) and scans only the
-  * added files; the consumer state is ONE long, so any number of
-  * independent consumers can follow one table with their own marks. */
+  * Scale shape: a drain reads the checkpoint line and ONE log entry per
+  * version in the range (driver-side, O(versions in range)) — it never
+  * rebuilds the table's manifest, so its cost does not grow with the
+  * table — and scans only the added files; the consumer state is ONE
+  * long, so any number of independent consumers can follow one table
+  * with their own marks. */
 object SnapshotChangeFeed {
 
+  // the mark bypasses a checksummed store's `.crc` sidecar: the sidecar
+  // is renamed after the data, so a read between the two renames — or
+  // after a crash there — would check the new mark against the old sum
   private def fs(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case f => f
+    }
 
   /** Last successfully delivered version (0 = nothing yet). */
   def highWaterMark(spark: SparkSession, checkpointFile: String): Long = {
@@ -52,9 +62,13 @@ object SnapshotChangeFeed {
     if (f.exists(tmp)) f.delete(tmp, false)
     val out = f.create(tmp, false)
     try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    if (f.exists(p)) f.delete(p, false)
+    // one step, the old mark never deleted first: a POSIX rename replaces
+    // its target atomically; a store whose plain rename refuses an
+    // existing target (HDFS) replaces it through FileContext's OVERWRITE
+    // rename, which it also performs atomically
     if (!f.rename(tmp, p))
-      throw new java.io.IOException(s"cannot advance change-feed mark at $p")
+      FileContext.getFileContext(p.toUri, f.getConf)
+        .rename(tmp, p, Options.Rename.OVERWRITE)
   }
 
   /** Deliver everything committed past the mark, once: `deliver(rows,

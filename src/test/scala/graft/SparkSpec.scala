@@ -30,4 +30,17 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** Engine counter deltas over `body`, with the listener bus drained on
+    * both sides (the MetricsAssertionsSpec recipe). */
+  protected def counted(body: => Unit): Map[String, Long] = {
+    val l = graft.observability.Observability.attach(spark)
+    try {
+      org.apache.spark.graft.ListenerBusBridge.drain(spark.sparkContext)
+      val before = l.snapshot
+      body
+      org.apache.spark.graft.ListenerBusBridge.drain(spark.sparkContext)
+      l.snapshot.map { case (k, v) => k -> (v - before(k)) }
+    } finally graft.observability.Observability.detach(spark, l)
+  }
 }

@@ -1,11 +1,15 @@
 package graft.pipeline
 
 import graft.SparkSpec
-import graft.sinks.{DataSyncAction, SinkOutcome}
+import graft.sinks.{DataSyncAction, HttpPostAction, SinkOutcome}
 import graft.state.{KVStore, LeaseStore}
+import graft.storage.SnapshotStore
+import com.sun.net.httpserver.HttpServer
 import org.apache.spark.sql.DataFrame
+import java.net.InetSocketAddress
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
+import java.util.concurrent.ConcurrentLinkedQueue
 
 class DeliveryPipelineSpec extends SparkSpec {
 
@@ -22,7 +26,8 @@ class DeliveryPipelineSpec extends SparkSpec {
   }
 
   private def pipeline(sink: DataSyncAction,
-                       dir: String = Files.createTempDirectory("dp").toString) = {
+                       dir: String = Files.createTempDirectory("dp").toString,
+                       sinkParams: Map[String, String] = Map("baseUrl" -> "http://x")) = {
     val client = new KVStore(spark, s"$dir/allowed")
     client.save("demo", "id,version,name", ts(1))
     val err = new KVStore(spark, s"$dir/err")
@@ -30,7 +35,7 @@ class DeliveryPipelineSpec extends SparkSpec {
     (new DeliveryPipeline("demo", Seq("id"), "version",
       allowlistConfig = Some("ID"), clientAllowlist = client,
       lastError = err, lease = lease, sink = sink,
-      sinkParams = Map("baseUrl" -> "http://x")), err, lease, client)
+      sinkParams = sinkParams), err, lease, client)
   }
 
   private def changes = {
@@ -98,5 +103,95 @@ class DeliveryPipelineSpec extends SparkSpec {
     assert(p.deliver(changes, ts(40)) == p.Delivered)
     assert(lease.attemptCount("demo").contains(0))
     assert(leaseVersion.toInt > first.toInt + 1, "the failure and the next success both write")
+  }
+
+  /** A live endpoint on a local socket answering 200. Each POST is recorded
+    * with the number of persisted RDDs at the moment it arrived: the sink
+    * posts after its probe, so a cached payload is counted there. */
+  private def withEndpoint(body: (String, ConcurrentLinkedQueue[(String, Int)]) => Unit): Unit = {
+    val posts = new ConcurrentLinkedQueue[(String, Int)]()
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/post", exchange => {
+      posts.add((new String(exchange.getRequestBody.readAllBytes(), "UTF-8"),
+        spark.sparkContext.getPersistentRDDs.size))
+      exchange.sendResponseHeaders(200, 2)
+      exchange.getResponseBody.write("ok".getBytes)
+      exchange.close()
+    })
+    server.start()
+    try body(s"http://127.0.0.1:${server.getAddress.getPort}", posts)
+    finally server.stop(0)
+  }
+
+  /** The change feed's batch over a two-commit snapshot table: one file per
+    * commit, and key 1 superseded by the second. */
+  private def twoFileBatch(dir: String): DataFrame = {
+    import spark.implicits._
+    val table = s"$dir/table"
+    def rows(rs: (Long, Long, String, String)*) =
+      rs.toDF("id", "version", "name", "secret").coalesce(1)
+    SnapshotStore.commit(spark, table, rows((1L, 1L, "v1", "x"), (2L, 1L, "w1", "x")), "ingest")
+    SnapshotStore.commitAppend(spark, table, rows((1L, 2L, "v2", "x")), "append")
+    assert(SnapshotStore.changedFiles(spark, table, 0L, 2L).length == 2)
+    SnapshotStore.readChangesSince(spark, table, 0L, 2L)
+  }
+
+  private def docs(body: String): Set[String] =
+    body.stripPrefix("[").stripSuffix("]").split("(?<=\\}\\}),").toSet
+
+  private val expectedDocs = Set(
+    """{"Operation":"Upsert","Item":{"id":1,"version":2,"name":"v2"}}""",
+    """{"Operation":"Upsert","Item":{"id":2,"version":1,"name":"w1"}}""")
+
+  test("a warmed delivery of a small multi-file batch is one stage with no shuffle") {
+    withEndpoint { (url, posts) =>
+      val dir = Files.createTempDirectory("dp").toString
+      val batch = twoFileBatch(dir)
+      val (p, _, _, _) = pipeline(new HttpPostAction(), dir,
+        Map("baseUrl" -> url, "route" -> "/post", "timeoutMs" -> "10000"))
+      // warm: the allowlist and lease reads are memoized, the lease set to 0
+      assert(p.deliver(batch, ts(10)) == p.Delivered)
+      val c = counted(assert(p.deliver(batch, ts(20)) == p.Delivered))
+      assert(c("stagesCompleted") == 1L,
+        s"scan, dedup, allowlist and JSON must run as one stage: $c")
+      assert(c("shuffleBytesWritten") == 0L, s"a batch that fits one task shuffles nothing: $c")
+      assert(posts.size == 2)
+      posts.forEach { case (body, _) => assert(docs(body) == expectedDocs, body) }
+    }
+  }
+
+  test("above the broadcast threshold the dedup keeps its exchange and the " +
+    "sink caches; the POSTed rows are those of the one-task path") {
+    class PlanRecordingSink(inner: DataSyncAction) extends DataSyncAction {
+      var plans = List.empty[String]
+      override def executeAction(changes: DataFrame, params: Map[String, String]): SinkOutcome = {
+        plans :+= changes.queryExecution.executedPlan.toString
+        inner.executeAction(changes, params)
+      }
+    }
+    withEndpoint { (url, posts) =>
+      val dir = Files.createTempDirectory("dp").toString
+      val batch = twoFileBatch(dir)
+      val sink = new PlanRecordingSink(new HttpPostAction())
+      val (p, _, _, _) = pipeline(sink, dir,
+        Map("baseUrl" -> url, "route" -> "/post", "timeoutMs" -> "10000"))
+      val persisted0 = spark.sparkContext.getPersistentRDDs.size
+      assert(p.deliver(batch, ts(10)) == p.Delivered)
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val saved = spark.conf.getOption(key)
+      spark.conf.set(key, "-1")
+      try assert(p.deliver(batch, ts(20)) == p.Delivered)
+      finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      val Seq(oneTask, above) = sink.plans
+      assert(!oneTask.contains("Exchange"), oneTask)
+      assert(above.contains("Exchange"), above)
+      val Seq((oneTaskBody, oneTaskCached), (aboveBody, aboveCached)) =
+        posts.toArray(Array.empty[(String, Int)]).toSeq
+      assert(oneTaskCached == persisted0, "a batch that fits one task is not cached")
+      assert(aboveCached > persisted0, "above the threshold the payload is cached")
+      assert(docs(oneTaskBody) == expectedDocs && docs(aboveBody) == expectedDocs)
+      assert(spark.sparkContext.getPersistentRDDs.size == persisted0,
+        "the cached payload is released after the POST")
+    }
   }
 }

@@ -1,8 +1,6 @@
 package graft.state
 
 import graft.SparkSpec
-import graft.observability.Observability
-import org.apache.spark.graft.ListenerBusBridge
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
@@ -10,19 +8,6 @@ class KVStoreSpec extends SparkSpec {
 
   private def tmp = Files.createTempDirectory("kvstore").toString
   private def ts(ms: Long) = new Timestamp(ms)
-
-  /** Engine counter deltas over `body`, with the listener bus drained on
-    * both sides (the MetricsAssertionsSpec recipe). */
-  private def counted(body: => Unit): Map[String, Long] = {
-    val l = Observability.attach(spark)
-    try {
-      ListenerBusBridge.drain(spark.sparkContext)
-      val before = l.snapshot
-      body
-      ListenerBusBridge.drain(spark.sparkContext)
-      l.snapshot.map { case (k, v) => k -> (v - before(k)) }
-    } finally Observability.detach(spark, l)
-  }
 
   private def pointer(dir: String) = Files.readString(Paths.get(dir, "_CURRENT")).trim
 

@@ -660,6 +660,90 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(added.count(f => stats.get(f).forall(pred.mightMatch)) < added.length)
   }
 
+  test("the change feed reads one log entry per version in its range, " +
+    "never walking back to the checkpoint") {
+    val dir = freshDir()
+    SnapshotStore.commit(spark, dir, docs(1L -> "a"), "ingest")
+    (2L to 16L).foreach(v =>
+      SnapshotStore.commitAppend(spark, dir, docs(v -> s"t$v"), "append"))
+    // v10 carries the last checkpoint: a reconstruction of v16 would open
+    // it and the six deltas after it
+    import SnapshotStore.FilePredicate._
+    def reads[T](body: => T): (T, Long) = {
+      SnapshotStore.clearManifestCacheForTest()
+      val mr0 = SnapshotStore.manifestReadCount.get()
+      val out = body
+      (out, SnapshotStore.manifestReadCount.get() - mr0)
+    }
+    val (got, n) = reads(SnapshotStore.readChangesSince(spark, dir, 15L, 16L)
+      .as[(Long, String)].collect().toSeq)
+    assert(got == Seq(16L -> "t16"))
+    assert(n <= 2, s"readChangesSince(15, 16) opened $n log entries")
+    val (sliced, m) = reads(SnapshotStore.readChangesSinceWhere(spark, dir,
+      14L, 16L, EqTo("doc_id", 15L)).as[(Long, String)].collect().toSeq)
+    assert(sliced == Seq(15L -> "t15"))
+    assert(m <= 2, s"readChangesSinceWhere(14, 16) opened $m log entries")
+  }
+
+  test("a range file masked by a deletion vector at toVersion reads " +
+    "without its deleted rows") {
+    val dir = freshDir()
+    SnapshotStore.commit(spark, dir, docs(1L -> "a"), "ingest")
+    SnapshotStore.commitAppend(spark, dir,
+      docs(2L -> "b", 3L -> "c", 4L -> "d").coalesce(1), "append")
+    import SnapshotStore.FilePredicate._
+    val v = SnapshotStore.deleteWhereDv(spark, dir, EqTo("doc_id", 3L))
+    assert(SnapshotStore.manifest(spark, dir, v).dvs.nonEmpty,
+      "the delete must mask the file with a vector, not rewrite it")
+    assert(SnapshotStore.readChangesSince(spark, dir, 1L, v)
+      .as[(Long, String)].collect().toSet == Set(2L -> "b", 4L -> "d"))
+    assert(SnapshotStore.readChangesSinceWhere(spark, dir, 1L, v,
+      GtEq("doc_id", 3L)).as[(Long, String)].collect().toSet == Set(4L -> "d"))
+  }
+
+  test("a partitioned table's range reads its partition values") {
+    val dir = freshDir()
+    def rows(rs: (Long, String, String)*) = rs.toDF("doc_id", "text", "lang")
+    SnapshotStore.commit(spark, dir, rows((1L, "a", "en"), (2L, "b", "de")),
+      "ingest", partitionBy = Seq("lang"))
+    SnapshotStore.commitAppend(spark, dir,
+      rows((3L, "c", "fr"), (4L, "d", "en")), "append")
+    val got = SnapshotStore.readChangesSince(spark, dir, 1L, 2L)
+    assert(got.columns.toSeq == Seq("doc_id", "text", "lang"))
+    assert(got.as[(Long, String, String)].collect().toSet ==
+      Set((3L, "c", "fr"), (4L, "d", "en")))
+    import SnapshotStore.FilePredicate._
+    assert(SnapshotStore.readChangesSinceWhere(spark, dir, 1L, 2L,
+      EqTo("lang", "en")).as[(Long, String, String)].collect().toSeq ==
+      Seq((4L, "d", "en")))
+    // an empty range keeps the table's columns
+    val empty = SnapshotStore.readChangesSince(spark, dir, 2L, 2L)
+    assert(empty.count() == 0L &&
+      empty.columns.toSeq == Seq("doc_id", "text", "lang"))
+  }
+
+  test("readChangesSinceWhere equals the filtered readChangesSince over " +
+    "rewrites and a column rename") {
+    val dir = freshDir()
+    def frame(lo: Long, hi: Long) =
+      (lo to hi).map(i => (i, s"t$i")).toDF("doc_id", "text").repartition(2)
+    SnapshotStore.commit(spark, dir, frame(1L, 40L), "ingest")
+    SnapshotStore.commitAppend(spark, dir, frame(41L, 80L), "append")
+    SnapshotStore.compact(spark, dir, targetFileBytes = 64L * 1024 * 1024)
+    SnapshotStore.renameColumn(spark, dir, "doc_id", "id")
+    val latest = SnapshotStore.commitAppend(spark, dir,
+      frame(81L, 120L).withColumnRenamed("doc_id", "id"), "append")
+    import SnapshotStore.FilePredicate._
+    for (from <- 0L until latest;
+         pred <- Seq(between("id", 30L, 90L), EqTo("id", 100L), Lt("id", 0L))) {
+      def ids(df: org.apache.spark.sql.DataFrame) =
+        df.select("id").as[Long].collect().toSet
+      assert(ids(SnapshotStore.readChangesSinceWhere(spark, dir, from, latest, pred)) ==
+        ids(SnapshotStore.readChangesSince(spark, dir, from, latest)
+          .filter(pred.toColumn)), s"range ($from, $latest] under $pred")
+    }
+  }
+
   test("deleteWhere rewrites ONLY might-match files; answer = full-scan filter") {
     val dir = freshDir()
     val df = (1L to 400L).map(i => (i, s"t$i", (i % 5).toDouble))

@@ -2,6 +2,23 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.storage.SnapshotStore
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+
+/** The local filesystem under a scheme of its own whose next rename throws
+  * once armed — the failure (or crash) point between writing a new mark
+  * and publishing it. Top-level: Hadoop instantiates it by class name. */
+class FaultyRenameFileSystem extends RawLocalFileSystem {
+  override def getUri: java.net.URI =
+    java.net.URI.create(s"${FaultyRenameFileSystem.Scheme}:///")
+  override def rename(src: Path, dst: Path): Boolean =
+    if (FaultyRenameFileSystem.failNext.getAndSet(false))
+      throw new java.io.IOException(s"injected rename failure: $src -> $dst")
+    else super.rename(src, dst)
+}
+object FaultyRenameFileSystem {
+  val Scheme = "faultyrename"
+  val failNext = new java.util.concurrent.atomic.AtomicBoolean(false)
+}
 
 /** Contract of the high-water-mark change-feed consumer: exactly-once
   * delivery per version range on success, SAME-range redelivery on a
@@ -60,6 +77,30 @@ class SnapshotChangeFeedSpec extends SparkSpec {
     }
     assert(r.contains((0L, 1L)) && got.toSet == Set(1L -> "a"),
       "the failed range redelivers intact")
+  }
+
+  test("a failed mark advance leaves the previous mark readable") {
+    spark.sparkContext.hadoopConfiguration.set(
+      s"fs.${FaultyRenameFileSystem.Scheme}.impl",
+      classOf[FaultyRenameFileSystem].getName)
+    val dir = freshDir()
+    val ckpt = s"${FaultyRenameFileSystem.Scheme}://${freshDir()}/mark"
+    def drain(got: Long => Unit = _ => ()) =
+      SnapshotChangeFeed.drainOnce(spark, dir, ckpt) { (rows, _, _) =>
+        rows.select("doc_id").as[Long].collect().foreach(got)
+      }
+    SnapshotStore.commit(spark, dir, docs(1L -> "a"), "ingest")
+    assert(drain().contains((0L, 1L)))
+    SnapshotStore.commitAppend(spark, dir, docs(2L -> "b"), "append")
+    FaultyRenameFileSystem.failNext.set(true)
+    try intercept[java.io.IOException](drain())
+    finally FaultyRenameFileSystem.failNext.set(false)
+    assert(SnapshotChangeFeed.highWaterMark(spark, ckpt) == 1L,
+      "a failed advance must keep the old mark, not leave none (which reads 0)")
+    val got = scala.collection.mutable.Buffer.empty[Long]
+    assert(drain(got += _).contains((1L, 2L)) && got == Seq(2L),
+      "the range whose mark failed to advance redelivers, nothing before it")
+    assert(SnapshotChangeFeed.highWaterMark(spark, ckpt) == 2L)
   }
 
   test("independent consumers follow one table with their own marks") {
