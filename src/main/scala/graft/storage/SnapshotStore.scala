@@ -1482,26 +1482,39 @@ object SnapshotStore {
     * earliest retained version), so reconstruction reads O(interval)
     * small files — never a log replay. */
   def manifest(spark: SparkSession, dir: String, version: Long): Manifest = {
-    val key = (pathKey(dir), version)
-    val st = try Some(fs(spark, dir).getFileStatus(manifestPath(dir, version)))
-             catch { case _: java.io.IOException => None }
-    st.foreach { s0 =>
-      manifestCache.synchronized(Option(manifestCache.get(key))) match {
-        case Some(ref) => Option(ref.get) match {
-          case Some(c) if c.len == s0.getLen &&
-              c.mtime == s0.getModificationTime => return c.m
-          case _ => manifestCache.synchronized(manifestCache.remove(key))
-        }
-        case None => ()
-      }
+    lazy val st = manifestStatus(spark, dir, version)
+    cachedManifest(dir, version, st).getOrElse {
+      val m = reconstructManifest(spark, dir, version)
+      st.foreach(s0 => manifestCache.synchronized(manifestCache.put(
+        (pathKey(dir), version), new java.lang.ref.SoftReference(
+          CachedManifest(s0.getLen, s0.getModificationTime, m)))))
+      m
     }
-    val m = reconstructManifest(spark, dir, version)
-    st.foreach(s0 => manifestCache.synchronized(manifestCache.put(key,
-      new java.lang.ref.SoftReference(
-        CachedManifest(s0.getLen, s0.getModificationTime, m)))))
-    m
   }
 
+  private def manifestStatus(spark: SparkSession, dir: String, version: Long)
+      : Option[org.apache.hadoop.fs.FileStatus] =
+    try Some(fs(spark, dir).getFileStatus(manifestPath(dir, version)))
+    catch { case _: java.io.IOException => None }
+
+  /** The cached manifest of `version` when its entry still matches the
+    * manifest file's (length, mtime) `st` — stat only when an entry
+    * exists; a stale or reclaimed entry is dropped. */
+  private def cachedManifest(dir: String, version: Long,
+                             st: => Option[org.apache.hadoop.fs.FileStatus])
+      : Option[Manifest] = {
+    val key = (pathKey(dir), version)
+    manifestCache.synchronized(Option(manifestCache.get(key))).flatMap { ref =>
+      val hit = Option(ref.get).filter(c => st.exists(s0 =>
+        c.len == s0.getLen && c.mtime == s0.getModificationTime))
+      if (hit.isEmpty) manifestCache.synchronized(manifestCache.remove(key))
+      hit.map(_.m)
+    }
+  }
+
+  // The walk-back takes a base this JVM already holds (the previous
+  // interval checkpoint's commit cached it) before loading a checkpoint,
+  // which is a Spark job.
   private def reconstructManifest(spark: SparkSession, dir: String,
                                   version: Long): Manifest =
     readCheckpoint(spark, dir, version).getOrElse {
@@ -1515,7 +1528,8 @@ object SnapshotStore {
             require(w >= 1,
               s"version $version at $dir has no reconstruction base — " +
                 "the action log reaches below the first commit (corrupt log)")
-            base = readCheckpoint(spark, dir, w)
+            base = cachedManifest(dir, w, manifestStatus(spark, dir, w))
+              .orElse(readCheckpoint(spark, dir, w))
             if (base.isEmpty) readRaw(spark, dir, w) match {
               case Left(full) => base = Some(full)
               case Right(d) => deltas = d :: deltas; w -= 1
@@ -3448,10 +3462,14 @@ object SnapshotStore {
   private def readFootersParallel(spark: SparkSession, files: Seq[String])
       : Seq[(String, org.apache.parquet.hadoop.metadata.ParquetMetadata)] = {
     val conf = spark.sparkContext.hadoopConfiguration
+    // the read options come from the session's conf: the one-argument
+    // `open` builds a fresh default Configuration (parsing the
+    // core-default/core-site resources) per file
     def readOne(f: String) = {
+      val p = new Path(f)
       val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new Path(f), conf))
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf),
+        org.apache.parquet.HadoopReadOptions.builder(conf, p).build())
       try f -> rd.getFooter finally rd.close()
     }
     if (files.size <= 1) files.map(readOne)

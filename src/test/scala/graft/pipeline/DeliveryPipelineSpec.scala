@@ -105,6 +105,29 @@ class DeliveryPipelineSpec extends SparkSpec {
     assert(leaseVersion.toInt > first.toInt + 1, "the failure and the next success both write")
   }
 
+  test("a warmed failed delivery writes LastError and the lease with no Spark " +
+    "stage, and so does the next success's lease reset") {
+    val ok = SinkOutcome(success = true, 200, retryable = false, "")
+    val fail = SinkOutcome(success = false, 503, retryable = true, "boom")
+    val script = Iterator(ok, fail, fail, ok)
+    // answers without evaluating the batch, so only the state writes can run stages
+    val sink = new DataSyncAction {
+      override def executeAction(changes: DataFrame, params: Map[String, String]): SinkOutcome =
+        script.next()
+    }
+    val (p, err, lease, _) = pipeline(sink)
+    // warm: the first success creates the lease store, the first failure the LastError store
+    assert(p.deliver(changes, ts(10)) == p.Delivered)
+    assert(p.deliver(changes, ts(20)).isInstanceOf[p.RetryScheduled])
+    val failed = counted(assert(p.deliver(changes, ts(30)).isInstanceOf[p.RetryScheduled]))
+    assert(failed("stagesCompleted") == 0L, s"LastError and lease writes ran stages: $failed")
+    assert(err.get("demo").exists(_.startsWith("status=503")))
+    assert(lease.attemptCount("demo").contains(2))
+    val reset = counted(assert(p.deliver(changes, ts(40)) == p.Delivered))
+    assert(reset("stagesCompleted") == 0L, s"the lease reset ran stages: $reset")
+    assert(lease.attemptCount("demo").contains(0))
+  }
+
   /** A live endpoint on a local socket answering 200. Each POST is recorded
     * with the number of persisted RDDs at the moment it arrived: the sink
     * posts after its probe, so a cached payload is counted there. */

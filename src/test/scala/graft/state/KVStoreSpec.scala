@@ -97,7 +97,7 @@ class KVStoreSpec extends SparkSpec {
     assert(lease.attemptCount("t").contains(4))
   }
 
-  test("job budget: a repeated get at one version runs no stage; a save one narrow stage") {
+  test("job budget: a repeated get at one version runs no stage; a point save none") {
     val dir = tmp
     new KVStore(spark, dir).save("k", "v1", ts(1))
     val kv = new KVStore(spark, dir)
@@ -105,7 +105,7 @@ class KVStoreSpec extends SparkSpec {
     val reread = counted(assert(kv.get("k").contains("v1")))
     assert(reread("stagesCompleted") == 0, s"repeated get ran stages: $reread")
     val saved = counted(kv.save("k", "v2", ts(2)))
-    assert(saved("stagesCompleted") == 1, s"save: $saved")
+    assert(saved("stagesCompleted") == 0, s"save: $saved")
     assert(saved("shuffleBytesWritten") == 0, s"save shuffled: $saved")
     val after = counted(assert(kv.get("k").contains("v2")))
     assert(after("stagesCompleted") == 0, s"get after own save ran stages: $after")
@@ -176,5 +176,146 @@ class KVStoreSpec extends SparkSpec {
       .toSeq == Seq(("k", "v", ts(7))))
     kv.save("k", "w", ts(8))
     assert(pointer(dir) == "5" && new KVStore(spark, dir).get("k").contains("w"))
+  }
+
+  private def overridesIn(dir: String) =
+    Files.exists(Paths.get(dir, s"v_${pointer(dir)}", KVStore.OverridesFile))
+
+  private def rowsOf(kv: KVStore) =
+    kv.all().collect().map(r => (r.getString(0), r.getString(1), r.getTimestamp(2))).toSet
+
+  test("override rows round-trip exactly: control characters, unicode, " +
+    "empty and null values, microsecond timestamps") {
+    val dir = tmp
+    val kv = new KVStore(spark, dir)
+    kv.save("base", "b", ts(1))
+    val micros = new Timestamp(1700000000123L)
+    micros.setNanos(123456000)
+    val early = new Timestamp(-86400000L * 365 * 30 + 7)
+    early.setNanos(7654000)
+    val saved = Seq(
+      ("tab\tkey", "a\tb", ts(2)),
+      ("new\nline", "x\ny\r\n", micros),
+      ("ünï\u2603 \uD83D\uDE00", "\u00e9\u4e2d\"quote\\", early),
+      ("", "", ts(3)),
+      ("nullvalue", null, ts(4)),
+      ("nulltime", "v", null))
+    saved.foreach { case (k, v, at) => kv.save(k, v, at) }
+    assert(overridesIn(dir), "point saves over a base snapshot go to the sidecar")
+    val fresh = new KVStore(spark, dir)
+    saved.foreach { case (k, v, _) => assert(fresh.get(k) == Some(v), k) }
+    val expected = saved.toSet + (("base", "b", ts(1)))
+    assert(rowsOf(fresh) == expected)
+    assert(rowsOf(kv) == expected)
+  }
+
+  test("the fold at the override cap is one narrow stage and leaves all() unchanged") {
+    val dir = tmp
+    val kv = new KVStore(spark, dir)
+    kv.save("k0", "v0", ts(0))
+    (1 until KVStore.OverrideCap).foreach(i => kv.save(s"k$i", s"v$i", ts(i.toLong)))
+    assert(overridesIn(dir))
+    val before = rowsOf(kv)
+    val files = Paths.get(dir, s"v_${pointer(dir)}").toFile.list().count(_.endsWith(".parquet"))
+    val i = KVStore.OverrideCap
+    assert(kv.get(s"k$i").isEmpty) // the winner lookup's read, outside the count
+    val c = counted(kv.save(s"k$i", s"v$i", ts(i.toLong)))
+    assert(c("stagesCompleted") == 1, s"fold: $c")
+    assert(c("shuffleBytesWritten") == 0, s"fold shuffled: $c")
+    assert(!overridesIn(dir), "the fold writes the overrides into the data files")
+    assert(Paths.get(dir, s"v_${pointer(dir)}").toFile.list().count(_.endsWith(".parquet")) == files)
+    assert(rowsOf(kv) == before + ((s"k$i", s"v$i", ts(i.toLong))))
+    assert(rowsOf(new KVStore(spark, dir)) == rowsOf(kv))
+    assert(kv.get("k1").contains("v1") && kv.get(s"k$i").contains(s"v$i"))
+  }
+
+  test("a lazy all() handle survives a fold plus pruning") {
+    val dir = tmp
+    val kv = new KVStore(spark, dir, keepSnapshots = 2)
+    kv.save("k0", "v0", ts(0))
+    (1 until KVStore.OverrideCap).foreach(i => kv.save(s"k$i", s"v$i", ts(i.toLong)))
+    val handle = kv.all() // data files linked from v_0 plus the overrides
+    val expected = rowsOf(kv)
+    kv.save("k0", "folded", ts(100)) // the fold; prunes every version but the last two
+    assert(!Files.exists(Paths.get(dir, "v_0")), "the directory that first held the data is pruned")
+    assert(handle.collect().map(r => (r.getString(0), r.getString(1), r.getTimestamp(2)))
+      .toSet == expected)
+    assert(kv.get("k0").contains("folded"))
+  }
+
+  test("a crash leftover snapshot of links is removed by cleanStorage and " +
+    "replaced by the next save") {
+    val dir = tmp
+    val root = Paths.get(dir)
+    val kv = new KVStore(spark, dir)
+    kv.save("a", "1", ts(1))
+    kv.save("b", "2", ts(2))
+    def leftover(): Unit = {
+      val live = pointer(dir).toInt
+      val next = root.resolve(s"v_${live + 1}")
+      Files.createDirectories(next)
+      // the sidecar is written fresh, never through a link to the live one
+      root.resolve(s"v_$live").toFile.listFiles()
+        .filter(f => f.isFile && f.getName != KVStore.OverridesFile).foreach { f =>
+        Files.createLink(next.resolve(f.getName), f.toPath)
+      }
+      Files.writeString(next.resolve(KVStore.OverridesFile),
+        """[{"key":"ghost","value":"boo","updated_at":5}]""")
+    }
+    leftover()
+    val (_, orphans) = kv.cleanStorage(removeEmptyEntities = false)
+    assert(orphans == 1 && !Files.exists(root.resolve(s"v_${pointer(dir).toInt + 1}")))
+    leftover()
+    kv.save("c", "3", ts(3))
+    assert(overridesIn(dir))
+    val fresh = new KVStore(spark, dir)
+    assert(fresh.get("ghost").isEmpty && fresh.get("c").contains("3"))
+    assert(rowsOf(fresh).map(_._1) == Set("a", "b", "c"))
+  }
+
+  test("a store written with data files only takes override saves") {
+    import spark.implicits._
+    val dir = tmp
+    spark.sparkContext.parallelize(Seq(("k", "v", ts(7)), ("j", "w", ts(7))), 2)
+      .toDF("key", "value", "updated_at").write.parquet(Paths.get(dir, "v_4").toString)
+    Files.writeString(Paths.get(dir, "_CURRENT"), "4")
+    val kv = new KVStore(spark, dir)
+    assert(kv.get("k").contains("v"))
+    val c = counted(kv.save("k", "x", ts(8)))
+    assert(c("stagesCompleted") == 0, s"save: $c")
+    assert(pointer(dir) == "5" && overridesIn(dir))
+    assert(Paths.get(dir, "v_5").toFile.list().count(_.endsWith(".parquet")) == 2)
+    assert(rowsOf(new KVStore(spark, dir)) == Set(("k", "x", ts(8)), ("j", "w", ts(7))))
+  }
+
+  test("a filesystem that refuses hard links takes the Spark write") {
+    val dir = tmp
+    val kv = new KVStore(spark, dir) {
+      override protected[state] def link(newFile: java.nio.file.Path,
+                                         existing: java.nio.file.Path): Unit =
+        throw new UnsupportedOperationException("no links here")
+    }
+    kv.save("a", "1", ts(1))
+    assert(kv.get("b").isEmpty)
+    val c = counted(kv.save("b", "2", ts(2)))
+    assert(c("stagesCompleted") == 1 && c("shuffleBytesWritten") == 0, s"save: $c")
+    assert(pointer(dir) == "1" && !overridesIn(dir))
+    assert(rowsOf(new KVStore(spark, dir)).map(r => (r._1, r._2)) == Set("a" -> "1", "b" -> "2"))
+  }
+
+  test("saveAll, delete and cleanStorage fold the overrides") {
+    import spark.implicits._
+    val dir = tmp
+    val kv = new KVStore(spark, dir)
+    kv.save("a", "1", ts(1)); kv.save("b", "2", ts(2))
+    assert(overridesIn(dir))
+    kv.saveAll(Seq(("c", "3", ts(3))).toDF("key", "value", "updated_at"))
+    assert(!overridesIn(dir) && rowsOf(kv).size == 3)
+    kv.save("d", "4", ts(4))
+    kv.delete("a")
+    assert(!overridesIn(dir) && rowsOf(kv).map(_._1) == Set("b", "c", "d"))
+    kv.save("e", "5", ts(5))
+    assert(kv.cleanStorage() == ((0L, 0L)))
+    assert(!overridesIn(dir) && rowsOf(kv).map(_._1) == Set("b", "c", "d", "e"))
   }
 }

@@ -685,6 +685,25 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(m <= 2, s"readChangesSinceWhere(14, 16) opened $m log entries")
   }
 
+  test("an interval checkpoint commit takes its base from the warm manifest " +
+    "cache: beyond the data write it runs only the checkpoint write") {
+    val dir = freshDir()
+    SnapshotStore.commit(spark, dir, docs(1L -> "a"), "ingest")
+    // v10's interval checkpoint leaves its manifest in the cache
+    (2L to 18L).foreach(v =>
+      SnapshotStore.commitAppend(spark, dir, docs(v -> s"t$v"), "append"))
+    val plain = counted(
+      SnapshotStore.commitAppend(spark, dir, docs(19L -> "t19"), "append"))
+    val ckpt = counted(
+      SnapshotStore.commitAppend(spark, dir, docs(20L -> "t20"), "append"))
+    assert(ckpt("stagesCompleted") == plain("stagesCompleted") + 1,
+      s"v20 commit $ckpt against v19 commit $plain")
+    SnapshotStore.clearManifestCacheForTest()
+    assert(SnapshotStore.manifest(spark, dir, 20L).files.length == 20)
+    assert(SnapshotStore.read(spark, dir).as[(Long, String)].collect().toSet ==
+      ((2L to 20L).map(v => v -> s"t$v") :+ (1L -> "a")).toSet)
+  }
+
   test("a range file masked by a deletion vector at toVersion reads " +
     "without its deleted rows") {
     val dir = freshDir()
