@@ -116,33 +116,27 @@ object SnapshotStore {
     * column the layout isn't sorted by prunes nothing from range stats,
     * but a per-file bloom proves absence for ~99% of files at any
     * layout). `dataType` types the probe-side hash (XxHash64 of the
-    * value AT the column's type — hashing 5 as int and as long differ);
-    * `b64` is the serialized `org.apache.spark.util.sketch.BloomFilter`,
-    * base64. Sized [[BloomNumBits]] bits per (file, column) — 8 KB, ~1%
-    * fpp to ~5k distinct values per file, degrading gracefully (a
-    * saturated bloom keeps files, never drops them). Only columns the
-    * table DECLARES (`bloomCols` — the Delta bloom-index discipline)
-    * pay the bytes, and under the round-17 action-delta log each file's
-    * bloom is written ONCE (in its add entry) plus once per periodic
-    * checkpoint — amortized O(files × 10 KB / CheckpointInterval) log
-    * bytes per commit, not a per-commit copy of every bloom. */
-  /** ROUND 19 — bloom bytes live in per-commit parquet SIDECARS, not
-    * the manifest: `sidecar` points at the commit's hidden `_blooms`
-    * parquet dir (inside the same version directory as the files it
-    * describes, so vacuum's referenced-file retention covers it for
-    * free) and `ord` is the row's index there; `b64` is then empty.
-    * The driver-resident [[Manifest]] carries only this pointer — at
-    * the format's own 800k-file target that is pointers instead of
-    * ~8.5 GB of base64 on EVERY manifest load — and the probe path
+    * value AT the column's type — hashing 5 as int and as long differ).
+    * Sized [[BloomNumBits]] bits per (file, column) — 8 KB, ~1% fpp to
+    * ~5k distinct values per file, degrading gracefully (a saturated
+    * bloom keeps files, never drops them). Only columns the table
+    * DECLARES (`bloomCols` — the Delta bloom-index discipline) pay the
+    * bytes.
+    *
+    * The bits live in a per-commit parquet SIDECAR, never in the
+    * manifest (round 19): `sidecar` points at the commit's hidden
+    * `_blooms` parquet dir (inside the same version directory as the
+    * files it describes, so vacuum's referenced-file retention covers
+    * it for free) and `ord` is the row's index there. The
+    * driver-resident [[Manifest]] carries only this pointer — at the
+    * format's own 800k-file target that is pointers instead of ~8.5 GB
+    * of bloom bytes on EVERY manifest load — and the probe path
     * ([[FilePredicate]] Eq/In atoms) loads bloom bits LAZILY, only for
     * files that already survived min/max + partition pruning (the
     * candidate sliver), one bulk read per touched sidecar, behind a
-    * bounded in-JVM LRU. Legacy manifests still carry `b64` inline;
-    * an unreadable/dangling sidecar resolves to "no bloom" = keep the
-    * file (conservative, never wrong). */
-  final case class BloomStats(dataType: String, b64: String,
-                              sidecar: Option[String] = None,
-                              ord: Long = -1L)
+    * bounded in-JVM LRU. An unreadable/dangling sidecar resolves to "no
+    * bloom" = keep the file (conservative, never wrong). */
+  final case class BloomStats(dataType: String, sidecar: String, ord: Long)
 
   /** Stats of one data file: exact row count, size in bytes (0 on
     * pre-size manifests — a real parquet file is never 0 bytes, so 0 is
@@ -261,18 +255,18 @@ object SnapshotStore {
   /** A full-state CHECKPOINT rides every `CheckpointInterval`-th commit:
     * readers reconstruct `manifest(v)` from the nearest checkpoint (or
     * the self-contained first commit) plus at most `CheckpointInterval`
-    * action deltas — never a full log replay. Round 18 moved the
-    * encoding to MULTI-PART PARQUET (the Delta `checkpoint.parquet`
-    * shape): a small JSON header plus columnar per-file rows under
-    * `.ckpt/` — at the format's 800k-file target the legacy
-    * single-JSON document was a multi-GB driver-side render/parse every
-    * interval-th commit; the parquet form writes and reads distributed,
-    * carries bloom bytes as binary, and keeps header bytes independent
-    * of file count. Checkpoints are DERIVED data, written best-effort
-    * after the commit point and verified at read (a torn/corrupt
-    * checkpoint — bad header, missing parts, row-count mismatch — is
-    * skipped and the action replay walks one base further back), so
-    * they can never break a committed version — only speed it up. */
+    * action deltas — never a full log replay. The encoding is
+    * MULTI-PART PARQUET (the Delta `checkpoint.parquet` shape): a small
+    * JSON header plus columnar per-file rows under `.ckpt/` — at the
+    * format's 800k-file target a single JSON document would be a
+    * multi-GB driver-side render/parse every interval-th commit; the
+    * parquet form writes and reads distributed and keeps header bytes
+    * independent of file count. Checkpoints are DERIVED data, written
+    * best-effort after the commit point and verified at read (a
+    * torn/corrupt checkpoint — bad header, missing parts, row-count
+    * mismatch — is skipped and the action replay walks one base further
+    * back), so they can never break a committed version — only speed it
+    * up. */
   val CheckpointInterval: Long = 10L
 
   /** Operations whose commits rewrite existing rows into new files
@@ -415,15 +409,13 @@ object SnapshotStore {
     new Path(f"${manifestDir(dir)}/v$v%08d.json")
 
   // `.ckpt.json` deliberately misses the `v\d{8}\.json` version-listing
-  // regex: checkpoints are derived acceleration, never commits. Round 18
-  // split the encoding: `.ckpt.json` is now a SMALL header (version,
-  // schema, layout, properties — bytes independent of file count) and
-  // the per-file rows live as MULTI-PART PARQUET under `.ckpt/` (the
-  // Delta `checkpoint.parquet` shape): columnar, compressed, written
-  // and read distributed, with bloom bytes as real binary — never one
-  // multi-GB JSON document rendered/parsed on the driver. Legacy
-  // self-contained `.ckpt.json` checkpoints still read (dispatch on the
-  // header's `format` field).
+  // regex: checkpoints are derived acceleration, never commits. The
+  // `.ckpt.json` file is a SMALL header (version, schema, layout,
+  // properties — bytes independent of file count) naming `format:
+  // parquet`; the per-file rows live as MULTI-PART PARQUET under
+  // `.ckpt/` (the Delta `checkpoint.parquet` shape): columnar,
+  // compressed, written and read distributed — never one multi-GB JSON
+  // document rendered/parsed on the driver.
   private def checkpointPath(dir: String, v: Long) =
     new Path(f"${manifestDir(dir)}/v$v%08d.ckpt.json")
 
@@ -444,10 +436,11 @@ object SnapshotStore {
   /** One row per manifest-listed data file. `ord` preserves manifest
     * file order (a parquet read returns parts in any order); `cols` is
     * the per-column stats object in the SAME JSON encoding the action
-    * log uses (one codec, property-tested round-trip); bloom bits ride
-    * as real BINARY — the base64 blobs existed only because the legacy
-    * checkpoint was a text document. Null `rows` marks a file with no
-    * stats entry (pre-stats manifests). */
+    * log uses (one codec, property-tested round-trip); each declared
+    * bloom column rides as its sidecar POINTER (`bloomSidecars` path +
+    * `bloomOrds` row ordinal, parallel to `bloomCols`/`bloomTypes`),
+    * never as bits. Null `rows` marks a file with no stats entry
+    * (pre-stats manifests). */
   private[storage] val CkptSchema = StructType(Seq(
     StructField("ord", LongType, nullable = false),
     StructField("path", StringType, nullable = false),
@@ -458,13 +451,8 @@ object SnapshotStore {
       nullable = true),
     StructField("bloomTypes", ArrayType(StringType, containsNull = false),
       nullable = true),
-    StructField("bloomBits", ArrayType(BinaryType, containsNull = false),
-      nullable = true),
     StructField("dvPath", StringType, nullable = true),
     StructField("dvRows", LongType, nullable = true),
-    // round 19 — sidecar POINTERS (per bloom col: path + row ordinal;
-    // "" / -1 marks an inline entry riding bloomBits instead). Appended
-    // nullable so legacy checkpoints read as all-inline (null-fill).
     StructField("bloomSidecars", ArrayType(StringType, containsNull = false),
       nullable = true),
     StructField("bloomOrds", ArrayType(LongType, containsNull = false),
@@ -614,14 +602,9 @@ object SnapshotStore {
     "blooms" ->
       (if (fsx.blooms.isEmpty) JNothing
        else JObject(fsx.blooms.toSeq.sortBy(_._1).map { case (c, bs) =>
-         // sidecar form: a POINTER (path + row ordinal), zero bloom
-         // bytes in the log; inline form: the legacy base64 payload
-         c -> (bs.sidecar match {
-           case Some(sc) => JObject("t" -> JString(bs.dataType),
-             "sc" -> JString(sc), "i" -> JLong(bs.ord))
-           case None => JObject("t" -> JString(bs.dataType),
-             "b" -> JString(bs.b64))
-         })
+         // a sidecar POINTER (path + row ordinal), zero bloom bytes
+         c -> (JObject("t" -> JString(bs.dataType),
+           "sc" -> JString(bs.sidecar), "i" -> JLong(bs.ord)): JValue)
        }.toList)))
 
   private def dvsJson(dvs: Map[String, DvRef]): JValue =
@@ -653,8 +636,8 @@ object SnapshotStore {
          k -> (JString(v): JValue)
        }.toList)))
 
-  /** the SELF-CONTAINED encoding — first commits, checkpoints, and every
-    * pre-round-17 (legacy) manifest */
+  /** the SELF-CONTAINED encoding — a table's first commit (v1, the base
+    * every replay bottoms out on) */
   private def render(m: Manifest): String =
     JsonMethods.compact(JsonMethods.render(JObject(
       ("version" -> JLong(m.version): (String, JValue)) ::
@@ -718,18 +701,13 @@ object SnapshotStore {
       case JObject(bf) => bf.map { case (c, bv) =>
         val t = bv \ "t" match { case JString(s) => s
                                  case o => sys.error(s"bad bloom type: $o") }
-        bv \ "sc" match {
-          case JString(sc) =>
-            val i = bv \ "i" match {
-              case JLong(l) => l; case JInt(n) => n.toLong
-              case o => sys.error(s"bad bloom sidecar ord: $o")
-            }
-            c -> BloomStats(t, "", Some(sc), i)
-          case _ =>
-            val b = bv \ "b" match { case JString(s) => s
-                                     case o => sys.error(s"bad bloom bits: $o") }
-            c -> BloomStats(t, b)
+        val sc = bv \ "sc" match { case JString(s) => s
+                                   case o => sys.error(s"bad bloom sidecar: $o") }
+        val i = bv \ "i" match {
+          case JLong(l) => l; case JInt(n) => n.toLong
+          case o => sys.error(s"bad bloom sidecar ord: $o")
         }
+        c -> BloomStats(t, sc, i)
       }.toMap
       case _ => Map.empty[String, BloomStats]
     }
@@ -785,8 +763,7 @@ object SnapshotStore {
       case _ => Map.empty
     }
 
-  /** parse the SELF-CONTAINED encoding (legacy manifests, first commits,
-    * legacy checkpoints) */
+  /** parse the SELF-CONTAINED encoding (a table's first commit) */
   private[storage] def parse(json: String): Manifest =
     parseManifestRoot(JsonMethods.parse(json))
 
@@ -903,16 +880,14 @@ object SnapshotStore {
     * exactly the full scan + filter — one definition, no drift. */
   sealed trait FilePredicate {
     def toColumn: Column
-    /** conservative may-match against one file's stats; `br` resolves
-      * bloom bits (inline b64, or bits preloaded from sidecars — an
-      * unresolvable bloom keeps the file) */
+    /** conservative may-match against one file's stats; `loaded` holds
+      * the bloom bits preloaded from sidecars, keyed (sidecar, ord) — a
+      * bloom whose bits are not loaded keeps the file, so
+      * [[FilePredicate.NoBlooms]] is min/max-only evaluation (phase 1 of
+      * the lazy-sidecar pruning; [[pruneWithBlooms]] runs phase 2 on the
+      * survivors) */
     private[storage] def mightMatch(stats: FileStats,
-                                    br: FilePredicate.BloomResolve): Boolean
-    /** inline-only evaluation: min/max + any INLINE blooms; sidecar-
-      * backed blooms conservatively keep — phase 1 of the lazy-sidecar
-      * pruning ([[pruneWithBlooms]] runs phase 2 on the survivors) */
-    private[storage] def mightMatch(stats: FileStats): Boolean =
-      mightMatch(stats, FilePredicate.InlineResolve)
+                                    loaded: FilePredicate.LoadedBlooms): Boolean
     /** columns whose Eq/In atoms may consult a bloom — what
       * [[pruneWithBlooms]] prefetches sidecar bits for */
     private[storage] def bloomProbeCols: Set[String] = Set.empty
@@ -1007,64 +982,23 @@ object SnapshotStore {
       typed.map(l => new XxHash64(Seq(l)).eval(null).asInstanceOf[Long])
     }
 
-    /** Deserialized blooms, weak-keyed by the manifest's own base64
-      * String instance: a manifest is parsed once per read and its
-      * strings live exactly as long as it does, so each file's bloom
-      * decodes ONCE per query (not once per (file, candidate) probe —
-      * a 32-value IN over an 800k-file manifest would otherwise pay
-      * 25M decodes) and the cache empties with the manifest. */
-    private val bloomCache = java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[String,
-        org.apache.spark.util.sketch.BloomFilter]())
+    /** bloom bits PRELOADED from the candidate files' sidecars
+      * ([[loadSidecarBlooms]]), keyed (sidecar path, ord) */
+    private[storage] type LoadedBlooms =
+      Map[(String, Long), org.apache.spark.util.sketch.BloomFilter]
 
-    private def bloomOf(bs: BloomStats)
-        : org.apache.spark.util.sketch.BloomFilter = {
-      val got = bloomCache.get(bs.b64)
-      if (got != null) got
-      else {
-        val bf = org.apache.spark.util.sketch.BloomFilter
-          .readFrom(java.util.Base64.getDecoder.decode(bs.b64))
-        bloomCache.put(bs.b64, bf)
-        bf
-      }
-    }
-
-    /** Resolves one bloom entry to its decoded filter; None =
-      * unavailable (sidecar not loaded / unreadable) → keep the file. */
-    private[storage] trait BloomResolve {
-      def apply(bs: BloomStats)
-          : Option[org.apache.spark.util.sketch.BloomFilter]
-    }
-
-    /** inline b64 only — sidecar-backed entries resolve None (keep) */
-    private[storage] object InlineResolve extends BloomResolve {
-      def apply(bs: BloomStats)
-          : Option[org.apache.spark.util.sketch.BloomFilter] =
-        if (bs.sidecar.isDefined) None else Some(bloomOf(bs))
-    }
-
-    /** inline b64 plus bits PRELOADED from the candidate files'
-      * sidecars ([[loadSidecarBlooms]]) */
-    private[storage] final class LoadedResolve(
-        loaded: Map[(String, Long),
-          org.apache.spark.util.sketch.BloomFilter]) extends BloomResolve {
-      def apply(bs: BloomStats)
-          : Option[org.apache.spark.util.sketch.BloomFilter] =
-        bs.sidecar match {
-          case Some(sc) => loaded.get((sc, bs.ord))
-          case None => Some(bloomOf(bs))
-        }
-    }
+    /** no bloom bits loaded: evaluation on min/max / null counts alone */
+    private[storage] val NoBlooms: LoadedBlooms = Map.empty
 
     /** bloom probe of one file's declared-column filter against any of
       * `vs`: definite-absent-for-all prunes; missing bloom / untypeable
-      * probes / unresolved sidecar bits keep the file. One decode per
+      * probes / unloaded sidecar bits keep the file. One decode per
       * file, however many values. */
     private def bloomMightContainAny(s: FileStats, col: String,
-                                     vs: Seq[Any], br: BloomResolve): Boolean =
+                                     vs: Seq[Any], loaded: LoadedBlooms): Boolean =
       s.blooms.get(col) match {
         case None => true
-        case Some(bs) => br(bs) match {
+        case Some(bs) => loaded.get((bs.sidecar, bs.ord)) match {
           case None => true // bits unavailable: conservative keep
           case Some(bf) =>
             vs.exists(v => bloomHash(v, bs.dataType) match {
@@ -1076,9 +1010,9 @@ object SnapshotStore {
 
     final case class EqTo(col: String, value: Any) extends FilePredicate {
       def toColumn: Column = org.apache.spark.sql.functions.col(col) === lit(value)
-      private[storage] def mightMatch(s: FileStats, br: BloomResolve): Boolean =
+      private[storage] def mightMatch(s: FileStats, loaded: LoadedBlooms): Boolean =
         cmp(col, s)((mn, mx) => mn <= 0 && mx >= 0, value) &&
-          bloomMightContainAny(s, col, Seq(value), br)
+          bloomMightContainAny(s, col, Seq(value), loaded)
       override private[storage] def bloomProbeCols: Set[String] = Set(col)
     }
 
@@ -1089,31 +1023,31 @@ object SnapshotStore {
     final case class InSet(col: String, values: Seq[Any]) extends FilePredicate {
       def toColumn: Column =
         org.apache.spark.sql.functions.col(col).isin(values: _*)
-      private[storage] def mightMatch(s: FileStats, br: BloomResolve): Boolean = {
+      private[storage] def mightMatch(s: FileStats, loaded: LoadedBlooms): Boolean = {
         val rangeHits = values.filter(v =>
           cmp(col, s)((mn, mx) => mn <= 0 && mx >= 0, v))
-        rangeHits.nonEmpty && bloomMightContainAny(s, col, rangeHits, br)
+        rangeHits.nonEmpty && bloomMightContainAny(s, col, rangeHits, loaded)
       }
       override private[storage] def bloomProbeCols: Set[String] = Set(col)
     }
     final case class GtEq(col: String, value: Any) extends FilePredicate {
       def toColumn: Column = org.apache.spark.sql.functions.col(col) >= lit(value)
-      private[storage] def mightMatch(s: FileStats, br: BloomResolve): Boolean =
+      private[storage] def mightMatch(s: FileStats, loaded: LoadedBlooms): Boolean =
         cmp(col, s)((_, mx) => mx >= 0, value)
     }
     final case class Gt(col: String, value: Any) extends FilePredicate {
       def toColumn: Column = org.apache.spark.sql.functions.col(col) > lit(value)
-      private[storage] def mightMatch(s: FileStats, br: BloomResolve): Boolean =
+      private[storage] def mightMatch(s: FileStats, loaded: LoadedBlooms): Boolean =
         cmp(col, s)((_, mx) => mx > 0, value)
     }
     final case class LtEq(col: String, value: Any) extends FilePredicate {
       def toColumn: Column = org.apache.spark.sql.functions.col(col) <= lit(value)
-      private[storage] def mightMatch(s: FileStats, br: BloomResolve): Boolean =
+      private[storage] def mightMatch(s: FileStats, loaded: LoadedBlooms): Boolean =
         cmp(col, s)((mn, _) => mn <= 0, value)
     }
     final case class Lt(col: String, value: Any) extends FilePredicate {
       def toColumn: Column = org.apache.spark.sql.functions.col(col) < lit(value)
-      private[storage] def mightMatch(s: FileStats, br: BloomResolve): Boolean =
+      private[storage] def mightMatch(s: FileStats, loaded: LoadedBlooms): Boolean =
         cmp(col, s)((mn, _) => mn < 0, value)
     }
     /** Prunes a file whose recorded null count is exactly 0 — the
@@ -1122,7 +1056,7 @@ object SnapshotStore {
       * the file (conservative). */
     final case class IsNull(col: String) extends FilePredicate {
       def toColumn: Column = org.apache.spark.sql.functions.col(col).isNull
-      private[storage] def mightMatch(s: FileStats, br: BloomResolve): Boolean =
+      private[storage] def mightMatch(s: FileStats, loaded: LoadedBlooms): Boolean =
         s.cols.get(col).forall(cs => cs.nulls.forall(_ > 0L))
     }
     /** Prunes a file whose every value in the column is null — `WHERE
@@ -1132,7 +1066,7 @@ object SnapshotStore {
       * recorded min/max (only possible when no non-null value exists). */
     final case class IsNotNull(col: String) extends FilePredicate {
       def toColumn: Column = org.apache.spark.sql.functions.col(col).isNotNull
-      private[storage] def mightMatch(s: FileStats, br: BloomResolve): Boolean =
+      private[storage] def mightMatch(s: FileStats, loaded: LoadedBlooms): Boolean =
         s.cols.get(col).forall { cs =>
           // a tracked column records min/max iff a non-null value exists
           !cs.nulls.contains(s.rows) && (cs.min.isDefined || cs.max.isDefined)
@@ -1140,15 +1074,15 @@ object SnapshotStore {
     }
     final case class And(l: FilePredicate, r: FilePredicate) extends FilePredicate {
       def toColumn: Column = l.toColumn && r.toColumn
-      private[storage] def mightMatch(s: FileStats, br: BloomResolve): Boolean =
-        l.mightMatch(s, br) && r.mightMatch(s, br)
+      private[storage] def mightMatch(s: FileStats, loaded: LoadedBlooms): Boolean =
+        l.mightMatch(s, loaded) && r.mightMatch(s, loaded)
       override private[storage] def bloomProbeCols: Set[String] =
         l.bloomProbeCols ++ r.bloomProbeCols
     }
     final case class Or(l: FilePredicate, r: FilePredicate) extends FilePredicate {
       def toColumn: Column = l.toColumn || r.toColumn
-      private[storage] def mightMatch(s: FileStats, br: BloomResolve): Boolean =
-        l.mightMatch(s, br) || r.mightMatch(s, br)
+      private[storage] def mightMatch(s: FileStats, loaded: LoadedBlooms): Boolean =
+        l.mightMatch(s, loaded) || r.mightMatch(s, loaded)
       override private[storage] def bloomProbeCols: Set[String] =
         l.bloomProbeCols ++ r.bloomProbeCols
     }
@@ -1211,11 +1145,10 @@ object SnapshotStore {
   /** The checkpoint of `version`, if present AND readable — checkpoints
     * are derived data written best-effort, so a torn or corrupt one is
     * skipped (the action replay walks to an earlier base), never an
-    * error. Two encodings: the round-18 PARQUET form (header names
-    * `format: parquet` and its exact row count; the per-file state loads
-    * as a columnar scan of the `.ckpt/` parts — a row-count mismatch or
-    * unreadable part means a torn data dir and degrades to replay) and
-    * the legacy self-contained JSON document. */
+    * error. The header names `format: parquet` and its exact row count;
+    * the per-file state loads as a columnar scan of the `.ckpt/` parts.
+    * A header of any other format, a row-count mismatch or an
+    * unreadable part counts as torn and degrades to replay. */
   private def readCheckpoint(spark: SparkSession, dir: String,
                              version: Long): Option[Manifest] =
     try {
@@ -1226,36 +1159,24 @@ object SnapshotStore {
         manifestReadCount.incrementAndGet()
         val root = JsonMethods.parse(readText(f, p))
         root \ "format" match {
-          case JString("parquet") =>
-            if (versionOf(root) != version) None // torn/misplaced header
-            else readParquetCheckpoint(spark, dir, version, root)
-          case _ =>
-            val m = parseManifestRoot(root)
-            if (m.version == version) Some(m) else None // torn/misplaced
+          case JString("parquet") if versionOf(root) == version =>
+            readParquetCheckpoint(spark, dir, version, root)
+          case _ => None // torn/misplaced header or not a parquet checkpoint
         }
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** one checkpoint row's bloom entries — sidecar POINTERS when the
-    * pointer columns carry one, inline re-encoded base64 otherwise
-    * (legacy checkpoints lack the pointer columns entirely) */
+  /** one checkpoint row's bloom entries — sidecar POINTERS, the sidecar
+    * paths interned (one instance per sidecar across the whole state) */
   private def ckptRowBlooms(r: org.apache.spark.sql.Row,
                             intern: scala.collection.mutable.HashMap[String, String])
       : Map[String, BloomStats] =
     if (r.isNullAt(5)) Map.empty[String, BloomStats]
     else {
       val bc = r.getSeq[String](5); val bt = r.getSeq[String](6)
-      val bb = r.getSeq[Array[Byte]](7)
-      val scs = if (r.isNullAt(10)) null else r.getSeq[String](10)
-      val ords = if (r.isNullAt(11)) null else r.getSeq[Long](11)
-      bc.indices.map { i =>
-        val sc = if (scs == null || i >= scs.length) "" else scs(i)
-        if (sc.nonEmpty)
-          bc(i) -> BloomStats(bt(i), "",
-            Some(intern.getOrElseUpdate(sc, sc)), ords(i))
-        else bc(i) -> BloomStats(bt(i),
-          java.util.Base64.getEncoder.encodeToString(bb(i)))
-      }.toMap
+      val scs = r.getSeq[String](9); val ords = r.getSeq[Long](10)
+      bc.indices.map(i => bc(i) ->
+        BloomStats(bt(i), intern.getOrElseUpdate(scs(i), scs(i)), ords(i))).toMap
     }
 
   private def readParquetCheckpoint(spark: SparkSession, dir: String,
@@ -1270,12 +1191,11 @@ object SnapshotStore {
     if (!f.exists(dataP)) return None // header landed, data dir torn away
     if (entries < 0L || entries > Int.MaxValue) return None // corrupt header
     // STREAMED per-partition iteration, never one collect(): at the
-    // 800k-file target a collect holds every decoded bloom (6+ GB
-    // binary) on the driver at once ON TOP of the Manifest being built
-    // — here each row's bloom re-encodes to its (model-required) base64
-    // form and the row (with its binary) is dropped immediately, so the
-    // transient is one row, and file order restores through the `ord`
-    // column into a pre-sized array (no sort, no second pass)
+    // 800k-file target a collect holds every row on the driver at once
+    // ON TOP of the Manifest being built — here each row is dropped as
+    // soon as it is decoded, so the transient is one row, and file order
+    // restores through the `ord` column into a pre-sized array (no
+    // sort, no second pass)
     import scala.jdk.CollectionConverters._
     val n = entries.toInt
     val files = new Array[String](n)
@@ -1308,7 +1228,7 @@ object SnapshotStore {
         stats += path -> FileStats(r.getLong(2), cols, r.getLong(3),
           ckptRowBlooms(r, intern))
       }
-      if (!r.isNullAt(8)) dvs += path -> DvRef(r.getString(8), r.getLong(9))
+      if (!r.isNullAt(7)) dvs += path -> DvRef(r.getString(7), r.getLong(8))
     }
     } finally { while (it.hasNext) it.next() }
     if (seen != entries) return None // torn data dir (missing part)
@@ -1330,18 +1250,6 @@ object SnapshotStore {
     * parquet write/read is a distributed columnar job split into
     * [[CkptRowsPerPart]]-row parts. Last-writer-wins overwrite stays
     * safe because every writer of a version renders the same state. */
-  /** write-side shape: bloom bytes travel as the manifest's EXISTING
-    * base64 strings (row building costs pointers, never a second
-    * decoded copy on the driver — at 800k files × 8 KB that copy would
-    * be the very multi-GB driver allocation this encoding removes) and
-    * decode to binary INSIDE the tasks via `unbase64` */
-  private val CkptWriteSchema = StructType(
-    CkptSchema.fields.map(f =>
-      if (f.name == "bloomBits")
-        StructField("bloomB64", ArrayType(StringType, containsNull = false),
-          nullable = true)
-      else f))
-
   private def writeCheckpoint(spark: SparkSession, dir: String,
                               m: Manifest): Unit = {
     val f = fs(spark, dir)
@@ -1372,21 +1280,15 @@ object SnapshotStore {
             .orNull,
           if (blooms.isEmpty) null else blooms.map(_._1),
           if (blooms.isEmpty) null else blooms.map(_._2.dataType),
-          // per entry exactly one of (inline b64, sidecar pointer) is
-          // populated — sidecar-backed blooms checkpoint as POINTERS,
-          // never re-inlined bits (the whole point of the sidecar)
-          if (blooms.isEmpty) null else blooms.map(_._2.b64),
           dv.map(_.path).orNull,
           dv.map(d => java.lang.Long.valueOf(d.rows)).orNull,
-          if (blooms.isEmpty) null else blooms.map(_._2.sidecar.getOrElse("")),
+          if (blooms.isEmpty) null else blooms.map(_._2.sidecar),
           if (blooms.isEmpty) null
           else blooms.map(b => java.lang.Long.valueOf(b._2.ord)))
       }
     val parts = math.max(1, (m.files.size + CkptRowsPerPart - 1) / CkptRowsPerPart)
     spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, parts), CkptWriteSchema)
-      .withColumn("bloomBits", transform(col("bloomB64"), x => unbase64(x)))
-      .drop("bloomB64")
+      spark.sparkContext.parallelize(rows, parts), CkptSchema)
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     if (f.exists(dataP)) f.delete(dataP, true)
     if (!f.rename(tmp, dataP)) {
@@ -1409,7 +1311,7 @@ object SnapshotStore {
     try out.write(hdr.getBytes("UTF-8")) finally out.close()
   }
 
-  // spec seams: exercise both checkpoint encodings + torn states directly
+  // spec seams: exercise the checkpoint encoding + torn states directly
   private[storage] def writeCheckpointForTest(spark: SparkSession,
                                               dir: String,
                                               m: Manifest): Unit =
@@ -1418,12 +1320,6 @@ object SnapshotStore {
                                              dir: String,
                                              version: Long): Option[Manifest] =
     readCheckpoint(spark, dir, version)
-  private[storage] def writeLegacyCheckpointForTest(spark: SparkSession,
-                                                    dir: String,
-                                                    m: Manifest): Unit = {
-    val out = fs(spark, dir).create(checkpointPath(dir, m.version), true)
-    try out.write(render(m).getBytes("UTF-8")) finally out.close()
-  }
 
   /** HEADER-ONLY read of one commit — (operation, ts) without any state
     * reconstruction: both encodings carry the header at top level, so
@@ -1758,7 +1654,7 @@ object SnapshotStore {
       val cols = if (r.isNullAt(4)) Map.empty[String, ColStats]
                  else colsOf(JsonMethods.parse(r.getString(4)))
       p.mightMatch(FileStats(r.getLong(2), cols,
-        if (r.isNullAt(3)) 0L else r.getLong(3)))
+        if (r.isNullAt(3)) 0L else r.getLong(3)), FilePredicate.NoBlooms)
     }
 
   /** The DISTRIBUTED pruning core (round 19 — the Delta Snapshot
@@ -1876,16 +1772,16 @@ object SnapshotStore {
                  ckptRowBlooms(r, intern))))
       }.toSeq
     val tailKept = tail.toSeq.filter { case (_, st) =>
-      st.forall(physPred.mightMatch)
+      st.forall(physPred.mightMatch(_, FilePredicate.NoBlooms))
     }
     val candidates = base ++ tailKept
     // checkpoint-coincident versions: dv refs come from the survivor
-    // rows' own dvPath/dvRows columns (fields 8/9 of CkptSchema) —
+    // rows' own dvPath/dvRows columns (fields 7/8 of CkptSchema) —
     // the header never carries them in the parquet encoding
     val dvs = dvsHdr.getOrElse(
-      survivorRows.iterator.filter(r => !r.isNullAt(8)).map(r =>
-        r.getString(1) -> DvRef(r.getString(8),
-          if (r.isNullAt(9)) 0L else r.getLong(9))).toMap)
+      survivorRows.iterator.filter(r => !r.isNullAt(7)).map(r =>
+        r.getString(1) -> DvRef(r.getString(7),
+          if (r.isNullAt(8)) 0L else r.getLong(8))).toMap)
     setLastDistributedPrune(
       (entries, (survivorRows.length + tail.size).toLong))
     val statsMap = candidates.collect { case (fl, Some(st)) => fl -> st }.toMap
@@ -2179,28 +2075,33 @@ object SnapshotStore {
     val added = Seq.newBuilder[(String, Option[FileStats])]
     var header = Option.empty[HeaderInfo]
     (fromVersion + 1 to toVersion).foreach { v =>
+      // the action delta answers "what did v add" in ONE small read
       val entry = readRaw(spark, dir, v)
       header = Some(headerOf(entry))
-      // the action-delta encoding answers "what did v add" in ONE small
-      // read; only legacy self-contained entries still diff against the
-      // predecessor's reconstructed state
-      added ++= (entry match {
-        case Right(d) => if (RewriteOps(d.operation)) Nil else d.adds
-        case Left(m) =>
-          if (RewriteOps(m.operation)) Nil
-          else {
-            val prev: Set[String] =
-              if (v - 1 >= 1) manifest(spark, dir, v - 1).files.toSet
-              else Set.empty
-            m.files.filterNot(prev).map(f => f -> m.stats.get(f))
-          }
-      })
+      val d = deltaAt(v, entry)
+      if (!RewriteOps(d.operation)) added ++= d.adds
     }
     val adds = added.result()
     header.getOrElse(headerInfoOf(spark, dir, toVersion)).lite.copy(
       files = adds.map(_._1),
       stats = adds.collect { case (f, Some(st)) => f -> st }.toMap)
   }
+
+  /** The action delta logged at `version`. Only a table's first commit
+    * (v1) is written SELF-CONTAINED, and every file it lists is an add;
+    * a self-contained entry at any later version is refused, naming the
+    * version — no writer produces one. */
+  private def deltaAt(version: Long,
+                      entry: Either[Manifest, CommitDelta]): CommitDelta =
+    entry match {
+      case Right(d) => d
+      case Left(m) =>
+        require(version == 1L,
+          s"version $version is logged self-contained, but only a " +
+            "table's first commit (v1) is — later versions must be " +
+            "action deltas")
+        deltaOf(m, Manifest(0L, "", Seq.empty))
+    }
 
   /** The files ADDED by each commit in `(fromVersion, toVersion]` — the
     * file list of [[changeRange]]. */
@@ -2213,8 +2114,7 @@ object SnapshotStore {
     * table's files read through. */
   private def emptyRange(spark: SparkSession, dir: String,
                          view: Manifest): DataFrame =
-    if (view.schema.isEmpty) readAsOf(spark, dir, view.version).limit(0)
-    else SnapshotFileIndex.readFilesOf(spark, dir, view, Seq.empty)
+    SnapshotFileIndex.readFilesOf(spark, dir, view, Seq.empty)
 
   /** File-grain CDC read: the rows added between two committed versions
     * (`(fromVersion, toVersion]`), delivered by scanning ONLY the files
@@ -3353,10 +3253,10 @@ object SnapshotStore {
   }
 
   /** Two-phase lazy-sidecar pruning (round 19) — EVERY stats-skipping
-    * surface routes here. Phase 1 prunes on min/max / null counts /
-    * inline blooms alone (sidecar-backed blooms conservatively keep);
-    * phase 2 loads sidecar bits ONLY for phase-1 survivors that carry
-    * one on a probed column — the candidate sliver — and re-evaluates
+    * surface routes here. Phase 1 prunes on min/max / null counts alone
+    * (a bloom conservatively keeps its file); phase 2 loads sidecar
+    * bits ONLY for phase-1 survivors that carry one on a probed column
+    * — the candidate sliver — and re-evaluates
     * just those files. A point lookup on an 800k-file table therefore
     * reads bloom bytes for the handful of files min/max could not
     * prune, never the table's. */
@@ -3364,7 +3264,8 @@ object SnapshotStore {
                                        files: Seq[String],
                                        statsOf: String => Option[FileStats],
                                        pred: FilePredicate): Seq[String] = {
-    val phase1 = files.filter(f => statsOf(f).forall(st => pred.mightMatch(st)))
+    val phase1 = files.filter(f =>
+      statsOf(f).forall(pred.mightMatch(_, FilePredicate.NoBlooms)))
     val probeCols = pred.bloomProbeCols
     if (probeCols.isEmpty) return phase1
     val needed = scala.collection.mutable.LinkedHashMap
@@ -3373,22 +3274,20 @@ object SnapshotStore {
     phase1.foreach { f =>
       statsOf(f).foreach { st =>
         var has = false
-        probeCols.foreach(c => st.blooms.get(c).foreach(_.sidecar.foreach {
-          sc =>
-            has = true
-            needed.getOrElseUpdate(sc,
-              scala.collection.mutable.ArrayBuffer.empty[Long]) +=
-              st.blooms(c).ord
-        }))
+        probeCols.foreach(c => st.blooms.get(c).foreach { bs =>
+          has = true
+          needed.getOrElseUpdate(bs.sidecar,
+            scala.collection.mutable.ArrayBuffer.empty[Long]) += bs.ord
+        })
         if (has) pending += f
       }
     }
     if (pending.isEmpty) { setLastSidecarReads(Seq.empty); return phase1 }
-    val br = new FilePredicate.LoadedResolve(
-      loadSidecarBlooms(spark, needed.toSeq.map(kv => kv._1 -> kv._2.toSeq)))
+    val loaded =
+      loadSidecarBlooms(spark, needed.toSeq.map(kv => kv._1 -> kv._2.toSeq))
     val pendSet = pending.toSet
     phase1.filter(f => !pendSet(f) ||
-      statsOf(f).forall(st => pred.mightMatch(st, br)))
+      statsOf(f).forall(pred.mightMatch(_, loaded)))
   }
 
   /** One parquet sidecar row per (file, declared bloom column): the
@@ -3408,19 +3307,6 @@ object SnapshotStore {
     * its bloom bits live (and die) in the same version dir */
   private def bloomSidecarDirOf(dataDir: String): String = s"$dataDir/_blooms"
 
-  /** One column-pruned scan of the freshly written files (`df` = their
-    * already-opened reader), grouped by file: exact row count + min/max
-    * per supported top-level column, plus one [[BloomStats]] per
-    * DECLARED bloom column (`BloomFilterAggregate` over the XxHash64 of
-    * the column — Spark's own runtime-filter machinery, map-side
-    * combined like every other aggregate here). Distributed (no driver
-    * loop over files) and reads only the stats columns — O(new data) in
-    * the stats columns' bytes. Bloom bits land in the commit's parquet
-    * SIDECAR under `sidecarDir` and the returned stats carry only the
-    * (sidecar, ord) pointer — the manifest never holds bloom bytes
-    * (the collected bits are a bounded per-commit TRANSIENT here, not
-    * driver residency). Every production caller passes a sidecar dir;
-    * the inline-base64 fallback remains for None (legacy parity). */
   /** Per-file stats read from the PARQUET FOOTERS the commit just wrote
     * — the write pass IS the stats pass (round 21; optimization guide
     * §1.2 "don't compute things twice": the previous shape re-scanned
@@ -3637,10 +3523,22 @@ object SnapshotStore {
     }
   }
 
+  /** One column-pruned scan of the freshly written files (`df` = their
+    * already-opened reader), grouped by file: exact row count + min/max
+    * per supported top-level column, plus one [[BloomStats]] per
+    * DECLARED bloom column (`BloomFilterAggregate` over the XxHash64 of
+    * the column — Spark's own runtime-filter machinery, map-side
+    * combined like every other aggregate here). Distributed (no driver
+    * loop over files) and reads only the stats columns — O(new data) in
+    * the stats columns' bytes. Bloom bits land in the commit's parquet
+    * SIDECAR under `sidecarDir` and the returned stats carry only the
+    * (sidecar, ord) pointer — the manifest never holds bloom bytes
+    * (the collected bits are a bounded per-commit TRANSIENT here, not
+    * driver residency). */
   private[storage] def collectStats(df: DataFrame, files: Seq[String],
                                     sizes: Map[String, Long],
-                                    bloomCols: Seq[String] = Seq.empty,
-                                    sidecarDir: Option[String] = None)
+                                    bloomCols: Seq[String],
+                                    sidecarDir: String)
       : Map[String, FileStats] = {
     if (files.isEmpty) return Map.empty
     val statCols = df.schema.fields.filter(f => statsSupported(f.dataType))
@@ -3705,35 +3603,27 @@ object SnapshotStore {
     // Ords assign in `files` order (deterministic across commit-loop
     // retries — a rival reading our torn state can never see them).
     val bloomRefs = scala.collection.mutable.Map.empty[String, Map[String, BloomStats]]
-    sidecarDir match {
-      case Some(sc) if bloomBits.nonEmpty =>
-        val sidecarRows = scala.collection.mutable.ArrayBuffer
-          .empty[org.apache.spark.sql.Row]
-        var ord = 0L
-        files.foreach { f =>
-          val key = pathKey(f)
-          bloomBits.get(key).foreach { entries =>
-            bloomRefs(key) = entries.sortBy(_._1).map { case (c, t, bits) =>
-              sidecarRows += org.apache.spark.sql.Row(ord, f, c, t, bits)
-              val bs = BloomStats(t, "", Some(sc), ord)
-              ord += 1
-              c -> bs
-            }.toMap
-          }
-        }
-        val spark = df.sparkSession
-        val parts = math.max(1,
-          (sidecarRows.size + CkptRowsPerPart - 1) / CkptRowsPerPart)
-        spark.createDataFrame(
-          spark.sparkContext.parallelize(sidecarRows.toSeq, parts),
-          BloomSidecarSchema).write.mode(SaveMode.Overwrite).parquet(sc)
-      case _ => // inline legacy form (external-layout conversion)
-        bloomBits.foreach { case (key, entries) =>
-          bloomRefs(key) = entries.map { case (c, t, bits) =>
-            c -> BloomStats(t,
-              java.util.Base64.getEncoder.encodeToString(bits))
+    if (bloomBits.nonEmpty) {
+      val sidecarRows = scala.collection.mutable.ArrayBuffer
+        .empty[org.apache.spark.sql.Row]
+      var ord = 0L
+      files.foreach { f =>
+        val key = pathKey(f)
+        bloomBits.get(key).foreach { entries =>
+          bloomRefs(key) = entries.sortBy(_._1).map { case (c, t, bits) =>
+            sidecarRows += org.apache.spark.sql.Row(ord, f, c, t, bits)
+            val bs = BloomStats(t, sidecarDir, ord)
+            ord += 1
+            c -> bs
           }.toMap
         }
+      }
+      val spark = df.sparkSession
+      val parts = math.max(1,
+        (sidecarRows.size + CkptRowsPerPart - 1) / CkptRowsPerPart)
+      spark.createDataFrame(
+        spark.sparkContext.parallelize(sidecarRows.toSeq, parts),
+        BloomSidecarSchema).write.mode(SaveMode.Overwrite).parquet(sidecarDir)
     }
     files.flatMap(f => byKey.get(pathKey(f))
       .map(st => f -> st.copy(bytes = sizes.getOrElse(f, 0L),
@@ -4070,10 +3960,9 @@ object SnapshotStore {
         .map(pv => headerInfoOf(spark, dir, pv))
       lazy val priorFull: Option[Manifest] =
         priorHdr.map(h => manifest(spark, dir, h.version))
-      // the bounded path needs the carried schema off the header; a
-      // legacy no-schema prior falls back to the eager materialization
-      val bounded = stageBounded.isDefined &&
-        priorHdr.forall(_.schema.isDefined)
+      // the bounded path takes the carried schema off the header (every
+      // commit records one)
+      val bounded = stageBounded.isDefined
       // header-grain manifest view for the fn hooks of BOUNDED commits
       // (they read properties/schema/droppedCols only — never files)
       def hdrLite: Option[Manifest] = priorHdr.map(h =>
@@ -4113,18 +4002,7 @@ object SnapshotStore {
       val m = try {
         val fnPrior: Option[Manifest] = if (bounded) hdrLite else priorFull
         val staged0 = stageBounded match {
-          case Some(fb) if bounded => fb(priorHdr, dataDir)
-          case Some(fb) =>
-            // legacy no-schema prior: the bounded closure still writes
-            // the data (header carries everything it reads); the
-            // carry-all intent materializes into explicit carries MINUS
-            // the stage's removes — a bounded CoW stage expresses row
-            // removal solely via removes, so carrying them here would
-            // resurrect deleted rows and duplicate rewritten ones
-            val st = fb(priorHdr, dataDir)
-            val rm = st.removes.toSet
-            Staged(priorFull.map(_.files.filterNot(rm)).getOrElse(Seq.empty),
-              priorFull.map(_.stats -- rm).getOrElse(Map.empty), st.dvs)
+          case Some(fb) => fb(priorHdr, dataDir)
           case None => stage(priorFull, dataDir)
         }
         val (carryFiles, carryStats) = (staged0.carryFiles, staged0.carryStats)
@@ -4150,11 +4028,10 @@ object SnapshotStore {
         // (spark.read.parquet) and then re-read the same footers on the
         // driver for stats. Engages under exactly the footer-stats
         // conditions (no declared blooms, no hive layout — partition
-        // values live in paths, not footers — and not the parity-spec
-        // scan control); everything else keeps the read-based inference.
+        // values live in paths, not footers); everything else keeps the
+        // read-based inference.
         val footerData: Option[(StructType, Map[String, FileStats])] =
-          if (newFiles.isEmpty || bCols.nonEmpty || pCols.nonEmpty ||
-              sys.env.contains("SPARK_GRAFT_STATS_SCAN")) None
+          if (newFiles.isEmpty || bCols.nonEmpty || pCols.nonEmpty) None
           else footerSchemaAndStats(spark, newFiles, sized.toMap)
         val newDf0 = if (newFiles.isEmpty || footerData.isDefined) None
                      else Some(spark.read.parquet(dataDir))
@@ -4243,11 +4120,10 @@ object SnapshotStore {
         // no second data pass (round 21), and since round 22 the SAME
         // footer pass that produced the schema; declared blooms and hive
         // layouts (partition values live in paths, not footers) keep
-        // the one-scan path, as does SPARK_GRAFT_STATS_SCAN=1 (the
-        // parity-spec control)
+        // the one-scan path
         val newStats = footerData.map(_._2)
           .orElse(newDf.map(d => collectStats(d, newFiles, sized.toMap,
-            bCols, Some(bloomSidecarDirOf(dataDir)))))
+            bCols, bloomSidecarDirOf(dataDir))))
           .getOrElse(Map.empty)
         setLastCommitDriverEntries(
           (if (bounded) 0L else carryFiles.size.toLong) + newFiles.size)
@@ -5589,7 +5465,7 @@ object SnapshotStore {
       .flatMap(_.dvs.values.map(dv =>
         f.makeQualified(new Path(dv.path)).toUri.getPath)).toSet
     val referencedBloomDirs = keptManifests
-      .flatMap(_.stats.values.flatMap(_.blooms.values.flatMap(_.sidecar)))
+      .flatMap(_.stats.values.flatMap(_.blooms.values.map(_.sidecar)))
       .map(p => f.makeQualified(new Path(p)).toUri.getPath).toSet
     val dataRoot = new Path(s"$dir/data")
     if (!f.exists(dataRoot)) return Seq.empty
@@ -5699,7 +5575,7 @@ object SnapshotStore {
       // must not)
       Staged(files,
         collectStats(reader, files, sized.toMap, bloomCols,
-          Some(bloomSidecarDirOf(dataDir))),
+          bloomSidecarDirOf(dataDir)),
         Some(Map.empty))
     }
   }
@@ -5733,19 +5609,14 @@ object SnapshotStore {
     // the two complete table snapshots. Non-adjacent ranges keep the
     // boundary join: the feed's documented grain is the NET change
     // across the range, which per-commit unions cannot express.
-    if (toVersion == fromVersion + 1) {
-      readCommitChanges(spark, dir, toVersion, idCols) match {
-        case Some(df) => return df
-        case None => () // legacy self-contained entry: boundary join
-      }
-    }
-    readRowChangesBoundary(spark, dir, fromVersion, toVersion, idCols)
+    if (toVersion == fromVersion + 1)
+      readCommitChanges(spark, dir, toVersion, idCols)
+    else readRowChangesBoundary(spark, dir, fromVersion, toVersion, idCols)
   }
 
   /** the boundary-join form of [[readRowChanges]] — O(table): the NET
     * diff of the two complete version snapshots. Non-adjacent ranges
-    * land here semantically (NET is the documented grain); adjacent
-    * pairs only as the legacy-log fallback. Package-visible so the
+    * land here (NET is the documented grain). Package-visible so the
     * per-commit path's equivalence is spec-asserted against it. */
   private[graft] def readRowChangesBoundary(spark: SparkSession,
                                               dir: String,
@@ -5883,35 +5754,31 @@ object SnapshotStore {
     * the pre side, and a drop+re-add reads the fresh physical — the
     * same projection the boundary path's alignment computes.
     *
-    * Returns None only for a legacy SELF-CONTAINED log entry (no action
-    * delta to decompose — the caller boundary-joins); a rewrite commit
-    * (content-neutral by [[RewriteOps]]) and a metadata-only commit
-    * yield an EMPTY typed frame. */
+    * A rewrite commit (content-neutral by [[RewriteOps]]) and a
+    * metadata-only commit yield an EMPTY typed frame. */
   private def readCommitChanges(spark: SparkSession, dir: String,
                                 v: Long,
-                                idCols: Seq[String]): Option[DataFrame] = {
-    val d = readRaw(spark, dir, v) match {
-      case Right(delta) => delta
-      case Left(_) => return None
-    }
+                                idCols: Seq[String]): DataFrame = {
+    val d = deltaAt(v, readRaw(spark, dir, v))
     val mTo = manifest(spark, dir, v)
     val mFrom = manifest(spark, dir, v - 1)
     require(mTo.files.nonEmpty, s"version $v holds no data files")
     require(mFrom.files.nonEmpty, s"version ${v - 1} holds no data files")
-    val schema = mTo.schemaStruct.getOrElse(return None)
+    val schema = mTo.schemaStruct
+      .getOrElse(sys.error(s"version $v records no schema"))
     val cols = schema.fields.map(_.name).toSeq
     validateCdfColumns(cols, idCols, v)
     val dataCols = cols.filterNot(idCols.contains)
     require(dataCols.nonEmpty,
       "the key covers every column — nothing to diff at row grain")
-    def emptyCdf(mode: String): Option[DataFrame] = {
+    def emptyCdf(mode: String): DataFrame = {
       setLastRowChangesScan(RowChangesScan(mode, Seq.empty))
       val out = StructType(
         idCols.map(c => schema(schema.fieldIndex(c))) ++
           dataCols.map(c => schema(schema.fieldIndex(c))) :+
           StructField("_change_type", StringType, nullable = false))
-      Some(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], out))
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], out)
     }
     if (RewriteOps(d.operation)) return emptyCdf("rewrite")
     val priorSet = mFrom.files.toSet
@@ -6008,26 +5875,21 @@ object SnapshotStore {
         case more => more.reduce(_.unionByName(_))
       }
     }
-    Some(classifyRowChanges(side(preParts), side(postParts), idCols, cols))
+    classifyRowChanges(side(preParts), side(postParts), idCols, cols)
   }
 
   /** Recorded bytes one version ADDED — the streaming source's
     * `maxBytesPerTrigger` meter (round 19). One small log read: the
-    * action delta carries its adds' stats inline; rewrite commits count
-    * zero (the feed delivers nothing for them); a legacy SELF-CONTAINED
-    * entry counts its full recorded footprint (conservative — the cap
-    * can only under-batch, never over); absent sizes count zero (the
-    * cap degrades toward version counting). */
+    * action delta carries its adds' stats inline (the first commit's
+    * adds are all its files); rewrite commits count zero (the feed
+    * delivers nothing for them); absent sizes count zero (the cap
+    * degrades toward version counting). */
   private[storage] def versionAddedBytes(spark: SparkSession, dir: String,
-                                         version: Long): Long =
-    readRaw(spark, dir, version) match {
-      case Right(d) =>
-        if (RewriteOps(d.operation)) 0L
-        else d.adds.iterator.flatMap(_._2.map(_.bytes)).sum
-      case Left(m) =>
-        if (RewriteOps(m.operation)) 0L
-        else m.stats.values.iterator.map(_.bytes).sum
-    }
+                                         version: Long): Long = {
+    val d = deltaAt(version, readRaw(spark, dir, version))
+    if (RewriteOps(d.operation)) 0L
+    else d.adds.iterator.flatMap(_._2.map(_.bytes)).sum
+  }
 
   /** the table's DECLARED change-feed key columns (`graft.cdfKeys`,
     * round 19) as of `version` — what `table_changes` and the streaming

@@ -34,20 +34,14 @@ object ManifestCodecProps extends Properties("graft.storage.manifest-codec") {
     mx <- statVal
   } yield name -> SnapshotStore.ColStats(t, mn, mx)
 
-  // bloom payloads are base64 in production; the codec must round-trip
-  // ANY string there too (it is opaque bytes to the codec). Round 19:
-  // the sidecar-pointer form (path + ordinal, no inline bytes) must
-  // round-trip just as exactly — nasty path strings included.
+  // a bloom is a sidecar POINTER (path + ordinal, no inline bytes); it
+  // must round-trip exactly — nasty path strings included
   private val bloomStats: Gen[(String, SnapshotStore.BloomStats)] = for {
     name <- nonEmptyNasty
     t <- Gen.oneOf("bigint", "int", "string")
-    bs <- Gen.oneOf(
-      nonEmptyNasty.map(b => SnapshotStore.BloomStats(t, b)),
-      for {
-        sc <- nonEmptyNasty
-        ord <- Gen.choose(0L, Long.MaxValue)
-      } yield SnapshotStore.BloomStats(t, "", Some(sc), ord))
-  } yield name -> bs
+    sc <- nonEmptyNasty
+    ord <- Gen.choose(0L, Long.MaxValue)
+  } yield name -> SnapshotStore.BloomStats(t, sc, ord)
 
   private val fileStats: Gen[SnapshotStore.FileStats] = for {
     rows <- Gen.choose(0L, Long.MaxValue)

@@ -180,22 +180,30 @@ class SnapshotActionLogSpec extends SparkSpec {
     }
   }
 
-  test("a LEGACY self-contained JSON checkpoint still reads, and agrees " +
-    "with the parquet encoding of the same state") {
+  test("a non-parquet checkpoint header is skipped and the manifest " +
+    "reconstructs by replay, identical to the parquet-checkpointed one") {
     val dir = freshDir()
-    buildMixedChain(dir)
+    val latest = buildMixedChain(dir)
     val store = SnapshotStore
-    val m10 = store.manifest(spark, dir, 10L)
-    val viaParquet = store.readCheckpointForTest(spark, dir, 10L)
-    assert(viaParquet.contains(m10), "parquet checkpoint reads its state")
-    // overwrite v10's checkpoint with the LEGACY single-document form
+    val expected = (1L to latest).map(v => store.manifest(spark, dir, v))
+    assert(store.readCheckpointForTest(spark, dir, 10L)
+      .contains(expected(9)), "parquet checkpoint reads its state")
+    // overwrite v10's header with a single self-contained JSON document
+    // of the very same state — a format no checkpoint writer emits
     val fs = ckptPath(dir, 10L)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(SnapshotStore.checkpointDataPath(dir, 10L), true)
-    store.writeLegacyCheckpointForTest(spark, dir, m10)
-    val viaLegacy = store.readCheckpointForTest(spark, dir, 10L)
-    assert(viaLegacy.contains(m10),
-      "legacy checkpoint must reconstruct the identical manifest")
+    val out = fs.create(ckptPath(dir, 10L), true)
+    try out.write(SnapshotStore.renderForTest(expected(9)).getBytes("UTF-8"))
+    finally out.close()
+    assert(store.readCheckpointForTest(spark, dir, 10L).isEmpty,
+      "a header that is not format: parquet must count as unreadable")
+    SnapshotStore.clearManifestCacheForTest() // force real reconstruction
+    val again = (1L to latest).map(v => store.manifest(spark, dir, v))
+    expected.zip(again).foreach { case (a, b) =>
+      assert(a == b, s"v${a.version}: replay past the skipped checkpoint " +
+        "changed the state")
+    }
   }
 
   test("checkpoint header bytes are independent of file count, the " +
@@ -207,21 +215,17 @@ class SnapshotActionLogSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def synth(v: Long, n: Int): SnapshotStore.Manifest = {
       val files = (0 until n).map(i => f"$dir/data/v$v%08d-x/part-$i%06d.parquet")
-      // a real serialized bloom rides every 10th file: the parquet
-      // checkpoint stores bloom bytes as BINARY (encode on write,
-      // re-encode on read) — the round-trip below pins bit-exactness
-      val bf = org.apache.spark.util.sketch.BloomFilter.create(64L)
-      bf.putLong(42L); bf.putLong(7L)
-      val bos = new java.io.ByteArrayOutputStream()
-      bf.writeTo(bos)
-      val b64 = java.util.Base64.getEncoder.encodeToString(bos.toByteArray)
+      // a bloom sidecar POINTER (one of two sidecar paths) rides every
+      // 10th file: the round-trip below pins the pointer columns exactly
+      // across the multi-part split
       SnapshotStore.Manifest(v, "synth", files,
         stats = files.zipWithIndex.map { case (f0, i) =>
           f0 -> SnapshotStore.FileStats(100L + i,
             Map("id" -> SnapshotStore.ColStats("bigint",
               Some(i.toLong), Some(i + 99L), Some(0L))), 4096L + i,
             blooms = if (i % 10 == 0)
-              Map("id" -> SnapshotStore.BloomStats("bigint", b64))
+              Map("id" -> SnapshotStore.BloomStats("bigint",
+                f"$dir/data/v$v%08d-x/_blooms/${i % 20}", i.toLong / 10))
             else Map.empty)
         }.toMap,
         schema = Some(org.apache.spark.sql.types.StructType(Seq(

@@ -38,12 +38,11 @@ class SnapshotBloomSidecarSpec extends SparkSpec {
     def assertPointerOnly(m: SnapshotStore.Manifest): Unit = {
       val blooms = m.stats.values.flatMap(_.blooms.values).toSeq
       assert(blooms.nonEmpty, "declared blooms must be recorded")
-      assert(blooms.forall(b => b.b64.isEmpty && b.sidecar.isDefined &&
-        b.ord >= 0L),
+      assert(blooms.forall(b => b.sidecar.nonEmpty && b.ord >= 0L),
         "every bloom entry must be a sidecar POINTER, zero inline bytes")
       // one sidecar per committing version dir, interned: the distinct
       // sidecar PATHS are few even when entries are many
-      assert(blooms.flatMap(_.sidecar).distinct.size <= 11)
+      assert(blooms.map(_.sidecar).distinct.size <= 11)
     }
     // live reconstruction (action-log fold)
     assertPointerOnly(SnapshotStore.manifest(spark, dir, 11L))
@@ -138,7 +137,7 @@ class SnapshotBloomSidecarSpec extends SparkSpec {
     SnapshotStore.commit(spark, dir, shuffled(1L, 1000L, 4), "ingest",
       bloomCols = Seq("doc_id"))
     val m = SnapshotStore.manifest(spark, dir, 1L)
-    val sc = m.stats.values.head.blooms("doc_id").sidecar.get
+    val sc = m.stats.values.head.blooms("doc_id").sidecar
     val f = new org.apache.hadoop.fs.Path(sc)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     f.delete(new org.apache.hadoop.fs.Path(sc), true)
@@ -167,7 +166,7 @@ class SnapshotBloomSidecarSpec extends SparkSpec {
       .write.parquet(dir)
     SnapshotStore.convertParquet(spark, dir, bloomCols = Seq("doc_id"))
     val m1 = SnapshotStore.manifest(spark, dir, 1L)
-    assert(m1.stats.values.forall(_.blooms("doc_id").sidecar.isDefined),
+    assert(m1.stats.values.forall(_.blooms("doc_id").sidecar.nonEmpty),
       "convert records sidecar-backed blooms too")
     // a few appends, then vacuum down to the last 2 versions
     (1 to 3).foreach(i => SnapshotStore.commitAppend(spark, dir,
@@ -197,7 +196,7 @@ class SnapshotBloomSidecarSpec extends SparkSpec {
     // the compacted state re-recorded blooms in ITS OWN sidecar
     val mEnd = SnapshotStore.manifest(spark, dir,
       SnapshotStore.latestVersion(spark, dir).get)
-    assert(mEnd.stats.values.forall(_.blooms("doc_id").sidecar.isDefined))
+    assert(mEnd.stats.values.forall(_.blooms("doc_id").sidecar.nonEmpty))
     assert(SnapshotStore.read(spark, dir).count() == 803L)
   }
 }

@@ -657,7 +657,22 @@ class SnapshotStoreSpec extends SparkSpec {
     // the scan itself touched fewer than all four added files
     val added = SnapshotStore.changedFiles(spark, dir, 1L, 2L)
     val stats = SnapshotStore.manifest(spark, dir, 2L).stats
-    assert(added.count(f => stats.get(f).forall(pred.mightMatch)) < added.length)
+    assert(added.count(f => stats.get(f).forall(
+      pred.mightMatch(_, SnapshotStore.FilePredicate.NoBlooms))) < added.length)
+  }
+
+  test("a self-contained log entry past v1 fails the range read, naming " +
+    "the version") {
+    val dir = freshDir()
+    SnapshotStore.commit(spark, dir, docs(1L -> "a", 2L -> "b"), "ingest")
+    // hand-write v2 in the self-contained encoding only v1 is logged in
+    val m1 = SnapshotStore.manifest(spark, dir, 1L)
+    SnapshotStore.writeManifestForTest(spark, dir,
+      m1.copy(version = 2L, operation = "hand-written", ts = m1.ts + 1))
+    val e = intercept[IllegalArgumentException] {
+      SnapshotStore.readChangesSince(spark, dir, 1L, 2L)
+    }
+    assert(e.getMessage.contains("version 2"), e.getMessage)
   }
 
   test("the change feed reads one log entry per version in its range, " +
@@ -1301,7 +1316,8 @@ class SnapshotStoreSpec extends SparkSpec {
       reread.schema.fields.map(f => (f.name, f.dataType)).toSeq,
       s"footer schema ${schemaAndStats.get._1} != inferred ${reread.schema}")
     assert(schemaAndStats.get._2 == viaFooters.get)
-    val viaScan = SnapshotStore.collectStats(reread, m.files, sizes)
+    val viaScan = SnapshotStore.collectStats(reread, m.files, sizes,
+      bloomCols = Seq.empty, sidecarDir = s"$dir/_blooms")
     val ff = viaFooters.get
     assert(ff.keySet == viaScan.keySet, s"${ff.keySet} vs ${viaScan.keySet}")
     ff.foreach { case (f, st) =>
@@ -1320,27 +1336,6 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(SnapshotStore.readAsOfWhere(spark, dir, 1L,
       And(between("k", 10L, 20L), IsNotNull("s"))).count() ==
       (10L to 20L).count(i => i % 9 != 0))
-  }
-
-  test("bounded CoW delete against a LEGACY no-schema prior: the " +
-    "fallback carry subtracts the stage's removes — deleted rows never " +
-    "resurrect, surviving rows never duplicate") {
-    val dir = freshDir()
-    SnapshotStore.commit(spark, dir,
-      (1L to 10L).map(i => i -> s"t$i").toDF("doc_id", "text"), "ingest")
-    // a pre-evolution manifest records no schema (the supported legacy
-    // state) — re-commit the same file set schema-less
-    val m1 = SnapshotStore.manifest(spark, dir, 1L)
-    SnapshotStore.writeManifestForTest(spark, dir,
-      m1.copy(version = 2L, operation = "legacy", schema = None))
-    // prune=None touches every file: the bounded stage expresses the
-    // rewrite solely via removes, which the no-schema fallback must
-    // subtract from its carry-all materialization
-    SnapshotStore.deleteCondition(spark, dir, col("doc_id") <= 5L, None)
-    val after = SnapshotStore.read(spark, dir)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(after == (6L to 10L),
-      s"expected exactly the 5 survivors once each, got $after")
   }
 
   test("reserved maintenance names refuse at the public commit faces — " +
