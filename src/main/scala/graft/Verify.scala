@@ -1,37 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same scan-parallelism floor as the bench session, so correctness
-      // is proven on the exact cache partitioning the bench runs with
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_SCAN_FLOOR", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // fork-free local FS (see Bench/NioLocalFileSystem) — same FS layer
-      // as the bench session so correctness is proven on what runs there
-      .config(graft.storage.NioLocalFileSystem.ConfKey,
-        graft.storage.NioLocalFileSystem.implClassName)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.TextExpressions.register(spark)
+    // same session as the bench, so correctness is proven on the exact
+    // settings and cache partitioning the bench runs with
+    val spark = GraftSession.local(GraftSession.envCpus(4))
     Tables.evictOtherScaleFactors(sfDir)
     new java.io.File(outDir).mkdirs()
     // optional comma-separated subset for focused iteration (dev only; the
     // driver sets no filter and always dumps the full suite)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
+    // name order with the bench's memo lifecycle: each memo is released
+    // once its last consumer has been dumped, as in the timed runs
+    SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -39,6 +24,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
+      graft.queries.ExtQueries.releaseMemosAfter(name)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -240,52 +240,22 @@ object ExtQueries {
   private val LpCosMin = 0.5
   private val LpRounds = 2
 
-  // Every memo build narrates its wall time to stdout (and the leveled
-  // log), AND records its EXCLUSIVE build seconds in a ledger Bench
-  // drains after each query to emit `memo:<name>` pseudo-entries —
-  // without the split, the alphabetically-first consumer's bench row
-  // carries the one-time build cost and per-query regression diffs
-  // across rounds are unreadable. Exclusive = total minus nested memo
-  // builds (minhashPairs triggers shingleBases inside its own window),
-  // so the ledger entries for one query sum to exactly the build time
-  // subtracted from that query's row.
-  private val memoBuildLedger =
-    scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-  private val memoChildSecs = new ThreadLocal[List[Array[Double]]] {
-    override def initialValue(): List[Array[Double]] = Nil
-  }
+  // The corpus memos (queries/Memo.scala): each is declared once below,
+  // next to its readers, with every query and memo that reads it; the
+  // registry derives the build ledger, release points and release-all.
+  private[queries] val memos = new Memo.Registry
 
   /** Drain (name, exclusive seconds) of memo builds since the last call —
     * Bench's per-query attribution hook. */
-  def drainMemoBuilds(): Seq[(String, Double)] = memoBuildLedger.synchronized {
-    val out = memoBuildLedger.toList
-    memoBuildLedger.clear()
-    out
-  }
+  def drainMemoBuilds(): Seq[(String, Double)] = memos.drainBuilds()
 
-  private def timedMemo(name: String)(build: => DataFrame): DataFrame = {
-    val t0 = System.nanoTime()
-    memoChildSecs.set(new Array[Double](1) :: memoChildSecs.get())
-    val df =
-      try build
-      finally {
-        val nested = memoChildSecs.get().head(0)
-        memoChildSecs.set(memoChildSecs.get().tail)
-        val total = (System.nanoTime() - t0) / 1e9
-        memoChildSecs.get() match {
-          case parent :: _ => parent(0) += total
-          case Nil => ()
-        }
-        memoBuildLedger.synchronized {
-          memoBuildLedger += ((name, total - nested))
-        }
-        val line = graft.observability.Observability.logLeveled(
-          graft.observability.Observability.Level.Info,
-          f"memo $name built in $total%.3f s")
-        println(s"[graft] $line")
-      }
-    df
-  }
+  /** Record that `query` finished and release every memo none of whose
+    * consumers is left to run — called by Bench after each query. */
+  def releaseMemosAfter(query: String): Unit = memos.releaseAfter(query)
+
+  /** Release every memo. For long-lived sessions that move between scale
+    * factors, and between whole passes of a suite. */
+  def releasePairsCache(): Unit = memos.releaseAll()
 
   // The corpus explodes into 56-bit shingle hashes ONCE: the memoized
   // per-doc-distinct (doc_id, b1, b2) table from Dedup.shingleBases feeds
@@ -294,20 +264,18 @@ object ExtQueries {
   // corpus, doubling the curation funnel's first-build. Materialized
   // (checkpointed) because it is the tokenize-once artifact every consumer
   // fans out from; at 100 TB this is the standard persisted tokenization
-  // pass. Lifecycle matches the other memos (releasePairsCache).
-  private val shingleCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private def docShingleBases(s: SparkSession, d: String): DataFrame =
-    shingleCache.getOrElseUpdate(d, timedMemo("shingleBases")(
-      Dedup.materializeAndRelease(
-        Dedup.shingleBases(Tables.documents(s, d), "doc_id", "text", W))))
-
-  // Since the round-13 default flip, Dedup.shingleBases IS the unicode
-  // tokenization — the explicitly-named unicode queries
-  // (e_dedup_unicode / e_decontam_unicode, kept as the documented
-  // contract surface) read the SAME tokenize-once artifact instead of
-  // building an identical second table.
-  private def docShingleBasesUnicode(s: SparkSession, d: String): DataFrame =
-    docShingleBases(s, d)
+  // pass. Since the round-13 default flip, Dedup.shingleBases IS the
+  // unicode tokenization, so the explicitly-named unicode queries
+  // (e_dedup_unicode / e_decontam_unicode, kept as the documented contract
+  // surface) read this same artifact.
+  private val docShingleBases = memos("shingleBases",
+    "e_bbit_minhash", "e_containment_dup", "e_decontam_unicode",
+    "e_dedup_unicode", "e_doc_novelty", "e_minhash_calibration",
+    "e_ngram_jaccard", "e_vocab_growth", "minhashPairs", "decontamHits",
+    "idfCosineSets", "sourceJaccardSets", "prefixJoinPairs") {
+    (s, d) => Dedup.materializeAndRelease(
+      Dedup.shingleBases(Tables.documents(s, d), "doc_id", "text", W))
+  }
 
   // Three queries (minhash candidates, dedup-apply, near-dup clusters) share
   // the same signatures→bands→candidate-pairs subplan; memoize the UNFILTERED
@@ -319,215 +287,94 @@ object ExtQueries {
   // top. At cluster scale this is the materialized intermediate you'd
   // checkpoint once and fan out from. (Under SPARK_GRAFT_NO_CACHE the memo
   // holds a lazy plan instead — recomputed per use, stored nowhere.)
-  private val pairsCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private def minhashPairs(s: SparkSession, d: String): DataFrame =
-    pairsCache.getOrElseUpdate(d, timedMemo("minhashPairs")(
-      Dedup.minhashCandidatesFromBases(docShingleBases(s, d),
-        k = K, bandRows = BandRows)))
+  private val minhashPairs = memos("minhashPairs",
+    "e_bbit_minhash", "e_cc_incremental", "e_cluster_density",
+    "e_connected_components", "e_cross_source_dup", "e_curation_funnel",
+    "e_dedup_apply", "e_dedup_authority", "e_dedup_curve", "e_dedup_impact",
+    "e_dedup_minhash_lsh", "e_dup_kcore", "e_dup_triangles",
+    "e_host_dup_weight", "e_label_propagation", "e_linkage_weights",
+    "e_lsh_recall", "e_lsh_recall_sweep", "e_minhash_calibration",
+    "nearDupClusters", "ccBaseline") {
+    (s, d) => Dedup.minhashCandidatesFromBases(docShingleBases(s, d),
+      k = K, bandRows = BandRows)
+  }
 
   // Two queries (near-dup clusters, leakage split) consume the SAME 3-round
   // label-propagation clustering of the high-confidence minhash graph;
   // memoize the compact materialized (doc_id, cluster_id) table per sfDir —
   // labelPropagationClusters already checkpoints its result and releases
-  // its edge intermediate, so the memo holds one small table. Same
-  // lifecycle as the other memos (releasePairsCache).
-  private val clustersCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private def nearDupClusters(s: SparkSession, d: String): DataFrame =
-    clustersCache.getOrElseUpdate(d, timedMemo("nearDupClusters")(
-      Dedup.labelPropagationClusters(
-        minhashPairs(s, d).filter(col("est_jaccard") >= 0.5),
-        Tables.documents(s, d), "doc_id", iterations = 3)))
-
-  /** Drop the memoized pair tables; their checkpointed blocks are reclaimed
-    * by the ContextCleaner once unreferenced. For long-lived sessions that
-    * move between scale factors. */
-  def releasePairsCache(): Unit = {
-    pairsCache.clear(); kmeansCache.clear(); decontamCache.clear()
-    shingleCache.clear()
-    fpCache.clear(); clustersCache.clear()
-    ccBaselineCache.clear(); lmScoresCache.clear(); saCache.clear()
-    saPairsCache.clear()
-    winnowCache.clear(); nbCache.clear(); nbModelCache.clear()
-    nbScoresAllCache.clear(); dsirCache.clear()
-    simhashPairsCache.clear(); simhashMultiCache.clear()
-    sourceJaccardCache.clear(); dedupIncCache.clear()
-    mediaFpsCache.clear(); distDriftCache.clear()
-    idfCosineCache.clear(); cosineNearDupCache.clear()
-    prefixJoinCache.clear(); rankOverlapCache.clear()
+  // its edge intermediate, so the memo holds one small table.
+  private val nearDupClusters = memos("nearDupClusters",
+    "e_cc_sizes", "e_cluster_density", "e_dedup_best", "e_dedup_clusters",
+    "e_golden_record", "e_leakage_split") {
+    (s, d) => Dedup.labelPropagationClusters(
+      minhashPairs(s, d).filter(col("est_jaccard") >= 0.5),
+      Tables.documents(s, d), "doc_id", iterations = 3)
   }
-
-  // ---------------- memo lifecycle ----------------
-
-  // Each memo's LAST consumer in the name-sorted run order Bench uses.
-  // Holding every memo's checkpoint blocks for the whole full-suite run
-  // pressures storage memory and GC enough to inflate the late heavy
-  // queries ~3× over their isolated times (measured round 6: identical
-  // shuffle/spill metrics, pure cross-query interference) — so Bench
-  // releases each memo the moment its last consumer finished, narrated
-  // like the builds. Consumers are listed transitively: a memo consumed
-  // only while BUILDING another memo is charged to the query that
-  // triggers that build.
-  // lazy: several of the referenced cache vals are declared later in this
-  // object and would be null at eager-init time
-  private lazy val memoLastConsumer: Seq[(String, scala.collection.concurrent.TrieMap[String, DataFrame], String)] = Seq(
-    // ccBaseline: only e_cc_incremental reads the simulated prior labeling
-    ("ccBaseline", ccBaselineCache, "e_cc_incremental"),
-    // decontamHits: e_curation_funnel, e_decontam
-    ("decontamHits", decontamCache, "e_decontam"),
-    // minhashPairs: e_bbit_minhash, e_cc_incremental,
-    // e_connected_components, e_curation_funnel, e_dedup_apply,
-    // e_cluster_density, e_dedup_clusters (builds nearDupClusters), e_dedup_curve,
-    // e_dedup_impact, e_dedup_minhash_lsh, e_dup_kcore,
-    // e_dup_triangles, e_dedup_authority, e_host_dup_weight,
-    // e_label_propagation, e_linkage_weights, e_lsh_recall,
-    // e_lsh_recall_sweep, e_minhash_calibration (last)
-    ("minhashPairs", pairsCache, "e_minhash_calibration"),
-    // nearDupClusters: e_cc_sizes, e_cluster_density, e_dedup_best,
-    // e_dedup_clusters, e_golden_record, e_leakage_split
-    ("nearDupClusters", clustersCache, "e_leakage_split"),
-    // shingleBases: minhashPairs build (e_cc_incremental), decontamHits
-    // build (e_curation_funnel), e_dedup_unicode / e_decontam_unicode
-    // (the unicode alias reads the same artifact since round 13),
-    // e_idf_cosine, e_minhash_calibration, e_ngram_jaccard,
-    // e_prefix_join, e_source_jaccard and e_vocab_growth directly
-    ("shingleBases", shingleCache, "e_vocab_growth"),
-
-    // kmeansAssigned: e_cluster_sample, e_crossmodal_align,
-    // e_embed_outliers, e_embedding_drift, e_kmeans, e_kmeans_silhouette,
-    // e_knn_accuracy, e_semantic_dedup (last)
-    ("kmeansAssigned", kmeansCache, "e_semantic_dedup"),
-    // lmScores: e_lm_perplexity2, e_lm_tail_cut
-    ("lmScores", lmScoresCache, "e_lm_tail_cut"),
-    // nbScored: e_classifier_kappa (name-first), e_nb_classify,
-    // e_nb_confusion (last)
-    ("nbScored", nbCache, "e_nb_confusion"),
-    // nbScoreAll: e_calibration_ece (name-first), e_conformal_coverage,
-    // e_label_errors, e_nb_pr_curve (last)
-    ("nbScoreAll", nbScoresAllCache, "e_nb_pr_curve"),
-    // dsirScores: e_dsir_ess (name-first), e_dsir_weights (last)
-    ("dsirScores", dsirCache, "e_dsir_weights"),
-    // simhashFingerprints: e_dedup_simhash, e_edit_verify,
-    // e_simhash_multitable, e_simhash_pairs
-    ("simhashFingerprints", fpCache, "e_simhash_pairs"),
-    // simhashPairs (banded candidate table): e_dup_explain,
-    // e_edit_verify, e_jaro_verify, e_simhash_pairs, e_verify_sweep (last)
-    ("simhashPairs", simhashPairsCache, "e_verify_sweep"),
-    // multitable pair table: single consumer, released after itself
-    ("simhashMultiPairs", simhashMultiCache, "e_simhash_multitable"),
-    // source-membership lists: e_bottomk_resemblance (builds, name-first),
-    // e_source_jaccard (release point)
-    ("sourceJaccardSets", sourceJaccardCache, "e_source_jaccard"),
-    // idf-weighted shingle member lists: single consumer, released after itself
-    ("idfCosineSets", idfCosineCache, "e_idf_cosine"),
-    // incremental-dedup standing index (sigs + bands): released after self
-    ("dedupIncIndex", dedupIncCache, "e_dedup_incremental"),
-    // audio fingerprints release after audio; the video entry (created
-    // later in name order) after video — one cache, two release points
-    ("audioFps", mediaFpsCache, "e_audio_neardup"),
-    ("videoFps", mediaFpsCache, "e_video_neardup"),
-    // drift count table: single consumer, released after itself
-    ("distDriftCounts", distDriftCache, "e_dist_drift"),
-    // phashFingerprints: e_phash_clusters, e_phash_neardup
-    ("phashFingerprints", phashFpCache, "e_phash_neardup"),
-    // cosineNearDupPairs: e_cosine_neardup, e_mutual_neighbors (last)
-    ("cosineNearDupPairs", cosineNearDupCache, "e_mutual_neighbors"),
-    // prefixJoinPairs: e_lsh_recall (builds), e_lsh_recall_sweep,
-    // e_prefix_join (last)
-    ("prefixJoinPairs", prefixJoinCache, "e_prefix_join"),
-    // suffixRanks: e_lcp_repeats, e_suffix_ranks
-    ("suffixRanks", saCache, "e_suffix_ranks"),
-    // saSpanPairs: e_exact_contamination (builds), e_lcp_repeats
-    ("saSpanPairs", saPairsCache, "e_lcp_repeats"),
-    // winnowFps: e_winnow_fingerprints, e_winnow_matches
-    ("winnowFps", winnowCache, "e_winnow_matches"),
-    // rank-overlap by-depth table: single consumer, released after itself
-    ("rankOverlapByDepth", rankOverlapCache, "e_rank_overlap"))
-
-  /** Release every memo whose last name-ordered consumer is `query` —
-    * called by Bench after each query completes. Out-of-order callers
-    * (SPARK_GRAFT_ONLY subsets, direct test invocations that skip this
-    * hook) stay correct: a released memo simply rebuilds on next use. */
-  def releaseMemosAfter(query: String): Unit =
-    memoLastConsumer.filter(_._3 == query).foreach { case (name, cache, _) =>
-      val released = cache.values.map(graft.tools.MemoRelease.release).toSeq
-      cache.clear()
-      if (released.nonEmpty) {
-        // true = checkpoint blocks freed; false = plain cache dropped
-        val kind =
-          if (released.forall(identity)) "released"
-          else if (released.exists(identity)) "released (mixed cache drop)"
-          else "cache dropped"
-        val line = graft.observability.Observability.logLeveled(
-          graft.observability.Observability.Level.Info,
-          s"memo $name $kind after $query")
-        println(s"[graft] $line")
-      }
-    }
 
   // The benchmark-decontamination hit table (doc_id, n_hits vs the held-out
   // id % 97 == 0 set) feeds both e_decontam and the curation funnel;
-  // memoize it materialized per sfDir, same lifecycle as pairsCache.
+  // memoize it materialized per sfDir.
   // Derived from the shared shingle table: the bench side (doc_id % 97 == 0)
   // and corpus side are disjoint slices of it, preserving decontaminate's
   // disjoint-inputs contract.
-  private val decontamCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private def decontamHits(s: SparkSession, d: String): DataFrame =
-    decontamCache.getOrElseUpdate(d, timedMemo("decontamHits") {
-      val bases = docShingleBases(s, d)
-        .select(col("doc_id"), col("b1").as("sh"))
-      Dedup.materializeAndRelease(graft.functions.CorpusFilters
-        .decontaminateFromShingles(
-          bases.filter(col("doc_id") % 97 =!= 0),
-          bases.filter(col("doc_id") % 97 === 0).select(col("sh")).distinct()))
-    })
+  private val decontamHits = memos("decontamHits",
+    "e_curation_funnel", "e_decontam") { (s, d) =>
+    val bases = docShingleBases(s, d)
+      .select(col("doc_id"), col("b1").as("sh"))
+    Dedup.materializeAndRelease(graft.functions.CorpusFilters
+      .decontaminateFromShingles(
+        bases.filter(col("doc_id") % 97 =!= 0),
+        bases.filter(col("doc_id") % 97 === 0).select(col("sh")).distinct()))
+  }
 
   // Three queries (kmeans summary, semantic dedup, diversity sample) derive
   // from the same 2-round Lloyd assignment; memoize it MATERIALIZED per
   // sfDir (n rows × (id, 64-dim v, cid, d2) — compact) so the Lloyd jobs
-  // and their driver-side centroid collects run once, not per query. Same
-  // lifecycle contract as pairsCache above.
-  private val kmeansCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private def kmeansAssigned(s: SparkSession, d: String): DataFrame =
-    kmeansCache.getOrElseUpdate(d, timedMemo("kmeansAssigned")(
-      Dedup.materializeAndRelease(
-        graft.similarity.KMeans.assignments(Tables.embeddings(s, d), "vec_id",
-          "embedding", isInit = col("vec_id") % 50 === 1, iterations = 2))))
+  // and their driver-side centroid collects run once, not per query.
+  private val kmeansAssigned = memos("kmeansAssigned",
+    "e_cluster_sample", "e_crossmodal_align", "e_embed_outliers",
+    "e_embedding_drift", "e_kmeans", "e_kmeans_silhouette", "e_knn_accuracy",
+    "e_semantic_dedup") {
+    (s, d) => Dedup.materializeAndRelease(
+      graft.similarity.KMeans.assignments(Tables.embeddings(s, d), "vec_id",
+        "embedding", isInit = col("vec_id") % 50 === 1, iterations = 2))
+  }
 
   // Two queries (per-doc predictions, confusion matrix) share the same
   // train-on-the-rest NB scoring of the held-out slice; memoize the
-  // compact scored table (≤ |eval docs| rows × 4 cols) per sfDir. Same
-  // lifecycle as the other memos (releasePairsCache / releaseMemosAfter).
+  // compact scored table (≤ |eval docs| rows × 4 cols) per sfDir.
   // The trained model itself is memoized separately: driver-side arrays
   // (classes × NbBuckets longs — trivial memory, nothing persisted), so
   // the PR-curve query can re-score per class without re-training.
-  private val nbModelCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.functions.NaiveBayes.Model]
-  private def nbModel(s: SparkSession, d: String): graft.functions.NaiveBayes.Model =
-    nbModelCache.getOrElseUpdate(d, graft.functions.NaiveBayes.train(
+  private val nbModel = memos("nbModel", "nbScoreAll", "nbScored") {
+    (s, d) => graft.functions.NaiveBayes.train(
       Tables.documents(s, d), "doc_id", "text", "lang",
-      isTrain = !(col("doc_id") % 3 === 0), buckets = NbBuckets))
+      isTrain = !(col("doc_id") % 3 === 0), buckets = NbBuckets)
+  }
 
   // Three queries (conformal coverage, label errors, PR curve) derive
   // from the same per-(doc, class) score table; memoize it MATERIALIZED
   // (|eval docs| × |classes| rows × 4 cols — compact) so the scoring
   // subplan runs once, not once per downstream pass (GroupQuantileCut
   // alone reads its input twice).
-  private val nbScoresAllCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private def nbScoreAll(s: SparkSession, d: String): DataFrame =
-    nbScoresAllCache.getOrElseUpdate(d, timedMemo("nbScoreAll")(
-      Dedup.materializeAndRelease(
-        graft.functions.NaiveBayes.scoreAll(
-          Tables.documents(s, d).filter(col("doc_id") % 3 === 0),
-          nbModel(s, d), "doc_id", "text", keep = Seq("lang")))))
+  private val nbScoreAll = memos("nbScoreAll",
+    "e_calibration_ece", "e_conformal_coverage", "e_label_errors",
+    "e_nb_pr_curve") {
+    (s, d) => Dedup.materializeAndRelease(
+      graft.functions.NaiveBayes.scoreAll(
+        Tables.documents(s, d).filter(col("doc_id") % 3 === 0),
+        nbModel(s, d), "doc_id", "text", keep = Seq("lang")))
+  }
 
-  private val nbCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private def nbScored(s: SparkSession, d: String): DataFrame =
-    nbCache.getOrElseUpdate(d, timedMemo("nbScored")(
-      Dedup.materializeAndRelease(
-        graft.functions.NaiveBayes.predict(
-          Tables.documents(s, d).filter(col("doc_id") % 3 === 0),
-          nbModel(s, d), "doc_id", "text",
-          predCol = "pred_lang", keep = Seq("lang")))))
+  private val nbScored = memos("nbScored",
+    "e_classifier_kappa", "e_nb_classify", "e_nb_confusion") {
+    (s, d) => Dedup.materializeAndRelease(
+      graft.functions.NaiveBayes.predict(
+        Tables.documents(s, d).filter(col("doc_id") % 3 === 0),
+        nbModel(s, d), "doc_id", "text",
+        predCol = "pred_lang", keep = Seq("lang")))
+  }
 
   // ---------------- Spark side ----------------
 
@@ -547,7 +394,7 @@ object ExtQueries {
     * signatures (UnicodeDedupSpec proves the divergence end-to-end).
     * Identical scale shape: the tokenizer swap is per-row scan work. */
   def eDedupUnicode(s: SparkSession, d: String): DataFrame =
-    Dedup.minhashCandidatesFromBases(docShingleBasesUnicode(s, d),
+    Dedup.minhashCandidatesFromBases(docShingleBases(s, d),
         k = K, bandRows = BandRows)
       .orderBy("doc_a", "doc_b")
 
@@ -557,7 +404,7 @@ object ExtQueries {
     * survive corpora where whitespace splitting would hide overlaps
     * behind punctuation or missing spaces. */
   def eDecontamUnicode(s: SparkSession, d: String): DataFrame = {
-    val bases = docShingleBasesUnicode(s, d)
+    val bases = docShingleBases(s, d)
       .select(col("doc_id"), col("b1").as("sh"))
     graft.functions.CorpusFilters.decontaminateFromShingles(
         bases.filter(col("doc_id") % 97 =!= 0),
@@ -776,36 +623,37 @@ object ExtQueries {
     * old corpus is never re-shingled and old-vs-old never re-pairs. The
     * oracle is the full-batch minhash SQL restricted to pairs touching
     * the increment, which the index-probe path must equal exactly. */
-  private val dedupIncCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
   def eDedupIncremental(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    val old = docs.filter(col("doc_id") % 10 =!= 0)
-    val fresh = docs.filter(col("doc_id") % 10 === 0)
-    // "yesterday's index": compact materialized signatures + bands — what
-    // a deployment persists between ingests. Tracked in a released-after-
-    // self cache so the checkpoint blocks never outlive the query.
-    val oldSigs = dedupIncCache.getOrElseUpdate(s"$d|sigs",
-      Dedup.materializeAndRelease(
-        Dedup.minhashSignatures(old, "doc_id", "text", K, W)))
-    val oldBands = dedupIncCache.getOrElseUpdate(s"$d|bands",
-      Dedup.materializeAndRelease(
-        Dedup.lshBands(oldSigs, K, BandRows)))
+    val fresh = Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
     Dedup.minhashIncrement(fresh, "doc_id", "text",
-        Some(oldSigs), Some(oldBands), K, W, BandRows)
+        Some(dedupIncSigs(s, d)), Some(dedupIncBands(s, d)), K, W, BandRows)
       .newPairs
       .orderBy("doc_a", "doc_b")
+  }
+
+  // "yesterday's index" of e_dedup_incremental: compact materialized
+  // signatures + bands of the non-increment docs — what a deployment
+  // persists between ingests
+  private val dedupIncSigs = memos("dedupIncSigs",
+    "e_dedup_incremental", "dedupIncBands") {
+    (s, d) => Dedup.materializeAndRelease(Dedup.minhashSignatures(
+      Tables.documents(s, d).filter(col("doc_id") % 10 =!= 0),
+      "doc_id", "text", K, W))
+  }
+  private val dedupIncBands = memos("dedupIncBands", "e_dedup_incremental") {
+    (s, d) => Dedup.materializeAndRelease(
+      Dedup.lshBands(dedupIncSigs(s, d), K, BandRows))
   }
 
   // Three queries (fingerprint listing, single-table pairs, multi-table
   // pairs) read the same SimHash fingerprints; memoize the compact
   // (doc_id, simhash, sh_long) table materialized per sfDir — the token
-  // explode + per-bit vote aggregation runs once. Same lifecycle as the
-  // other memos (releasePairsCache).
-  private val fpCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private def simhashFingerprints(s: SparkSession, d: String): DataFrame =
-    fpCache.getOrElseUpdate(d, timedMemo("simhashFingerprints")(
-      Dedup.materializeAndRelease(
-        Dedup.fingerprints(Tables.documents(s, d), "doc_id", "text", SimBits))))
+  // explode + per-bit vote aggregation runs once.
+  private val simhashFingerprints = memos("simhashFingerprints",
+    "e_dedup_simhash", "simhashPairs", "simhashMultiPairs") {
+    (s, d) => Dedup.materializeAndRelease(
+      Dedup.fingerprints(Tables.documents(s, d), "doc_id", "text", SimBits))
+  }
 
   def eDedupSimhash(s: SparkSession, d: String): DataFrame =
     simhashFingerprints(s, d)
@@ -815,10 +663,9 @@ object ExtQueries {
   // SimHash candidate pairs (hamming ≤ 3): e_edit_verify, e_jaro_verify,
   // e_simhash_pairs and e_verify_sweep read the SAME banded pair table —
   // memoized so the bucket self-join runs once, and RELEASED after its
-  // last name-ordered consumer (an untracked localCheckpoint here
-  // measurably inflated the later lm-family queries via storage/GC
-  // pressure — the round-6 interference mode).
-  private val simhashPairsCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  // last consumer (an untracked localCheckpoint here measurably inflated
+  // the later lm-family queries via storage/GC pressure — the round-6
+  // interference mode).
 
   /** Prefix width SIZED FROM THE MEASURED CORPUS (round 13:
     * `Dedup.simhashPrefixBitsFor` at target occupancy 64) — the fixed
@@ -831,10 +678,12 @@ object ExtQueries {
     Dedup.simhashPrefixBitsFor(
       Tables.documents(s, d).count(), targetOccupancy = 64, bits = SimBits)
 
-  private def simhashPairsMemo(s: SparkSession, d: String): DataFrame =
-    simhashPairsCache.getOrElseUpdate(d, timedMemo("simhashPairs")(
-      Dedup.simhashPairsFromFingerprints(simhashFingerprints(s, d),
-        simPrefixBits(s, d), maxHamming = 3)))
+  private val simhashPairsMemo = memos("simhashPairs",
+    "e_dup_explain", "e_edit_verify", "e_jaro_verify", "e_simhash_pairs",
+    "e_verify_sweep") {
+    (s, d) => Dedup.simhashPairsFromFingerprints(simhashFingerprints(s, d),
+      simPrefixBits(s, d), maxHamming = 3)
+  }
 
   def eSimhashPairs(s: SparkSession, d: String): DataFrame =
     simhashPairsMemo(s, d)
@@ -842,15 +691,17 @@ object ExtQueries {
 
   /** Multi-table SimHash candidates: 2 rotated prefix tables — recall and
     * bucket size tuned independently (vs the single-table e_simhash_pairs).
-    * Its materialized pair table is tracked in a released-after-self cache
-    * so the checkpoint blocks never outlive the query (see
-    * [[simhashPairsMemo]]'s interference note). */
-  private val simhashMultiCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+    * Its materialized pair table is a memo so the checkpoint blocks never
+    * outlive the query (see [[simhashPairsMemo]]'s interference note). */
   def eSimhashMultitable(s: SparkSession, d: String): DataFrame =
-    simhashMultiCache.getOrElseUpdate(d,
-      Dedup.simhashPairsMultiTableFromFingerprints(simhashFingerprints(s, d),
-        SimBits, simPrefixBits(s, d), maxHamming = 3, nTables = SimTables))
-      .orderBy("doc_a", "doc_b")
+    simhashMultiPairs(s, d).orderBy("doc_a", "doc_b")
+
+  private val simhashMultiPairs = memos("simhashMultiPairs",
+    "e_simhash_multitable") {
+    (s, d) => Dedup.simhashPairsMultiTableFromFingerprints(
+      simhashFingerprints(s, d), SimBits, simPrefixBits(s, d),
+      maxHamming = 3, nTables = SimTables)
+  }
 
   def eNgramJaccard(s: SparkSession, d: String): DataFrame =
     Dedup.ngramJaccardFromShingles(
@@ -904,23 +755,12 @@ object ExtQueries {
     * discipline as the Jaccard/containment path: the shingle equi-join
     * fans out ≤ maxDf partners per shingle instance, so pair work stays
     * linear at any corpus size; the corpus-size scalar crosses in as a
-    * broadcast one-row frame. Name-ordered before the shingleBases
-    * release point (e_vocab_growth). */
-  private val idfCosineCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+    * broadcast one-row frame. */
   def eIdfCosine(s: SparkSession, d: String): DataFrame = {
-    val bases = docShingleBases(s, d).select(col("doc_id"), col("b1").as("sh"))
-    val nDocs = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
-    // ONE aggregation to (shingle, sorted member list ≤ maxDf, idf²) —
-    // norms and pair dots both read this compact table (tracked,
-    // released after self), and pairs expand IN-ROW from the bounded
-    // member arrays exactly like e_source_jaccard: no shingle self-join
-    val bySh = idfCosineCache.getOrElseUpdate(d, Dedup.materializeAndRelease(
-      bases.groupBy("sh")
-        .agg(count(lit(1)).as("df"), sort_array(collect_set(col("doc_id"))).as("docs"))
-        .filter(col("df") <= JaccardMaxDf)
-        .crossJoin(broadcast(nDocs))
-        .select(col("sh"), col("docs"),
-          pow(log(col("n_docs").cast("double") / col("df")), 2).as("w2"))))
+    // norms and pair dots both read the memo's compact table, and pairs
+    // expand IN-ROW from the bounded member arrays exactly like
+    // e_source_jaccard: no shingle self-join
+    val bySh = idfCosineSets(s, d)
     val nrm = bySh.select(explode(col("docs")).as("doc_id"), col("w2"))
       .groupBy("doc_id").agg(sum(col("w2")).as("n2"))
     val pairList = flatten(transform(col("docs"), (x, i) =>
@@ -936,6 +776,19 @@ object ExtQueries {
       .filter(cos >= IdfCosMin)
       .select(col("doc_a"), col("doc_b"), round(cos, 6).as("idf_cosine"))
       .orderBy("doc_a", "doc_b")
+  }
+
+  // ONE aggregation to (shingle, sorted member list ≤ maxDf, idf²)
+  private val idfCosineSets = memos("idfCosineSets", "e_idf_cosine") { (s, d) =>
+    val nDocs = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
+    Dedup.materializeAndRelease(
+      docShingleBases(s, d).select(col("doc_id"), col("b1").as("sh"))
+        .groupBy("sh")
+        .agg(count(lit(1)).as("df"), sort_array(collect_set(col("doc_id"))).as("docs"))
+        .filter(col("df") <= JaccardMaxDf)
+        .crossJoin(broadcast(nDocs))
+        .select(col("sh"), col("docs"),
+          pow(log(col("n_docs").cast("double") / col("df")), 2).as("w2")))
   }
 
   /** Jaro-Winkler verification of the SAME SimHash candidate pairs as
@@ -1084,35 +937,32 @@ object ExtQueries {
       .orderBy("doc_id")
   }
 
-  /** Corpus-level source overlap: exact shingle-set Jaccard between every
-    * pair of sources — the dataset-curation report that tells you which
-    * feeds duplicate each other BEFORE document-grain dedup runs. Rides
-    * the shared shingleBases memo (name-ordered before its e_vocab_growth
-    * release point). Scale shape: per-source distinct is one shuffle on
-    * (source, shingle); the intersection is NOT a self-join — each
-    * shingle's ≤ #sources member list (a constant-bounded array) expands
-    * its source pairs IN-ROW, so the upstream runs once and nothing fans
-    * out past shingles × #sources²; the result is #source-pairs rows —
-    * never doc-grain. */
-  private val sourceJaccardCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   // ONE shuffle builds the per-shingle sorted source list (collect_set
   // dedups, so no separate distinct pass); the ≤ #sources arrays are the
   // whole downstream input, so the checkpoint holds #shingles small rows
-  // and every reader rereads that, not the corpus-grain join. Shared by
-  // e_bottomk_resemblance (first consumer, builds it) and
-  // e_source_jaccard (release point). (A further collapse-by-identical-
-  // set pass was measured SLOWER here: grouping on an array<string> key
-  // falls out of whole-stage codegen and doubled the wall time at sf0.1.)
-  private def sourceMembershipLists(s: SparkSession, d: String): DataFrame =
-    sourceJaccardCache.getOrElseUpdate(d, timedMemo("sourceJaccardSets")(
-      Dedup.materializeAndRelease(
-        docShingleBases(s, d).select(col("doc_id"), col("b1").as("sh"))
-          .join(Tables.documents(s, d).select(col("doc_id"), col("source")),
-            Seq("doc_id"))
-          .groupBy("sh")
-          .agg(sort_array(collect_set(col("source"))).as("srcs")))))
+  // and every reader rereads that, not the corpus-grain join. (A further
+  // collapse-by-identical-set pass was measured SLOWER here: grouping on
+  // an array<string> key falls out of whole-stage codegen and doubled the
+  // wall time at sf0.1.)
+  private val sourceMembershipLists = memos("sourceJaccardSets",
+    "e_bottomk_resemblance", "e_source_jaccard") {
+    (s, d) => Dedup.materializeAndRelease(
+      docShingleBases(s, d).select(col("doc_id"), col("b1").as("sh"))
+        .join(Tables.documents(s, d).select(col("doc_id"), col("source")),
+          Seq("doc_id"))
+        .groupBy("sh")
+        .agg(sort_array(collect_set(col("source"))).as("srcs")))
+  }
 
+  /** Corpus-level source overlap: exact shingle-set Jaccard between every
+    * pair of sources — the dataset-curation report that tells you which
+    * feeds duplicate each other BEFORE document-grain dedup runs. Rides
+    * the shared shingleBases memo. Scale shape: per-source distinct is
+    * one shuffle on (source, shingle); the intersection is NOT a
+    * self-join — each shingle's ≤ #sources member list (a
+    * constant-bounded array) expands its source pairs IN-ROW, so the
+    * upstream runs once and nothing fans out past shingles × #sources²;
+    * the result is #source-pairs rows — never doc-grain. */
   def eSourceJaccard(s: SparkSession, d: String): DataFrame = {
     val bySh = sourceMembershipLists(s, d)
     // per-source distinct-shingle counts, read off the membership lists
@@ -1362,13 +1212,13 @@ object ExtQueries {
   // sfDir. Winnowing needs POSITIONAL non-distinct shingles, so it cannot
   // ride the per-doc-distinct shingleBases memo — but its output is only
   // ~2/(window+1) of the shingle stream, so the memo is smaller than the
-  // shingle table it derives from. Lifecycle matches the other memos.
-  private val winnowCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private def winnowFps(s: SparkSession, d: String): DataFrame =
-    winnowCache.getOrElseUpdate(d, timedMemo("winnowFps")(
-      Dedup.materializeAndRelease(
-        graft.dedup.Winnowing.fingerprints(
-          Tables.documents(s, d), "doc_id", "text", W, WinnowWindow))))
+  // shingle table it derives from.
+  private val winnowFps = memos("winnowFps",
+    "e_winnow_fingerprints", "e_winnow_matches") {
+    (s, d) => Dedup.materializeAndRelease(
+      graft.dedup.Winnowing.fingerprints(
+        Tables.documents(s, d), "doc_id", "text", W, WinnowWindow))
+  }
 
   /** Winnowed fingerprint summary per document (Schleimer et al. 2003 —
     * the MOSS selection): count and a position-weighted checksum of the
@@ -1383,8 +1233,7 @@ object ExtQueries {
 
   /** Cross-document winnowing matches — the MOSS report: pairs sharing
     * ≥ WinnowMinShared distinct selected hashes, df-capped like the
-    * Jaccard path. Rides the winnowFps memo, name-ordered before its
-    * release point (this query IS the release point). */
+    * Jaccard path. Rides the winnowFps memo. */
   def eWinnowMatches(s: SparkSession, d: String): DataFrame =
     graft.dedup.Winnowing.matchesFromFingerprints(
         winnowFps(s, d), minShared = WinnowMinShared, maxDf = JaccardMaxDf)
@@ -1393,14 +1242,14 @@ object ExtQueries {
   // Two queries (suffix ranks, LCP repeats) consume the SAME prefix-
   // doubling construction; memoize the compact (doc_id, widx, srank,
   // spos) table per sfDir — already checkpointed by construction (each
-  // doubling round localCheckpoints). Lifecycle matches the other memos.
-  private val saCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private def suffixRanksMemo(s: SparkSession, d: String): DataFrame =
-    saCache.getOrElseUpdate(d, timedMemo("suffixRanks")(
-      graft.operators.SuffixArray.suffixRanks(
-        // initOrder 16 + 8-ary fan-out = exactly one doubling round for
-        // this corpus's ~100-word docs (16 → 128)
-        Tables.documents(s, d), "doc_id", "text", initOrder = 16)))
+  // doubling round localCheckpoints).
+  private val suffixRanksMemo = memos("suffixRanks",
+    "e_suffix_ranks", "saSpanPairs") {
+    (s, d) => graft.operators.SuffixArray.suffixRanks(
+      // initOrder 16 + 8-ary fan-out = exactly one doubling round for
+      // this corpus's ~100-word docs (16 → 128)
+      Tables.documents(s, d), "doc_id", "text", initOrder = 16)
+  }
 
   /** Exact global suffix ranks (word grain, doc-bounded) — the suffix
     * ARRAY of the corpus, built by prefix-doubling in ⌈log₂ doc-words⌉
@@ -1415,24 +1264,22 @@ object ExtQueries {
   // report from the IDENTICAL rank-adjacent pair table — the span-string
   // build plus the adjacency equi-join is the whole cost of a read, so it
   // materializes once and each query is just a filter + TakeOrdered over
-  // it. Charged to e_exact_contamination (first consumer), released after
-  // e_lcp_repeats. Consumes the suffixRanks memo transitively.
+  // it. Consumes the suffixRanks memo transitively.
   // Plain persist, NOT a checkpoint: the pair table is wide (~two window
-  // strings per corpus position) and consumed exactly twice back-to-back,
-  // so a checkpoint WRITE costs more than the one recompute it could ever
-  // save; the in-memory cache serves the second read and releases after
-  // e_lcp_repeats.
-  private val saPairsCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private def saSpanPairs(s: SparkSession, d: String): DataFrame =
-    saPairsCache.getOrElseUpdate(d,
-      graft.operators.SuffixArray.adjacentSpanPairs(
-        suffixRanksMemo(s, d), Tables.documents(s, d), "doc_id", "text",
-        window = SaWindow).persist())
+  // strings per corpus position) and consumed exactly twice, so a
+  // checkpoint WRITE costs more than the one recompute it could ever
+  // save; the in-memory cache serves the second read.
+  private val saSpanPairs = memos("saSpanPairs",
+    "e_exact_contamination", "e_lcp_repeats") {
+    (s, d) => graft.operators.SuffixArray.adjacentSpanPairs(
+      suffixRanksMemo(s, d), Tables.documents(s, d), "doc_id", "text",
+      window = SaWindow).persist()
+  }
 
   /** Longest repeated spans via rank-adjacent LCP over the suffix array —
     * verbatim repeated text at EVERY grain at once (the exact primitive
     * passage dedup approximates at chunk grain). Rides the shared
-    * rank-adjacent pair memo, name-ordered at its release point. */
+    * rank-adjacent pair memo. */
   def eLcpRepeats(s: SparkSession, d: String): DataFrame =
     graft.operators.SuffixArray.spansFromPairs(saSpanPairs(s, d),
       topK = SaTopK)
@@ -1441,9 +1288,8 @@ object ExtQueries {
     * between the held-out slice (doc_id % 97 == 0 — the same convention
     * as e_decontam) and the rest of the corpus, read off rank-adjacent
     * cross-source suffix pairs. Decontamination at ANY span length where
-    * the shingle path checks one fixed width. Rides (and builds) the
-    * shared rank-adjacent pair memo, name-ordered before its release
-    * point. */
+    * the shingle path checks one fixed width. Rides the shared
+    * rank-adjacent pair memo. */
   def eExactContamination(s: SparkSession, d: String): DataFrame =
     graft.operators.SuffixArray.spansFromPairs(saSpanPairs(s, d),
       topK = SaTopK,
@@ -1451,13 +1297,12 @@ object ExtQueries {
 
   // Two queries (per-doc weights, ESS diagnostic) share the DSIR scoring;
   // memoize the compact scored table (|docs| rows × 3 cols) per sfDir.
-  private val dsirCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private def dsirScores(s: SparkSession, d: String): DataFrame =
-    dsirCache.getOrElseUpdate(d, timedMemo("dsirScores")(
-      Dedup.materializeAndRelease(
-        graft.functions.ImportanceWeights.dsirLogRatios(
-          Tables.documents(s, d), "doc_id", "text",
-          isTarget = col("lang") === "en", buckets = DsirBuckets))))
+  private val dsirScores = memos("dsirScores", "e_dsir_ess", "e_dsir_weights") {
+    (s, d) => Dedup.materializeAndRelease(
+      graft.functions.ImportanceWeights.dsirLogRatios(
+        Tables.documents(s, d), "doc_id", "text",
+        isTarget = col("lang") === "en", buckets = DsirBuckets))
+  }
 
   /** DSIR importance weights: every doc scored by how much its hashed
     * unigram+bigram distribution resembles the English slice (the target
@@ -1937,10 +1782,24 @@ object ExtQueries {
     * bounded depth grid — every overlap@d is an exact integer, so the
     * only FP is the final weighted sum (6-dp rounded). Work = k² pairs
     * of two ≤ k-row lists. */
-  private val rankOverlapCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   def eRankOverlap(s: SparkSession, d: String): DataFrame = {
+    val byDepth = rankOverlapByDepth(s, d)
+    val norm = (1.0 - RboP) / (1.0 - math.pow(RboP, Bm25TopK))
+    val rbo = byDepth.agg(round(lit(norm) *
+      sum(pow(lit(RboP), col("depth") - 1) *
+        (col("overlap").cast("double") / col("depth"))), 6).as("rbo"))
+    byDepth.crossJoin(broadcast(rbo)).orderBy("depth")
+  }
+
+  // materialized ONCE (round 13): the ≤ Bm25TopK-row by-depth table
+  // feeds both the per-depth output and the RBO scalar — leaving it lazy
+  // planned the whole retrieval+rank+overlap subtree twice (the
+  // WindowBudgetSpec:22-24 duplication; budget was 4, now 0 visible
+  // windows because the bounded subplan runs behind the checkpoint). A
+  // memo, not an anonymous checkpoint, so its blocks are released after
+  // the query instead of leaking for the rest of the suite (the round-11
+  // lm-family interference mode).
+  private val rankOverlapByDepth = memos("rankOverlapByDepth", "e_rank_overlap") { (s, d) =>
     val docs = Tables.documents(s, d)
     val bm = graft.functions.Bm25.topDocs(docs, "doc_id", "text",
       Bm25Terms, topK = Bm25TopK)
@@ -1957,28 +1816,14 @@ object ExtQueries {
       .select(col("doc_id"), col(rankName))
     val joined = ranked(bm, "ra").join(ranked(ql, "rb"), Seq("doc_id"), "full")
     val depths = Seq.range(1, Bm25TopK + 1).map(_.toLong)
-    // materialized ONCE (round 13): the ≤ Bm25TopK-row by-depth table
-    // feeds both the per-depth output and the RBO scalar — leaving it
-    // lazy planned the whole retrieval+rank+overlap subtree twice
-    // (the WindowBudgetSpec:22-24 duplication; budget was 4, now 0
-    // visible windows because the bounded subplan runs behind the
-    // checkpoint). Tracked in the released-after-self memo cache — an
-    // anonymous checkpoint would leak its blocks for the rest of the
-    // suite (the round-11 lm-family interference mode).
-    val byDepth = rankOverlapCache.getOrElseUpdate(d,
-      Dedup.materializeAndRelease(joined
-        .withColumn("depth", explode(typedLit(depths)))
-        .groupBy(col("depth"))
-        .agg(sum((col("ra") <= col("depth") && col("rb") <= col("depth"))
-          .cast("long")).as("overlap"))
-        .select(col("depth"), col("overlap"),
-          round(col("overlap").cast("double") / col("depth"), 6)
-            .as("agreement"))))
-    val norm = (1.0 - RboP) / (1.0 - math.pow(RboP, Bm25TopK))
-    val rbo = byDepth.agg(round(lit(norm) *
-      sum(pow(lit(RboP), col("depth") - 1) *
-        (col("overlap").cast("double") / col("depth"))), 6).as("rbo"))
-    byDepth.crossJoin(broadcast(rbo)).orderBy("depth")
+    Dedup.materializeAndRelease(joined
+      .withColumn("depth", explode(typedLit(depths)))
+      .groupBy(col("depth"))
+      .agg(sum((col("ra") <= col("depth") && col("rb") <= col("depth"))
+        .cast("long")).as("overlap"))
+      .select(col("depth"), col("overlap"),
+        round(col("overlap").cast("double") / col("depth"), 6)
+          .as("agreement")))
   }
 
   /** Spearman rank correlation between the BM25 and query-likelihood
@@ -2099,15 +1944,13 @@ object ExtQueries {
 
   // Two queries (the interpolated scores themselves, the CCNet tail cut)
   // read the same per-doc bigram-LM score table; memoize it materialized
-  // per sfDir — compact (one row per doc), same lifecycle as the other
-  // memos (released after e_lm_tail_cut).
-  private val lmScoresCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private def lmScores(s: SparkSession, d: String): DataFrame =
-    lmScoresCache.getOrElseUpdate(d, timedMemo("lmScores")(
-      Dedup.materializeAndRelease(
-        graft.functions.LanguageModel.perplexityInterpolated(
-          Tables.documents(s, d), "doc_id", "text",
-          alpha = LmAlpha, lambda = LmLambda))))
+  // per sfDir — compact (one row per doc).
+  private val lmScores = memos("lmScores", "e_lm_perplexity2", "e_lm_tail_cut") {
+    (s, d) => Dedup.materializeAndRelease(
+      graft.functions.LanguageModel.perplexityInterpolated(
+        Tables.documents(s, d), "doc_id", "text",
+        alpha = LmAlpha, lambda = LmLambda))
+  }
 
   /** Interpolated-bigram perplexity per document — the CCNet-style model
     * quality filter's score table (λ·bigram + (1−λ)·unigram, add-α). */
@@ -2337,31 +2180,15 @@ object ExtQueries {
     * not just property-tested. */
   // The "existing corpus labeling" a real pipeline would already hold
   // before folding in a daily increment: batch CC over the non-increment
-  // ~94% of the minhash candidate graph. A SIMULATION artifact — and
-  // production reads yesterday's labels FROM STORAGE, so the simulation
-  // does too: the labeling is materialized to a parquet memo per sfDir on
-  // first use and read back on every later run, across JVMs, so repeated
-  // bench/verify sessions stop re-paying the fixture build (measured
-  // 3.4 s of the e_cc_incremental bench line — half that line). The path
-  // is fingerprinted with every parameter the labeling depends on (shingle
-  // width, MinHash size, band rows, the jaccard/modulo split), so a
-  // parameter change cannot read a stale baseline; a crashed write leaves
-  // no _SUCCESS and rebuilds. CC is deterministic, so the file's content
-  // equals what an in-JVM rebuild would produce.
-  private val ccBaselineCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private def ccBaseline(s: SparkSession, d: String): DataFrame =
-    ccBaselineCache.getOrElseUpdate(d, timedMemo("ccBaseline") {
-      val dir = new java.io.File(
-        s"target/graft_memo/${new java.io.File(d).getName}" +
-          s"/ccBaseline_k${K}b${BandRows}w${W}_j05m17")
-      if (!new java.io.File(dir, "_SUCCESS").isFile) {
-        val firstBatch = minhashPairs(s, d)
-          .filter(col("est_jaccard") >= 0.5 && col("doc_b") % 17 =!= 0)
-        Dedup.connectedComponents(firstBatch, Tables.documents(s, d), "doc_id")
-          .write.mode("overwrite").parquet(dir.toString)
-      }
-      s.read.parquet(dir.toString)
-    })
+  // ~94% of the minhash candidate graph. A simulation artifact, built in
+  // this JVM from the same memoized pairs as every other near-dup query,
+  // so no state from an earlier run can feed the graded result.
+  private val ccBaseline = memos("ccBaseline", "e_cc_incremental") { (s, d) =>
+    val firstBatch = minhashPairs(s, d)
+      .filter(col("est_jaccard") >= 0.5 && col("doc_b") % 17 =!= 0)
+    Dedup.materializeAndRelease(
+      Dedup.connectedComponents(firstBatch, Tables.documents(s, d), "doc_id"))
+  }
 
   def eCcIncremental(s: SparkSession, d: String): DataFrame = {
     val increment = minhashPairs(s, d)
@@ -2472,17 +2299,15 @@ object ExtQueries {
     * image-grain near-dups. */
   // Two queries (near-dup stats, cluster labels) read the same perceptual
   // fingerprints; memoize the compact materialized (media_id, phash,
-  // ph_long) table per sfDir — the decode + staged hashing runs once. Same
-  // lifecycle as the other memos (released after e_phash_neardup).
-  private val phashFpCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private def phashFingerprints(s: SparkSession, d: String): DataFrame =
-    phashFpCache.getOrElseUpdate(d, timedMemo("phashFingerprints") {
-      val media = graft.multimodal.Multimodal.synthesizeMedia(
-          Tables.documents(s, d)).toDF()
-        .filter(col("media_type") === "image")
-      Dedup.materializeAndRelease(
-        graft.multimodal.Multimodal.perceptualHash(media, PhBits))
-    })
+  // ph_long) table per sfDir — the decode + staged hashing runs once.
+  private val phashFingerprints = memos("phashFingerprints",
+    "e_phash_clusters", "e_phash_neardup") { (s, d) =>
+    val media = graft.multimodal.Multimodal.synthesizeMedia(
+        Tables.documents(s, d)).toDF()
+      .filter(col("media_type") === "image")
+    Dedup.materializeAndRelease(
+      graft.multimodal.Multimodal.perceptualHash(media, PhBits))
+  }
 
   def ePhashNeardup(s: SparkSession, d: String): DataFrame = {
     val fp = phashFingerprints(s, d)
@@ -2509,27 +2334,33 @@ object ExtQueries {
     * row per audio record with its segment count and cross-media match
     * stats — non-empty at every scale factor even when no near-dups
     * exist. Work ∝ Σ bucket² per rotation table, never segments². */
-  def eAudioNeardup(s: SparkSession, d: String): DataFrame = {
+  def eAudioNeardup(s: SparkSession, d: String): DataFrame =
+    segmentNeardupStats(audioFps(s, d), AudioKeyMod, AudioMaxHamming)
+
+  // audio/video fingerprint tables: single consumer each, memos so the
+  // checkpoint blocks release right after their query instead of
+  // pressuring storage/GC for the rest of the suite. Materialized before
+  // fanning out (3 consumers: segment counts, both banded join sides) —
+  // beyond the recompute, the UN-truncated lineage (33 md5 cells × staged
+  // projections UNDER a self-join) costs the optimizer ~50 s of
+  // driver-side analysis; the image path has the same boundary via its
+  // memo (measured, round 11)
+  private val audioFps = memos("audioFps", "e_audio_neardup") { (s, d) =>
     val audio = graft.multimodal.Multimodal.synthesizeMedia(
         Tables.documents(s, d)).toDF()
       .filter(col("media_type") === "audio")
-    // materialize the compact fingerprint table before fanning out (3
-    // consumers: segment counts, both banded join sides) — beyond the
-    // recompute, the UN-truncated lineage (33 md5 cells × staged
-    // projections UNDER a self-join) costs the optimizer ~50 s of
-    // driver-side analysis; the image path has the same boundary via its
-    // memo (measured, round 11)
-    val fps = mediaFpsCache.getOrElseUpdate(s"$d|audio",
-      Dedup.materializeAndRelease(
-        graft.multimodal.Multimodal.audioSegmentHashes(
-          audio, AudioSegBytes, PhBits, AudioKeyMod)))
-    segmentNeardupStats(fps, AudioKeyMod, AudioMaxHamming)
+    Dedup.materializeAndRelease(
+      graft.multimodal.Multimodal.audioSegmentHashes(
+        audio, AudioSegBytes, PhBits, AudioKeyMod))
   }
-
-  // audio/video fingerprint tables: single consumer each, tracked so the
-  // checkpoint blocks release right after their query instead of
-  // pressuring storage/GC for the rest of the suite
-  private val mediaFpsCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private val videoFps = memos("videoFps", "e_video_neardup") { (s, d) =>
+    val video = graft.multimodal.Multimodal.synthesizeMedia(
+        Tables.documents(s, d))
+      .filter(col("media_type") === "video")
+    Dedup.materializeAndRelease(
+      graft.multimodal.Multimodal.videoFrameHashes(
+        video, VideoEveryN, PhBits, AudioKeyMod))
+  }
 
   /** Video near-dup by sampled-frame hashing — the third modality through
     * the shared banding stack: every 2nd 256-byte "frame" of the
@@ -2539,16 +2370,8 @@ object ExtQueries {
     * as SimHash/pHash/audio. Shot-level matching: a reused clip aligns on
     * some sampled frame even after re-cuts. Same output shape and
     * materialization boundary as [[eAudioNeardup]]. */
-  def eVideoNeardup(s: SparkSession, d: String): DataFrame = {
-    val video = graft.multimodal.Multimodal.synthesizeMedia(
-        Tables.documents(s, d))
-      .filter(col("media_type") === "video")
-    val fps = mediaFpsCache.getOrElseUpdate(s"$d|video",
-      Dedup.materializeAndRelease(
-        graft.multimodal.Multimodal.videoFrameHashes(
-          video, VideoEveryN, PhBits, AudioKeyMod)))
-    segmentNeardupStats(fps, AudioKeyMod, AudioMaxHamming)
-  }
+  def eVideoNeardup(s: SparkSession, d: String): DataFrame =
+    segmentNeardupStats(videoFps(s, d), AudioKeyMod, AudioMaxHamming)
 
   /** Shared per-media rollup of a segment/frame fingerprint table
     * (media_id, seg_idx, seg_key, phash, ph_long): banded segment pairs →
@@ -2611,15 +2434,14 @@ object ExtQueries {
     cosineNearDupMemo(s, d).orderBy("id_a", "id_b")
 
   // thresholded banded-LSH cosine pair table, shared by e_cosine_neardup
-  // and e_mutual_neighbors (release point — last name-ordered consumer)
-  private val cosineNearDupCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private def cosineNearDupMemo(s: SparkSession, d: String): DataFrame =
-    cosineNearDupCache.getOrElseUpdate(d, timedMemo("cosineNearDupPairs") {
-      Dedup.materializeAndRelease(
-        Similarity.cosineNearDupPairs(Tables.embeddings(s, d),
-          "vec_id", "embedding", threshold = NearDupThreshold,
-          bandBits = NearDupBandBits, nBands = NearDupBands))
-    })
+  // and e_mutual_neighbors
+  private val cosineNearDupMemo = memos("cosineNearDupPairs",
+    "e_cosine_neardup", "e_mutual_neighbors") {
+    (s, d) => Dedup.materializeAndRelease(
+      Similarity.cosineNearDupPairs(Tables.embeddings(s, d),
+        "vec_id", "embedding", threshold = NearDupThreshold,
+        bandBits = NearDupBandBits, nBands = NearDupBands))
+  }
 
   /** Reciprocal-best merge partners over the banded sign-LSH candidate
     * pairs: (a, b) survives only when each is the other's
@@ -2757,30 +2579,28 @@ object ExtQueries {
     * (AllPairs/PPJoin) — the ZERO-false-negative complement to the
     * banded MinHash path: candidates come from an equi-join on each
     * set's df-rarest prefix shingles (a qualifying pair provably shares
-    * one), then verify exactly. Rides the shared shingle memo,
-    * name-ordered before its release point. */
+    * one), then verify exactly. Rides the shared shingle memo. */
   def ePrefixJoin(s: SparkSession, d: String): DataFrame =
     prefixJoinMemo(s, d).orderBy("doc_a", "doc_b")
 
-  // exact prefix-filtering pair table, shared by e_lsh_recall (first
-  // name-ordered consumer, builds) and e_prefix_join (release point)
-  private val prefixJoinCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private def prefixJoinMemo(s: SparkSession, d: String): DataFrame =
-    prefixJoinCache.getOrElseUpdate(d, timedMemo("prefixJoinPairs") {
-      // the PPJoin verification stage does ~100 bytes of CPU
-      // (array_intersect over doc-sized sorted sets) per byte of shuffle
-      // input — AQE's byte-based 1 MB merge floor folded it to 4 tasks on
-      // a 32-core session (0.94 s job). Lower the floor around the
-      // build's EXECUTION (AQE reads conf at execution, so the scope must
-      // wrap the materialization, not the lazy plan); inert at scale,
-      // where every partition exceeds any floor.
-      graft.operators.LoopConf.scopedCpuDense(s) {
-        Dedup.materializeAndRelease(
-          Dedup.prefixFilterJoin(
-            docShingleBases(s, d).select(col("doc_id"), col("b1").as("sh")),
-            PpjTNum, PpjTDen))
-      }
-    })
+  // exact prefix-filtering pair table, shared by e_lsh_recall,
+  // e_lsh_recall_sweep and e_prefix_join
+  private val prefixJoinMemo = memos("prefixJoinPairs",
+    "e_lsh_recall", "e_lsh_recall_sweep", "e_prefix_join") {
+    // the PPJoin verification stage does ~100 bytes of CPU
+    // (array_intersect over doc-sized sorted sets) per byte of shuffle
+    // input — AQE's byte-based 1 MB merge floor folded it to 4 tasks on
+    // a 32-core session (0.94 s job). Lower the floor around the
+    // build's EXECUTION (AQE reads conf at execution, so the scope must
+    // wrap the materialization, not the lazy plan); inert at scale,
+    // where every partition exceeds any floor.
+    (s, d) => graft.operators.LoopConf.scopedCpuDense(s) {
+      Dedup.materializeAndRelease(
+        Dedup.prefixFilterJoin(
+          docShingleBases(s, d).select(col("doc_id"), col("b1").as("sh")),
+          PpjTNum, PpjTDen))
+    }
+  }
 
   /** Embedding-space source similarity: pairwise cosine between
     * per-source centroid embeddings — which feeds cover the same
@@ -2897,20 +2717,8 @@ object ExtQueries {
     * today's ingest — a spiking token is the first symptom of a scraper
     * change, a spam wave, or an upstream re-encode. One corpus count
     * scan; totals broadcast as a one-row frame; TakeOrdered cut. */
-  private val distDriftCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
   def eDistDrift(s: SparkSession, d: String): DataFrame = {
-    val toks = Tables.documents(s, d)
-      .select(col("lang"), explode(graft.functions.TextAnalysis.unicodeTokens(col("text"))).as("token"))
-      .filter(col("token") =!= "")
-    // materialize the vocabulary-sized count table ONCE: the totals read
-    // and the contribution scan both consume it — a broadcast-subtree
-    // totals frame would re-run the corpus explode+aggregate a second
-    // time. Tracked in a released-after-self cache (storage/GC pressure
-    // from untracked checkpoints measurably inflates later suite queries).
-    val counts = distDriftCache.getOrElseUpdate(d, Dedup.materializeAndRelease(
-      toks.groupBy(col("token"))
-        .agg(count(when(col("lang") === "en", 1)).as("ca"),
-          count(when(col("lang") =!= "en", 1)).as("cb"))))
+    val counts = distDriftCounts(s, d)
     val tr = counts.agg(sum(col("ca")), sum(col("cb")), count(lit(1))).head()
     // (ta + v) / (tb + v) as literal longs — the same integer sums the
     // oracle's scalar subquery forms, so the double arithmetic below is
@@ -2925,6 +2733,21 @@ object ExtQueries {
       .select(col("token"), round(p, 6).as("p_en"), round(q, 6).as("p_rest"),
         round(contrib, 6).as("js_contrib"))
       .orderBy(desc("js_contrib"), asc("token")).limit(DriftTopK)
+  }
+
+  // the vocabulary-sized count table, materialized ONCE: the totals read
+  // and the contribution scan both consume it — a broadcast-subtree
+  // totals frame would re-run the corpus explode+aggregate a second
+  // time. A memo (storage/GC pressure from untracked checkpoints
+  // measurably inflates later suite queries).
+  private val distDriftCounts = memos("distDriftCounts", "e_dist_drift") { (s, d) =>
+    val toks = Tables.documents(s, d)
+      .select(col("lang"), explode(graft.functions.TextAnalysis.unicodeTokens(col("text"))).as("token"))
+      .filter(col("token") =!= "")
+    Dedup.materializeAndRelease(
+      toks.groupBy(col("token"))
+        .agg(count(when(col("lang") === "en", 1)).as("ca"),
+          count(when(col("lang") =!= "en", 1)).as("cb")))
   }
 
   /** Vocabulary growth curve (Heaps' law, the tokenizer/vocab-planning
@@ -3053,26 +2876,17 @@ object ExtQueries {
 
   // Two queries (merge induction, tokenizer apply) share the learned merge
   // table; it is a driver-side Seq of BpeMerges rows — no Spark blocks to
-  // release, so a plain per-sfDir memo suffices (narrated like the
-  // DataFrame memos for bench attribution).
-  private val bpeMergeCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[graft.functions.BpeVocab.Merge]]
-  private def bpeMerges(s: SparkSession, d: String): Seq[graft.functions.BpeVocab.Merge] =
-    bpeMergeCache.getOrElseUpdate(d, {
-      val t0 = System.nanoTime()
-      // round 13: the graded path trains on the UNICODE word table
-      // (NFKC + `[\p{L}\p{N}]+`, lowercased) — on this all-lowercase
-      // ASCII corpus it extracts exactly the `[a-z]+` words, and on a
-      // real multilingual corpus it stops dropping every non-ASCII word
-      val m = graft.functions.BpeVocab.train(
-        graft.functions.BpeVocab.wordCountsUnicode(Tables.documents(s, d), "text"),
-        BpeMerges)
-      val line = graft.observability.Observability.logLeveled(
-        graft.observability.Observability.Level.Info,
-        f"memo bpeMerges built in ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      println(s"[graft] $line")
-      m
-    })
+  // release, the value is just dropped.
+  private val bpeMerges = memos("bpeMerges",
+    "e_bpe_encode", "e_bpe_fertility", "e_bpe_merges") {
+    // round 13: the graded path trains on the UNICODE word table
+    // (NFKC + `[\p{L}\p{N}]+`, lowercased) — on this all-lowercase
+    // ASCII corpus it extracts exactly the `[a-z]+` words, and on a
+    // real multilingual corpus it stops dropping every non-ASCII word
+    (s, d) => graft.functions.BpeVocab.train(
+      graft.functions.BpeVocab.wordCountsUnicode(Tables.documents(s, d), "text"),
+      BpeMerges)
+  }
 
   /** BPE vocabulary induction: the first `BpeMerges` learned merge rules
     * over the corpus word frequencies — the tokenizer-training artifact.

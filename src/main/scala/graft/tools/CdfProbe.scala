@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.storage.SnapshotStore
@@ -44,15 +45,7 @@ object CdfProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = args.lift(1).map(_.toInt).getOrElse(50)
     val work = args.lift(2).getOrElse("/tmp/graft_cdf_probe")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-cdf-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
     try {
       val docs = graft.Tables.read(spark, sfDir, "documents")
         .select("doc_id", "source", "lang", "text")

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.{SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry, Tables}
 
 /** Dev diagnostic: run a query repeatedly while sampling the DRIVER main
   * thread's stack every few ms, then print the hottest collapsed frames.
@@ -13,19 +12,8 @@ object GapSample {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_SCAN_FLOOR", cpus))
-      .config("spark.ui.enabled", "false")
-      .config(graft.storage.NioLocalFileSystem.ConfKey,
-        graft.storage.NioLocalFileSystem.implClassName)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.TextExpressions.register(spark)
+    val cpus = GraftSession.envCpus(32)
+    val spark = GraftSession.local(cpus)
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings")
       .foreach(t => Tables.read(spark, sfDir, t).count())

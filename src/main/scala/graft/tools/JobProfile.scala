@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.{SparkEntry, Tables}
+import graft.{GraftSession, SparkEntry, Tables}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev diagnostic: run a query and print its Spark JOB timeline — per-job
   * wall, task count and the driver-side GAP since the previous job ended.
@@ -16,19 +15,8 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_SCAN_FLOOR", cpus))
-      .config("spark.ui.enabled", "false")
-      .config(graft.storage.NioLocalFileSystem.ConfKey,
-        graft.storage.NioLocalFileSystem.implClassName)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.TextExpressions.register(spark)
+    val cpus = GraftSession.envCpus(32)
+    val spark = GraftSession.local(cpus)
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings")
       .foreach(t => Tables.read(spark, sfDir, t).count())

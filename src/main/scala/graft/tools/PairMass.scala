@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** Scale-probe diagnostic: TRUE answer masses of the duplicate-pair
   * families at a given sfDir — run at two scales, the ratio of ANSWER
@@ -12,15 +11,8 @@ import graft.Tables
 object PairMass {
   def main(args: Array[String]): Unit = {
     val d = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.TextExpressions.register(spark)
+    val cpus = GraftSession.envCpus(32)
+    val spark = GraftSession.local(cpus)
     val emb = Tables.embeddings(spark, d)
     val nVec = emb.count()
     // the e_cosine_neardup memo's exact knobs (ExtQueries NearDup*)

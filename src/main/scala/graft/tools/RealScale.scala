@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, SparkSession}
+import graft.GraftSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Generates a GENUINE larger-scale dataset (default 10× = "sf1") by
@@ -55,15 +56,8 @@ object RealScale {
     val out = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
     val openVocab = args.length > 3 && args(3) == "open"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.envCpus(32)
+    val spark = GraftSession.local(cpus)
 
     def h(cols: Column*): Column = abs(hash(cols: _*))
 

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.{SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry, Tables}
 
 /** Dev diagnostic: time N repetitions of named queries against a warmed
   * session, separating first-run (codegen/planning) cost from steady-state.
@@ -11,15 +10,8 @@ object Time {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.TextExpressions.register(spark)
+    val cpus = GraftSession.envCpus(32)
+    val spark = GraftSession.local(cpus)
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings")
       .foreach(t => Tables.read(spark, sfDir, t).count())
