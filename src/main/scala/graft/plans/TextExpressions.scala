@@ -533,13 +533,12 @@ object TextExpressions {
     ColumnBridge.column(JaroWinkler(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  /** Register `word_shingles(toks, w)`, `common_prefix_len(a, b)`,
-    * `winnow_fingerprints(shs, v)`, `nfkc_normalize(s)` and
-    * `jaro_winkler(a, b)` for SQL use on a session. Width/window must be
-    * foldable integers (they shape the generated code). */
+  /** Register `common_prefix_len(a, b)`, `winnow_fingerprints(shs, v)`,
+    * `nfkc_normalize(s)`, `unicode_tokens(s)` and `jaro_winkler(a, b)`
+    * for SQL use on a session (`word_shingles` comes with
+    * [[GraftExtensions]]). The window must be a foldable integer (it
+    * shapes the generated code). */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingles", exprs => WordShingles(exprs(0), foldToInt(exprs(1))), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "common_prefix_len", exprs => CommonPrefixLen(exprs(0), exprs(1)), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

@@ -277,9 +277,9 @@ final class SnapshotSource extends RelationProvider with DataSourceRegister
         // "changes at or after this instant": the version committed AT
         // the instant starts the stream; otherwise the NEXT commit does.
         // ONLY the typed "instant precedes all retained history" refusal
-        // maps to from-the-beginning — a legacy pre-timestamp log or any
-        // genuine error must rethrow, never silently replay the full
-        // history (duplicate delivery to a consumer asking "after T").
+        // maps to from-the-beginning — any genuine error must rethrow,
+        // never silently replay the full history (duplicate delivery to
+        // a consumer asking "after T").
         val ms = t.trim.toLong
         try {
           val v = SnapshotStore.versionAtTimestamp(spark, dir, ms)

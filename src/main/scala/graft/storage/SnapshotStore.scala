@@ -30,11 +30,12 @@ import org.apache.spark.sql.types._
   * the CHANGED files, never the table's: a micro-batch append to an
   * 800k-file table writes O(batch files) log bytes, and the log's
   * total footprint is O(Σ changes + checkpoints), not
-  * O(commits × table files). The first commit is self-contained, a
-  * full-state checkpoint rides every [[CheckpointInterval]]-th commit
-  * (best-effort, torn-safe — a corrupt checkpoint is skipped and the
-  * replay walks one base further), and vacuum pins a strict checkpoint
-  * at the earliest retained version before dropping history, so
+  * O(commits × table files). The first commit is the delta from the
+  * empty table (all adds), a full-state checkpoint rides every
+  * [[CheckpointInterval]]-th commit (best-effort, torn-safe — a corrupt
+  * checkpoint is skipped and the replay walks one base further), and
+  * vacuum pins a strict checkpoint at the earliest retained version
+  * before dropping history, so
   * [[manifest]] reconstructs ANY retained version from at most
   * `CheckpointInterval` small reads.
   *
@@ -166,7 +167,7 @@ object SnapshotStore {
     * pruning — a partition predicate prunes the listing before any
     * stats are consulted. */
   /** `ts` — commit wall-clock (epoch millis, recorded at the commit
-    * point; 0 on pre-timestamp manifests), serving `TIMESTAMP AS OF`
+    * point), serving `TIMESTAMP AS OF`
     * time travel ([[versionAtTimestamp]]). Monotonicity is ENFORCED at
     * the stamp, never assumed of the clock: each commit records
     * `max(now, prior.ts + 1)` (the Delta history-manager
@@ -254,8 +255,8 @@ object SnapshotStore {
 
   /** A full-state CHECKPOINT rides every `CheckpointInterval`-th commit:
     * readers reconstruct `manifest(v)` from the nearest checkpoint (or
-    * the self-contained first commit) plus at most `CheckpointInterval`
-    * action deltas — never a full log replay. The encoding is
+    * the empty table at v0) plus at most `CheckpointInterval` action
+    * deltas — never a full log replay. The encoding is
     * MULTI-PART PARQUET (the Delta `checkpoint.parquet` shape): a small
     * JSON header plus columnar per-file rows under `.ckpt/` — at the
     * format's 800k-file target a single JSON document would be a
@@ -546,7 +547,7 @@ object SnapshotStore {
     * write missed are opened), one full scan on a legacy table. */
   private[graft] def maxIngestBatchId(spark: SparkSession,
                                       dir: String): Option[Long] = {
-    // header-only reads: the operation rides both encodings' top level
+    // header-only reads: the operation rides every entry's top level
     def op(v: Long): Long = commitInfo(spark, dir, v)._1 match {
       case IngestOp(b) => b.toLong
       case _ => -1L
@@ -583,7 +584,7 @@ object SnapshotStore {
     case other => sys.error(s"unsupported stats json: $other")
   }
 
-  /** the per-column stats object alone — shared by the log encodings
+  /** the per-column stats object alone — shared by the log encoding
     * (inside [[fileStatsJson]]) and the PARQUET checkpoint's per-file
     * `cols` cell, so both render byte-identically from one codec */
   private def colsJsonObj(cols: Map[String, ColStats]): JObject =
@@ -623,7 +624,7 @@ object SnapshotStore {
     "partitionCols" ->
       (if (partitionCols.isEmpty) JNothing
        else JArray(partitionCols.map(JString(_)).toList)),
-    "ts" -> (if (ts == 0L) JNothing else JLong(ts)),
+    "ts" -> JLong(ts),
     "bloomCols" ->
       (if (bloomCols.isEmpty) JNothing
        else JArray(bloomCols.map(JString(_)).toList)),
@@ -636,25 +637,13 @@ object SnapshotStore {
          k -> (JString(v): JValue)
        }.toList)))
 
-  /** the SELF-CONTAINED encoding — a table's first commit (v1, the base
-    * every replay bottoms out on) */
-  private def render(m: Manifest): String =
-    JsonMethods.compact(JsonMethods.render(JObject(
-      ("version" -> JLong(m.version): (String, JValue)) ::
-        ("files" -> (JArray(m.files.map(JString(_)).toList): JValue)) ::
-        ("stats" -> (JObject(m.stats.toSeq.sortBy(_._1).map { case (p, fsx) =>
-          p -> (fileStatsJson(fsx): JValue)
-        }.toList): JValue)) ::
-        ("dvs" -> dvsJson(m.dvs)) ::
-        headerJson(m.operation, m.ts, m.schema, m.partitionCols, m.bloomCols,
-          m.droppedCols, m.properties))))
-
-  /** the ACTION-DELTA encoding (round 17) — every non-first commit.
+  /** the log-entry encoding (round 17): every commit's ACTION DELTA,
+    * v1 included (v1's is the delta from the empty table — all adds).
     * `adds` is an ARRAY (order is the manifest's file order, which a
     * JSON object would lose); each entry carries the file's stats
     * inline, so the change feed and the incremental readers never
     * reconstruct a full manifest just to learn what one commit added. */
-  private def renderDelta(d: CommitDelta): String =
+  private[storage] def renderDelta(d: CommitDelta): String =
     JsonMethods.compact(JsonMethods.render(JObject(
       ("version" -> JLong(d.version): (String, JValue)) ::
         ("adds" -> (JArray(d.adds.map { case (f, st) =>
@@ -738,7 +727,8 @@ object SnapshotStore {
 
   private def tsOf(root: JValue): Long = root \ "ts" match {
     case JLong(l) => l; case JInt(i) => i.toLong
-    case _ => 0L // pre-timestamp manifest
+    case _ =>
+      sys.error(s"version ${versionOf(root)} records no commit timestamp")
   }
 
   private def strArrayOf(root: JValue, n: String): Seq[String] =
@@ -763,29 +753,11 @@ object SnapshotStore {
       case _ => Map.empty
     }
 
-  /** parse the SELF-CONTAINED encoding (a table's first commit) */
-  private[storage] def parse(json: String): Manifest =
-    parseManifestRoot(JsonMethods.parse(json))
-
-  private def parseManifestRoot(root: JValue): Manifest = {
-    val files = root \ "files" match {
-      case JArray(xs) => xs.map { case JString(s) => s
-                                  case o => sys.error(s"bad file entry: $o") }
-      case other => sys.error(s"manifest missing files: $other")
-    }
-    val stats = root \ "stats" match {
-      case JObject(fields) => fields.map { case (path, fv) =>
-        path -> fileStatsOf(fv)
-      }.toMap
-      case _ => Map.empty[String, FileStats]
-    }
-    Manifest(versionOf(root), operationOf(root), files, stats,
-      schemaFieldOf(root), strArrayOf(root, "partitionCols"), tsOf(root),
-      strArrayOf(root, "bloomCols"), dvsOf(root),
-      strArrayOf(root, "droppedCols"), propertiesOf(root))
-  }
-
-  private def parseDelta(root: JValue): CommitDelta = {
+  /** Parse one log entry — an action delta at every version. An entry
+    * without `adds` (the `files` form earlier builds wrote at v1) is
+    * refused, naming its version. */
+  private[storage] def parseRaw(json: String): CommitDelta = {
+    val root = JsonMethods.parse(json)
     val adds = root \ "adds" match {
       case JArray(xs) => xs.map { av =>
         val f = av \ "f" match { case JString(s) => s
@@ -796,25 +768,13 @@ object SnapshotStore {
         }
         f -> st
       }
-      case other => sys.error(s"commit delta missing adds: $other")
+      case _ => sys.error(s"version ${versionOf(root)} is not logged as " +
+        "an action delta — every commit, v1 included, must be")
     }
     CommitDelta(versionOf(root), operationOf(root), tsOf(root),
       schemaFieldOf(root), strArrayOf(root, "partitionCols"),
       strArrayOf(root, "bloomCols"), adds, strArrayOf(root, "removes"),
       dvsOf(root), strArrayOf(root, "droppedCols"), propertiesOf(root))
-  }
-
-  /** Parse either encoding: `files` marks the self-contained form,
-    * `adds` the action delta. */
-  private[storage] def parseRaw(json: String): Either[Manifest, CommitDelta] = {
-    val root = JsonMethods.parse(json)
-    root \ "files" match {
-      case JArray(_) => Left(parseManifestRoot(root))
-      case _ => root \ "adds" match {
-        case JArray(_) => Right(parseDelta(root))
-        case _ => sys.error("manifest holds neither files nor adds")
-      }
-    }
   }
 
   /** Fold one action delta over its predecessor's full state. Carried
@@ -836,6 +796,10 @@ object SnapshotStore {
       d.properties)
   }
 
+  /** The empty table at v0: the prior v1's delta is taken against, and
+    * the base every walk-back that finds no checkpoint bottoms out on. */
+  private[storage] val EmptyTable: Manifest = Manifest(0L, "", Seq.empty)
+
   /** The action delta between two consecutive manifests — exactly what
     * [[applyDelta]] inverts: `applyDelta(prior, deltaOf(m, prior))`
     * reproduces `m` up to file ORDER (carried files settle into prior
@@ -851,19 +815,19 @@ object SnapshotStore {
       dvs = m.dvs, droppedCols = m.droppedCols, properties = m.properties)
   }
 
-  // round-trip hook for the property spec
-  private[storage] def renderForTest(m: Manifest): String = render(m)
-
-  /** Spec hook: write a manifest file directly (no data, no pointer) —
-    * lets the bounded-manifest-reads contract be asserted on a
-    * 1,000-commit log without paying 1,000 parquet writes. */
+  /** Spec hook: log `m` directly as its action delta over `prior` (no
+    * data, no pointer) — lets the bounded-manifest-reads contract be
+    * asserted on a 1,000-commit log without paying 1,000 parquet
+    * writes. */
   private[storage] def writeManifestForTest(spark: SparkSession, dir: String,
-                                            m: Manifest): Unit = {
+                                            m: Manifest,
+                                            prior: Manifest): Unit = {
     val f = fs(spark, dir)
     val md = new Path(manifestDir(dir))
     if (!f.exists(md)) f.mkdirs(md)
     val out = f.create(manifestPath(dir, m.version), false)
-    try out.write(render(m).getBytes("UTF-8")) finally out.close()
+    try out.write(renderDelta(deltaOf(m, prior)).getBytes("UTF-8"))
+    finally out.close()
   }
 
   private[storage] def writePointerForTest(spark: SparkSession, dir: String,
@@ -1132,9 +1096,9 @@ object SnapshotStore {
     finally in.close()
   }
 
-  /** one committed log entry, whichever encoding it carries */
+  /** one committed log entry: the version's action delta */
   private def readRaw(spark: SparkSession, dir: String,
-                      version: Long): Either[Manifest, CommitDelta] = {
+                      version: Long): CommitDelta = {
     manifestReadCount.incrementAndGet()
     val p = manifestPath(dir, version)
     val f = fs(spark, dir)
@@ -1322,7 +1286,7 @@ object SnapshotStore {
     readCheckpoint(spark, dir, version)
 
   /** HEADER-ONLY read of one commit — (operation, ts) without any state
-    * reconstruction: both encodings carry the header at top level, so
+    * reconstruction: every log entry carries the header at top level, so
     * the timestamp binary searches ([[versionAtTimestamp]],
     * [[vacuumOlderThan]]) and the ingest replay guard cost one small
     * file read per probe, not a checkpoint + delta fold. */
@@ -1372,9 +1336,9 @@ object SnapshotStore {
   /** The committed manifest of `version` — served from the validated
     * in-JVM cache when possible, else reconstructed from the nearest
     * base at or below it: the version's own checkpoint, else walk back
-    * through action deltas to the first checkpoint or self-contained
-    * commit and fold forward. Bounded by construction: a base exists
-    * every [[CheckpointInterval]] versions (and vacuum pins one at the
+    * through action deltas to the first checkpoint — or to the empty
+    * table at v0 — and fold forward. Bounded by construction: a base
+    * exists every [[CheckpointInterval]] versions (and vacuum pins one at the
     * earliest retained version), so reconstruction reads O(interval)
     * small files — never a log replay. */
   def manifest(spark: SparkSession, dir: String, version: Long): Manifest = {
@@ -1414,25 +1378,16 @@ object SnapshotStore {
   private def reconstructManifest(spark: SparkSession, dir: String,
                                   version: Long): Manifest =
     readCheckpoint(spark, dir, version).getOrElse {
-      readRaw(spark, dir, version) match {
-        case Left(full) => full
-        case Right(delta) =>
-          var deltas: List[CommitDelta] = delta :: Nil
-          var w = version - 1
-          var base: Option[Manifest] = None
-          while (base.isEmpty) {
-            require(w >= 1,
-              s"version $version at $dir has no reconstruction base — " +
-                "the action log reaches below the first commit (corrupt log)")
-            base = cachedManifest(dir, w, manifestStatus(spark, dir, w))
-              .orElse(readCheckpoint(spark, dir, w))
-            if (base.isEmpty) readRaw(spark, dir, w) match {
-              case Left(full) => base = Some(full)
-              case Right(d) => deltas = d :: deltas; w -= 1
-            }
-          }
-          deltas.foldLeft(base.get)(applyDelta)
+      var deltas: List[CommitDelta] = readRaw(spark, dir, version) :: Nil
+      var w = version - 1
+      var base: Option[Manifest] = None
+      while (base.isEmpty) {
+        base = if (w == 0L) Some(EmptyTable)
+          else cachedManifest(dir, w, manifestStatus(spark, dir, w))
+            .orElse(readCheckpoint(spark, dir, w))
+        if (base.isEmpty) { deltas = readRaw(spark, dir, w) :: deltas; w -= 1 }
       }
+      deltas.foldLeft(base.get)(applyDelta)
     }
 
   /** The manifests of an ascending version range, at O(range + interval)
@@ -1452,10 +1407,7 @@ object SnapshotStore {
       require(v > out.last.version,
         s"manifestRange needs ascending versions, got $v after ${out.last.version}")
       out += (if (v != out.last.version + 1) manifest(spark, dir, v)
-      else readRaw(spark, dir, v) match {
-        case Left(full) => full
-        case Right(d) => applyDelta(out.last, d)
-      })
+      else applyDelta(out.last, readRaw(spark, dir, v)))
     }
     out.toSeq
   }
@@ -1674,14 +1626,13 @@ object SnapshotStore {
     * sliver only. The result carries a synthetic manifest holding JUST
     * the survivors — [[readFiles]] consumes it as usual (schema,
     * partition layout, and deletion vectors all ride the version's own
-    * HEADER, which every log encoding carries whole). */
+    * HEADER, which every log entry carries whole). */
   private[storage] def distributedPruneState(spark: SparkSession, dir: String,
                                     version: Long, pred: FilePredicate)
       : Option[(Manifest, Seq[String])] = {
     val f = fs(spark, dir)
     // walk back to the nearest PARQUET checkpoint, collecting the tail
-    // deltas; a self-contained manifest first = driver-sized already →
-    // fall back
+    // deltas; none down to v1 = a young, driver-sized table → fall back
     var deltas: List[CommitDelta] = Nil
     var w = version
     var root: Option[JValue] = None
@@ -1700,10 +1651,7 @@ object SnapshotStore {
         case some @ Some(_) => root = some
         case None =>
           if (w < 1) return None
-          readRaw(spark, dir, w) match {
-            case Left(_) => return None // self-contained base: fall back
-            case Right(d) => deltas = d :: deltas; w -= 1
-          }
+          deltas = readRaw(spark, dir, w) :: deltas; w -= 1
       }
     }
     val hdr = root.get
@@ -1795,7 +1743,7 @@ object SnapshotStore {
   }
 
   /** ONE commit's HEADER fields without any state reconstruction
-    * (round 20): both log encodings carry the full header at top level
+    * (round 20): every log entry carries the full header at top level
     * — schema, layout, deletion vectors, properties — so the lazy SQL
     * relation ([[SnapshotCheckpointFileIndex]]) resolves schema and
     * overlay inputs from one small read, never the file list. */
@@ -1816,13 +1764,9 @@ object SnapshotStore {
                                   version: Long): HeaderInfo =
     headerOf(readRaw(spark, dir, version))
 
-  private def headerOf(entry: Either[Manifest, CommitDelta]): HeaderInfo =
-    entry match {
-      case Right(d) => HeaderInfo(d.version, d.operation, d.ts, d.schema,
-        d.partitionCols, d.bloomCols, d.dvs, d.droppedCols, d.properties)
-      case Left(m) => HeaderInfo(m.version, m.operation, m.ts, m.schema,
-        m.partitionCols, m.bloomCols, m.dvs, m.droppedCols, m.properties)
-    }
+  private def headerOf(d: CommitDelta): HeaderInfo =
+    HeaderInfo(d.version, d.operation, d.ts, d.schema, d.partitionCols,
+      d.bloomCols, d.dvs, d.droppedCols, d.properties)
 
   /** Does a PARQUET checkpoint (plus an action-delta tail) serve
     * `version`? Returns the total recorded BYTES when derivable from
@@ -1830,9 +1774,9 @@ object SnapshotStore {
     * adds' (removes are not subtracted: an overestimate only biases
     * planning AWAY from broadcast, never toward a wrong one) — as the
     * lazy relation's `sizeInBytes` hint. `None` = no parquet base
-    * within the tail (a self-contained entry bottoms the walk first):
-    * the caller uses the driver-resident path. Cost: O(tail) small
-    * header/delta reads, the same class as any reconstruction. */
+    * within the tail (the walk reaches v1 or the cap first): the caller
+    * uses the driver-resident path. Cost: O(tail) small header/delta
+    * reads, the same class as any reconstruction. */
   /** [[parquetCheckpointInfo]] memo — PERFORMANCE-ONLY (round 20): the
     * walk result for a committed (dir, version) can only change in one
     * direction (a checkpoint APPEARING later — vacuum pins one, or the
@@ -1914,15 +1858,12 @@ object SnapshotStore {
           }
         } catch { case scala.util.control.NonFatal(_) => () }
       }
-      readRaw(spark, dir, w) match {
-        case Left(_) => return None
-        case Right(d) =>
-          val sized = d.adds.flatMap(_._2)
-          if (sized.length != d.adds.length || sized.exists(_.bytes <= 0L))
-            sawUnsized = true
-          addBytes += sized.map(_.bytes).sum
-          w -= 1
-      }
+      val d = readRaw(spark, dir, w)
+      val sized = d.adds.flatMap(_._2)
+      if (sized.length != d.adds.length || sized.exists(_.bytes <= 0L))
+        sawUnsized = true
+      addBytes += sized.map(_.bytes).sum
+      w -= 1
     }
     None
   }
@@ -1985,8 +1926,8 @@ object SnapshotStore {
         .getOrElse(refuse(s"no committed version at $dir")))
 
   /** Typed refusal of [[versionAtTimestamp]]: the instant precedes every
-    * retained commit. Distinct from other failures (pre-timestamp legacy
-    * logs, I/O errors) so a caller choosing "start from the beginning"
+    * retained commit. Distinct from other failures (a corrupt log entry,
+    * I/O errors) so a caller choosing "start from the beginning"
     * semantics — the streaming source's `startingTimestamp` — can map
     * EXACTLY this case and never mask a genuine error as a full replay. */
   final class NoRetainedVersionAtTimestamp(msg: String)
@@ -2002,16 +1943,14 @@ object SnapshotStore {
     * of thousands (bounded-reads asserted on a 1,000-commit log in
     * `SnapshotCheckpointSpec`). Throws [[NoRetainedVersionAtTimestamp]]
     * when `tsMillis` precedes every retained commit (vacuumed history
-    * must not silently serve a later state); refuses loudly when the
-    * resolved version is pre-timestamp legacy (ts = 0). */
+    * must not silently serve a later state). */
   def versionAtTimestamp(spark: SparkSession, dir: String,
                          tsMillis: Long): Long = {
     val latest = latestVersion(spark, dir)
       .getOrElse(refuse(s"no committed version at $dir"))
     // HEADER-ONLY probes throughout: the binary searches need only ts,
-    // which both encodings carry at top level — no state reconstruction
-    val tsLatest = commitInfo(spark, dir, latest)._2
-    if (tsLatest > 0L && tsLatest <= tsMillis) return latest
+    // which every log entry carries at top level — no state reconstruction
+    if (commitInfo(spark, dir, latest)._2 <= tsMillis) return latest
     // earliest retained version: existence is monotone over [1, latest]
     var lo = 1L
     var hi = latest
@@ -2021,24 +1960,18 @@ object SnapshotStore {
     }
     val earliest = lo
     // largest version with ts <= tsMillis (ts monotone — ENFORCED at
-    // the stamp; legacy ts = 0 entries sort before every real instant,
-    // preserving monotonicity)
+    // the stamp)
     var a = earliest
     var b = latest
     var ans = -1L
-    var ansTs = 0L
     while (a <= b) {
       val mid = a + (b - a) / 2
-      val midTs = commitInfo(spark, dir, mid)._2
-      if (midTs <= tsMillis) { ans = mid; ansTs = midTs; a = mid + 1 }
+      if (commitInfo(spark, dir, mid)._2 <= tsMillis) { ans = mid; a = mid + 1 }
       else b = mid - 1
     }
     if (ans < 0) throw new NoRetainedVersionAtTimestamp(
       s"no retained version at or before timestamp $tsMillis at $dir " +
         s"(earliest retained commit is at ${commitInfo(spark, dir, earliest)._2})")
-    require(ansTs > 0L,
-      s"version $ans predates commit timestamps — TIMESTAMP AS OF needs " +
-        "a timestamped log")
     ans
   }
 
@@ -2076,9 +2009,8 @@ object SnapshotStore {
     var header = Option.empty[HeaderInfo]
     (fromVersion + 1 to toVersion).foreach { v =>
       // the action delta answers "what did v add" in ONE small read
-      val entry = readRaw(spark, dir, v)
-      header = Some(headerOf(entry))
-      val d = deltaAt(v, entry)
+      val d = readRaw(spark, dir, v)
+      header = Some(headerOf(d))
       if (!RewriteOps(d.operation)) added ++= d.adds
     }
     val adds = added.result()
@@ -2086,22 +2018,6 @@ object SnapshotStore {
       files = adds.map(_._1),
       stats = adds.collect { case (f, Some(st)) => f -> st }.toMap)
   }
-
-  /** The action delta logged at `version`. Only a table's first commit
-    * (v1) is written SELF-CONTAINED, and every file it lists is an add;
-    * a self-contained entry at any later version is refused, naming the
-    * version — no writer produces one. */
-  private def deltaAt(version: Long,
-                      entry: Either[Manifest, CommitDelta]): CommitDelta =
-    entry match {
-      case Right(d) => d
-      case Left(m) =>
-        require(version == 1L,
-          s"version $version is logged self-contained, but only a " +
-            "table's first commit (v1) is — later versions must be " +
-            "action deltas")
-        deltaOf(m, Manifest(0L, "", Seq.empty))
-    }
 
   /** The files ADDED by each commit in `(fromVersion, toVersion]` — the
     * file list of [[changeRange]]. */
@@ -4158,15 +4074,15 @@ object SnapshotStore {
               else df.withColumn(fl.name, lit(null).cast(fl.dataType)))
             validateConstraints(props, logical, operation)
           }
-        // ENCODING (round 17): the first commit is self-contained (the
-        // base every replay bottoms out on); every later commit logs
-        // only its ACTION DELTA — O(changed files) bytes, never
-        // O(table files). Eager stages canonicalize the in-memory
-        // manifest through the same delta application readers use;
-        // BOUNDED carry-all stages (round 20) render the delta
-        // DIRECTLY — adds only, removes empty, header carried — so the
-        // prior file list never materializes on the driver (the
-        // interval checkpoint, when due, reconstructs post-commit).
+        // ENCODING (round 17): every commit logs only its ACTION DELTA
+        // — O(changed files) bytes, never O(table files); the first
+        // commit's is the delta from the empty table. Eager stages
+        // canonicalize the in-memory manifest through the same delta
+        // application readers use; BOUNDED carry-all stages (round 20)
+        // render the delta DIRECTLY — adds only, removes empty, header
+        // carried — so the prior file list never materializes on the
+        // driver (the interval checkpoint, when due, reconstructs
+        // post-commit).
         // The yield is (rendered log entry, checkpoint interval,
         // manifest thunk for the interval checkpoint).
         if (bounded && priorHdr.isDefined) {
@@ -4193,16 +4109,10 @@ object SnapshotStore {
             properties = props)
           require(staged.files.nonEmpty,
             s"commit of version $v wrote no data files")
-          priorFull match {
-            case Some(p0) =>
-              val d = deltaOf(staged, p0)
-              val applied = applyDelta(p0, d)
-              (renderDelta(d), checkpointIntervalOfProps(props),
-                () => applied)
-            case None =>
-              (render(staged), checkpointIntervalOfProps(props),
-                () => staged)
-          }
+          val p0 = priorFull.getOrElse(EmptyTable)
+          val d = deltaOf(staged, p0)
+          val applied = applyDelta(p0, d)
+          (renderDelta(d), checkpointIntervalOfProps(props), () => applied)
         }
       } catch { case e: Throwable =>
         f.delete(dataPath, true)
@@ -4283,16 +4193,10 @@ object SnapshotStore {
       if (NonCommutingStagedOps(operation)) {
         val newLatest = latestVersion(spark, dir).getOrElse(v)
         def dvsAt(w: Long): Map[String, DvRef] =
-          if (w < 1) Map.empty
-          else readRaw(spark, dir, w) match {
-            case Right(d) => d.dvs
-            case Left(mm) => mm.dvs
-          }
+          if (w < 1) Map.empty else readRaw(spark, dir, w).dvs
         val conflicting = (v to newLatest).filter { w =>
-          readRaw(spark, dir, w) match {
-            case Right(d) => d.removes.nonEmpty || d.dvs != dvsAt(w - 1)
-            case Left(_) => true // self-contained full replace
-          }
+          val d = readRaw(spark, dir, w)
+          d.removes.nonEmpty || d.dvs != dvsAt(w - 1)
         }
         if (conflicting.nonEmpty)
           throw new SnapshotConcurrentModificationException(
@@ -5346,8 +5250,7 @@ object SnapshotStore {
     * retain every version committed AT OR AFTER `cutoffMs` (always at
     * least the latest). Commit timestamps are monotone, so the retained
     * set is a suffix — exactly the prefix-drop contract [[vacuum]] and
-    * the time-travel binary search rely on. Pre-timestamp legacy
-    * versions (ts = 0) count as older than any cutoff. */
+    * the time-travel binary search rely on. */
   def vacuumOlderThan(spark: SparkSession, dir: String,
                       cutoffMs: Long): Unit =
     retainForCutoff(spark, dir, cutoffMs)
@@ -5384,7 +5287,7 @@ object SnapshotStore {
     * orphans from torn commits included. Manifest deletion happens
     * FIRST (and in DESCENDING version order: at any crash point the
     * surviving dropped-zone entries are a PREFIX [1..k] of the log,
-    * which still bottoms out on the self-contained first commit — an
+    * which still replays from the empty table at v0 — an
     * ascending sweep would delete reconstruction bases out from under
     * later deltas, wedging versions()-driven surfaces like DESCRIBE
     * HISTORY until a re-run), so a crash mid-vacuum can only strand
@@ -5759,7 +5662,7 @@ object SnapshotStore {
   private def readCommitChanges(spark: SparkSession, dir: String,
                                 v: Long,
                                 idCols: Seq[String]): DataFrame = {
-    val d = deltaAt(v, readRaw(spark, dir, v))
+    val d = readRaw(spark, dir, v)
     val mTo = manifest(spark, dir, v)
     val mFrom = manifest(spark, dir, v - 1)
     require(mTo.files.nonEmpty, s"version $v holds no data files")
@@ -5886,7 +5789,7 @@ object SnapshotStore {
     * degrades toward version counting). */
   private[storage] def versionAddedBytes(spark: SparkSession, dir: String,
                                          version: Long): Long = {
-    val d = deltaAt(version, readRaw(spark, dir, version))
+    val d = readRaw(spark, dir, version)
     if (RewriteOps(d.operation)) 0L
     else d.adds.iterator.flatMap(_._2.map(_.bytes)).sum
   }

@@ -3,11 +3,11 @@ package graft.storage
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 
-/** Round-trip contract of the manifest codec: writer and reader share
-  * one escaping discipline (a real JSON parser — Spark's bundled
-  * json4s), so ANY path / operation string survives — including the
-  * `]`, `"` and `\` characters the round-13 regex reader was sensitive
-  * to. */
+/** Round-trip contract of the log-entry codec (one action delta per
+  * commit): writer and reader share one escaping discipline (a real
+  * JSON parser — Spark's bundled json4s), so ANY path / operation
+  * string survives — including the `]`, `"` and `\` characters the
+  * round-13 regex reader was sensitive to. */
 object ManifestCodecProps extends Properties("graft.storage.manifest-codec") {
 
   // strings biased toward the characters that break naive codecs
@@ -50,30 +50,45 @@ object ManifestCodecProps extends Properties("graft.storage.manifest-codec") {
     blooms <- Gen.mapOfN(2, bloomStats)
   } yield SnapshotStore.FileStats(rows, cols, bytes, blooms)
 
-  private val manifest: Gen[SnapshotStore.Manifest] = for {
+  private val dvRef: Gen[(String, SnapshotStore.DvRef)] = for {
+    f <- nonEmptyNasty
+    p <- nonEmptyNasty
+    n <- Gen.choose(0L, Long.MaxValue)
+  } yield f -> SnapshotStore.DvRef(p, n)
+
+  private val delta: Gen[SnapshotStore.CommitDelta] = for {
     v <- Gen.choose(1L, 99999999L)
     op <- nonEmptyNasty
-    files <- Gen.listOf(nonEmptyNasty).map(_.distinct)
-    stats <- Gen.mapOfN(2, Gen.zip(nonEmptyNasty, fileStats))
+    ts <- Gen.choose(1L, Long.MaxValue)
+    adds <- Gen.listOf(Gen.zip(nonEmptyNasty, Gen.option(fileStats)))
+      .map(_.distinctBy(_._1))
+    removes <- Gen.listOf(nonEmptyNasty).map(_.distinct)
     // the schema field is an opaque string to the codec (StructType JSON
     // in production) — round-trip it as arbitrary nasty content
     schema <- Gen.option(nonEmptyNasty)
+    partitionCols <- Gen.listOf(nonEmptyNasty).map(_.distinct)
     bloomCols <- Gen.listOf(nonEmptyNasty).map(_.distinct)
+    dvs <- Gen.mapOfN(2, dvRef)
     droppedCols <- Gen.listOf(nonEmptyNasty).map(_.distinct)
-  } yield SnapshotStore.Manifest(v, op, files, stats, schema,
-    bloomCols = bloomCols, droppedCols = droppedCols)
+    properties <- Gen.mapOfN(2, Gen.zip(nonEmptyNasty, nastyString))
+  } yield SnapshotStore.CommitDelta(v, op, ts, schema, partitionCols,
+    bloomCols, adds, removes, dvs, droppedCols, properties)
 
-  property("parse(render(m)) == m for arbitrary path/op/stats strings") =
-    forAll(manifest) { m =>
-      SnapshotStore.parse(SnapshotStore.renderForTest(m)) == m
+  property("parseRaw(renderDelta(d)) == d for arbitrary path/op/stats " +
+    "strings") =
+    forAll(delta) { d =>
+      SnapshotStore.parseRaw(SnapshotStore.renderDelta(d)) == d
     }
 
   property("a path containing ']' survives (the round-13 regex trap)") = {
-    val m = SnapshotStore.Manifest(7L, "op]x",
-      Seq("/tmp/a]b/part-0.parquet", "/tmp/c\"d\\e/part-1.parquet"),
-      Map("/tmp/a]b/part-0.parquet" ->
-        SnapshotStore.FileStats(3L, Map("s" ->
-          SnapshotStore.ColStats("string", Some("min]\""), Some("max\\"))))))
-    SnapshotStore.parse(SnapshotStore.renderForTest(m)) == m
+    val d = SnapshotStore.CommitDelta(7L, "op]x", 1L, None, Seq.empty,
+      Seq.empty,
+      adds = Seq(
+        "/tmp/a]b/part-0.parquet" -> Some(SnapshotStore.FileStats(3L,
+          Map("s" -> SnapshotStore.ColStats("string", Some("min]\""),
+            Some("max\\"))))),
+        "/tmp/c\"d\\e/part-1.parquet" -> None),
+      removes = Seq("/tmp/old]/part-9.parquet"), dvs = Map.empty)
+    SnapshotStore.parseRaw(SnapshotStore.renderDelta(d)) == d
   }
 }

@@ -98,9 +98,11 @@ class SnapshotActionLogSpec extends SparkSpec {
     assert(math.abs(hdr20 - hdr10) < 256,
       s"header bytes must not grow with table files (v10: $hdr10 B, " +
         s"v20 with 2x the files: $hdr20 B)")
-    // first commit is self-contained: the log's replay base
-    assert(logSize(dir, 1L) > late,
-      "v1 is self-contained (full) — larger than a 4-file delta")
+    // the first commit's entry is the delta from the empty table: it
+    // adds every file the table starts with
+    assert(store.changedFiles(spark, dir, 0L, 1L) ==
+      store.manifest(spark, dir, 1L).files,
+      "v1's delta must add the whole initial table")
   }
 
   test("every version reconstructs IDENTICALLY from checkpoints and from " +
@@ -188,13 +190,14 @@ class SnapshotActionLogSpec extends SparkSpec {
     val expected = (1L to latest).map(v => store.manifest(spark, dir, v))
     assert(store.readCheckpointForTest(spark, dir, 10L)
       .contains(expected(9)), "parquet checkpoint reads its state")
-    // overwrite v10's header with a single self-contained JSON document
-    // of the very same state — a format no checkpoint writer emits
+    // overwrite v10's header with a single JSON document listing the
+    // very same files — a format no checkpoint writer emits
     val fs = ckptPath(dir, 10L)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(SnapshotStore.checkpointDataPath(dir, 10L), true)
+    val listed = expected(9).files.map(f => "\"" + f + "\"").mkString(",")
     val out = fs.create(ckptPath(dir, 10L), true)
-    try out.write(SnapshotStore.renderForTest(expected(9)).getBytes("UTF-8"))
+    try out.write(s"""{"version":10,"files":[$listed]}""".getBytes("UTF-8"))
     finally out.close()
     assert(store.readCheckpointForTest(spark, dir, 10L).isEmpty,
       "a header that is not format: parquet must count as unreadable")
@@ -276,8 +279,8 @@ class SnapshotActionLogSpec extends SparkSpec {
 
   test("a crash MID-VACUUM leaves every still-listed version " +
     "reconstructable: the sweep deletes DESCENDING, so the surviving " +
-    "dropped-zone entries are a prefix that bottoms out on the " +
-    "self-contained first commit") {
+    "dropped-zone entries are a prefix that replays from the empty " +
+    "table") {
     val dir = freshDir()
     val latest = buildMixedChain(dir) // 21 versions
     val store = SnapshotStore

@@ -21,13 +21,24 @@ class SnapshotCheckpointSpec extends SparkSpec {
     d.getAbsolutePath
   }
 
+  /** Log versions `vs` of a synthetic one-file-per-version table, each
+    * as its action delta over the version before; returns the last. */
+  private def writeLog(dir: String, vs: Seq[Long])
+                      (mk: Long => Manifest): Manifest =
+    vs.foldLeft(SnapshotStore.EmptyTable) { (prior, v) =>
+      val m = mk(v)
+      SnapshotStore.writeManifestForTest(spark, dir, m, prior)
+      m
+    }
+
   test("a 1,000-commit log: latestVersion reads ZERO manifests and ZERO full listings off a warm pointer; the ingest guard load reads only the tail") {
     val dir = freshDir()
-    (1L to 1000L).foreach { v =>
+    val last = writeLog(dir, 1L to 1000L) { v =>
       val op = if (v % 3 == 0) s"ingest-b$v" else "append"
-      SnapshotStore.writeManifestForTest(spark, dir,
-        Manifest(v, op, Seq(s"$dir/data/f$v.parquet")))
+      Manifest(v, op, Seq(s"$dir/data/f$v.parquet"))
     }
+    // v1000's interval checkpoint, as a committed log carries it
+    SnapshotStore.writeCheckpointForTest(spark, dir, last)
     // a pointer 10 commits stale (a crash between rename and pointer
     // write, 10 times over — far beyond the single-commit window)
     SnapshotStore.writePointerForTest(spark, dir, Pointer(990L, 987L))
@@ -54,8 +65,8 @@ class SnapshotCheckpointSpec extends SparkSpec {
 
   test("a corrupt pointer degrades to the full listing, never a wrong answer") {
     val dir = freshDir()
-    (1L to 5L).foreach(v => SnapshotStore.writeManifestForTest(spark, dir,
-      Manifest(v, "append", Seq(s"$dir/data/f$v.parquet"))))
+    writeLog(dir, 1L to 5L)(v =>
+      Manifest(v, "append", Seq(s"$dir/data/f$v.parquet")))
     val p = new Path(s"$dir/_manifests/_latest")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
@@ -102,11 +113,9 @@ class SnapshotCheckpointSpec extends SparkSpec {
 
   test("TIMESTAMP AS OF binary-searches the monotone log: O(log n) manifest reads on a 1,000-commit table, mid-history or deep-history alike") {
     val dir = freshDir()
-    (1L to 1000L).foreach { v =>
-      SnapshotStore.writeManifestForTest(spark, dir,
-        Manifest(v, "append", Seq(s"$dir/data/f$v.parquet"),
-          ts = 1000L + v * 10L))
-    }
+    writeLog(dir, 1L to 1000L)(v =>
+      Manifest(v, "append", Seq(s"$dir/data/f$v.parquet"),
+        ts = 1000L + v * 10L))
     SnapshotStore.writePointerForTest(spark, dir, Pointer(1000L, -1L))
     val bound = 2 * 10 + 4 // ~2·log₂(1000) + slack, NOT O(commits)
     def reads(body: => Long): (Long, Long) = {
@@ -139,26 +148,29 @@ class SnapshotCheckpointSpec extends SparkSpec {
   test("TIMESTAMP AS OF on a vacuumed prefix and a legacy untimestamped log keeps the round-15 refusal semantics") {
     val dir = freshDir()
     // versions 1-9 vacuumed away; 10-20 retained and timestamped
-    (10L to 20L).foreach { v =>
-      SnapshotStore.writeManifestForTest(spark, dir,
-        Manifest(v, "append", Seq(s"$dir/data/f$v.parquet"), ts = v * 100L))
-    }
+    writeLog(dir, 10L to 20L)(v =>
+      Manifest(v, "append", Seq(s"$dir/data/f$v.parquet"), ts = v * 100L))
     assert(SnapshotStore.versionAtTimestamp(spark, dir, 1_550L) == 15L)
     assert(SnapshotStore.versionAtTimestamp(spark, dir, 1_000L) == 10L)
     intercept[SnapshotStore.NoRetainedVersionAtTimestamp] {
       SnapshotStore.versionAtTimestamp(spark, dir, 999L)
     }
-    // a legacy pre-timestamp log refuses with the predates message —
-    // NOT the typed before-history refusal (the streaming source maps
-    // only the latter to a full replay)
-    val legacy = freshDir()
-    (1L to 3L).foreach(v => SnapshotStore.writeManifestForTest(spark, legacy,
-      Manifest(v, "append", Seq(s"$legacy/data/f$v.parquet"))))
+    // a log entry without a commit timestamp is refused, naming its
+    // version — NOT the typed before-history refusal (the streaming
+    // source maps only the latter to a full replay)
+    val untimed = freshDir()
+    val p = new Path(s"$untimed/_manifests/v00000001.json")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(p, false)
+    try out.write(("""{"version":1,"operation":"append",""" +
+      s""""adds":[{"f":"$untimed/data/f1.parquet"}]}""").getBytes("UTF-8"))
+    finally out.close()
     val e = intercept[Exception] {
-      SnapshotStore.versionAtTimestamp(spark, legacy, 12345L)
+      SnapshotStore.versionAtTimestamp(spark, untimed, 12345L)
     }
     assert(!e.isInstanceOf[SnapshotStore.NoRetainedVersionAtTimestamp])
-    assert(e.getMessage.contains("predates commit timestamps"))
+    assert(e.getMessage.contains("version 1 records no commit timestamp"),
+      e.getMessage)
   }
 
   test("a pointer crash-lost between rename and write only costs a probe (laggy pointer simulation)") {

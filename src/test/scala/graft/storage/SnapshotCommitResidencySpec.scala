@@ -30,17 +30,17 @@ class SnapshotCommitResidencySpec extends SparkSpec {
     val dir = freshDir()
     store.commit(spark, dir,
       Seq((1L, "real")).toDF("id", "txt"), "ingest")               // v1
-    // synthesize a 100k-entry self-contained manifest at v2 (the spec
-    // seam the 1,000-commit checkpoint spec uses) — fake paths are
-    // never read; only the ENTRY COUNT matters here
+    // synthesize a v2 whose delta adds 100k entries (the spec seam the
+    // 1,000-commit checkpoint spec uses) — fake paths are never read;
+    // only the ENTRY COUNT matters here
     val m1 = store.manifest(spark, dir, 1L)
     val bigFiles = (1 to 100000).map(i => s"$dir/data/fake/part-$i.parquet")
     store.writeManifestForTest(spark, dir,
       m1.copy(version = 2L, operation = "synthetic",
-        files = m1.files ++ bigFiles, ts = m1.ts + 1))
+        files = m1.files ++ bigFiles, ts = m1.ts + 1), m1)
     assert(store.latestVersion(spark, dir).contains(2L))
-    // append 1: the prior is the (self-contained) 100k-entry commit —
-    // its header parse is transient; the COMMIT path must retain only
+    // append 1: the prior is the 100k-add delta commit — its header
+    // parse is transient; the COMMIT path must retain only
     // the new files
     store.commitAppend(spark, dir,
       Seq((2L, "a")).toDF("id", "txt"), "append")                  // v3
@@ -97,7 +97,7 @@ class SnapshotCommitResidencySpec extends SparkSpec {
     val m2 = m1.copy(version = 2L, operation = "synthetic",
       files = m1.files ++ fakeStats.map(_._1),
       stats = m1.stats ++ fakeStats, ts = m1.ts + 1)
-    store.writeManifestForTest(spark, dir, m2)
+    store.writeManifestForTest(spark, dir, m2, m1)
     store.writeCheckpointForTest(spark, dir, m2)                   // parquet
     store.deleteWhereDv(spark, dir,
       SnapshotStore.FilePredicate.EqTo("id", 5L))                  // v3

@@ -61,7 +61,8 @@ class SnapshotDdlSpec extends SparkSpec {
     assert(m.schemaStruct.get.fieldNames.contains("score"))
     assert(SnapshotStore.read(spark, dir)
       .filter(col("score").isNull).count() == 10L)
-    // commit bytes O(schema): far smaller than the self-contained v1
+    // commit bytes O(schema): far smaller than v1, whose delta adds
+    // every file
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def len(v: Long) = fs.getFileStatus(new org.apache.hadoop.fs.Path(

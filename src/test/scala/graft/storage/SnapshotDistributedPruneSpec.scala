@@ -112,8 +112,8 @@ class SnapshotDistributedPruneSpec extends SparkSpec {
         .repartitionByRange(4, col("doc_id")), "ingest")
     SnapshotStore.commitAppend(spark, dir,
       Seq((200L, "x")).toDF("doc_id", "text"), "append")
-    // v2 has no checkpoint anywhere below it but v1's self-contained
-    // manifest — the distributed call must still answer exactly
+    // v2 has no checkpoint anywhere below it — its state replays from
+    // the empty table — and the distributed call must still answer exactly
     assert(SnapshotStore.prunedFilesDistributed(spark, dir, 2L,
       EqTo("doc_id", 50L)) ==
       SnapshotStore.prunedFiles(spark, dir, 2L, EqTo("doc_id", 50L)))
@@ -133,7 +133,7 @@ class SnapshotDistributedPruneSpec extends SparkSpec {
       .filter(_.getName.endsWith(".parquet")).head
     f.delete(part, false)
     SnapshotStore.clearManifestCacheForTest()
-    // both paths detect the tear and serve from the self-contained log
+    // both paths detect the tear and serve by replaying the log
     assert(SnapshotStore.prunedFilesDistributed(spark, dir2, 1L,
       EqTo("doc_id", 50L)).nonEmpty)
     assert(SnapshotStore.readAsOfWhereDistributed(spark, dir2, 1L,

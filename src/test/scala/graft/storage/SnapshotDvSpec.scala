@@ -375,10 +375,12 @@ class SnapshotDvSpec extends SparkSpec {
     "touched file lacks row stats (unmeasurable fraction never guesses DV)") {
     val dir = freshDir()
     seed(dir, 100L)
-    // strip stats from the latest manifest — a legacy pre-stats log
+    // strip stats from the latest manifest — a legacy pre-stats log:
+    // v2's delta (over the empty table) re-adds v1's files with no stats
     val m = SnapshotStore.manifest(spark, dir, 1L)
     SnapshotStore.writeManifestForTest(spark, dir,
-      m.copy(version = 2L, operation = "legacy", stats = Map.empty))
+      m.copy(version = 2L, operation = "legacy", stats = Map.empty),
+      SnapshotStore.EmptyTable)
     val tbl = "graft_statless_auto"
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     spark.sql(s"CREATE TABLE $tbl USING `graft-snapshot` " +

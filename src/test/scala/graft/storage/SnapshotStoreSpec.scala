@@ -242,9 +242,11 @@ class SnapshotStoreSpec extends SparkSpec {
         cs.min.exists(_.isInstanceOf[Long]) &&
         cs.max.exists(_.isInstanceOf[Long])),
       s"decimal stats must be exact unscaled longs: $priceStats")
-    // round-trip through JSON keeps exactness
-    val parsed = SnapshotStore.parse(SnapshotStore.renderForTest(m))
-    assert(parsed.stats == m.stats)
+    // round-trip through the log entry's JSON keeps exactness
+    val parsed = SnapshotStore.parseRaw(SnapshotStore.renderDelta(
+      SnapshotStore.deltaOf(m, SnapshotStore.EmptyTable)))
+    assert(parsed.adds.collect { case (f, Some(st)) => f -> st }.toMap ==
+      m.stats)
     import SnapshotStore.FilePredicate._
     val pred = between("price",
       new java.math.BigDecimal("1000.00"), new java.math.BigDecimal("2000.00"))
@@ -661,18 +663,31 @@ class SnapshotStoreSpec extends SparkSpec {
       pred.mightMatch(_, SnapshotStore.FilePredicate.NoBlooms))) < added.length)
   }
 
-  test("a self-contained log entry past v1 fails the range read, naming " +
-    "the version") {
+  test("a self-contained log entry at any version, v1 included, fails " +
+    "reconstruction and the range read, naming the version") {
+    // hand-write version v in the `files` form earlier builds logged v1 in
+    def writeFilesForm(dir: String, v: Long, files: Seq[String]): Unit = {
+      val p = new Path(f"$dir/_manifests/v$v%08d.json")
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val listed = files.map(f => "\"" + f + "\"").mkString(",")
+      val out = fs.create(p, false)
+      try out.write((s"""{"version":$v,"files":[$listed],""" +
+        s""""operation":"hand-written","ts":$v}""").getBytes("UTF-8"))
+      finally out.close()
+    }
+    def refused(v: Long)(body: => Any): Unit = {
+      val e = intercept[Exception](body)
+      assert(e.getMessage.contains(s"version $v "), e.getMessage)
+    }
+    val young = freshDir()
+    writeFilesForm(young, 1L, Seq(s"$young/data/v1-ingest/part-0.parquet"))
+    refused(1L)(SnapshotStore.readAsOf(spark, young, 1L))
+    refused(1L)(SnapshotStore.readChangesSince(spark, young, 0L, 1L))
     val dir = freshDir()
     SnapshotStore.commit(spark, dir, docs(1L -> "a", 2L -> "b"), "ingest")
-    // hand-write v2 in the self-contained encoding only v1 is logged in
-    val m1 = SnapshotStore.manifest(spark, dir, 1L)
-    SnapshotStore.writeManifestForTest(spark, dir,
-      m1.copy(version = 2L, operation = "hand-written", ts = m1.ts + 1))
-    val e = intercept[IllegalArgumentException] {
-      SnapshotStore.readChangesSince(spark, dir, 1L, 2L)
-    }
-    assert(e.getMessage.contains("version 2"), e.getMessage)
+    writeFilesForm(dir, 2L, SnapshotStore.manifest(spark, dir, 1L).files)
+    refused(2L)(SnapshotStore.readAsOf(spark, dir, 2L))
+    refused(2L)(SnapshotStore.readChangesSince(spark, dir, 1L, 2L))
   }
 
   test("the change feed reads one log entry per version in its range, " +

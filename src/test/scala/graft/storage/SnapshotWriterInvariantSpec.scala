@@ -10,9 +10,8 @@ import org.json4s.jackson.JsonMethods
   * facts the readers rely on, pinned on one table driven through every
   * commit shape:
   *
-  *  - only the first commit (v1) is logged self-contained; every later
-  *    log entry is an action delta;
-  *  - every entry records the version's schema and a commit timestamp;
+  *  - every entry, v1 included, is an action delta with the version's
+  *    schema and a commit timestamp;
   *  - every checkpoint header names the parquet format;
   *  - every bloom entry is a pointer into a sidecar that exists.
   */
@@ -73,18 +72,13 @@ class SnapshotWriterInvariantSpec extends SparkSpec {
 
     // the log entries themselves
     (1L to latest).foreach { v =>
-      val entry = store.parseRaw(text(new Path(f"$dir/_manifests/v$v%08d.json")))
-      val (schema, ts, stats) = entry match {
-        case Left(m) =>
-          assert(v == 1L, s"v$v is logged self-contained; only v1 may be")
-          (m.schema, m.ts, m.stats.values)
-        case Right(d) =>
-          assert(v > 1L, "v1 must be the self-contained base")
-          (d.schema, d.ts, d.adds.flatMap(_._2))
-      }
-      assert(schema.isDefined, s"v$v records no schema")
-      assert(ts > 0L, s"v$v records no commit timestamp")
-      assertPointers(s"log entry v$v", stats)
+      val d = store.parseRaw(text(new Path(f"$dir/_manifests/v$v%08d.json")))
+      assert(d.version == v, s"v$v parses as v${d.version}")
+      assert(v > 1L || d.removes.isEmpty,
+        "v1 is the delta from the empty table: adds only")
+      assert(d.schema.isDefined, s"v$v records no schema")
+      assert(d.ts > 0L, s"v$v records no commit timestamp")
+      assertPointers(s"log entry v$v", d.adds.flatMap(_._2))
     }
 
     // every checkpoint header, and the state each one loads
