@@ -38,21 +38,27 @@ object Tables {
     }
   }
 
+  /** `sfDir/name.parquet` as a frame, cached per (sfDir, name). The
+    * schema is read from the file's footer on the driver
+    * ([[graft.storage.ParquetFooters.schema]]), so an open runs no
+    * schema-inference Spark job; the plan is the one inference would give.
+    *
+    * events.parquet carries TIMESTAMP(NANOS). The engine-wide contract is
+    * `ts` = bigint of epoch-nanos WITH A MICROSECOND PRECISION FLOOR: a
+    * session with `spark.sql.legacy.parquet.nanosAsLong` on an older
+    * Spark 4 point release reads the long (true nanos survive); Spark >=
+    * 4.1.2 reads the column as a (NTZ) timestamp truncated to
+    * microseconds under either setting, and the normalization below
+    * re-widens (`* 1000`), so the sub-micro digits are zeros there. Every
+    * oracle grain in this repo (epoch_us/epoch_ms/seconds) sits at or
+    * above the floor and DuckDB's parquet reader truncates the same way,
+    * so grading is version-stable — but do NOT write a query that reads
+    * the ts value at epoch-NANOS grain: its low digits are
+    * Spark-version-dependent. This reader writes no session conf. */
   def read(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // events.parquet carries TIMESTAMP(NANOS). The engine-wide contract is
-    // `ts` = bigint of epoch-nanos WITH A MICROSECOND PRECISION FLOOR:
-    // older Spark 4 point releases honor the legacy long mapping below
-    // (true nanos survive); Spark >= 4.1.2 ignores it and reads the column
-    // natively as a (NTZ) timestamp truncated to microseconds — the
-    // normalization after the read re-widens (`* 1000`), so the sub-micro
-    // digits are zeros on those versions. Every oracle grain in this repo
-    // (epoch_us/epoch_ms/seconds) sits at or above the floor and DuckDB's
-    // parquet reader truncates the same way, so grading is version-stable
-    // — but do NOT write a query that reads the ts value at epoch-NANOS
-    // grain: its low digits are Spark-version-dependent.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     cache.getOrElseUpdate((sfDir, name), {
-      var df = spark.read.parquet(s"$sfDir/$name.parquet")
+      val path = s"$sfDir/$name.parquet"
+      var df = spark.read.schema(graft.storage.ParquetFooters.schema(spark, path)).parquet(path)
       if (name == "events" &&
           df.schema("ts").dataType != org.apache.spark.sql.types.LongType) {
         // CAST from NTZ interprets the wall clock in the session time zone

@@ -17,9 +17,12 @@ import org.apache.spark.sql.functions.col
   *
   * Spark-first design: rather than mutating row objects per record (the
   * reference iterates JSON properties), we express the allowlist as a plain
-  * `select`. Catalyst's ColumnPruning then pushes the projection all the way
-  * into the parquet scan (`ReadSchema` shows only the allowed columns), so at
-  * 100 TB the dropped columns are never even read off disk.
+  * `select`. Catalyst's ColumnPruning pushes it into the parquet scan
+  * (`ReadSchema` shows only the allowed columns) through operators that
+  * need no dropped column, but not through one that reads them all — an
+  * aggregate over a struct of every column, like the dedup-to-latest's
+  * `max_by`, keeps them. A caller that dedups projects first: see
+  * `graft.pipeline.DeliveryPipeline`.
   */
 object AllowlistProjection {
 

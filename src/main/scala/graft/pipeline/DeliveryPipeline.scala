@@ -54,10 +54,17 @@ final class DeliveryPipeline(
     // the client allowlist's pointer is re-read every batch
     // (ExecuteTriggerHelper.cs:49 reads the entity per invocation); an answer
     // is reused only at the same snapshot version
-    val client = clientAllowlist.get(table)
+    val allowlist = AllowlistProjection.unionAllowlists(allowlistConfig,
+      clientAllowlist.get(table))
     val batch = if (ChangeFeed.fitsOneTask(changes)) changes.coalesce(1) else changes
-    val latest = ChangeFeed.dedupLatest(batch, pk, versionCol)
-    val projected = AllowlistProjection(latest, allowlistConfig, client)
+    // the dedup's max_by(struct(every payload column)) reads every column
+    // it is given, so the allowlist's projection cannot be pruned through
+    // it: narrow to the delivered columns plus the dedup's key and version
+    // first, then drop those two unless allowlisted
+    val narrowed = AllowlistProjection.project(batch,
+      allowlist.map(_ ++ pk :+ versionCol))
+    val latest = ChangeFeed.dedupLatest(narrowed, pk, versionCol)
+    val projected = AllowlistProjection.project(latest, allowlist)
 
     val outcome = sink.executeAction(projected, sinkParams)
     if (outcome.success) {

@@ -1268,12 +1268,16 @@ object ExtQueries {
   // Plain persist, NOT a checkpoint: the pair table is wide (~two window
   // strings per corpus position) and consumed exactly twice, so a
   // checkpoint WRITE costs more than the one recompute it could ever
-  // save; the in-memory cache serves the second read.
+  // save; the in-memory cache serves the second read. The count fills
+  // the cache inside the build, so the build ledger carries the
+  // adjacency join rather than whichever consumer runs first.
   private val saSpanPairs = memos("saSpanPairs",
-    "e_exact_contamination", "e_lcp_repeats") {
-    (s, d) => graft.operators.SuffixArray.adjacentSpanPairs(
+    "e_exact_contamination", "e_lcp_repeats") { (s, d) =>
+    val pairs = graft.operators.SuffixArray.adjacentSpanPairs(
       suffixRanksMemo(s, d), Tables.documents(s, d), "doc_id", "text",
       window = SaWindow).persist()
+    pairs.count()
+    pairs
   }
 
   /** Longest repeated spans via rank-adjacent LCP over the suffix array —

@@ -2474,15 +2474,26 @@ object SnapshotStore {
       .repartition(buckets, col("__b"))
       .write.partitionBy("__b").parquet(newDvDir)
     // read back WITH the partition column: each marked file's bucket and
-    // count in one bounded pass (explicit schema — an all-carried commit
-    // may have written zero marks, and schema inference has nothing)
-    val perSpelling = spark.read
-      .schema(StructType(DvSchema.fields :+
-        StructField("__b", LongType, nullable = false)))
-      .parquet(newDvDir)
-      .groupBy(col("file"), col("__b")).agg(count(lit(1)).as("n"))
-      .collect() // bounded: one row per marked file
-      .map(r => (pathKey(r.getString(0)), r.getLong(1), r.getLong(2)))
+    // count in one bounded pass. The roots are the bucket dirs the write
+    // produced, under `basePath` so `__b` stays a column: the `_dv` dir
+    // itself is a hidden name to Spark's path filter. A write of no marks
+    // produced none, which is zero rows.
+    val dvFs = fs(spark, newDvDir)
+    val bucketDirs =
+      if (!dvFs.exists(new Path(newDvDir))) Seq.empty
+      else dvFs.listStatus(new Path(newDvDir)).toSeq
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith("__b="))
+        .map(_.getPath.toString)
+    val perSpelling =
+      if (bucketDirs.isEmpty) Array.empty[(String, Long, Long)]
+      else spark.read
+        .schema(StructType(DvSchema.fields :+
+          StructField("__b", LongType, nullable = false)))
+        .option("basePath", newDvDir)
+        .parquet(bucketDirs: _*)
+        .groupBy(col("file"), col("__b")).agg(count(lit(1)).as("n"))
+        .collect() // bounded: one row per marked file
+        .map(r => (pathKey(r.getString(0)), r.getLong(1), r.getLong(2)))
     // bucketing hashed the RAW spelling but refs key by pathKey: if two
     // spellings of one file ever land in different buckets, a single-
     // bucket DvRef would silently drop the other bucket's marks
@@ -3223,6 +3234,37 @@ object SnapshotStore {
     * its bloom bits live (and die) in the same version dir */
   private def bloomSidecarDirOf(dataDir: String): String = s"$dataDir/_blooms"
 
+  /** Schema AND stats of a commit's fresh files from ONE driver-side
+    * footer pass — the commit's `spark.read.parquet(dataDir)` schema
+    * inference was a whole Spark job per commit whose footers the stats
+    * pass then read a second time. The schema is
+    * [[ParquetFooters.schemaOf]] of the first file in path order — the
+    * footer and the rule `spark.read.parquet` itself uses — and it only
+    * engages when every fresh file carries the identical parquet schema
+    * (always true of files one write job produced; anything else falls
+    * back to the read-back scan). None = take the read-back path. */
+  private[storage] def footerSchemaAndStats(spark: SparkSession,
+                                            files: Seq[String],
+                                            sizes: Map[String, Long])
+      : Option[(StructType, Map[String, FileStats])] = try {
+    val footers = ParquetFooters.read(spark, files)
+    val mts = footers.map(_._2.getFileMetaData.getSchema)
+    if (mts.isEmpty || !mts.tail.forall(_ == mts.head)) None
+    else {
+      val (first, footer) = footers.minBy(_._1)
+      val schema = ParquetFooters.schemaOf(spark, first, footer)
+      collectStatsFromFooters(spark, schema, files, sizes, Some(footers))
+        .map(schema -> _)
+    }
+  } catch {
+    case scala.util.control.NonFatal(e) =>
+      graft.observability.Observability.logLeveled(
+        graft.observability.Observability.Level.Warning,
+        s"footer schema unavailable (${e.getClass.getSimpleName}: " +
+          s"${e.getMessage}) — falling back to the read-back scan")
+      None
+  }
+
   /** Per-file stats read from the PARQUET FOOTERS the commit just wrote
     * — the write pass IS the stats pass (round 21; optimization guide
     * §1.2 "don't compute things twice": the previous shape re-scanned
@@ -3255,78 +3297,6 @@ object SnapshotStore {
     * conservative). Zero-row files record NO entry, exactly like the
     * scan (the "empty frame writes a schema-only part file with no
     * stats entry" contract conservative pruning relies on). */
-  /** Footers of `files`, read on a bounded thread pool (a commit's
-    * sidecar-file count times a per-file metadata round-trip — serial
-    * reads put the whole product on the commit's critical path, and on
-    * object storage each read is a network round-trip). Order follows
-    * `files`. Any failure propagates (callers treat it as "footer path
-    * unavailable"). */
-  private def readFootersParallel(spark: SparkSession, files: Seq[String])
-      : Seq[(String, org.apache.parquet.hadoop.metadata.ParquetMetadata)] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    // the read options come from the session's conf: the one-argument
-    // `open` builds a fresh default Configuration (parsing the
-    // core-default/core-site resources) per file
-    def readOne(f: String) = {
-      val p = new Path(f)
-      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf),
-        org.apache.parquet.HadoopReadOptions.builder(conf, p).build())
-      try f -> rd.getFooter finally rd.close()
-    }
-    if (files.size <= 1) files.map(readOne)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(files.size, FooterReadThreads))
-      try {
-        import scala.jdk.CollectionConverters._
-        val futures = files.map(f =>
-          pool.submit(new java.util.concurrent.Callable[
-            (String, org.apache.parquet.hadoop.metadata.ParquetMetadata)] {
-            override def call() = readOne(f)
-          }))
-        futures.map(_.get())
-      } finally pool.shutdown()
-    }
-  }
-
-  /** Max parallel footer reads of one commit — small enough not to storm
-    * a filesystem, large enough to overlap the round-trips. */
-  private val FooterReadThreads = 8
-
-  /** Schema AND stats of a commit's fresh files from ONE driver-side
-    * footer pass — the commit's `spark.read.parquet(dataDir)` schema
-    * inference was a whole Spark job per commit whose footers the stats
-    * pass then read a second time. The conversion is Spark's own footer
-    * schema converter under the session's conf (the exact code path
-    * `spark.read.parquet` uses on a representative footer), and it only
-    * engages when every fresh file carries the identical parquet schema
-    * (always true of files one write job produced; anything else falls
-    * back to the read-based inference). None = take the old path. */
-  private[storage] def footerSchemaAndStats(spark: SparkSession,
-                                            files: Seq[String],
-                                            sizes: Map[String, Long])
-      : Option[(StructType, Map[String, FileStats])] = try {
-    val footers = readFootersParallel(spark, files)
-    val mts = footers.map(_._2.getFileMetaData.getSchema)
-    if (mts.isEmpty || !mts.tail.forall(_ == mts.head)) None
-    else {
-      val schema =
-        new org.apache.spark.sql.execution.datasources.parquet
-          .ParquetToSparkSchemaConverter(spark.sessionState.conf)
-          .convert(mts.head)
-      collectStatsFromFooters(spark, schema, files, sizes, Some(footers))
-        .map(schema -> _)
-    }
-  } catch {
-    case scala.util.control.NonFatal(e) =>
-      graft.observability.Observability.logLeveled(
-        graft.observability.Observability.Level.Warning,
-        s"footer schema unavailable (${e.getClass.getSimpleName}: " +
-          s"${e.getMessage}) — falling back to read-based inference")
-      None
-  }
-
   private[storage] def collectStatsFromFooters(spark: SparkSession,
                                                schema: StructType,
                                                files: Seq[String],
@@ -3362,7 +3332,7 @@ object SnapshotStore {
       case other => sys.error(s"unexpected footer stat value $other")
     }
     try {
-      val footers = preRead.getOrElse(readFootersParallel(spark, files))
+      val footers = preRead.getOrElse(ParquetFooters.read(spark, files))
       val out = footers.flatMap { case (f, footer) =>
         locally {
           val blocks = footer.getBlocks.asScala.toSeq
@@ -3589,7 +3559,7 @@ object SnapshotStore {
     case other => other
   }
 
-  private def asNullableSchema(s: StructType): StructType =
+  private[storage] def asNullableSchema(s: StructType): StructType =
     asNullableType(s).asInstanceOf[StructType]
 
   /** Additive union resolving names by the SESSION's case sensitivity
@@ -3944,13 +3914,18 @@ object SnapshotStore {
         // (spark.read.parquet) and then re-read the same footers on the
         // driver for stats. Engages under exactly the footer-stats
         // conditions (no declared blooms, no hive layout — partition
-        // values live in paths, not footers); everything else keeps the
-        // read-based inference.
+        // values live in paths, not footers); everything else reads the
+        // fresh files back as a frame.
         val footerData: Option[(StructType, Map[String, FileStats])] =
           if (newFiles.isEmpty || bCols.nonEmpty || pCols.nonEmpty) None
           else footerSchemaAndStats(spark, newFiles, sized.toMap)
+        // the fresh files as a frame, its schema from their first footer
+        // on the driver: no schema-inference job (on a hive layout Spark
+        // still adds the partition columns from the paths)
+        def readBack(): DataFrame =
+          spark.read.schema(ParquetFooters.schema(spark, dataDir)).parquet(dataDir)
         val newDf0 = if (newFiles.isEmpty || footerData.isDefined) None
-                     else Some(spark.read.parquet(dataDir))
+                     else Some(readBack())
         // Pin partition column types: hive path inference re-types per
         // commit (a long 0..3 reads back int, an id range that fit int
         // yesterday may infer long today) and a flip would surface as a
@@ -4057,8 +4032,7 @@ object SnapshotStore {
         // elided the commit's read-back — a declared CHECK must gate the
         // fresh rows regardless of how schema/stats were derived)
         if (!RewriteOps(operation) && constraintsOf(props).nonEmpty)
-          newDf.orElse(if (newFiles.isEmpty) None
-                       else Some(spark.read.parquet(dataDir)))
+          newDf.orElse(if (newFiles.isEmpty) None else Some(readBack()))
             .foreach { d =>
             val aliased = d.select(d.columns.toSeq.map(c =>
               col(s"`$c`").as(logicalFor(c).getOrElse(c))): _*)

@@ -1,11 +1,13 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import graft.operators.{AllowlistProjection, ChangeFeed}
 import graft.sinks.{DataSyncAction, HttpPostAction, SinkOutcome}
 import graft.state.{KVStore, LeaseStore}
 import graft.storage.SnapshotStore
 import com.sun.net.httpserver.HttpServer
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.StructType
 import java.net.InetSocketAddress
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
@@ -215,6 +217,48 @@ class DeliveryPipelineSpec extends SparkSpec {
       assert(docs(oneTaskBody) == expectedDocs && docs(aboveBody) == expectedDocs)
       assert(spark.sparkContext.getPersistentRDDs.size == persisted0,
         "the cached payload is released after the POST")
+    }
+  }
+
+  test("the delivery scan reads only allowlist ∪ pk ∪ version, and the payload " +
+    "equals the dedup-then-allowlist composition") {
+    class CapturingSink extends DataSyncAction {
+      var got = List.empty[(Seq[String], Seq[Row], String)]
+      override def executeAction(changes: DataFrame, params: Map[String, String]): SinkOutcome = {
+        val plan = changes.queryExecution.executedPlan.toString
+        got :+= ((changes.columns.toSeq, changes.collect().toSeq, plan))
+        SinkOutcome(success = true, 200, retryable = false, "")
+      }
+    }
+    val dir = Files.createTempDirectory("dp").toString
+    // id, version, name, secret; key 1 superseded by the second commit
+    val batch = twoFileBatch(dir)
+    val pk = Seq("id")
+    // (config, client allowlist)
+    val cases = Seq(
+      (Some("name"), None),                    // omits pk and version
+      (Some("NaMe"), Some("VERSION")),         // mixed case
+      (Some("ID"), Some("id,version,name")),
+      (None, None))                            // no allowlist: all columns
+    cases.zipWithIndex.foreach { case ((config, clientList), i) =>
+      val client = new KVStore(spark, s"$dir/allowed$i")
+      clientList.foreach(client.save("demo", _, ts(1)))
+      val sink = new CapturingSink
+      val p = new DeliveryPipeline("demo", pk, "version", config, client,
+        new KVStore(spark, s"$dir/err$i"), new LeaseStore(spark, s"$dir/lease$i"),
+        sink, Map.empty)
+      assert(p.deliver(batch, ts(10)) == p.Delivered)
+      val Seq((cols, rows, plan)) = sink.got
+      val old = AllowlistProjection(ChangeFeed.dedupLatest(batch, pk, "version"),
+        config, clientList)
+      assert(cols == old.columns.toSeq, s"case $i")
+      assert(rows.sortBy(_.toString) == old.collect().toSeq.sortBy(_.toString), s"case $i")
+      val read = AllowlistProjection.unionAllowlists(config, clientList)
+        .map(a => (a ++ pk :+ "version").map(_.toLowerCase).toSet)
+      val expected = StructType(batch.schema.filter(f =>
+        read.forall(_.contains(f.name.toLowerCase)))).catalogString
+      val readSchemas = "ReadSchema: (struct<[^>]*>)".r.findAllMatchIn(plan).map(_.group(1)).toSet
+      assert(readSchemas == Set(expected), s"case $i: $plan")
     }
   }
 }
