@@ -11,10 +11,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
   // One benchmark/verify run touches each table from many queries; reuse a
-  // single (optionally persisted) DataFrame per table so repeated queries
-  // hit the in-memory columnar cache instead of re-scanning parquet.
-  // At cluster scale this maps to caching hot dims — fact tables at 100 TB
-  // would NOT be persisted (set SPARK_GRAFT_NO_CACHE=1 to disable).
+  // single persisted DataFrame per table so repeated queries hit the
+  // in-memory columnar cache instead of re-scanning parquet. At cluster
+  // scale this maps to caching hot dims — fact tables at 100 TB would NOT
+  // be persisted.
   //
   // Bounding the cache to one scale factor is an EXPLICIT lifecycle call
   // ([[evictOtherScaleFactors]], invoked by the Bench/Verify entry points
@@ -23,7 +23,6 @@ object Tables {
   // in-memory columnar cache mid-plan just because a different scale
   // factor was read concurrently.
   private val cache = scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-  private val persistEnabled = !sys.env.contains("SPARK_GRAFT_NO_CACHE")
 
   /** Unpersist and drop every cached table of scale factors other than
     * `sfDir`, so a run that moves between scale factors holds one working
@@ -79,7 +78,7 @@ object Tables {
       // CPU-dense operators widen their own inputs instead
       // (Dedup.widened), where the gain is measured and the blast radius
       // is one operator.
-      if (persistEnabled) df.persist() else df
+      df.persist()
     })
   }
 

@@ -136,17 +136,12 @@ object BloomDedup {
       val (g1, g2) = hashPair(key)
       val hit = graft.plans.BloomExpression
         .bloomMightContainBroadcast(g1, g2, bc, numBits, numHashes)
-      val result = freshByProbe(newDocs, corpus, key, hit)
-      if (Dedup.storeEnabled) {
-        // a ≥16 MiB broadcast must not hold executor blocks for as long as
-        // the plan reference happens to live: materialize the (compact)
-        // fresh-docs result eagerly, then destroy the broadcast. Under
-        // SPARK_GRAFT_NO_CACHE the plan stays lazy, so the broadcast must
-        // stay alive with it — callers own the session lifecycle there.
-        val out = Dedup.materializeAndRelease(result)
-        bc.destroy()
-        out
-      } else result
+      // a ≥16 MiB broadcast must not hold executor blocks for as long as
+      // the plan reference happens to live: materialize the (compact)
+      // fresh-docs result eagerly, then destroy the broadcast
+      val out = Dedup.materializeAndRelease(freshByProbe(newDocs, corpus, key, hit))
+      bc.destroy()
+      out
     }
   }
 

@@ -23,15 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** `SPARK_GRAFT_NO_CACHE=1` disables ALL block storage in this module —
-    * intermediates stay lazy and results are returned un-checkpointed — the
-    * same switch `Tables.read` honors, so a no-cache measurement run really
-    * holds zero graft-originated blocks. */
-  private[graft] lazy val storeEnabled = !sys.env.contains("SPARK_GRAFT_NO_CACHE")
-
-  private def maybePersist(df: DataFrame): DataFrame =
-    if (storeEnabled) df.persist() else df
-
   /** Materialize `result` eagerly (compute once, store the compact output,
     * truncate lineage) and release the persisted intermediates it was built
     * from.
@@ -64,8 +55,7 @@ object Dedup {
   private[graft] def materializeAndRelease(result: DataFrame,
                                     intermediates: DataFrame*): DataFrame = {
     val out =
-      if (!storeEnabled) result
-      else if (result.sparkSession.sparkContext.getCheckpointDir.isDefined)
+      if (result.sparkSession.sparkContext.getCheckpointDir.isDefined)
         result.checkpoint(eager = true)
       else result.localCheckpoint(true)
     intermediates.foreach(_.unpersist(false))
@@ -235,7 +225,7 @@ object Dedup {
     // self-join + both signature lookups); persist it or Spark recomputes
     // the shingle-explode + k-way agg once per branch. Released below via
     // materializeAndRelease — the compact pair table is the checkpoint.
-    val sigs = maybePersist(minhashSignaturesFromBases(bases, k))
+    val sigs = minhashSignaturesFromBases(bases, k).persist()
     val allBands = lshBands(sigs, k, bandRows)
     val keptBands =
       if (maxBucket == Long.MaxValue) allBands
@@ -248,7 +238,7 @@ object Dedup {
           .select(col("band_idx"), col("band_key"))
         allBands.join(ok, Seq("band_idx", "band_key"))
       }
-    val bands = maybePersist(keptBands)
+    val bands = keptBands.persist()
     val pairs = bands.as("a")
       .join(bands.as("b"), Seq("band_idx", "band_key"))
       .filter(col("a.doc_id") < col("b.doc_id"))
@@ -420,7 +410,7 @@ object Dedup {
                    bits: Int = 16, prefixBits: Int = 8, maxHamming: Int = 3): DataFrame = {
     // both sides of the bucket self-join read the fingerprints; released
     // once the compact pair table is materialized.
-    val fp = maybePersist(fingerprints(docs, idCol, textCol, bits))
+    val fp = fingerprints(docs, idCol, textCol, bits).persist()
     val result = simhashPairsFromFingerprints(fp, prefixBits, maxHamming)
     fp.unpersist(false) // result is already materialized
     result
@@ -462,7 +452,7 @@ object Dedup {
   def simhashPairsMultiTable(docs: DataFrame, idCol: String, textCol: String,
                              bits: Int = 16, prefixBits: Int = 8,
                              maxHamming: Int = 3, nTables: Int = 2): DataFrame = {
-    val fp = maybePersist(fingerprints(docs, idCol, textCol, bits))
+    val fp = fingerprints(docs, idCol, textCol, bits).persist()
     val result = simhashPairsMultiTableFromFingerprints(
       fp, bits, prefixBits, maxHamming, nTables)
     fp.unpersist(false) // result is already materialized
@@ -575,13 +565,13 @@ object Dedup {
     // orientations) — a union of two selects would evaluate the candidate
     // subplan twice.
     val ids = docs.select(col(idCol).as("doc_id"))
-    val edges = maybePersist(pairs
+    val edges = pairs
       .select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .union(ids.select(col("doc_id").as("src"), col("doc_id").as("dst")))
-      .distinct())
+      .distinct().persist()
     var labels = ids.select(col("doc_id"), col("doc_id").as("cluster_id"))
     (0 until iterations).foreach { _ =>
       labels = edges
@@ -647,9 +637,9 @@ object Dedup {
     // Iterated state MUST truncate lineage every round: the logical plan
     // would otherwise nest ~5× per iteration and blow up plan ANALYSIS
     // (exponential tree, driver OOM) long before any data is large. This is
-    // execution feasibility, not a performance cache, so it applies even
-    // under SPARK_GRAFT_NO_CACHE — reliable checkpoint when a dir is set
-    // (the cluster norm for iterative jobs), localCheckpoint otherwise.
+    // execution feasibility, not a performance cache — reliable checkpoint
+    // when a dir is set (the cluster norm for iterative jobs),
+    // localCheckpoint otherwise.
     // Reclamation: superseded localCheckpoint BLOCKS are dropped by the
     // ContextCleaner once unreachable; reliable checkpoint FILES are only
     // deleted when spark.cleaner.referenceTracking.cleanCheckpoints=true
@@ -749,16 +739,16 @@ object Dedup {
     val freshDocs = pairDocs.join(labels, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("doc_id").as("cluster_id"))
     // read twice (root lookup for the increment, final relabel join)
-    val all = maybePersist(labels.unionByName(freshDocs))
+    val all = labels.unionByName(freshDocs).persist()
     // the quotient graph: new pairs projected onto component roots
     // (persisted increment-sized — probed once for the fast path, read
     // again by the contraction)
-    val rootPairs = maybePersist(newPairs
+    val rootPairs = newPairs
       .join(all.select(col("doc_id").as("doc_a"), col("cluster_id").as("ra")),
         Seq("doc_a"))
       .join(all.select(col("doc_id").as("doc_b"), col("cluster_id").as("rb")),
         Seq("doc_b"))
-      .select(col("ra").as("doc_a"), col("rb").as("doc_b")))
+      .select(col("ra").as("doc_a"), col("rb").as("doc_b")).persist()
     // fast path — no cross-component edge: every pair is a replay inside
     // one component (the at-least-once redelivery case) or touches only
     // fresh singletons already labeled by themselves. Labels are final;
@@ -810,9 +800,9 @@ object Dedup {
     // Distinctness is PER DOCUMENT, so array_distinct inside the row does it
     // narrowly — a .distinct() after the explode would shuffle the whole
     // exploded shingle table just to dedup within each doc.
-    val bases = maybePersist(
+    val bases =
       shingleBases(docs, idCol, textCol, shingleWidth)
-        .select(col("doc_id"), col("b1").as("sh")))
+        .select(col("doc_id"), col("b1").as("sh")).persist()
     val result = ngramJaccardFromShingles(bases, minJaccard, maxDf)
     bases.unpersist(false) // result is already materialized
     result
@@ -846,7 +836,7 @@ object Dedup {
         shingleTable.join(ok, Seq("sh"))
       }
     // Three plan branches read this (per-doc counts + both join sides).
-    val docShingles = maybePersist(kept0)
+    val docShingles = kept0.persist()
     val counts = docShingles.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
     val inter = docShingles.as("a")
       .join(docShingles.as("b"), Seq("sh"))
@@ -982,9 +972,9 @@ object Dedup {
   def containment(docs: DataFrame, idCol: String, textCol: String,
                   shingleWidth: Int = 3, minContainment: Double = 0.8,
                   maxDf: Long = Long.MaxValue): DataFrame = {
-    val bases = maybePersist(
+    val bases =
       shingleBases(docs, idCol, textCol, shingleWidth)
-        .select(col("doc_id"), col("b1").as("sh")))
+        .select(col("doc_id"), col("b1").as("sh")).persist()
     val result = containmentFromShingles(bases, minContainment, maxDf)
     bases.unpersist(false) // result is already materialized
     result
@@ -1082,13 +1072,13 @@ object Dedup {
       : (DataFrame, Seq[DataFrame]) = {
     require(passageTokens >= 1, "passage width must be >= 1")
     require(maxPassageFreq >= 1 && salts >= 1, "guard parameters must be >= 1")
-    val passages = maybePersist(
-      segmentInstances(docs, idCol, textCol, passageTokens, tok))
+    val passages =
+      segmentInstances(docs, idCol, textCol, passageTokens, tok).persist()
     // ONE aggregation delivers both the survivor and the frequency; the
     // compact (ph, first, pf) table is read by three cheap branches.
-    val survivors = maybePersist(passages.groupBy(col("ph"))
+    val survivors = passages.groupBy(col("ph"))
       .agg(min(struct(col("doc_id"), col("pos"))).as("first"),
-        count(lit(1)).as("pf")))
+        count(lit(1)).as("pf")).persist()
     val probe = passages.select(col("doc_id"), col("pos"), col("ptext"), col("ph"))
     val marked = guardedJoinBack(probe, survivors, maxPassageFreq, salts)
       .withColumn("keep", struct(col("doc_id"), col("pos")) === col("first"))
@@ -1225,12 +1215,12 @@ object Dedup {
     require(segTokens >= 1, "segment width must be >= 1")
     require(minDocFreq >= 2, "a segment needs >= 2 docs to be boilerplate")
     require(maxSegFreq >= 1 && salts >= 1, "guard parameters must be >= 1")
-    val segments = maybePersist(
-      segmentInstances(docs, idCol, textCol, segTokens, tok))
+    val segments =
+      segmentInstances(docs, idCol, textCol, segTokens, tok).persist()
     // ONE aggregation delivers both verdicts: document frequency (the
     // boilerplate test) and instance frequency (the skew-guard routing).
-    val stats = maybePersist(segments.groupBy(col("ph"))
-      .agg(countDistinct(col("doc_id")).as("df"), count(lit(1)).as("pf")))
+    val stats = segments.groupBy(col("ph"))
+      .agg(countDistinct(col("doc_id")).as("df"), count(lit(1)).as("pf")).persist()
     val probe = segments.select(col("doc_id"), col("pos"), col("ptext"), col("ph"))
     val marked = guardedJoinBack(probe, stats, maxSegFreq, salts)
       .withColumn("keep", col("df") < minDocFreq)
@@ -1323,16 +1313,16 @@ object Dedup {
     // have none and pass through untouched (the width-truncated floor
     // shingle would let whole short docs dedup against prefixes of longer
     // ones, which is near-dup business, not exact-substring business)
-    val grams = maybePersist(docs
+    val grams = docs
       .select(col(idCol).as("doc_id"), size(toks).as("__n"),
         posexplode(graft.plans.TextExpressions.wordShingles(toks, spanWords))
           .as(Seq("i0", "gtext")))
       .filter(col("i0") + spanWords <= col("__n"))
       .select(col("doc_id"), col("i0").cast("long").as("i0"),
-        graft.plans.HashExpressions.md5Halves(col("gtext")).as("ph")))
-    val stats = maybePersist(grams.groupBy(col("ph"))
+        graft.plans.HashExpressions.md5Halves(col("gtext")).as("ph")).persist()
+    val stats = grams.groupBy(col("ph"))
       .agg(min(struct(col("doc_id"), col("i0"))).as("fst"),
-        count(lit(1)).as("pf")))
+        count(lit(1)).as("pf")).persist()
     // an occurrence cuts when it is not the (in-scope) first occurrence
     // of its gram, OR — the incremental form — when the gram already
     // exists in a standing index (every in-scope occurrence of an indexed
@@ -1347,10 +1337,10 @@ object Dedup {
           .select(col("doc_id"), col("i0")))
       case None => localCuts
     }
-    val cuts = maybePersist(cutOcc
+    val cuts = cutOcc
       .select(col("doc_id"),
         explode(sequence(col("i0"), col("i0") + (spanWords - 1))).as("pos"))
-      .distinct())
+      .distinct().persist()
     // Materialize the cut set EAGERLY (round 21; guide §1.2 — don't
     // compute things twice): the consumers below reference it from
     // SEVERAL broadcast builds (cutDocs anti/semi-joins, the kept
@@ -1361,7 +1351,7 @@ object Dedup {
     // rebuilds, ~22 of the operator's 36 executor-CPU-s at sf0.1).
     // One cheap action serializes the materialization; every build then
     // reads the cached blocks.
-    if (storeEnabled) cuts.count()
+    cuts.count()
     // only AFFECTED docs pay the token-grain anti-join + reassembly
     // shuffle; at corpus scale most documents have no duplicated span and
     // pass through on the narrow branch (canonical tokenization re-join,

@@ -115,7 +115,7 @@ object BpeVocab {
       // vocabulary-sized rounds on a corpus-sized shuffle-partition count
       // are pure scheduling overhead — let AQE size the round stages by
       // measured bytes (single-task at test scale, unchanged at 100 TB)
-      graft.tools.AqeHints.byteSizedStages(wordCounts.sparkSession) {
+      graft.operators.LoopConf.scopedCoalesceBySize(wordCounts.sparkSession) {
         trainInner(wordCounts, nMerges)
       }
   }

@@ -285,8 +285,7 @@ object ExtQueries {
   // with its fat intermediates released, so the memo holds exactly one small
   // pair table per sfDir — bounded — and no further persist() is needed on
   // top. At cluster scale this is the materialized intermediate you'd
-  // checkpoint once and fan out from. (Under SPARK_GRAFT_NO_CACHE the memo
-  // holds a lazy plan instead — recomputed per use, stored nowhere.)
+  // checkpoint once and fan out from.
   private val minhashPairs = memos("minhashPairs",
     "e_bbit_minhash", "e_cc_incremental", "e_cluster_density",
     "e_connected_components", "e_cross_source_dup", "e_curation_funnel",

@@ -335,8 +335,7 @@ final class SnapshotDvReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case h: HadoopFsRelation => h.location match {
         case idx: SnapshotFileIndex
             if !idx.dvApplied && (idx.dvRefs.nonEmpty ||
-              idx.logicalSchema
-                .exists(s => SnapshotStore.physicalOf(s).nonEmpty)) =>
+              SnapshotStore.physicalOf(idx.logicalSchema).nonEmpty) =>
           // header-grain guards (dvRefs/logicalSchema) so a lazy
           // checkpoint-backed relation never forces its manifest here;
           // its rebuild goes through the lazy path too (round 20)
@@ -1054,9 +1053,7 @@ final case class GraftOptimizeCommand(dir: String, zorderBy: Seq[String],
     val cur = SnapshotStore.latestVersion(spark, dir).getOrElse(
       SnapshotDmlRule.analysisError(
         s"OPTIMIZE WHERE needs a committed version at $dir"))
-    val m = SnapshotStore.manifest(spark, dir, cur)
-    val schema = m.schemaStruct.getOrElse(SnapshotDmlRule.analysisError(
-      s"OPTIMIZE WHERE needs a recorded schema at $dir"))
+    val schema = SnapshotStore.headerInfoOf(spark, dir, cur).schema
     val resolver = spark.sessionState.conf.resolver
     val parsed = try spark.sessionState.sqlParser.parseExpression(cond)
     catch { case scala.util.control.NonFatal(_) =>
@@ -1093,10 +1090,8 @@ final case class GraftOptimizeCommand(dir: String, zorderBy: Seq[String],
             SnapshotDmlRule.analysisError(
               s"OPTIMIZE ZORDER needs a committed version at $dir")))
         val target = SnapshotStore.effectiveTargetFileBytes(m)
-        val bytes = m.files.map(p => m.stats.get(p).map(_.bytes)
-          .filter(_ > 0L).getOrElse(target)).sum
-        val nFiles = math.max(1L,
-          math.ceil(bytes.toDouble / target).toLong).toInt
+        val nFiles = math.max(1L, math.ceil(
+          SnapshotStore.recordedBytes(m, m.files).toDouble / target).toLong).toInt
         SnapshotStore.clusterN(spark, dir, zorderBy, nFiles)
       }
     GraftSqlCommands.invalidateRelationCache(spark)
@@ -1283,9 +1278,8 @@ final case class GraftRestoreCommand(dir: String,
     catch { case e: IllegalArgumentException if e.getMessage != null =>
       SnapshotDmlRule.analysisError(e.getMessage)
     }
-    val restored = SnapshotStore.manifest(spark, dir, v)
-    table.foreach(ident => restored.schemaStruct.foreach(s =>
-      GraftSqlCommands.updateCatalogDataSchema(spark, ident, _ => s)))
+    table.foreach(ident => GraftSqlCommands.updateCatalogDataSchema(spark,
+      ident, _ => SnapshotStore.headerInfoOf(spark, dir, v).schema))
     GraftSqlCommands.invalidateRelationCache(spark)
     Seq(Row(target, v))
   }
@@ -1432,21 +1426,19 @@ final case class GraftDropColumnsCommand(dir: String,
     val unique = names.foldLeft(Vector.empty[String])((acc, n) =>
       if (acc.exists(resolver(_, n))) acc else acc :+ n)
     SnapshotStore.latestVersion(spark, dir)
-      .map(v => SnapshotStore.manifest(spark, dir, v)).foreach { m =>
-      m.schemaStruct.foreach { s =>
-        unique.foreach { n =>
-          if (!s.fields.exists(f => resolver(f.name, n)))
-            SnapshotDmlRule.analysisError(
-              s"column $n does not exist — DROP COLUMN takes a committed " +
-                "column")
-          if (m.partitionCols.exists(resolver(_, n)))
-            SnapshotDmlRule.analysisError(
-              s"column $n is a PARTITION column — dropping it needs a " +
-                "full-snapshot rewrite")
-        }
-        if (unique.length >= s.fields.length) SnapshotDmlRule.analysisError(
-          "cannot drop the table's last column")
+      .map(v => SnapshotStore.headerInfoOf(spark, dir, v)).foreach { h =>
+      unique.foreach { n =>
+        if (!h.schema.fields.exists(f => resolver(f.name, n)))
+          SnapshotDmlRule.analysisError(
+            s"column $n does not exist — DROP COLUMN takes a committed " +
+              "column")
+        if (h.partitionCols.exists(resolver(_, n)))
+          SnapshotDmlRule.analysisError(
+            s"column $n is a PARTITION column — dropping it needs a " +
+              "full-snapshot rewrite")
       }
+      if (unique.length >= h.schema.fields.length)
+        SnapshotDmlRule.analysisError("cannot drop the table's last column")
     }
     // ONE commit drops the whole list (all-or-nothing): a concurrent
     // writer racing a mid-list column can refuse the statement, never
@@ -1513,8 +1505,8 @@ final case class GraftNotNullCommand(dir: String,
       SnapshotDmlRule.analysisError(s"no committed version at $dir"))
     val m = SnapshotStore.manifest(spark, dir, cur)
     val resolver = spark.sessionState.conf.resolver
-    val field = m.schemaStruct.flatMap(_.fields.find(f =>
-      resolver(f.name, name))).getOrElse(SnapshotDmlRule.analysisError(
+    val field = m.schema.fields.find(f =>
+      resolver(f.name, name)).getOrElse(SnapshotDmlRule.analysisError(
       s"column $name does not exist — SET/DROP NOT NULL takes a " +
         "committed column"))
     val key = s"graft.constraints.notnull_${field.name}"

@@ -45,9 +45,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Scale shape: one driver-side pass over the manifest entries per
   * query (the same cost class as Delta's log-backed index); file sizes
-  * come from the manifest's commit-time records — NO per-file
-  * filesystem RPC (legacy pre-size manifest entries fall back to
-  * `getFileStatus`). */
+  * come from the manifest's commit-time records, which every listed
+  * file carries — NO per-file filesystem RPC. */
 class SnapshotFileIndex(spark: SparkSession, dir: String,
                         m0: => SnapshotStore.Manifest,
                         subset: Option[Set[String]] = None,
@@ -73,26 +72,13 @@ class SnapshotFileIndex(spark: SparkSession, dir: String,
     * lazy subclass serves them from the commit HEADER (one small read),
     * never the reconstructed state */
   private[graft] def dvRefs: Map[String, SnapshotStore.DvRef] = m.dvs
-  private[graft] def logicalSchema: Option[StructType] = m.schemaStruct
+  private[graft] def logicalSchema: StructType = m.schema
 
   private lazy val candidateFiles: Seq[String] =
     subset.map(ss => m.files.filter(ss)).getOrElse(m.files)
 
-  private lazy val statuses: Seq[(String, FileStatus)] = {
-    lazy val fs =
-      new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    candidateFiles.map { f =>
-      // manifest-recorded size → no per-file RPC (the ~800k-file case);
-      // legacy entries without sizes fall back to one getFileStatus.
-      // mtime 0 is safe: snapshot data files are immutable and this
-      // index is built fresh per read (no FileStatusCache keying).
-      val status = m.stats.get(f).map(_.bytes).filter(_ > 0L)
-        .map(sz => new FileStatus(sz, false, 1, 128L * 1024 * 1024, 0L,
-          new Path(f)))
-        .getOrElse(fs.getFileStatus(new Path(f)))
-      f -> status
-    }
-  }
+  private lazy val statuses: Seq[(String, FileStatus)] =
+    candidateFiles.map(f => f -> SnapshotFileIndex.statusOf(m, f))
 
   /** files surfaced by the most recent `listFiles` — lets specs assert
     * the pruning that actually reached the scan */
@@ -206,7 +192,7 @@ class SnapshotFileIndex(spark: SparkSession, dir: String,
   * planning hint would defeat the laziness. */
 final class SnapshotCheckpointFileIndex(
     spark: SparkSession, dir: String, val versionOf: Long,
-    hdr: SnapshotStore.HeaderInfo, sizeHint: Option[Long],
+    hdr: SnapshotStore.HeaderInfo, sizeHint: Long,
     dvApplied0: Boolean)
     extends SnapshotFileIndex(spark, dir,
       SnapshotStore.manifest(spark, dir, versionOf), None, dvApplied0) {
@@ -214,9 +200,8 @@ final class SnapshotCheckpointFileIndex(
   override lazy val partitionSchema: StructType = new StructType()
   override private[graft] def dvRefs: Map[String, SnapshotStore.DvRef] =
     hdr.dvs
-  override private[graft] def logicalSchema: Option[StructType] =
-    hdr.schemaStruct
-  override def sizeInBytes: Long = sizeHint.getOrElse(super.sizeInBytes)
+  override private[graft] def logicalSchema: StructType = hdr.schema
+  override def sizeInBytes: Long = sizeHint
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
@@ -225,14 +210,7 @@ final class SnapshotCheckpointFileIndex(
     pred.flatMap(p =>
       SnapshotStore.distributedPruneState(spark, dir, versionOf, p)) match {
       case Some((mSurv, keep)) =>
-        lazy val fsys = new Path(dir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val kept = keep.map { f =>
-          mSurv.stats.get(f).map(_.bytes).filter(_ > 0L)
-            .map(sz => new FileStatus(sz, false, 1, 128L * 1024 * 1024, 0L,
-              new Path(f)))
-            .getOrElse(fsys.getFileStatus(new Path(f)))
-        }
+        val kept = keep.map(SnapshotFileIndex.statusOf(mSurv, _))
         lastPartitionPruned = 0
         lastStatsPruned =
           (SnapshotStore.lastDistributedPrune._1 - kept.length).toInt
@@ -248,17 +226,20 @@ object SnapshotFileIndex {
   import SnapshotStore.FilePredicate
   import SnapshotStore.FilePredicate._
 
+  /** A listed file's status from its manifest-recorded size — no
+    * filesystem RPC (the ~800k-file case). mtime 0 is safe: snapshot
+    * data files are immutable and an index is built fresh per read (no
+    * FileStatusCache keying). */
+  private[storage] def statusOf(m: SnapshotStore.Manifest, f: String): FileStatus =
+    new FileStatus(m.stats(f).bytes, false, 1, 128L * 1024 * 1024, 0L,
+      new Path(f))
+
   /** partition columns (in `partitionCols` order) typed from the
-    * manifest schema — partitioned manifests always record a schema */
+    * manifest schema */
   private[storage] def partitionSchemaOf(m: SnapshotStore.Manifest): StructType =
-    if (m.partitionCols.isEmpty) new StructType()
-    else {
-      val s = m.schemaStruct.getOrElse(sys.error(
-        "partitioned manifest lacks a recorded schema"))
-      StructType(m.partitionCols.map(c =>
-        s.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(sys.error(
-          s"partition column $c is not in the manifest schema"))))
-    }
+    StructType(m.partitionCols.map(c =>
+      m.schema.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(sys.error(
+        s"partition column $c is not in the manifest schema"))))
 
   /** the non-partition columns, in manifest-schema order */
   private[storage] def dataSchemaOf(m: SnapshotStore.Manifest,
@@ -377,10 +358,8 @@ object SnapshotFileIndex {
                                         subset: Option[Set[String]] = None,
                                         dvApplied: Boolean = true)
       : (HadoopFsRelation, SnapshotFileIndex) = {
-    val schema = m.schemaStruct
-      .getOrElse(spark.read.parquet(m.files: _*).schema)
     val index = new SnapshotFileIndex(spark, dir, m, subset, dvApplied)
-    val data = dataSchemaOf(m, schema)
+    val data = dataSchemaOf(m, m.schema)
     val dataSchema =
       if (dvApplied) SnapshotStore.toPhysicalSchema(data)
       else StructType(data.fields.map(f => f.copy(metadata =
@@ -394,7 +373,7 @@ object SnapshotFileIndex {
 
   /** Build the SQL relation LAZILY over a [[SnapshotCheckpointFileIndex]]
     * (round 20): None when the version has no parquet-checkpoint base,
-    * is partitioned, records no schema, or the checkpoint is SMALL
+    * is partitioned, or the checkpoint is SMALL
     * ([[SnapshotStore.LazyRelationMinEntries]] — below it, driver-side
     * materialization beats a distributed metadata job per filtered
     * read at any deployment scale) — the caller uses the
@@ -406,7 +385,7 @@ object SnapshotFileIndex {
       try SnapshotStore.headerInfoOf(spark, dir, version)
       catch { case scala.util.control.NonFatal(_) => return None }
     if (hdr.partitionCols.nonEmpty) return None
-    val schema = hdr.schemaStruct.getOrElse(return None)
+    val schema = hdr.schema
     SnapshotStore.parquetCheckpointInfo(spark, dir, version)
       .filter(_._1 >= SnapshotStore.LazyRelationMinEntries)
       .map { case (_, bytesHint) =>
@@ -435,13 +414,12 @@ object SnapshotFileIndex {
     lazyHadoopRelationOf(spark, dir, version, dvApplied = true).map {
       case (rel, _) =>
         val df0 = spark.baseRelationToDataFrame(rel)
-        val df = hdr.schemaStruct match {
-          case Some(s) if SnapshotStore.physicalOf(s).nonEmpty =>
-            df0.select(s.fields.toSeq.map(f =>
-              org.apache.spark.sql.functions
-                .col(s"`${SnapshotStore.physicalName(f)}`").as(f.name)): _*)
-          case _ => df0
-        }
+        val s = hdr.schema
+        val df =
+          if (SnapshotStore.physicalOf(s).isEmpty) df0
+          else df0.select(s.fields.toSeq.map(f =>
+            org.apache.spark.sql.functions
+              .col(s"`${SnapshotStore.physicalName(f)}`").as(f.name)): _*)
         SnapshotStore.applyDvOverlayDvs(spark, hdr.dvs, df)
     }
   }
@@ -461,15 +439,14 @@ object SnapshotFileIndex {
     // the aliased attributes into the child's). The SQL-registered
     // face (CREATE TABLE USING — a bare BaseRelation) cannot carry
     // this projection; the post-hoc rule rebuilds through here.
-    val df = m.schemaStruct match {
-      case Some(s) if SnapshotStore.physicalOf(s).nonEmpty ||
-          (m.partitionCols.nonEmpty &&
-            df0.columns.toSeq != s.fieldNames.toSeq) =>
-        df0.select(s.fields.toSeq.map(f =>
-          org.apache.spark.sql.functions
-            .col(s"`${SnapshotStore.physicalName(f)}`").as(f.name)): _*)
-      case _ => df0
-    }
+    val s = m.schema
+    val df =
+      if (SnapshotStore.physicalOf(s).isEmpty &&
+          (m.partitionCols.isEmpty || df0.columns.toSeq == s.fieldNames.toSeq))
+        df0
+      else df0.select(s.fields.toSeq.map(f =>
+        org.apache.spark.sql.functions
+          .col(s"`${SnapshotStore.physicalName(f)}`").as(f.name)): _*)
     (df, index)
   }
 }

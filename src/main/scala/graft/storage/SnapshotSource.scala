@@ -196,11 +196,8 @@ final class SnapshotSource extends RelationProvider with DataSourceRegister
       sys.error("graft-snapshot needs a path (load(dir) or OPTIONS(path ...))"))
 
   private def schemaOf(spark: SparkSession, dir: String,
-                       version: Long): StructType = {
-    val m = SnapshotStore.manifest(spark, dir, version)
-    require(m.files.nonEmpty, s"version $version holds no data files")
-    m.schemaStruct.getOrElse(spark.read.parquet(m.files: _*).schema)
-  }
+                       version: Long): StructType =
+    SnapshotStore.headerInfoOf(spark, dir, version).schema
 
   private def cdfRequested(parameters: Map[String, String]): Boolean =
     parameters.get("readChangeFeed").exists(_.trim.toBoolean)

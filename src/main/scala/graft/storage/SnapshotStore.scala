@@ -139,20 +139,17 @@ object SnapshotStore {
     * bloom" = keep the file (conservative, never wrong). */
   final case class BloomStats(dataType: String, sidecar: String, ord: Long)
 
-  /** Stats of one data file: exact row count, size in bytes (0 on
-    * pre-size manifests — a real parquet file is never 0 bytes, so 0 is
-    * a safe absent marker), per-column [[ColStats]], and per-declared-
-    * column [[BloomStats]]. Recorded sizes let readers
-    * ([[SnapshotFileIndex]], [[compact]]) plan scans without one
-    * filesystem RPC per listed file — at ~800k files per 100 TB table,
-    * that RPC storm is the difference between a driver-side map lookup
-    * and minutes of NameNode round-trips. */
+  /** Stats of one data file: exact row count, size in bytes, per-column
+    * [[ColStats]], and per-declared-column [[BloomStats]]. Every added
+    * file carries them, so readers ([[SnapshotFileIndex]], [[compact]])
+    * plan scans without one filesystem RPC per listed file — at ~800k
+    * files per 100 TB table, that RPC storm is the difference between a
+    * driver-side map lookup and minutes of NameNode round-trips. */
   final case class FileStats(rows: Long, cols: Map[String, ColStats],
-                             bytes: Long = 0L,
+                             bytes: Long,
                              blooms: Map[String, BloomStats] = Map.empty)
 
-  /** `schema` is the version's LOGICAL schema as Spark StructType JSON
-    * (None on pre-evolution manifests → readers infer from the files).
+  /** `schema` is the version's LOGICAL schema, recorded by every commit.
     * It is the union of every commit's columns up to this version:
     * data files written before a column existed simply lack it, and the
     * explicit-schema parquet read null-fills — additive schema
@@ -222,17 +219,14 @@ object SnapshotStore {
     * Non-graft keys are opaque user metadata. */
   final case class Manifest(version: Long, operation: String,
                             files: Seq[String],
-                            stats: Map[String, FileStats] = Map.empty,
-                            schema: Option[String] = None,
+                            stats: Map[String, FileStats],
+                            schema: StructType,
                             partitionCols: Seq[String] = Seq.empty,
                             ts: Long = 0L,
                             bloomCols: Seq[String] = Seq.empty,
                             dvs: Map[String, DvRef] = Map.empty,
                             droppedCols: Seq[String] = Seq.empty,
-                            properties: Map[String, String] = Map.empty) {
-    def schemaStruct: Option[StructType] =
-      schema.map(DataType.fromJson(_).asInstanceOf[StructType])
-  }
+                            properties: Map[String, String] = Map.empty)
 
   /** One commit's INCREMENTAL action record (round 17 — the Delta
     * add/remove-action log model): what the version CHANGED, not what it
@@ -247,9 +241,9 @@ object SnapshotStore {
     * `_latest` pointer. */
   private[storage] final case class CommitDelta(
       version: Long, operation: String, ts: Long,
-      schema: Option[String], partitionCols: Seq[String],
+      schema: StructType, partitionCols: Seq[String],
       bloomCols: Seq[String],
-      adds: Seq[(String, Option[FileStats])], removes: Seq[String],
+      adds: Seq[(String, FileStats)], removes: Seq[String],
       dvs: Map[String, DvRef], droppedCols: Seq[String] = Seq.empty,
       properties: Map[String, String] = Map.empty)
 
@@ -440,8 +434,8 @@ object SnapshotStore {
     * log uses (one codec, property-tested round-trip); each declared
     * bloom column rides as its sidecar POINTER (`bloomSidecars` path +
     * `bloomOrds` row ordinal, parallel to `bloomCols`/`bloomTypes`),
-    * never as bits. Null `rows` marks a file with no stats entry
-    * (pre-stats manifests). */
+    * never as bits. Every row carries `rows`, `bytes` and `cols`; a row
+    * missing any of them marks the checkpoint torn. */
   private[storage] val CkptSchema = StructType(Seq(
     StructField("ord", LongType, nullable = false),
     StructField("path", StringType, nullable = false),
@@ -544,7 +538,9 @@ object SnapshotStore {
     * ids are monotonic per checkpoint, so "already committed" is one
     * comparison against this max. Pointer-carried: O(1 + tail) manifest
     * reads on a pointered table (only the tail commits the pointer
-    * write missed are opened), one full scan on a legacy table. */
+    * write missed are opened); a missing, corrupt or vacuumed-past
+    * pointer — the best-effort hint's crash window — costs one full
+    * scan. */
   private[graft] def maxIngestBatchId(spark: SparkSession,
                                       dir: String): Option[Long] = {
     // header-only reads: the operation rides every entry's top level
@@ -614,13 +610,13 @@ object SnapshotStore {
       f -> JObject("p" -> JString(dv.path), "n" -> JLong(dv.rows))
     }.toList)
 
-  private def headerJson(operation: String, ts: Long, schema: Option[String],
+  private def headerJson(operation: String, ts: Long, schema: StructType,
                          partitionCols: Seq[String],
                          bloomCols: Seq[String],
                          droppedCols: Seq[String],
                          properties: Map[String, String]): List[(String, JValue)] = List(
     "operation" -> JString(operation),
-    "schema" -> schema.map(JString(_)).getOrElse(JNothing),
+    "schema" -> JString(schema.json),
     "partitionCols" ->
       (if (partitionCols.isEmpty) JNothing
        else JArray(partitionCols.map(JString(_)).toList)),
@@ -647,8 +643,7 @@ object SnapshotStore {
     JsonMethods.compact(JsonMethods.render(JObject(
       ("version" -> JLong(d.version): (String, JValue)) ::
         ("adds" -> (JArray(d.adds.map { case (f, st) =>
-          JObject(("f" -> (JString(f): JValue)) ::
-            st.map(s => "s" -> (fileStatsJson(s): JValue)).toList)
+          JObject("f" -> JString(f), "s" -> fileStatsJson(st))
         }.toList): JValue)) ::
         ("removes" ->
           (if (d.removes.isEmpty) JNothing
@@ -676,14 +671,15 @@ object SnapshotStore {
     case _ => Map.empty[String, ColStats]
   }
 
-  private def fileStatsOf(fv: JValue): FileStats = {
+  /** One add's stats; `version` names the entry in a refusal. */
+  private def fileStatsOf(fv: JValue, version: Long): FileStats = {
     val rows = fv \ "rows" match {
       case JLong(l) => l; case JInt(i) => i.toLong
       case o => sys.error(s"bad rows: $o")
     }
     val bytes = fv \ "bytes" match {
       case JLong(l) => l; case JInt(i) => i.toLong
-      case _ => 0L // pre-size manifest
+      case _ => sys.error(s"version $version records file stats without bytes")
     }
     val cols = colsOf(fv \ "cols")
     val blooms = fv \ "blooms" match {
@@ -738,11 +734,14 @@ object SnapshotStore {
       case _ => Seq.empty
     }
 
-  private def schemaFieldOf(root: JValue): Option[String] =
-    root \ "schema" match {
-      case JString(s) => Some(s)
-      case _ => None
+  private def schemaOf(root: JValue): StructType = root \ "schema" match {
+    case JString(s) => DataType.fromJson(s) match {
+      case st: StructType => st
+      case o => sys.error(s"version ${versionOf(root)} records a non-struct " +
+        s"schema: ${o.simpleString}")
     }
+    case _ => sys.error(s"version ${versionOf(root)} records no schema")
+  }
 
   private def propertiesOf(root: JValue): Map[String, String] =
     root \ "properties" match {
@@ -753,26 +752,31 @@ object SnapshotStore {
       case _ => Map.empty
     }
 
-  /** Parse one log entry — an action delta at every version. An entry
-    * without `adds` (the `files` form earlier builds wrote at v1) is
-    * refused, naming its version. */
+  /** Parse one log entry — an action delta at every version, with a
+    * header carrying `schema` and `ts` and every add carrying its stats.
+    * An entry without `adds` (the `files` form earlier builds wrote at
+    * v1), without `schema` or `ts`, with an add lacking stats, or with
+    * stats lacking `bytes` is refused, naming its version. */
   private[storage] def parseRaw(json: String): CommitDelta = {
     val root = JsonMethods.parse(json)
-    val adds = root \ "adds" match {
-      case JArray(xs) => xs.map { av =>
-        val f = av \ "f" match { case JString(s) => s
-                                 case o => sys.error(s"bad add entry: $o") }
-        val st = av \ "s" match {
-          case JNothing | JNull => None
-          case sv => Some(fileStatsOf(sv))
-        }
-        f -> st
-      }
-      case _ => sys.error(s"version ${versionOf(root)} is not logged as " +
+    val v = versionOf(root)
+    val addsJ = root \ "adds" match {
+      case JArray(xs) => xs
+      case _ => sys.error(s"version $v is not logged as " +
         "an action delta — every commit, v1 included, must be")
     }
-    CommitDelta(versionOf(root), operationOf(root), tsOf(root),
-      schemaFieldOf(root), strArrayOf(root, "partitionCols"),
+    val (ts, schema) = (tsOf(root), schemaOf(root))
+    val adds = addsJ.map { av =>
+      val f = av \ "f" match { case JString(s) => s
+                               case o => sys.error(s"bad add entry: $o") }
+      av \ "s" match {
+        case JNothing | JNull =>
+          sys.error(s"version $v records an add without stats: $f")
+        case sv => f -> fileStatsOf(sv, v)
+      }
+    }
+    CommitDelta(v, operationOf(root), ts, schema,
+      strArrayOf(root, "partitionCols"),
       strArrayOf(root, "bloomCols"), adds, strArrayOf(root, "removes"),
       dvsOf(root), strArrayOf(root, "droppedCols"), propertiesOf(root))
   }
@@ -789,8 +793,7 @@ object SnapshotStore {
     val kept = prior.files.filterNot(f => removed(f) || addKeys(f))
     val files = kept ++ d.adds.map(_._1)
     val keptSet = kept.toSet
-    val stats = prior.stats.filter(kv => keptSet(kv._1)) ++
-      d.adds.flatMap { case (f, st) => st.map(f -> _) }
+    val stats = prior.stats.filter(kv => keptSet(kv._1)) ++ d.adds
     Manifest(d.version, d.operation, files, stats, d.schema,
       d.partitionCols, d.ts, d.bloomCols, d.dvs, d.droppedCols,
       d.properties)
@@ -798,7 +801,8 @@ object SnapshotStore {
 
   /** The empty table at v0: the prior v1's delta is taken against, and
     * the base every walk-back that finds no checkpoint bottoms out on. */
-  private[storage] val EmptyTable: Manifest = Manifest(0L, "", Seq.empty)
+  private[storage] val EmptyTable: Manifest =
+    Manifest(0L, "", Seq.empty, Map.empty, new StructType())
 
   /** The action delta between two consecutive manifests — exactly what
     * [[applyDelta]] inverts: `applyDelta(prior, deltaOf(m, prior))`
@@ -810,7 +814,8 @@ object SnapshotStore {
     val curSet = m.files.toSet
     CommitDelta(m.version, m.operation, m.ts, m.schema, m.partitionCols,
       m.bloomCols,
-      adds = m.files.filterNot(priorSet).map(f => f -> m.stats.get(f)),
+      adds = m.files.filterNot(priorSet).map(f => f -> m.stats.getOrElse(f,
+        sys.error(s"version ${m.version} adds $f without stats"))),
       removes = prior.files.filterNot(curSet),
       dvs = m.dvs, droppedCols = m.droppedCols, properties = m.properties)
   }
@@ -838,10 +843,11 @@ object SnapshotStore {
 
   /** File-skipping predicate over per-file min/max stats. Evaluated
     * conservatively: a file is pruned ONLY when its stats prove no row
-    * can match; missing stats (untracked column, pre-stats manifest)
-    * keep the file. [[FilePredicate.toColumn]] derives the equivalent
-    * row-level Spark filter, so the pruned read + residual filter is
-    * exactly the full scan + filter — one definition, no drift. */
+    * can match; a column without stats (an untracked type or a column
+    * past [[MaxStatsColumns]]) keeps the file. [[FilePredicate.toColumn]]
+    * derives the equivalent row-level Spark filter, so the pruned read +
+    * residual filter is exactly the full scan + filter — one definition,
+    * no drift. */
   sealed trait FilePredicate {
     def toColumn: Column
     /** conservative may-match against one file's stats; `loaded` holds
@@ -1143,6 +1149,14 @@ object SnapshotStore {
         BloomStats(bt(i), intern.getOrElseUpdate(scs(i), scs(i)), ords(i))).toMap
     }
 
+  /** one checkpoint row's stats — its `rows`, `bytes` and `cols` cells
+    * are non-null (the readers check before decoding) */
+  private def ckptRowStats(r: org.apache.spark.sql.Row,
+                           intern: scala.collection.mutable.HashMap[String, String])
+      : FileStats =
+    FileStats(r.getLong(2), colsOf(JsonMethods.parse(r.getString(4))),
+      r.getLong(3), ckptRowBlooms(r, intern))
+
   private def readParquetCheckpoint(spark: SparkSession, dir: String,
                                     version: Long,
                                     root: JValue): Option[Manifest] = {
@@ -1186,18 +1200,15 @@ object SnapshotStore {
         return None // torn data dir (out-of-range or duplicate ord)
       val path = r.getString(1)
       files(ord.toInt) = path
-      if (!r.isNullAt(2)) {
-        val cols = if (r.isNullAt(4)) Map.empty[String, ColStats]
-                   else colsOf(JsonMethods.parse(r.getString(4)))
-        stats += path -> FileStats(r.getLong(2), cols, r.getLong(3),
-          ckptRowBlooms(r, intern))
-      }
+      if (r.isNullAt(2) || r.isNullAt(3) || r.isNullAt(4))
+        return None // torn data dir (a row without its stats)
+      stats += path -> ckptRowStats(r, intern)
       if (!r.isNullAt(7)) dvs += path -> DvRef(r.getString(7), r.getLong(8))
     }
     } finally { while (it.hasNext) it.next() }
     if (seen != entries) return None // torn data dir (missing part)
     Some(Manifest(version, operationOf(root), files.toSeq, stats.result(),
-      schemaFieldOf(root), strArrayOf(root, "partitionCols"), tsOf(root),
+      schemaOf(root), strArrayOf(root, "partitionCols"), tsOf(root),
       strArrayOf(root, "bloomCols"), dvs.result(),
       strArrayOf(root, "droppedCols"), propertiesOf(root)))
   }
@@ -1232,16 +1243,12 @@ object SnapshotStore {
     }
     val rows: Seq[org.apache.spark.sql.Row] =
       m.files.zipWithIndex.map { case (p, i) =>
-        val st = m.stats.get(p)
+        val st = m.stats(p)
         val dv = m.dvs.get(p)
-        val blooms = st.map(_.blooms.toSeq.sortBy(_._1)).getOrElse(Seq.empty)
+        val blooms = st.blooms.toSeq.sortBy(_._1)
         org.apache.spark.sql.Row(
-          i.toLong, p,
-          st.map(s => java.lang.Long.valueOf(s.rows)).orNull,
-          st.map(s => java.lang.Long.valueOf(s.bytes)).orNull,
-          st.map(s =>
-            JsonMethods.compact(JsonMethods.render(colsJsonObj(s.cols))))
-            .orNull,
+          i.toLong, p, st.rows, st.bytes,
+          JsonMethods.compact(JsonMethods.render(colsJsonObj(st.cols))),
           if (blooms.isEmpty) null else blooms.map(_._1),
           if (blooms.isEmpty) null else blooms.map(_._2.dataType),
           dv.map(_.path).orNull,
@@ -1418,9 +1425,9 @@ object SnapshotStore {
     StructField("file", StringType, nullable = false),
     StructField("pos", LongType, nullable = false)))
 
-  /** One parquet reader honoring the manifest's recorded schema when
-    * present: files written before a column existed read it as null
-    * (additive evolution), and no footer-inference read happens at all
+  /** One parquet reader honoring the manifest's recorded schema: files
+    * written before a column existed read it as null (additive
+    * evolution), and no footer-inference read happens at all
     * (at 800k files, schema certainty should not cost a sample read).
     * PARTITIONED tables route through [[SnapshotFileIndex]] — their data
     * files elide the partition columns, whose values the index re-derives
@@ -1431,18 +1438,17 @@ object SnapshotStore {
                            files: Seq[String]): DataFrame =
     if (m.partitionCols.nonEmpty)
       SnapshotFileIndex.readFilesOf(spark, dir, m, files)
-    else m.schemaStruct match {
-      case Some(s) =>
-        // files spell PHYSICAL names (column mapping); read physically,
-        // alias back to the logical schema — identity when unmapped
-        val df = spark.read.schema(toPhysicalSchema(s)).parquet(files: _*)
-        // backquoted: a physical name born with a dot (legal via
-        // backticks) must resolve as ONE column, not a nested-field
-        // path — same quoting as writeData and relationOf
-        if (physicalOf(s).isEmpty) df
-        else df.select(s.fields.toSeq.map(f =>
-          col(s"`${physicalName(f)}`").as(f.name)): _*)
-      case None => spark.read.parquet(files: _*)
+    else {
+      // files spell PHYSICAL names (column mapping); read physically,
+      // alias back to the logical schema — identity when unmapped
+      val s = m.schema
+      val df = spark.read.schema(toPhysicalSchema(s)).parquet(files: _*)
+      // backquoted: a physical name born with a dot (legal via
+      // backticks) must resolve as ONE column, not a nested-field
+      // path — same quoting as writeData and relationOf
+      if (physicalOf(s).isEmpty) df
+      else df.select(s.fields.toSeq.map(f =>
+        col(s"`${physicalName(f)}`").as(f.name)): _*)
     }
 
   /** Apply a manifest's deletion vectors OVER an already-built frame of
@@ -1599,15 +1605,12 @@ object SnapshotStore {
   /** executor-side phase-1 row evaluation of one checkpoint entry:
     * min/max / null-count stats only (bloom bits stay in their
     * sidecars; the driver's phase 2 loads them for survivors alone).
-    * Absent stats keep the file — conservative, as everywhere. */
+    * Runs only over a checkpoint whose rows all carry stats. */
   private[storage] def ckptRowMightMatch(r: org.apache.spark.sql.Row,
                                          p: FilePredicate): Boolean =
-    r.isNullAt(2) || {
-      val cols = if (r.isNullAt(4)) Map.empty[String, ColStats]
-                 else colsOf(JsonMethods.parse(r.getString(4)))
-      p.mightMatch(FileStats(r.getLong(2), cols,
-        if (r.isNullAt(3)) 0L else r.getLong(3)), FilePredicate.NoBlooms)
-    }
+    p.mightMatch(FileStats(r.getLong(2),
+      colsOf(JsonMethods.parse(r.getString(4))), r.getLong(3)),
+      FilePredicate.NoBlooms)
 
   /** The DISTRIBUTED pruning core (round 19 — the Delta Snapshot
     * state-as-DataFrame shape, scoped to READS): evaluate `pred` over
@@ -1669,26 +1672,27 @@ object SnapshotStore {
     // columns (None here marks that case; survivors-only is sufficient
     // because the synthetic manifest lists only kept files, and
     // readFiles consults dvs only for the files it reads).
-    val (op, ts, schemaJ, pCols, bCols, dvsHdr, dropped, props) =
+    val (op, ts, schema, pCols, bCols, dvsHdr, dropped, props) =
       deltas.lastOption match {
         case Some(d) => (d.operation, d.ts, d.schema, d.partitionCols,
           d.bloomCols, Some(d.dvs), d.droppedCols, d.properties)
-        case None => (operationOf(hdr), tsOf(hdr), schemaFieldOf(hdr),
+        case None => (operationOf(hdr), tsOf(hdr), schemaOf(hdr),
           strArrayOf(hdr, "partitionCols"), strArrayOf(hdr, "bloomCols"),
           None, strArrayOf(hdr, "droppedCols"), propertiesOf(hdr))
       }
-    val physPred = toPhysicalPred(pred,
-      schemaJ.map(s => physicalOf(DataType.fromJson(s).asInstanceOf[StructType]))
-        .getOrElse(Map.empty))
+    val physPred = toPhysicalPred(pred, physicalOf(schema))
     val df = spark.read.schema(CkptSchema).parquet(dataP.toString)
     // torn-state validation as ONE footer-cheap distributed aggregate:
     // exact row count, distinct in-range ords (a duplicated or missing
-    // part cannot pass all four) — mirrors readParquetCheckpoint's
-    // streamed checks without materializing anything
+    // part cannot pass all four) and a stats cell on every row — mirrors
+    // readParquetCheckpoint's streamed checks without materializing
+    // anything
     val v = df.agg(count(lit(1)), count_distinct(col("ord")),
-      min(col("ord")), max(col("ord"))).head()
+      min(col("ord")), max(col("ord")), count(col("rows")),
+      count(col("bytes")), count(col("cols"))).head()
     if (v.getLong(0) != entries || v.getLong(1) != entries ||
-      (entries > 0L && (v.getLong(2) != 0L || v.getLong(3) != entries - 1L)))
+      (entries > 0L && (v.getLong(2) != 0L || v.getLong(3) != entries - 1L)) ||
+      (4 to 6).exists(i => v.getLong(i) != entries))
       return None // torn checkpoint → fall back to the replay path
     // PHASE 1, DISTRIBUTED: stats-only evaluation inside the scan
     // tasks; only survivors come back to the driver
@@ -1699,8 +1703,7 @@ object SnapshotStore {
     // a remove (or re-add) drops the base occurrence; adds append in
     // order with their inline stats
     val baseExclude = scala.collection.mutable.HashSet.empty[String]
-    val tail = scala.collection.mutable.LinkedHashMap
-      .empty[String, Option[FileStats]]
+    val tail = scala.collection.mutable.LinkedHashMap.empty[String, FileStats]
     deltas.foreach { d =>
       d.removes.foreach { fl => tail.remove(fl); baseExclude += fl }
       d.adds.foreach { case (fl, st) =>
@@ -1712,15 +1715,10 @@ object SnapshotStore {
       .map(r => (r.getLong(0), r.getString(1), r))
       .sortBy(_._1)
       .collect { case (_, fl, r) if !baseExclude(fl) =>
-        fl -> (if (r.isNullAt(2)) None
-               else Some(FileStats(r.getLong(2),
-                 if (r.isNullAt(4)) Map.empty[String, ColStats]
-                 else colsOf(JsonMethods.parse(r.getString(4))),
-                 if (r.isNullAt(3)) 0L else r.getLong(3),
-                 ckptRowBlooms(r, intern))))
+        fl -> ckptRowStats(r, intern)
       }.toSeq
     val tailKept = tail.toSeq.filter { case (_, st) =>
-      st.forall(physPred.mightMatch(_, FilePredicate.NoBlooms))
+      physPred.mightMatch(st, FilePredicate.NoBlooms)
     }
     val candidates = base ++ tailKept
     // checkpoint-coincident versions: dv refs come from the survivor
@@ -1732,13 +1730,13 @@ object SnapshotStore {
           if (r.isNullAt(8)) 0L else r.getLong(8))).toMap)
     setLastDistributedPrune(
       (entries, (survivorRows.length + tail.size).toLong))
-    val statsMap = candidates.collect { case (fl, Some(st)) => fl -> st }.toMap
+    val statsMap = candidates.toMap
     // PHASE 2: sidecar blooms for the candidate sliver, shared path
     val keep = pruneWithBlooms(spark, candidates.map(_._1), statsMap.get,
       physPred)
     val keepSet = keep.toSet
     Some((Manifest(version, op, keep,
-      statsMap.filter(kv => keepSet(kv._1)), schemaJ, pCols, ts, bCols,
+      statsMap.filter(kv => keepSet(kv._1)), schema, pCols, ts, bCols,
       dvs, dropped, props), keep))
   }
 
@@ -1748,12 +1746,10 @@ object SnapshotStore {
     * relation ([[SnapshotCheckpointFileIndex]]) resolves schema and
     * overlay inputs from one small read, never the file list. */
   private[graft] final case class HeaderInfo(
-      version: Long, operation: String, ts: Long, schema: Option[String],
+      version: Long, operation: String, ts: Long, schema: StructType,
       partitionCols: Seq[String], bloomCols: Seq[String],
       dvs: Map[String, DvRef], droppedCols: Seq[String],
       properties: Map[String, String]) {
-    def schemaStruct: Option[StructType] =
-      schema.map(DataType.fromJson(_).asInstanceOf[StructType])
     /** header-grain [[Manifest]] view (EMPTY file list) — for code that
       * reads schema/layout/dvs/properties only, never files/stats */
     def lite: Manifest = Manifest(version, operation, Seq.empty, Map.empty,
@@ -1769,13 +1765,13 @@ object SnapshotStore {
       d.bloomCols, d.dvs, d.droppedCols, d.properties)
 
   /** Does a PARQUET checkpoint (plus an action-delta tail) serve
-    * `version`? Returns the total recorded BYTES when derivable from
-    * the walk — the base checkpoint header's `bytes` plus the tail
-    * adds' (removes are not subtracted: an overestimate only biases
-    * planning AWAY from broadcast, never toward a wrong one) — as the
-    * lazy relation's `sizeInBytes` hint. `None` = no parquet base
-    * within the tail (the walk reaches v1 or the cap first): the caller
-    * uses the driver-resident path. Cost: O(tail) small header/delta
+    * `version`? Returns the checkpoint's entry count and the total
+    * recorded BYTES — the base checkpoint header's `bytes` plus the
+    * tail adds' (removes are not subtracted: an overestimate only
+    * biases planning AWAY from broadcast, never toward a wrong one) —
+    * as the lazy relation's `sizeInBytes` hint. `None` = no parquet
+    * base within the tail (the walk reaches v1 or the cap first): the
+    * caller uses the driver-resident path. Cost: O(tail) small header/delta
     * reads, the same class as any reconstruction. */
   /** [[parquetCheckpointInfo]] memo — PERFORMANCE-ONLY (round 20): the
     * walk result for a committed (dir, version) can only change in one
@@ -1789,10 +1785,10 @@ object SnapshotStore {
   private val CkptInfoCacheCapacity = 64
   private val ckptInfoCache =
     new java.util.LinkedHashMap[(String, Long),
-        Option[(Long, Option[Long])]](16, 0.75f, true) {
+        Option[(Long, Long)]](16, 0.75f, true) {
       override def removeEldestEntry(
           e: java.util.Map.Entry[(String, Long),
-            Option[(Long, Option[Long])]]): Boolean =
+            Option[(Long, Long)]]): Boolean =
         size() > CkptInfoCacheCapacity
     }
   private[storage] def clearCkptInfoCacheForTest(): Unit =
@@ -1801,9 +1797,9 @@ object SnapshotStore {
   /** Walk cap: a table whose nearest parquet-checkpoint base lies more
     * than this many deltas back gains little from the lazy tier (the
     * distributed prune would fold the same tail driver-side), and a
-    * LEGACY history with no parquet checkpoint at all must not pay an
-    * O(commits) walk per relation — beyond the cap the caller uses the
-    * driver-resident path. Generous vs the default interval of 10. */
+    * table whose `graft.checkpointInterval` exceeds the cap must not pay
+    * an O(interval) walk per relation — beyond the cap the caller uses
+    * the driver-resident path. Generous vs the default interval of 10. */
   private val MaxCkptWalk = 64
 
   /** Minimum checkpoint ENTRY COUNT for the lazy SQL tier (round 20):
@@ -1816,7 +1812,7 @@ object SnapshotStore {
 
   private[graft] def parquetCheckpointInfo(spark: SparkSession, dir: String,
                                            version: Long)
-      : Option[(Long, Option[Long])] = {
+      : Option[(Long, Long)] = {
     val cached = ckptInfoCache.synchronized(
       Option(ckptInfoCache.get((dir, version))))
     cached.foreach(return _)
@@ -1827,11 +1823,10 @@ object SnapshotStore {
 
   private def parquetCheckpointInfoUncached(spark: SparkSession, dir: String,
                                             version: Long)
-      : Option[(Long, Option[Long])] = {
+      : Option[(Long, Long)] = {
     val f = fs(spark, dir)
     var w = version
     var addBytes = 0L
-    var sawUnsized = false
     var steps = 0
     while (w >= 1 && steps <= MaxCkptWalk) {
       steps += 1
@@ -1842,27 +1837,16 @@ object SnapshotStore {
           r \ "format" match {
             case JString("parquet") if versionOf(r) == w =>
               if (!f.exists(checkpointDataPath(dir, w))) return None
-              val base = r \ "bytes" match {
-                case JLong(b) => Some(b)
-                case JInt(b) => Some(b.toLong)
-                case _ => None // pre-round-20 checkpoint header
+              def long(n: String): Long = r \ n match {
+                case JLong(l) => l; case JInt(i) => i.toLong
+                case o => sys.error(s"checkpoint header missing $n: $o")
               }
-              val entries = r \ "entries" match {
-                case JLong(n) => n
-                case JInt(n) => n.toLong
-                case _ => 0L
-              }
-              return Some((entries,
-                if (sawUnsized) None else base.map(_ + addBytes)))
+              return Some((long("entries"), long("bytes") + addBytes))
             case _ => ()
           }
         } catch { case scala.util.control.NonFatal(_) => () }
       }
-      val d = readRaw(spark, dir, w)
-      val sized = d.adds.flatMap(_._2)
-      if (sized.length != d.adds.length || sized.exists(_.bytes <= 0L))
-        sawUnsized = true
-      addBytes += sized.map(_.bytes).sum
+      addBytes += readRaw(spark, dir, w).adds.map(_._2.bytes).sum
       w -= 1
     }
     None
@@ -1911,11 +1895,8 @@ object SnapshotStore {
         readFiles(spark, dir, m, keep).filter(pred.toColumn)
       case Some((m, _)) =>
         // provably-empty: an empty frame AT the version's schema
-        m.schemaStruct match {
-          case Some(s) => spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-          case None => readAsOfWhere(spark, dir, version, pred).limit(0)
-        }
+        spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
       case None => readAsOfWhere(spark, dir, version, pred)
     }
 
@@ -2005,7 +1986,7 @@ object SnapshotStore {
       .find(v => !manifestExists(spark, dir, v)).foreach(v => sys.error(
       s"version $v in ($fromVersion, $toVersion] is not retained at $dir — " +
         "the change feed needs every manifest in the range"))
-    val added = Seq.newBuilder[(String, Option[FileStats])]
+    val added = Seq.newBuilder[(String, FileStats)]
     var header = Option.empty[HeaderInfo]
     (fromVersion + 1 to toVersion).foreach { v =>
       // the action delta answers "what did v add" in ONE small read
@@ -2015,8 +1996,7 @@ object SnapshotStore {
     }
     val adds = added.result()
     header.getOrElse(headerInfoOf(spark, dir, toVersion)).lite.copy(
-      files = adds.map(_._1),
-      stats = adds.collect { case (f, Some(st)) => f -> st }.toMap)
+      files = adds.map(_._1), stats = adds.toMap)
   }
 
   /** The files ADDED by each commit in `(fromVersion, toVersion]` — the
@@ -2151,8 +2131,7 @@ object SnapshotStore {
           applyColumnDefaults(spark, withIds, generatedOf(props)),
           dataDir,
           hdr.map(_.partitionCols).getOrElse(Seq.empty),
-          toPhysical = hdr.flatMap(_.schemaStruct).map(physicalOf)
-            .getOrElse(Map.empty))
+          toPhysical = hdr.map(h => physicalOf(h.schema)).getOrElse(Map.empty))
         finally releaseIdentityPin()
         Staged(Seq.empty, Map.empty)
       }) { (_, _) => sys.error("unreachable: bounded stage set") }
@@ -2171,8 +2150,8 @@ object SnapshotStore {
     // header-only (round 20): the early exit needs schema + tombstones,
     // never the file list
     latestVersion(spark, dir).map(v => headerInfoOf(spark, dir, v))
-      .foreach(h => h.schemaStruct.foreach(s => mergeSchemas(s, delta.schema,
-        caseSensitive(spark), h.droppedCols.toSet)))
+      .foreach(h => mergeSchemas(h.schema, delta.schema,
+        caseSensitive(spark), h.droppedCols.toSet))
 
   /** Copy-on-write row DELETE: commit a new version (operation `delete`)
     * holding the latest version minus the rows where `pred` is TRUE
@@ -2257,19 +2236,17 @@ object SnapshotStore {
     val marked = readFiles(spark, dir, m, touched)
       .filter(coalesce(rowCond, lit(false))).count()
     if (marked == 0L) return cur
-    // a touched file without row stats (legacy pre-stats manifest)
-    // makes the marked fraction unmeasurable — fall back to
-    // copy-on-write (correct at any width) rather than guess: a
-    // substituted ceiling would drive marked/total towards 0 and route
-    // even a delete-everything onto the vector path, where every later
-    // read pays a probe per row for no byte savings
-    val statless = touched.exists(f => !m.stats.contains(f))
-    val total = math.max(1L, touched.flatMap(m.stats.get).map(_.rows).sum -
-      touched.flatMap(m.dvs.get).map(_.rows).sum)
-    if (!statless && marked.toDouble / total <= DvAutoThreshold)
+    if (marked.toDouble / liveRows(m, touched) <= DvAutoThreshold)
       deleteConditionDv(spark, dir, rowCond, prune, reclaimGraceMs)
     else deleteCondition(spark, dir, rowCond, prune, reclaimGraceMs)
   }
+
+  /** live rows of `touched` by their recorded stats — physical rows
+    * minus deletion-vector masks, at least 1: the denominator of the
+    * auto-dispatch fractions */
+  private def liveRows(m: Manifest, touched: Seq[String]): Long =
+    math.max(1L, touched.map(m.stats(_).rows).sum -
+      touched.flatMap(m.dvs.get).map(_.rows).sum)
 
   /** MERGE-ON-READ row DELETE (round 16 — deletion vectors): instead of
     * rewriting every file that might hold a match ([[deleteWhere]]'s
@@ -2347,13 +2324,11 @@ object SnapshotStore {
             .filter(!coalesce(rowCond, lit(false))).limit(1).count()
           if (survivor == 0L) {
             val mFull = manifest(spark, dir, h.version)
-            if (mFull.files.forall(mFull.stats.contains)) {
-              val physical = mFull.files.map(f => mFull.stats(f).rows).sum
-              val masked = mFull.files.flatMap(updated.get).map(_.rows).sum
-              require(masked < physical,
-                s"delete would mask every live row of $dir — deleting the " +
-                  "whole table is refused (drop the table directory instead)")
-            }
+            val physical = mFull.files.map(f => mFull.stats(f).rows).sum
+            val masked = mFull.files.flatMap(updated.get).map(_.rows).sum
+            require(masked < physical,
+              s"delete would mask every live row of $dir — deleting the " +
+                "whole table is refused (drop the table directory instead)")
           }
         }
         Staged(Seq.empty, Map.empty, Some(updated))
@@ -2535,13 +2510,12 @@ object SnapshotStore {
     * partitioned write). */
   /** resolve UPDATE assignment targets against the committed schema —
     * an unknown column must refuse, never silently append one */
-  private def resolveAssignments(spark: SparkSession, m0: Manifest,
+  private def resolveAssignments(spark: SparkSession, h0: HeaderInfo,
                                  assignments: Seq[(String, Column)])
       : Seq[(String, DataType, Column)] = {
     val cs = caseSensitive(spark)
-    val schema0 = m0.schemaStruct.getOrElse(
-      asNullableSchema(spark.read.parquet(m0.files: _*).schema))
-    val idCols = identityOf(m0.properties).map(_._1)
+    val schema0 = h0.schema
+    val idCols = identityOf(h0.properties).map(_._1)
     assignments.map { case (c, v) =>
       val f = schema0.fields.find(fl =>
         if (cs) fl.name == c else fl.name.equalsIgnoreCase(c))
@@ -2563,9 +2537,7 @@ object SnapshotStore {
     require(assignments.nonEmpty, "update needs at least one assignment")
     val cur = latestVersion(spark, dir)
       .getOrElse(refuse(s"no committed version at $dir"))
-    val h0 = headerInfoOf(spark, dir, cur)
-    val resolved = resolveAssignments(spark,
-      if (h0.schema.isDefined) h0.lite else manifest(spark, dir, cur),
+    val resolved = resolveAssignments(spark, headerInfoOf(spark, dir, cur),
       assignments)
     prune.foreach { p =>
       if (prunedFilesBounded(spark, dir, cur, p).isEmpty)
@@ -2627,9 +2599,7 @@ object SnapshotStore {
     require(assignments.nonEmpty, "update needs at least one assignment")
     val cur = latestVersion(spark, dir)
       .getOrElse(refuse(s"no committed version at $dir"))
-    val h0 = headerInfoOf(spark, dir, cur)
-    val resolved = resolveAssignments(spark,
-      if (h0.schema.isDefined) h0.lite else manifest(spark, dir, cur),
+    val resolved = resolveAssignments(spark, headerInfoOf(spark, dir, cur),
       assignments)
     prune.foreach { p =>
       if (prunedFilesBounded(spark, dir, cur, p).isEmpty)
@@ -2689,8 +2659,8 @@ object SnapshotStore {
     * SQL `UPDATE` route, mirroring [[deleteConditionAuto]]: one counting
     * scan of the stats-pruned touched files decides (matched == 0 → no
     * commit at all; matched ≤ [[DvAutoThreshold]] of the touched live
-    * rows → [[updateConditionDv]]; else, or when any touched file lacks
-    * row stats, → copy-on-write [[updateCondition]]). */
+    * rows → [[updateConditionDv]]; else → copy-on-write
+    * [[updateCondition]]). */
   private[graft] def updateConditionAuto(spark: SparkSession, dir: String,
                                          rowCond: Column,
                                          prune: Option[FilePredicate],
@@ -2698,20 +2668,15 @@ object SnapshotStore {
                                          reclaimGraceMs: Long = DefaultReclaimGraceMs): Long = {
     val cur = latestVersion(spark, dir)
       .getOrElse(refuse(s"no committed version at $dir"))
-    val h0 = headerInfoOf(spark, dir, cur)
-    resolveAssignments(spark,
-      if (h0.schema.isDefined) h0.lite else manifest(spark, dir, cur),
-      assignments) // refuse unknown targets first
+    // refuse unknown targets first
+    resolveAssignments(spark, headerInfoOf(spark, dir, cur), assignments)
     // bounded dispatch measurement (round 20) — see deleteConditionAuto
     val (m, touched) = dvMutationView(spark, dir, cur, prune)
     if (touched.isEmpty) return cur
     val marked = readFiles(spark, dir, m, touched)
       .filter(coalesce(rowCond, lit(false))).count()
     if (marked == 0L) return cur
-    val statless = touched.exists(f => !m.stats.contains(f))
-    val total = math.max(1L, touched.flatMap(m.stats.get).map(_.rows).sum -
-      touched.flatMap(m.dvs.get).map(_.rows).sum)
-    if (!statless && marked.toDouble / total <= DvAutoThreshold)
+    if (marked.toDouble / liveRows(m, touched) <= DvAutoThreshold)
       updateConditionDv(spark, dir, rowCond, prune, assignments, reclaimGraceMs)
     else updateCondition(spark, dir, rowCond, prune, assignments, reclaimGraceMs)
   }
@@ -2916,8 +2881,8 @@ object SnapshotStore {
     * symmetry ([[deleteConditionAuto]], [[updateConditionAuto]]): one
     * key-projection counting join over the envelope-touched files
     * decides — matched ≤ [[DvAutoThreshold]] of their live rows →
-    * [[mergeDv]] (carry + vector + append); wider, stats-less touched
-    * files, or an empty touched set → copy-on-write [[merge]]. The
+    * [[mergeDv]] (carry + vector + append); wider, or an empty touched
+    * set → copy-on-write [[merge]]. The
     * count costs one column-pruned scan + semi-join, the same class as
     * either path's own anti/semi-join. */
   def mergeAuto(spark: SparkSession, dir: String, delta: DataFrame,
@@ -2943,15 +2908,11 @@ object SnapshotStore {
       val pred = mergeEnvelope(delta, keyCols).getOrElse(return cur)
       // bounded dispatch measurement (round 20) — see deleteConditionAuto
       val (m, touched) = dvMutationView(spark, dir, cur, Some(pred))
-      val statless = touched.exists(f => !m.stats.contains(f))
-      val dv = touched.nonEmpty && !statless && {
+      val dv = touched.nonEmpty && {
         val matched = liveWithProvenance(spark, dir, m, touched)
           .join(delta.select(keyCols.map(col): _*), keyCols, "left_semi")
           .count()
-        val total = math.max(1L,
-          touched.flatMap(m.stats.get).map(_.rows).sum -
-            touched.flatMap(m.dvs.get).map(_.rows).sum)
-        matched.toDouble / total <= DvAutoThreshold
+        matched.toDouble / liveRows(m, touched) <= DvAutoThreshold
       }
       if (dv)
         mergeDvImpl(spark, dir, delta, keyCols, pred, reclaimGraceMs,
@@ -3023,7 +2984,7 @@ object SnapshotStore {
       .map(f => f.name -> physicalName(f)).toMap
 
   private[storage] def mappingOf(m: Manifest): Map[String, String] =
-    m.schemaStruct.map(physicalOf).getOrElse(Map.empty)
+    physicalOf(m.schema)
 
   /** the schema as the parquet files spell it */
   private[storage] def toPhysicalSchema(s: StructType): StructType =
@@ -3090,19 +3051,24 @@ object SnapshotStore {
         size() > SidecarBloomCacheCapacity
     }
 
-  /** content identity of one sidecar dir: every part's
-    * (name, len, mtime), sorted — parquet part names carry a per-write
-    * UUID, so any rewrite (table recreation included) changes this
-    * even when dir mtimes do not. None = unlistable (dangling sidecar:
+  /** One listing of a sidecar dir: its content identity — every
+    * entry's (name, len, mtime), sorted; parquet part names carry a
+    * per-write UUID, so any rewrite (table recreation included) changes
+    * it even when dir mtimes do not — and its parquet part files, which
+    * the bloom read opens directly (the dir itself is a hidden `_blooms`
+    * name to Spark's path filter). None = unlistable (dangling sidecar:
     * conservative keep, no cache). */
-  private def sidecarFingerprint(spark: SparkSession,
-                                 sc: String): Option[String] =
+  private def listSidecar(spark: SparkSession,
+                          sc: String): Option[(String, Seq[String])] =
     try {
       val p = new Path(sc)
       val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Some(f.listStatus(p).iterator.map(st =>
+      val sts = f.listStatus(p).toSeq
+      Some((sts.map(st =>
           s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-        .toSeq.sorted.mkString("|"))
+        .sorted.mkString("|"),
+        sts.filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+          !st.getPath.getName.startsWith(".")).map(_.getPath.toString)))
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** spec instrumentation: sidecar parquet READS (cache misses) and the
@@ -3140,19 +3106,18 @@ object SnapshotStore {
     val reads = scala.collection.mutable.ArrayBuffer.empty[String]
     needed.foreach { case (sc, ords) =>
       // one listing RPC per touched sidecar: the content-fingerprint
-      // staleness guard (and the dangling-sidecar early-out —
-      // conservative keep)
-      val fp = sidecarFingerprint(spark, sc)
-      fp.foreach { mt =>
+      // staleness guard, the part files to read, and the
+      // dangling-sidecar early-out (conservative keep)
+      listSidecar(spark, sc).foreach { case (mt, parts) =>
         val missing = ords.distinct.filterNot { o =>
           val got = sidecarBloomCache.synchronized(
             sidecarBloomCache.get((sc, mt, o)))
           if (got != null) { out += ((sc, o)) -> got; true } else false
         }
-        if (missing.nonEmpty) try {
+        if (missing.nonEmpty && parts.nonEmpty) try {
           sidecarReadCount.incrementAndGet()
           reads += sc
-          val df = spark.read.schema(BloomSidecarSchema).parquet(sc)
+          val df = spark.read.schema(BloomSidecarSchema).parquet(parts: _*)
           // ord pushdown for selective probes; a huge candidate sliver
           // (a non-selective predicate over one commit) bounds the scan
           // by ord RANGE instead — an oversized IN list costs more in
@@ -3294,9 +3259,9 @@ object SnapshotStore {
     * dropped only ever prunes MORE files, never a wrong answer), and a
     * float/double chunk parquet declined to stat (NaN present) drops
     * bounds the scan would have recorded (pruning keeps the file —
-    * conservative). Zero-row files record NO entry, exactly like the
-    * scan (the "empty frame writes a schema-only part file with no
-    * stats entry" contract conservative pruning relies on). */
+    * conservative). A zero-row file (the schema-only part file Spark
+    * writes for an empty frame) records its row count and size with no
+    * column stats, exactly like the scan, so pruning keeps it. */
   private[storage] def collectStatsFromFooters(spark: SparkSession,
                                                schema: StructType,
                                                files: Seq[String],
@@ -3337,7 +3302,7 @@ object SnapshotStore {
         locally {
           val blocks = footer.getBlocks.asScala.toSeq
           val rows = blocks.map(_.getRowCount).sum
-          if (rows == 0L) None // parity: scan records no entry either
+          if (rows == 0L) Some(f -> FileStats(0L, Map.empty, sizes(f)))
           else {
             val cols = statCols.flatMap { fl =>
               val chunks = blocks.flatMap(_.getColumns.asScala.filter(c =>
@@ -3394,7 +3359,7 @@ object SnapshotStore {
                 }
               }
             }.toMap
-            Some(f -> FileStats(rows, cols, bytes = sizes.getOrElse(f, 0L)))
+            Some(f -> FileStats(rows, cols, sizes(f)))
           }
         }
       }.toMap
@@ -3420,7 +3385,8 @@ object SnapshotStore {
     * SIDECAR under `sidecarDir` and the returned stats carry only the
     * (sidecar, ord) pointer — the manifest never holds bloom bytes
     * (the collected bits are a bounded per-commit TRANSIENT here, not
-    * driver residency). */
+    * driver residency). A file the scan finds no row in records its
+    * size with zero rows and no column stats. */
   private[storage] def collectStats(df: DataFrame, files: Seq[String],
                                     sizes: Map[String, Long],
                                     bloomCols: Seq[String],
@@ -3482,7 +3448,7 @@ object SnapshotStore {
       }
       val key = pathKey(r.getString(0))
       if (bits.nonEmpty) bloomBits(key) = bits
-      key -> FileStats(r.getLong(1), cols)
+      key -> (r.getLong(1), cols)
     }.toMap
     // bloom bits → the commit's parquet sidecar; the stats carry only a
     // (sidecar path, ord) pointer and the collected bits are dropped.
@@ -3511,9 +3477,12 @@ object SnapshotStore {
         spark.sparkContext.parallelize(sidecarRows.toSeq, parts),
         BloomSidecarSchema).write.mode(SaveMode.Overwrite).parquet(sidecarDir)
     }
-    files.flatMap(f => byKey.get(pathKey(f))
-      .map(st => f -> st.copy(bytes = sizes.getOrElse(f, 0L),
-        blooms = bloomRefs.getOrElse(pathKey(f), Map.empty)))).toMap
+    files.map { f =>
+      val (rows, cols) =
+        byKey.getOrElse(pathKey(f), (0L, Map.empty[String, ColStats]))
+      f -> FileStats(rows, cols, sizes(f),
+        bloomRefs.getOrElse(pathKey(f), Map.empty))
+    }.toMap
   }
 
   /** The shared two-phase commit: `write` materializes data files into
@@ -3612,8 +3581,7 @@ object SnapshotStore {
     def same(a: String, b: String) = if (cs) a == b else a.equalsIgnoreCase(b)
     def widenedSchema(prior: Option[Manifest]): StructType = {
       val m0 = prior.getOrElse(refuse(s"no committed version at $dir"))
-      val schema0 = m0.schemaStruct.getOrElse(
-        asNullableSchema(spark.read.parquet(m0.files: _*).schema))
+      val schema0 = m0.schema
       val idx = schema0.fields.indexWhere(f => same(f.name, name))
       if (idx < 0) refuse(
         s"column $name does not exist — ALTER COLUMN TYPE takes a " +
@@ -3703,21 +3671,13 @@ object SnapshotStore {
     StructType(kept ++ appended)
   }
 
-  /** The version's logical schema: carried schema (stored, or inferred
-    * once for pre-evolution manifests) unioned with the new files'. */
-  /** `carriedNonEmpty` (round 20): a BOUNDED carry-all commit carries
-    * every prior file without listing them — the carried schema comes
-    * from the header (guaranteed present by the bounded guard). */
+  /** The version's logical schema: the prior's recorded schema when the
+    * version carries prior files, unioned with the new files'. A BOUNDED
+    * carry-all commit carries every prior file without listing them. */
   private def versionSchema(spark: SparkSession, prior: Option[Manifest],
-                            carryFiles: Seq[String],
-                            fresh: Option[StructType],
-                            carriedNonEmpty: Boolean = false): StructType = {
-    val carried: Option[StructType] =
-      if (carryFiles.isEmpty && !carriedNonEmpty) None
-      else prior.flatMap(_.schemaStruct)
-        .orElse(if (carryFiles.nonEmpty)
-          Some(asNullableSchema(spark.read.parquet(carryFiles: _*).schema))
-        else None)
+                            carries: Boolean,
+                            fresh: Option[StructType]): StructType = {
+    val carried = if (carries) prior.map(_.schema) else None
     (carried, fresh) match {
       case (Some(c), Some(n)) => mergeSchemas(c, n, caseSensitive(spark),
         prior.map(_.droppedCols.toSet).getOrElse(Set.empty))
@@ -3849,12 +3809,6 @@ object SnapshotStore {
       // the bounded path takes the carried schema off the header (every
       // commit records one)
       val bounded = stageBounded.isDefined
-      // header-grain manifest view for the fn hooks of BOUNDED commits
-      // (they read properties/schema/droppedCols only — never files)
-      def hdrLite: Option[Manifest] = priorHdr.map(h =>
-        Manifest(h.version, h.operation, Seq.empty, Map.empty, h.schema,
-          h.partitionCols, h.ts, h.bloomCols, h.dvs, h.droppedCols,
-          h.properties))
       // full-snapshot commits may (re)define the partition layout;
       // carry-style commits (append/merge/delete/maintenance) inherit it
       val pCols = partitionBy
@@ -3886,7 +3840,10 @@ object SnapshotStore {
       // staged-manifest refusal below is OUTSIDE this scope, so a LOST
       // race still leaves rival artifacts untouched.
       val m = try {
-        val fnPrior: Option[Manifest] = if (bounded) hdrLite else priorFull
+        // BOUNDED commits' fn hooks see the header-grain view (they read
+        // properties/schema/droppedCols only — never files)
+        val fnPrior: Option[Manifest] =
+          if (bounded) priorHdr.map(_.lite) else priorFull
         val staged0 = stageBounded match {
           case Some(fb) => fb(priorHdr, dataDir)
           case None => stage(priorFull, dataDir)
@@ -3934,7 +3891,7 @@ object SnapshotStore {
         // commit (the hint) and the carried schema on inheriting commits.
         val pinTypes: Map[String, DataType] =
           if (partitionBy.isDefined) partitionTypeHint
-          else priorHdr.flatMap(_.schemaStruct) match {
+          else priorHdr.map(_.schema) match {
             case Some(ps) if pCols.nonEmpty =>
               val cs = caseSensitive(spark)
               pCols.flatMap(c => ps.fields.find(fl =>
@@ -3958,9 +3915,7 @@ object SnapshotStore {
         // schema union, or a renamed column would union as a duplicate.
         val logicalByPhysical: Map[String, String] =
           if (!freshArePhysical) Map.empty
-          else priorHdr.flatMap(_.schemaStruct).map(ps =>
-            ps.fields.iterator.filter(fl => physicalName(fl) != fl.name)
-              .map(fl => physicalName(fl) -> fl.name).toMap)
+          else priorHdr.map(h => physicalOf(h.schema).map(_.swap))
             .getOrElse(Map.empty)
         // physical → logical, resolved by the session's case sensitivity
         // (the file spelling came through writeData's case-aware phys())
@@ -3978,7 +3933,8 @@ object SnapshotStore {
         // would record a mapping no data file satisfies).
         val schema = schemaOverrideFn.map(_(fnPrior)).orElse(schemaOverride)
           .getOrElse(
-            versionSchema(spark, fnPrior, carryFiles,
+            versionSchema(spark, fnPrior,
+              carryFiles.nonEmpty || (bounded && priorHdr.isDefined),
               newSchemaRaw.map(ns => asNullableSchema(StructType(ns.fields.map {
                 fl => logicalFor(fl.name) match {
                   case Some(logical) => fl.copy(name = logical,
@@ -3988,8 +3944,7 @@ object SnapshotStore {
                     metadata = new MetadataBuilder().withMetadata(fl.metadata)
                       .remove(PhysicalNameKey).build())
                 }
-              }))),
-              carriedNonEmpty = bounded && priorHdr.isDefined))
+              })))))
         // monotonized stamp: a clock step backwards (NTP, cross-host
         // skew) must never yield ts <= the prior commit's — the
         // TIMESTAMP AS OF binary search and age-based vacuum both rely
@@ -4068,17 +4023,15 @@ object SnapshotStore {
             require(priorFull.exists(_.files.exists(f => !removedSet(f))),
               s"commit of version $v wrote no data files")
           }
-          val d = CommitDelta(v, operation, tsNow, Some(schema.json),
-            pCols, bCols,
-            adds = newFiles.map(fl => fl -> newStats.get(fl)),
+          val d = CommitDelta(v, operation, tsNow, schema, pCols, bCols,
+            adds = newFiles.map(fl => fl -> newStats(fl)),
             removes = staged0.removes, dvs = dvMap, droppedCols = dropped,
             properties = props)
           (renderDelta(d), checkpointIntervalOfProps(props),
             () => manifest(spark, dir, v))
         } else {
           val staged = Manifest(v, operation, carryFiles ++ newFiles,
-            carryStats ++ newStats,
-            Some(schema.json), pCols, ts = tsNow,
+            carryStats ++ newStats, schema, pCols, ts = tsNow,
             bloomCols = bCols, dvs = dvMap, droppedCols = dropped,
             properties = props)
           require(staged.files.nonEmpty,
@@ -4247,6 +4200,11 @@ object SnapshotStore {
     }
   }
 
+  /** the commit-recorded bytes of `files` — what the maintenance
+    * rewrites size their output file count from, with no filesystem RPC */
+  private[storage] def recordedBytes(m: Manifest, files: Seq[String]): Long =
+    files.iterator.map(m.stats(_).bytes).sum
+
   /** Maintenance commit: rewrite the LATEST version's data into
     * ~`targetFileBytes` files as a NEW version (operation `compact`).
     * Logical content is identical; readers of prior versions are
@@ -4257,11 +4215,8 @@ object SnapshotStore {
     val cur = read(spark, dir)
     val (bytes, pCols, mapping, target) = {
       val m = manifest(spark, dir, latestVersion(spark, dir).get)
-      val f = fs(spark, dir)
-      // manifest-recorded sizes when present; RPC only for legacy files
-      (m.files.map(p => m.stats.get(p).map(_.bytes).filter(_ > 0L)
-        .getOrElse(f.getFileStatus(new Path(p)).getLen)).sum, m.partitionCols,
-        mappingOf(m), targetFileBytesOf(m, targetFileBytes))
+      (recordedBytes(m, m.files), m.partitionCols, mappingOf(m),
+        targetFileBytesOf(m, targetFileBytes))
     }
     val nFiles = math.max(1L, math.ceil(bytes.toDouble / target).toLong)
     commitFiles(spark, dir, "compact", reclaimGraceMs = reclaimGraceMs) {
@@ -4298,12 +4253,8 @@ object SnapshotStore {
         val hotSet = hot.toSet
         if (hot.isEmpty) Staged(m.files, m.stats) // raced empty: pure carry
         else {
-          val f = fs(spark, dir)
-          val bytes = hot.map(p => m.stats.get(p).map(_.bytes)
-            .filter(_ > 0L)
-            .getOrElse(f.getFileStatus(new Path(p)).getLen)).sum
-          val nFiles = math.max(1L, math.ceil(
-            bytes.toDouble / targetFileBytesOf(m, targetFileBytes)).toLong)
+          val nFiles = math.max(1L, math.ceil(recordedBytes(m, hot).toDouble /
+            targetFileBytesOf(m, targetFileBytes)).toLong)
           writeData(readFiles(spark, dir, m, hot).repartition(nFiles.toInt),
             dataDir, m.partitionCols, toPhysical = mappingOf(m))
           Staged(m.files.filterNot(hotSet),
@@ -4343,12 +4294,8 @@ object SnapshotStore {
         val hotSet = hot.toSet
         if (hot.isEmpty) Staged(m.files, m.stats) // raced empty: pure carry
         else {
-          val f = fs(spark, dir)
-          val bytes = hot.map(p => m.stats.get(p).map(_.bytes)
-            .filter(_ > 0L)
-            .getOrElse(f.getFileStatus(new Path(p)).getLen)).sum
-          val nFiles = math.max(1L, math.ceil(
-            bytes.toDouble / targetFileBytesOf(m, targetFileBytes)).toLong)
+          val nFiles = math.max(1L, math.ceil(recordedBytes(m, hot).toDouble /
+            targetFileBytesOf(m, targetFileBytes)).toLong)
           writeData(
             ZOrder.clusterN(readFiles(spark, dir, m, hot), dims,
               nFiles.toInt, bits),
@@ -4388,8 +4335,8 @@ object SnapshotStore {
 
   /** The commit log as a DataFrame — one row per RETAINED version:
     * (version, operation, n_files, n_rows, n_bytes, n_columns). Rows and
-    * bytes sum the manifest's per-file stats (exact for every version
-    * this engine committed; legacy entries without stats contribute 0).
+    * bytes sum the manifest's per-file stats, which every added file
+    * carries.
     * Driver work is one manifest read per SURFACED version — `limit`
     * (the `DESCRIBE HISTORY ... LIMIT n` operand, matching Delta)
     * restricts to the NEWEST n versions and reads only those, so the
@@ -4409,7 +4356,7 @@ object SnapshotStore {
       (m.version, m.operation, m.files.length.toLong,
         m.stats.values.map(_.rows).sum - m.dvs.values.map(_.rows).sum,
         m.stats.values.map(_.bytes).sum,
-        m.schemaStruct.map(_.fields.length.toLong).getOrElse(0L),
+        m.schema.fields.length.toLong,
         m.ts)
     }.toDF("version", "operation", "n_files", "n_rows", "n_bytes",
       "n_columns", "ts_millis")
@@ -4454,8 +4401,7 @@ object SnapshotStore {
     // fold a rival's concurrent evolution in, never commit a stale view
     def evolved(prior: Option[Manifest]): StructType = {
       val m0 = prior.getOrElse(refuse(s"no committed version at $dir"))
-      val schema0 = m0.schemaStruct.getOrElse(
-        asNullableSchema(spark.read.parquet(m0.files: _*).schema))
+      val schema0 = m0.schema
       def same(a: String, b: String) =
         if (cs) a == b else a.equalsIgnoreCase(b)
       newCols.foreach { f =>
@@ -4540,8 +4486,7 @@ object SnapshotStore {
       if (acc.exists(same(_, n))) acc else acc :+ n)
     def resolve(prior: Option[Manifest]): (StructType, Seq[StructField]) = {
       val m0 = prior.getOrElse(refuse(s"no committed version at $dir"))
-      val schema0 = m0.schemaStruct.getOrElse(
-        asNullableSchema(spark.read.parquet(m0.files: _*).schema))
+      val schema0 = m0.schema
       val dropped = unique.map { n =>
         val f0 = schema0.fields.find(f => same(f.name, n)).getOrElse(
           sys.error(s"column $n does not exist — DROP COLUMN takes a " +
@@ -4601,8 +4546,7 @@ object SnapshotStore {
     // validate + build against the IN-LOOP prior (see [[addColumns]])
     def renamedSchema(prior: Option[Manifest]): StructType = {
       val m0 = prior.getOrElse(refuse(s"no committed version at $dir"))
-      val schema0 = m0.schemaStruct.getOrElse(
-        asNullableSchema(spark.read.parquet(m0.files: _*).schema))
+      val schema0 = m0.schema
       val idx = schema0.fields.indexWhere(f => same(f.name, oldName))
       require(idx >= 0,
         s"column $oldName does not exist — RENAME COLUMN takes a committed " +
@@ -5181,7 +5125,7 @@ object SnapshotStore {
     val m = manifest(spark, dir, toVersion) // refuses if vacuumed
     commitStagedFull(spark, dir, "restore", reclaimGraceMs,
       partitionBy = Some(m.partitionCols),
-      schemaOverride = m.schemaStruct,
+      schemaOverride = Some(m.schema),
       bloomColsOpt = Some(m.bloomCols),
       droppedColsFn = Some(_ => m.droppedCols),
       propertiesFn = Some(_ => m.properties)) { (_, _) =>
@@ -5212,7 +5156,7 @@ object SnapshotStore {
         bloomCols = m.bloomCols, tblProperties = m.properties)
     else commitStagedFull(spark, targetDir, "clone", reclaimGraceMs,
       partitionBy = Some(m.partitionCols),
-      schemaOverride = m.schemaStruct,
+      schemaOverride = Some(m.schema),
       bloomColsOpt = Some(m.bloomCols),
       droppedColsFn = Some(_ => m.droppedCols),
       propertiesFn = Some(_ => m.properties)) { (_, _) =>
@@ -5524,20 +5468,14 @@ object SnapshotStore {
       // between the versions is simply omitted — a same-named re-add is
       // a DIFFERENT column (fresh physical), so it correctly null-fills
       // below (a genuine pre-image of null), never the dead bytes.
-      val toPhys: Map[String, String] = mTo.schemaStruct.map(s =>
-        s.fields.iterator.map(f => physicalName(f) -> f.name).toMap)
-        .getOrElse(Map.empty)
-      val p0 = mFrom.schemaStruct match {
-        case Some(ps) if toPhys.nonEmpty =>
-          val aligned = ps.fields.toSeq.flatMap(f =>
-            toPhys.get(physicalName(f)).map(postName =>
-              p1(f.name).as(postName)))
-          // ZERO shared physical identity = a wholesale schema replace:
-          // keep the pre side as-is (rows surface as deletes + inserts,
-          // the pre-mapping behavior) rather than a zero-column frame
-          if (aligned.isEmpty) p1 else p1.select(aligned: _*)
-        case _ => p1
-      }
+      val toPhys: Map[String, String] =
+        mTo.schema.fields.iterator.map(f => physicalName(f) -> f.name).toMap
+      val aligned = mFrom.schema.fields.toSeq.flatMap(f =>
+        toPhys.get(physicalName(f)).map(postName => p1(f.name).as(postName)))
+      // ZERO shared physical identity = a wholesale schema replace: keep
+      // the pre side as-is (rows surface as deletes + inserts, the
+      // pre-mapping behavior) rather than a zero-column frame
+      val p0 = if (aligned.isEmpty) p1 else p1.select(aligned: _*)
       cols.foldLeft(p0) { (df, c) =>
         if (df.columns.contains(c)) df
         else df.withColumn(c, lit(null).cast(post.schema(c).dataType))
@@ -5641,8 +5579,7 @@ object SnapshotStore {
     val mFrom = manifest(spark, dir, v - 1)
     require(mTo.files.nonEmpty, s"version $v holds no data files")
     require(mFrom.files.nonEmpty, s"version ${v - 1} holds no data files")
-    val schema = mTo.schemaStruct
-      .getOrElse(sys.error(s"version $v records no schema"))
+    val schema = mTo.schema
     val cols = schema.fields.map(_.name).toSeq
     validateCdfColumns(cols, idCols, v)
     val dataCols = cols.filterNot(idCols.contains)
@@ -5736,8 +5673,8 @@ object SnapshotStore {
       val aligned = parts.map { df =>
         // evolution null-fill: a pre-side file may predate a column
         // added at v (rawReadFiles already null-fills via the explicit
-        // schema read, but partitioned/legacy paths can differ in
-        // column ORDER — normalize both)
+        // schema read, but the partitioned path can differ in column
+        // ORDER — normalize both)
         val have = df.columns.toSet
         val filled = cols.foldLeft(df)((acc, c) =>
           if (have(c)) acc
@@ -5759,13 +5696,12 @@ object SnapshotStore {
     * `maxBytesPerTrigger` meter (round 19). One small log read: the
     * action delta carries its adds' stats inline (the first commit's
     * adds are all its files); rewrite commits count zero (the feed
-    * delivers nothing for them); absent sizes count zero (the cap
-    * degrades toward version counting). */
+    * delivers nothing for them). */
   private[storage] def versionAddedBytes(spark: SparkSession, dir: String,
                                          version: Long): Long = {
     val d = readRaw(spark, dir, version)
     if (RewriteOps(d.operation)) 0L
-    else d.adds.iterator.flatMap(_._2.map(_.bytes)).sum
+    else d.adds.iterator.map(_._2.bytes).sum
   }
 
   /** the table's DECLARED change-feed key columns (`graft.cdfKeys`,

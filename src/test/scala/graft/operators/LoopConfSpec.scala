@@ -51,4 +51,37 @@ class LoopConfSpec extends SparkSpec {
       "conf must be restored exactly")
     tiny.unpersist()
   }
+
+  test("a second scope on the same session does not enter while the " +
+    "first is open, and every key either scope touched is restored") {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+      "spark.sql.adaptive.enabled")
+    val before = keys.map(k => spark.conf.getOption(k))
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val firstOpen = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val first = new Thread(() => LoopConf.scoped(spark, 1) {
+      events.add("first-in")
+      firstOpen.countDown()
+      release.await()
+      events.add("first-out")
+    })
+    first.start()
+    firstOpen.await()
+    val second = new Thread(() =>
+      LoopConf.scopedCoalesceBySize(spark)(events.add("second-in")))
+    try {
+      second.start()
+      second.join(500) // ample time to enter, were the lock not shared
+      assert(second.isAlive && !events.contains("second-in"),
+        "the second scope entered while the first was open")
+    } finally release.countDown()
+    first.join()
+    second.join()
+    assert(events.toArray.toSeq == Seq("first-in", "first-out", "second-in"))
+    assert(keys.map(k => spark.conf.getOption(k)) == before,
+      "every key either scope touched must be restored exactly")
+  }
 }

@@ -1,5 +1,6 @@
 package graft.storage
 
+import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 
@@ -50,6 +51,20 @@ object ManifestCodecProps extends Properties("graft.storage.manifest-codec") {
     blooms <- Gen.mapOfN(2, bloomStats)
   } yield SnapshotStore.FileStats(rows, cols, bytes, blooms)
 
+  // a recorded schema: nasty field names at the stats-supported types,
+  // some carrying a column-mapping physical name in their metadata
+  private val field: Gen[StructField] = for {
+    name <- nonEmptyNasty
+    t <- Gen.oneOf[DataType](LongType, IntegerType, DoubleType, StringType,
+      BooleanType, DateType, DecimalType(12, 2))
+    nullable <- Gen.oneOf(true, false)
+    physical <- Gen.option(nonEmptyNasty)
+  } yield StructField(name, t, nullable, physical.map(p =>
+    new MetadataBuilder().putString(SnapshotStore.PhysicalNameKey, p).build())
+    .getOrElse(Metadata.empty))
+  private val recordedSchema: Gen[StructType] =
+    Gen.listOf(field).map(fs => StructType(fs.distinctBy(_.name)))
+
   private val dvRef: Gen[(String, SnapshotStore.DvRef)] = for {
     f <- nonEmptyNasty
     p <- nonEmptyNasty
@@ -60,12 +75,10 @@ object ManifestCodecProps extends Properties("graft.storage.manifest-codec") {
     v <- Gen.choose(1L, 99999999L)
     op <- nonEmptyNasty
     ts <- Gen.choose(1L, Long.MaxValue)
-    adds <- Gen.listOf(Gen.zip(nonEmptyNasty, Gen.option(fileStats)))
+    adds <- Gen.listOf(Gen.zip(nonEmptyNasty, fileStats))
       .map(_.distinctBy(_._1))
     removes <- Gen.listOf(nonEmptyNasty).map(_.distinct)
-    // the schema field is an opaque string to the codec (StructType JSON
-    // in production) — round-trip it as arbitrary nasty content
-    schema <- Gen.option(nonEmptyNasty)
+    schema <- recordedSchema
     partitionCols <- Gen.listOf(nonEmptyNasty).map(_.distinct)
     bloomCols <- Gen.listOf(nonEmptyNasty).map(_.distinct)
     dvs <- Gen.mapOfN(2, dvRef)
@@ -81,13 +94,15 @@ object ManifestCodecProps extends Properties("graft.storage.manifest-codec") {
     }
 
   property("a path containing ']' survives (the round-13 regex trap)") = {
-    val d = SnapshotStore.CommitDelta(7L, "op]x", 1L, None, Seq.empty,
+    val d = SnapshotStore.CommitDelta(7L, "op]x", 1L,
+      StructType(Seq(StructField("s]\"", StringType))), Seq.empty,
       Seq.empty,
       adds = Seq(
-        "/tmp/a]b/part-0.parquet" -> Some(SnapshotStore.FileStats(3L,
+        "/tmp/a]b/part-0.parquet" -> SnapshotStore.FileStats(3L,
           Map("s" -> SnapshotStore.ColStats("string", Some("min]\""),
-            Some("max\\"))))),
-        "/tmp/c\"d\\e/part-1.parquet" -> None),
+            Some("max\\"))), 512L),
+        "/tmp/c\"d\\e/part-1.parquet" ->
+          SnapshotStore.FileStats(0L, Map.empty, 64L)),
       removes = Seq("/tmp/old]/part-9.parquet"), dvs = Map.empty)
     SnapshotStore.parseRaw(SnapshotStore.renderDelta(d)) == d
   }

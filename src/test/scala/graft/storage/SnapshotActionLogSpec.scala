@@ -231,9 +231,7 @@ class SnapshotActionLogSpec extends SparkSpec {
                 f"$dir/data/v$v%08d-x/_blooms/${i % 20}", i.toLong / 10))
             else Map.empty)
         }.toMap,
-        schema = Some(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.LongType))).json),
+        schema = ManifestFixtures.Schema,
         ts = 1000L + v)
     }
     val small = synth(1L, 100)

@@ -14,6 +14,7 @@ class SnapshotCheckpointSpec extends SparkSpec {
 
   import spark.implicits._
   import SnapshotStore.{Manifest, Pointer}
+  import ManifestFixtures.manifest
 
   private def freshDir(): String = {
     val d = java.nio.file.Files.createTempDirectory("snapckpt").toFile
@@ -35,7 +36,7 @@ class SnapshotCheckpointSpec extends SparkSpec {
     val dir = freshDir()
     val last = writeLog(dir, 1L to 1000L) { v =>
       val op = if (v % 3 == 0) s"ingest-b$v" else "append"
-      Manifest(v, op, Seq(s"$dir/data/f$v.parquet"))
+      manifest(v, op, Seq(s"$dir/data/f$v.parquet"))
     }
     // v1000's interval checkpoint, as a committed log carries it
     SnapshotStore.writeCheckpointForTest(spark, dir, last)
@@ -66,7 +67,7 @@ class SnapshotCheckpointSpec extends SparkSpec {
   test("a corrupt pointer degrades to the full listing, never a wrong answer") {
     val dir = freshDir()
     writeLog(dir, 1L to 5L)(v =>
-      Manifest(v, "append", Seq(s"$dir/data/f$v.parquet")))
+      manifest(v, "append", Seq(s"$dir/data/f$v.parquet")))
     val p = new Path(s"$dir/_manifests/_latest")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
@@ -114,7 +115,7 @@ class SnapshotCheckpointSpec extends SparkSpec {
   test("TIMESTAMP AS OF binary-searches the monotone log: O(log n) manifest reads on a 1,000-commit table, mid-history or deep-history alike") {
     val dir = freshDir()
     writeLog(dir, 1L to 1000L)(v =>
-      Manifest(v, "append", Seq(s"$dir/data/f$v.parquet"),
+      manifest(v, "append", Seq(s"$dir/data/f$v.parquet"),
         ts = 1000L + v * 10L))
     SnapshotStore.writePointerForTest(spark, dir, Pointer(1000L, -1L))
     val bound = 2 * 10 + 4 // ~2·log₂(1000) + slack, NOT O(commits)
@@ -149,7 +150,7 @@ class SnapshotCheckpointSpec extends SparkSpec {
     val dir = freshDir()
     // versions 1-9 vacuumed away; 10-20 retained and timestamped
     writeLog(dir, 10L to 20L)(v =>
-      Manifest(v, "append", Seq(s"$dir/data/f$v.parquet"), ts = v * 100L))
+      manifest(v, "append", Seq(s"$dir/data/f$v.parquet"), ts = v * 100L))
     assert(SnapshotStore.versionAtTimestamp(spark, dir, 1_550L) == 15L)
     assert(SnapshotStore.versionAtTimestamp(spark, dir, 1_000L) == 10L)
     intercept[SnapshotStore.NoRetainedVersionAtTimestamp] {

@@ -37,7 +37,9 @@ class SnapshotCommitResidencySpec extends SparkSpec {
     val bigFiles = (1 to 100000).map(i => s"$dir/data/fake/part-$i.parquet")
     store.writeManifestForTest(spark, dir,
       m1.copy(version = 2L, operation = "synthetic",
-        files = m1.files ++ bigFiles, ts = m1.ts + 1), m1)
+        files = m1.files ++ bigFiles,
+        stats = m1.stats ++ ManifestFixtures.stats(bigFiles),
+        ts = m1.ts + 1), m1)
     assert(store.latestVersion(spark, dir).contains(2L))
     // append 1: the prior is the 100k-add delta commit — its header
     // parse is transient; the COMMIT path must retain only

@@ -33,7 +33,7 @@ class SnapshotDdlSpec extends SparkSpec {
       val m2 = SnapshotStore.manifest(spark, dir, 2L)
       assert(m2.operation == "add-columns")
       assert(m2.files == filesBefore, "zero data files may move")
-      assert(m2.schemaStruct.get.fieldNames.toSeq ==
+      assert(m2.schema.fieldNames.toSeq ==
         Seq("doc_id", "text", "quality", "tag"))
       // catalog face sees the evolved shape at once; old rows null-fill
       val viaSql = spark.sql(s"SELECT count(*) FROM $tbl WHERE quality IS NULL")
@@ -58,7 +58,7 @@ class SnapshotDdlSpec extends SparkSpec {
       (1L to 10L).map(i => (i, s"t$i")).toDF("doc_id", "text"), "ingest")
     spark.sql(s"ALTER TABLE '$dir' ADD COLUMN (score DOUBLE)")
     val m = SnapshotStore.manifest(spark, dir, 2L)
-    assert(m.schemaStruct.get.fieldNames.contains("score"))
+    assert(m.schema.fieldNames.contains("score"))
     assert(SnapshotStore.read(spark, dir)
       .filter(col("score").isNull).count() == 10L)
     // commit bytes O(schema): far smaller than v1, whose delta adds
@@ -142,7 +142,7 @@ class SnapshotDdlSpec extends SparkSpec {
         org.apache.spark.sql.types.LongType)))
     val m = SnapshotStore.manifest(spark, dir,
       SnapshotStore.latestVersion(spark, dir).get)
-    val f = m.schemaStruct.get.fields.find(_.name == "score").get
+    val f = m.schema.fields.find(_.name == "score").get
     assert(SnapshotStore.physicalName(f) != "score",
       s"re-added column must take a fresh physical, got ${SnapshotStore.physicalName(f)}")
     // old rows read NULL for the re-added column (never the old bytes)
@@ -221,7 +221,7 @@ class SnapshotDdlSpec extends SparkSpec {
         org.apache.spark.sql.types.LongType)))
     val m = SnapshotStore.manifest(spark, dir2,
       SnapshotStore.latestVersion(spark, dir2).get)
-    val phys = m.schemaStruct.get.fields.map(SnapshotStore.physicalName)
+    val phys = m.schema.fields.map(SnapshotStore.physicalName)
     assert(phys.distinct.length == phys.length,
       s"physical names must be pairwise distinct, got ${phys.toSeq}")
     SnapshotStore.commitAppend(spark, dir2,
@@ -243,7 +243,7 @@ class SnapshotDdlSpec extends SparkSpec {
     assert(SnapshotStore.latestVersion(spark, dir).contains(2L),
       "the multi-column drop must land as ONE commit")
     val m = SnapshotStore.manifest(spark, dir, 2L)
-    assert(m.schemaStruct.get.fieldNames.toSeq == Seq("doc_id", "text"))
+    assert(m.schema.fieldNames.toSeq == Seq("doc_id", "text"))
     assert(m.droppedCols.sorted == Seq("a", "b"),
       "both physical names tombstone in the same commit")
     // API face too

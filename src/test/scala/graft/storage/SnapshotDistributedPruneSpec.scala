@@ -36,7 +36,7 @@ class SnapshotDistributedPruneSpec extends SparkSpec {
           Some(i * 10L), Some(i * 10L + 9L), Some(0L))), 1024L)
     }.toMap
     val m = SnapshotStore.Manifest(1L, "ingest", files, stats,
-      ts = 1000L)
+      ManifestFixtures.Schema, ts = 1000L)
     SnapshotStore.writeCheckpointForTest(spark, dir, m)
     val pred = between("id", 555000L, 555990L) // ~100 of 100k files
     val distributed = SnapshotStore.prunedFilesDistributed(spark, dir, 1L, pred)

@@ -370,28 +370,4 @@ class SnapshotDvSpec extends SparkSpec {
       ((1L to 100L).toSet ++ (1000L to 1100L).toSet --
         (10L to 14L) -- (20L to 24L) -- (1010L to 1014L)))
   }
-
-  test("SQL DELETE auto-dispatch falls back to copy-on-write when a " +
-    "touched file lacks row stats (unmeasurable fraction never guesses DV)") {
-    val dir = freshDir()
-    seed(dir, 100L)
-    // strip stats from the latest manifest — a legacy pre-stats log:
-    // v2's delta (over the empty table) re-adds v1's files with no stats
-    val m = SnapshotStore.manifest(spark, dir, 1L)
-    SnapshotStore.writeManifestForTest(spark, dir,
-      m.copy(version = 2L, operation = "legacy", stats = Map.empty),
-      SnapshotStore.EmptyTable)
-    val tbl = "graft_statless_auto"
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    spark.sql(s"CREATE TABLE $tbl USING `graft-snapshot` " +
-      s"OPTIONS (path '$dir')")
-    try {
-      spark.sql(s"DELETE FROM $tbl WHERE doc_id = 7")
-      val after = SnapshotStore.manifest(spark, dir,
-        SnapshotStore.latestVersion(spark, dir).get)
-      assert(after.operation == "delete" && after.dvs.isEmpty,
-        "stats-less targets must take the CoW path, not a blind vector")
-      assert(SnapshotStore.read(spark, dir).count() == 99L)
-    } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
-  }
 }

@@ -95,7 +95,7 @@ class SnapshotRenameSpec extends SparkSpec {
     val raw = spark.read.parquet(m.files: _*)
     assert(raw.columns.contains("text") && !raw.columns.contains("body"))
     // and the recorded schema still maps body -> text
-    assert(SnapshotStore.physicalOf(m.schemaStruct.get) == Map("body" -> "text"))
+    assert(SnapshotStore.physicalOf(m.schema) == Map("body" -> "text"))
   }
 
   test("SQL: ALTER TABLE RENAME COLUMN on a registered table keeps the " +
@@ -145,7 +145,7 @@ class SnapshotRenameSpec extends SparkSpec {
     SnapshotStore.renameColumn(spark, dir, "body", "text")
     val m = SnapshotStore.manifest(spark, dir,
       SnapshotStore.latestVersion(spark, dir).get)
-    assert(SnapshotStore.physicalOf(m.schemaStruct.get).isEmpty,
+    assert(SnapshotStore.physicalOf(m.schema).isEmpty,
       "rename-back restores physical == logical (no residual mapping)")
     assert(SnapshotStore.read(spark, dir).columns.contains("text"))
   }
@@ -176,8 +176,8 @@ class SnapshotRenameSpec extends SparkSpec {
       Seq((1L, "fresh")).toDF("doc_id", "text"), "rebuild")
     val m = SnapshotStore.manifest(spark, dir,
       SnapshotStore.latestVersion(spark, dir).get)
-    assert(m.schemaStruct.get.fieldNames.toSeq == Seq("doc_id", "text"))
-    assert(SnapshotStore.physicalOf(m.schemaStruct.get).isEmpty,
+    assert(m.schema.fieldNames.toSeq == Seq("doc_id", "text"))
+    assert(SnapshotStore.physicalOf(m.schema).isEmpty,
       "a layout-redefining commit must not resurrect the old mapping")
     assert(SnapshotStore.read(spark, dir)
       .select("text").as[String].collect().toSeq == Seq("fresh"))
@@ -204,7 +204,7 @@ class SnapshotRenameSpec extends SparkSpec {
     val m = SnapshotStore.manifest(spark, dir,
       SnapshotStore.latestVersion(spark, dir).get)
     assert(m.operation == "rename-column")
-    assert(m.schemaStruct.get.fieldNames.toSeq ==
+    assert(m.schema.fieldNames.toSeq ==
       Seq("doc_id", "body", "score", "extra"),
       "the retry must fold the rival's new column AND apply the rename")
     val got = SnapshotStore.read(spark, dir)
@@ -223,7 +223,7 @@ class SnapshotRenameSpec extends SparkSpec {
     SnapshotStore.commitAppend(spark, dir,
       Seq((900L, "respelled", 1L)).toDF("doc_id", "Body", "score"), "append")
     val m = SnapshotStore.manifest(spark, dir, 3L)
-    assert(m.schemaStruct.get.fieldNames.toSeq ==
+    assert(m.schema.fieldNames.toSeq ==
       Seq("doc_id", "body", "score"), "committed spelling wins")
     val fresh = m.files.filterNot(
       SnapshotStore.manifest(spark, dir, 2L).files.toSet)

@@ -245,8 +245,7 @@ class SnapshotStoreSpec extends SparkSpec {
     // round-trip through the log entry's JSON keeps exactness
     val parsed = SnapshotStore.parseRaw(SnapshotStore.renderDelta(
       SnapshotStore.deltaOf(m, SnapshotStore.EmptyTable)))
-    assert(parsed.adds.collect { case (f, Some(st)) => f -> st }.toMap ==
-      m.stats)
+    assert(parsed.adds.toMap == m.stats)
     import SnapshotStore.FilePredicate._
     val pred = between("price",
       new java.math.BigDecimal("1000.00"), new java.math.BigDecimal("2000.00"))
@@ -448,7 +447,7 @@ class SnapshotStoreSpec extends SparkSpec {
     }
     SnapshotStore.convertParquet(spark, dir2)
     val m2 = SnapshotStore.manifest(spark, dir2, 1L)
-    assert(m2.schemaStruct.exists(_.fieldNames.contains("score")),
+    assert(m2.schema.fieldNames.contains("score"),
       "an evolved column must survive conversion (merged footers)")
     assert(SnapshotStore.read(spark, dir2)
       .select("doc_id", "score").as[(Long, Option[Double])].collect().toMap ==
@@ -688,6 +687,40 @@ class SnapshotStoreSpec extends SparkSpec {
     writeFilesForm(dir, 2L, SnapshotStore.manifest(spark, dir, 1L).files)
     refused(2L)(SnapshotStore.readAsOf(spark, dir, 2L))
     refused(2L)(SnapshotStore.readChangesSince(spark, dir, 1L, 2L))
+  }
+
+  test("an entry without a schema, an add without stats, or stats " +
+    "without bytes fails reconstruction and the range read, naming the " +
+    "version") {
+    import org.json4s.jvalue2monadic
+    import org.json4s.jackson.JsonMethods
+    // strip one required field from a committed v2 entry — the forms
+    // earlier builds could log
+    Seq("schema" -> "records no schema",
+      "s" -> "records an add without stats",
+      "bytes" -> "records file stats without bytes").foreach {
+      case (field, reason) =>
+        val dir = freshDir()
+        SnapshotStore.commit(spark, dir, docs(1L -> "a"), "ingest")
+        SnapshotStore.commitAppend(spark, dir, docs(2L -> "b"), "append")
+        val p = new Path(s"$dir/_manifests/v00000002.json")
+        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val in = fs.open(p)
+        val entry = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+        finally in.close()
+        val stripped = JsonMethods.compact(JsonMethods.render(
+          JsonMethods.parse(entry).removeField(_._1 == field)))
+        assert(stripped != entry, s"v2 must log a `$field` field")
+        val out = fs.create(p, true)
+        try out.write(stripped.getBytes("UTF-8")) finally out.close()
+        SnapshotStore.clearManifestCacheForTest()
+        Seq[() => Any](() => SnapshotStore.readAsOf(spark, dir, 2L),
+          () => SnapshotStore.readChangesSince(spark, dir, 1L, 2L)).foreach {
+          read =>
+            val e = intercept[Exception](read())
+            assert(e.getMessage.contains(s"version 2 $reason"), e.getMessage)
+        }
+    }
   }
 
   test("the change feed reads one log entry per version in its range, " +

@@ -61,7 +61,7 @@ class SnapshotWidenSpec extends SparkSpec {
     val m2 = SnapshotStore.manifest(spark, dir, 2L)
     assert(m2.operation == "alter-column-type")
     assert(m2.files == filesBefore, "widening must move zero data files")
-    assert(m2.schemaStruct.get("id").dataType == LongType)
+    assert(m2.schema("id").dataType == LongType)
     val post = SnapshotStore.read(spark, dir)
     assert(post.schema("id").dataType == LongType)
     assert(post.agg(sum("id")).as[Long].head() == 5050L,

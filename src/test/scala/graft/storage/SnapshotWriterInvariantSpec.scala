@@ -76,9 +76,9 @@ class SnapshotWriterInvariantSpec extends SparkSpec {
       assert(d.version == v, s"v$v parses as v${d.version}")
       assert(v > 1L || d.removes.isEmpty,
         "v1 is the delta from the empty table: adds only")
-      assert(d.schema.isDefined, s"v$v records no schema")
+      assert(d.schema.nonEmpty, s"v$v records an empty schema")
       assert(d.ts > 0L, s"v$v records no commit timestamp")
-      assertPointers(s"log entry v$v", d.adds.flatMap(_._2))
+      assertPointers(s"log entry v$v", d.adds.map(_._2))
     }
 
     // every checkpoint header, and the state each one loads
