@@ -91,17 +91,23 @@ object ChangeFeed {
         if (pk.contains(c)) qcol(c) else col("__row").getField(c).as(c)).toIndexedSeq: _*)
   }
 
-  /** Does `df` fit ONE task? True when the optimizer's size estimate of
-    * its plan is within the session's `spark.sql.autoBroadcastJoinThreshold`
-    * — the estimate and the limit Spark already uses to ship a whole
-    * relation to every task, so no new knob; a threshold of -1 makes it
-    * false for every frame. A change batch that fits is one or a few small
-    * files, which one task reads at no loss; a frame Spark cannot size (an
-    * RDD) is estimated at `spark.sql.defaultSizeInBytes`, by default too
-    * large to fit. */
+  /** Does `df` fit ONE task? True when the size estimate of its ANALYZED
+    * plan is within the session's `spark.sql.autoBroadcastJoinThreshold`
+    * — the limit Spark already uses to ship a whole relation to every
+    * task, so no new knob; a threshold of -1 makes it false for every
+    * frame. The analyzed plan is the one the frame already holds, so the
+    * answer costs no optimizer pass; a snapshot scan's estimate is its
+    * files' recorded bytes ([[graft.storage.SnapshotFileIndex]]). On the
+    * delivery path's plans (scans, projections, filters, the dedup's
+    * aggregate) the optimizer only prunes columns and rows, so the
+    * analyzed estimate is never the smaller: the rule can only say no
+    * where the optimized one said yes. A change batch that fits is one
+    * or a few small files, which one task reads at no loss; a frame
+    * Spark cannot size (an RDD) is estimated at
+    * `spark.sql.defaultSizeInBytes`, by default too large to fit. */
   def fitsOneTask(df: DataFrame): Boolean = {
     val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    threshold >= 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
+    threshold >= 0 && df.queryExecution.analyzed.stats.sizeInBytes <= threshold
   }
 
   /** S9/F17 — serialize a change batch to the reference's wire shape:

@@ -23,9 +23,11 @@ import java.sql.Timestamp
   * Only driver-side scalars cross out of the executors (the SinkOutcome);
   * every data transformation is a DataFrame op.
   *
-  * One-task rule: a batch that [[ChangeFeed.fitsOneTask]] (its plan's size
-  * estimate is within `spark.sql.autoBroadcastJoinThreshold`) is coalesced
-  * to one partition before the dedup. One partition already satisfies the
+  * One-task rule: a batch that [[ChangeFeed.fitsOneTask]] (its analyzed
+  * plan's size estimate — for a change-feed frame, the recorded bytes of
+  * its files — is within `spark.sql.autoBroadcastJoinThreshold`; deciding
+  * runs no optimizer pass over the batch) is coalesced to one partition
+  * before the dedup. One partition already satisfies the
   * dedup's clustering, so no exchange is planned, and scan, dedup,
   * allowlist projection and JSON serialization run as ONE Spark job — the
   * reference's 500-row batch (`Sql_Trigger_MaxBatchSize`) is one small

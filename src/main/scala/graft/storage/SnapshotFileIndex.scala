@@ -9,11 +9,12 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Catalyst-integrated read path for the snapshot store — the Delta
-  * `TahoeFileIndex` shape: a custom [[FileIndex]] whose `listFiles`
-  * receives the query's OWN pushed-down filters from
-  * `FileSourceScanExec` and prunes the manifest's file list BEFORE any
-  * split is planned, in two tiers:
+/** The snapshot store's one read path — every read of a manifest's data
+  * files, partitioned or not, whole version or file subset, is a relation
+  * over this index. The Delta `TahoeFileIndex` shape: a custom
+  * [[FileIndex]] whose `listFiles` receives the query's OWN pushed-down
+  * filters from `FileSourceScanExec` and prunes the manifest's file list
+  * BEFORE any split is planned, in two tiers:
   *
   *  1. PARTITION pruning — for a partitioned table the index re-derives
   *     each file's partition values from its hive `col=value` path
@@ -43,13 +44,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * only if BOTH arms do. Spark re-applies the full predicate on the
   * rows, so translation gaps cost I/O, never correctness.
   *
-  * Scale shape: one driver-side pass over the manifest entries per
-  * query (the same cost class as Delta's log-backed index); file sizes
-  * come from the manifest's commit-time records, which every listed
-  * file carries — NO per-file filesystem RPC. */
+  * Scale shape: one driver-side pass over the listed manifest entries
+  * per query (the same cost class as Delta's log-backed index); file
+  * sizes come from the manifest's commit-time records, which every
+  * listed file carries — no DataSource resolution, existence check or
+  * per-file filesystem RPC, so building a read runs no Spark job and a
+  * vacuumed file fails when the scan opens it. `sizeInBytes` is the
+  * listed files' recorded bytes, the estimate an analyzed plan over the
+  * index reports. */
 class SnapshotFileIndex(spark: SparkSession, dir: String,
                         m0: => SnapshotStore.Manifest,
-                        subset: Option[Set[String]] = None,
+                        subset: Option[Seq[String]] = None,
                         val dvApplied: Boolean = true)
     extends FileIndex {
 
@@ -75,7 +80,7 @@ class SnapshotFileIndex(spark: SparkSession, dir: String,
   private[graft] def logicalSchema: StructType = m.schema
 
   private lazy val candidateFiles: Seq[String] =
-    subset.map(ss => m.files.filter(ss)).getOrElse(m.files)
+    subset.map(_.distinct).getOrElse(m.files)
 
   private lazy val statuses: Seq[(String, FileStatus)] =
     candidateFiles.map(f => f -> SnapshotFileIndex.statusOf(m, f))
@@ -334,14 +339,16 @@ object SnapshotFileIndex {
     (SnapshotStore.applyDvOverlay(spark, m, df), index)
   }
 
-  /** An index-backed read of an arbitrary FILE SUBSET of one manifest —
-    * how the store's own copy-on-write rewrites read their touched
-    * files on a partitioned table (partition values ride the index, so
-    * the rewritten rows keep their partition columns). */
+  /** An index-backed read of a FILE SUBSET of one manifest — every
+    * snapshot read's relation: whole versions, change-feed ranges and
+    * the copy-on-write rewrites' touched files. `files` list in the given
+    * order (duplicates once); each must carry stats in `m`. On a
+    * partitioned table the partition values ride the index, so the
+    * rewritten rows keep their partition columns. */
   private[storage] def readFilesOf(spark: SparkSession, dir: String,
                                    m: SnapshotStore.Manifest,
                                    files: Seq[String]): DataFrame =
-    relationOf(spark, dir, m, Some(files.toSet))._1
+    relationOf(spark, dir, m, Some(files))._1
 
   /** the index-backed `HadoopFsRelation` of one manifest (optionally a
     * file subset) — also the registered source's batch relation.
@@ -355,7 +362,7 @@ object SnapshotFileIndex {
     * carry; [[relationOf]] aliases back to logical above it. */
   private[storage] def hadoopRelationOf(spark: SparkSession, dir: String,
                                         m: SnapshotStore.Manifest,
-                                        subset: Option[Set[String]] = None,
+                                        subset: Option[Seq[String]] = None,
                                         dvApplied: Boolean = true)
       : (HadoopFsRelation, SnapshotFileIndex) = {
     val index = new SnapshotFileIndex(spark, dir, m, subset, dvApplied)
@@ -426,7 +433,7 @@ object SnapshotFileIndex {
 
   private[storage] def relationOf(spark: SparkSession, dir: String,
                                   m: SnapshotStore.Manifest,
-                                  subset: Option[Set[String]])
+                                  subset: Option[Seq[String]])
       : (DataFrame, SnapshotFileIndex) = {
     val (relation, index) = hadoopRelationOf(spark, dir, m, subset)
     val df0 = spark.baseRelationToDataFrame(relation)

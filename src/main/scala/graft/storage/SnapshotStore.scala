@@ -408,8 +408,8 @@ object SnapshotStore {
   // `.ckpt.json` file is a SMALL header (version, schema, layout,
   // properties — bytes independent of file count) naming `format:
   // parquet`; the per-file rows live as MULTI-PART PARQUET under
-  // `.ckpt/` (the Delta `checkpoint.parquet` shape): columnar,
-  // compressed, written and read distributed — never one multi-GB JSON
+  // `.ckpt/` (the Delta `checkpoint.parquet` shape): columnar and
+  // compressed, streamed one row at a time — never one multi-GB JSON
   // document rendered/parsed on the driver.
   private def checkpointPath(dir: String, v: Long) =
     new Path(f"${manifestDir(dir)}/v$v%08d.ckpt.json")
@@ -420,12 +420,12 @@ object SnapshotStore {
   private def checkpointTmpPath(dir: String, v: Long) =
     new Path(f"${manifestDir(dir)}/.v$v%08d.ckpt.tmp")
 
-  /** Rows per parquet checkpoint part — the multi-part split. At the
-    * format's own 800k-file target this yields ~16 parts, each bounded
-    * (~50k rows; with one declared 8 KB bloom per file ≈ 400 MB before
-    * parquet compression) so no single task writes or reads the whole
-    * state, and a 1000-executor reader loads the checkpoint with real
-    * parallelism. */
+  /** Rows per part of a checkpoint or bloom sidecar — the multi-part
+    * split. The driver writes and reads the parts itself
+    * ([[DriverParquet]]), one part open at a time, so a part bounds the
+    * writer's buffered row groups, not a task. At the format's own
+    * 800k-file target a checkpoint is ~16 parts, which the distributed
+    * prune ([[distributedPruneState]]) still scans as ~16 Spark tasks. */
   private[storage] val CkptRowsPerPart = 50000
 
   /** One row per manifest-listed data file. `ord` preserves manifest
@@ -1116,7 +1116,7 @@ object SnapshotStore {
     * are derived data written best-effort, so a torn or corrupt one is
     * skipped (the action replay walks to an earlier base), never an
     * error. The header names `format: parquet` and its exact row count;
-    * the per-file state loads as a columnar scan of the `.ckpt/` parts.
+    * the per-file state streams from the `.ckpt/` parts on the driver.
     * A header of any other format, a row-count mismatch or an
     * unreadable part counts as torn and degrades to replay. */
   private def readCheckpoint(spark: SparkSession, dir: String,
@@ -1157,6 +1157,14 @@ object SnapshotStore {
     FileStats(r.getLong(2), colsOf(JsonMethods.parse(r.getString(4))),
       r.getLong(3), ckptRowBlooms(r, intern))
 
+  /** The state of a parquet checkpoint, streamed row by row from its
+    * parts on the driver ([[DriverParquet.scan]]) — no Spark job, and
+    * never one collect: at the 800k-file target the transient is one
+    * row on top of the Manifest being built, and file order restores
+    * through the `ord` column into a pre-sized array (no sort, no second
+    * pass). Torn: more or fewer rows than the header's entry count, an
+    * out-of-range or repeated `ord`, a row without its stats, or an
+    * unreadable part (which throws to [[readCheckpoint]]). */
   private def readParquetCheckpoint(spark: SparkSession, dir: String,
                                     version: Long,
                                     root: JValue): Option[Manifest] = {
@@ -1168,13 +1176,6 @@ object SnapshotStore {
     val f = fs(spark, dir)
     if (!f.exists(dataP)) return None // header landed, data dir torn away
     if (entries < 0L || entries > Int.MaxValue) return None // corrupt header
-    // STREAMED per-partition iteration, never one collect(): at the
-    // 800k-file target a collect holds every row on the driver at once
-    // ON TOP of the Manifest being built — here each row is dropped as
-    // soon as it is decoded, so the transient is one row, and file order
-    // restores through the `ord` column into a pre-sized array (no
-    // sort, no second pass)
-    import scala.jdk.CollectionConverters._
     val n = entries.toInt
     val files = new Array[String](n)
     var seen = 0L
@@ -1184,30 +1185,27 @@ object SnapshotStore {
     // so the reconstructed Manifest holds ONE string instance per
     // sidecar, not 800k copies
     val intern = scala.collection.mutable.HashMap.empty[String, String]
-    val it = spark.read.schema(CkptSchema)
-      .parquet(dataP.toString).toLocalIterator().asScala
-    // the torn-state early exits below abandon the iterator mid-stream;
-    // drain it on the way out so the lazily-launched per-partition jobs
-    // finish deterministically instead of lingering until GC (torn
-    // checkpoints are rare, and the drain is bounded by the data dir)
-    try {
-    while (it.hasNext) {
-      val r = it.next()
-      seen += 1
-      if (seen > entries) return None // torn data dir (duplicated part)
-      val ord = r.getLong(0)
-      if (ord < 0L || ord >= n || files(ord.toInt) != null)
-        return None // torn data dir (out-of-range or duplicate ord)
-      val path = r.getString(1)
-      files(ord.toInt) = path
-      if (r.isNullAt(2) || r.isNullAt(3) || r.isNullAt(4))
-        return None // torn data dir (a row without its stats)
-      stats += path -> ckptRowStats(r, intern)
-      if (!r.isNullAt(7)) dvs += path -> DvRef(r.getString(7), r.getLong(8))
+    val whole = DriverParquet.scan(spark,
+        DriverParquet.parts(spark, dataP.toString), CkptSchema) { it =>
+      var torn = false
+      while (!torn && it.hasNext) {
+        val r = it.next()
+        seen += 1
+        val ord = r.getLong(0)
+        torn = seen > entries || ord < 0L || ord >= n ||
+          files(ord.toInt) != null || r.isNullAt(2) || r.isNullAt(3) ||
+          r.isNullAt(4)
+        if (!torn) {
+          val path = r.getString(1)
+          files(ord.toInt) = path
+          stats += path -> ckptRowStats(r, intern)
+          if (!r.isNullAt(7)) dvs += path -> DvRef(r.getString(7), r.getLong(8))
+        }
+      }
+      !torn && seen == entries
     }
-    } finally { while (it.hasNext) it.next() }
-    if (seen != entries) return None // torn data dir (missing part)
-    Some(Manifest(version, operationOf(root), files.toSeq, stats.result(),
+    if (!whole) None
+    else Some(Manifest(version, operationOf(root), files.toSeq, stats.result(),
       schemaOf(root), strArrayOf(root, "partitionCols"), tsOf(root),
       strArrayOf(root, "bloomCols"), dvs.result(),
       strArrayOf(root, "droppedCols"), propertiesOf(root)))
@@ -1221,10 +1219,12 @@ object SnapshotStore {
     * earlier step leaves no readable-but-wrong state (the reader also
     * verifies the header's exact row count against the parts). The
     * file list is never materialized as one JSON string: header bytes
-    * are independent of file count, rows are built per file, and the
-    * parquet write/read is a distributed columnar job split into
-    * [[CkptRowsPerPart]]-row parts. Last-writer-wins overwrite stays
-    * safe because every writer of a version renders the same state. */
+    * are independent of file count, and the rows are built one file at
+    * a time and written by the driver ([[DriverParquet.write]]) in
+    * [[CkptRowsPerPart]]-row parts — no Spark job, so the rows leave the
+    * driver once, as file bytes, at any state size. Last-writer-wins
+    * overwrite stays safe because every writer of a version renders the
+    * same state. */
   private def writeCheckpoint(spark: SparkSession, dir: String,
                               m: Manifest): Unit = {
     val f = fs(spark, dir)
@@ -1241,8 +1241,8 @@ object SnapshotStore {
           "live checkpointer may own it; an older orphan is reclaimed")
       f.delete(tmp, true)
     }
-    val rows: Seq[org.apache.spark.sql.Row] =
-      m.files.zipWithIndex.map { case (p, i) =>
+    val rows: Iterator[org.apache.spark.sql.Row] =
+      m.files.iterator.zipWithIndex.map { case (p, i) =>
         val st = m.stats(p)
         val dv = m.dvs.get(p)
         val blooms = st.blooms.toSeq.sortBy(_._1)
@@ -1257,10 +1257,7 @@ object SnapshotStore {
           if (blooms.isEmpty) null
           else blooms.map(b => java.lang.Long.valueOf(b._2.ord)))
       }
-    val parts = math.max(1, (m.files.size + CkptRowsPerPart - 1) / CkptRowsPerPart)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, parts), CkptSchema)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    DriverParquet.write(spark, tmp.toString, CkptSchema, rows, CkptRowsPerPart)
     if (f.exists(dataP)) f.delete(dataP, true)
     if (!f.rename(tmp, dataP)) {
       // a concurrent checkpointer of the same version won the publish —
@@ -1425,31 +1422,19 @@ object SnapshotStore {
     StructField("file", StringType, nullable = false),
     StructField("pos", LongType, nullable = false)))
 
-  /** One parquet reader honoring the manifest's recorded schema: files
-    * written before a column existed read it as null (additive
-    * evolution), and no footer-inference read happens at all
-    * (at 800k files, schema certainty should not cost a sample read).
-    * PARTITIONED tables route through [[SnapshotFileIndex]] — their data
-    * files elide the partition columns, whose values the index re-derives
-    * from the hive path segments (files committed by different versions
-    * live under different roots, so Spark's own single-basePath discovery
-    * can't merge them). Raw form: deletion vectors NOT applied. */
+  /** Every read of a manifest's data files: the relation over a
+    * [[SnapshotFileIndex]] of exactly `files`, sized from their recorded
+    * stats — no DataSource resolution, no existence check and no
+    * per-file status RPC. The manifest's recorded schema is the read
+    * schema: files written before a column existed read it as null
+    * (additive evolution), no footer is consulted, and physical names
+    * (column mapping) alias back to logical ones. A partitioned table's
+    * partition values come from the hive path segments. A file missing
+    * from the store fails when the scan opens it, not here. Raw form:
+    * deletion vectors NOT applied. */
   private def rawReadFiles(spark: SparkSession, dir: String, m: Manifest,
                            files: Seq[String]): DataFrame =
-    if (m.partitionCols.nonEmpty)
-      SnapshotFileIndex.readFilesOf(spark, dir, m, files)
-    else {
-      // files spell PHYSICAL names (column mapping); read physically,
-      // alias back to the logical schema — identity when unmapped
-      val s = m.schema
-      val df = spark.read.schema(toPhysicalSchema(s)).parquet(files: _*)
-      // backquoted: a physical name born with a dot (legal via
-      // backticks) must resolve as ONE column, not a nested-field
-      // path — same quoting as writeData and relationOf
-      if (physicalOf(s).isEmpty) df
-      else df.select(s.fields.toSeq.map(f =>
-        col(s"`${physicalName(f)}`").as(f.name)): _*)
-    }
+    SnapshotFileIndex.readFilesOf(spark, dir, m, files)
 
   /** Apply a manifest's deletion vectors OVER an already-built frame of
     * its files (metadata columns must still resolve on `df`): one
@@ -1571,9 +1556,8 @@ object SnapshotStore {
   def readAsOfWhere(spark: SparkSession, dir: String, version: Long,
                     pred: FilePredicate): DataFrame = {
     val m = manifest(spark, dir, version)
-    val keep = mightMatchFiles(spark, m, Some(pred))
-    if (keep.isEmpty) readAsOf(spark, dir, version).filter(pred.toColumn).limit(0)
-    else readFiles(spark, dir, m, keep).filter(pred.toColumn)
+    readFiles(spark, dir, m, mightMatchFiles(spark, m, Some(pred)))
+      .filter(pred.toColumn)
   }
 
   // ------------------------------- distributed (state-as-DataFrame) pruning
@@ -1891,12 +1875,7 @@ object SnapshotStore {
                                version: Long,
                                pred: FilePredicate): DataFrame =
     distributedPruneState(spark, dir, version, pred) match {
-      case Some((m, keep)) if keep.nonEmpty =>
-        readFiles(spark, dir, m, keep).filter(pred.toColumn)
-      case Some((m, _)) =>
-        // provably-empty: an empty frame AT the version's schema
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
+      case Some((m, keep)) => readFiles(spark, dir, m, keep).filter(pred.toColumn)
       case None => readAsOfWhere(spark, dir, version, pred)
     }
 
@@ -2005,13 +1984,6 @@ object SnapshotStore {
                    fromVersion: Long, toVersion: Long): Seq[String] =
     changeRange(spark, dir, fromVersion, toVersion).files
 
-  /** A range view's read of none of its files: the empty frame at
-    * `toVersion`'s schema, read through the same index a partitioned
-    * table's files read through. */
-  private def emptyRange(spark: SparkSession, dir: String,
-                         view: Manifest): DataFrame =
-    SnapshotFileIndex.readFilesOf(spark, dir, view, Seq.empty)
-
   /** File-grain CDC read: the rows added between two committed versions
     * (`(fromVersion, toVersion]`), delivered by scanning ONLY the files
     * those commits added — a downstream consumer of
@@ -2028,8 +2000,7 @@ object SnapshotStore {
   def readChangesSince(spark: SparkSession, dir: String,
                        fromVersion: Long, toVersion: Long): DataFrame = {
     val view = changeRange(spark, dir, fromVersion, toVersion)
-    if (view.files.isEmpty) emptyRange(spark, dir, view)
-    else readFiles(spark, dir, view, view.files)
+    readFiles(spark, dir, view, view.files)
   }
 
   /** [[readChangesSince]] with data skipping: the added-file list is
@@ -2044,8 +2015,7 @@ object SnapshotStore {
     val view = changeRange(spark, dir, fromVersion, toVersion)
     val keep = pruneWithBlooms(spark, view.files, view.stats.get,
       toPhysicalPred(pred, mappingOf(view)))
-    (if (keep.isEmpty) emptyRange(spark, dir, view)
-     else readFiles(spark, dir, view, keep)).filter(pred.toColumn)
+    readFiles(spark, dir, view, keep).filter(pred.toColumn)
   }
 
   // ---------------------------------------------------------------- writers
@@ -2424,7 +2394,8 @@ object SnapshotStore {
     * referencing the old vector, and copying their entries forward
     * would duplicate them into every later fold. The filter set is
     * bounded (one distinct spelling per marked file, matched through
-    * pathKey — manifest vs `_metadata` spellings differ only in scheme).
+    * pathKey and spellingKey — manifest vs `_metadata` spellings differ
+    * in scheme and in percent-encoding).
     * Returns per-file refs keyed by pathKey. DV bytes ∝ marked
     * positions (wide mutations belong on the copy-on-write path). */
   private def writeFoldedVector(spark: SparkSession, m: Manifest,
@@ -2438,7 +2409,7 @@ object SnapshotStore {
          val oldEntries = spark.read.schema(DvSchema).parquet(oldDvFiles: _*)
          val keptSpellings = oldEntries.select(col("file")).distinct()
            .collect() // bounded: one row per marked file
-           .map(_.getString(0)).filter(s => touchedKeys(pathKey(s)))
+           .map(_.getString(0)).filter(s => touchedKeys(spellingKey(s)))
          if (keptSpellings.isEmpty) newMarks
          else oldEntries.filter(col("file").isin(
            keptSpellings.toSeq: _*)).unionByName(newMarks)
@@ -2468,7 +2439,7 @@ object SnapshotStore {
         .parquet(bucketDirs: _*)
         .groupBy(col("file"), col("__b")).agg(count(lit(1)).as("n"))
         .collect() // bounded: one row per marked file
-        .map(r => (pathKey(r.getString(0)), r.getLong(1), r.getLong(2)))
+        .map(r => (spellingKey(r.getString(0)), r.getLong(1), r.getLong(2)))
     // bucketing hashed the RAW spelling but refs key by pathKey: if two
     // spellings of one file ever land in different buckets, a single-
     // bucket DvRef would silently drop the other bucket's marks
@@ -2957,8 +2928,14 @@ object SnapshotStore {
     case other => sys.error(s"unsupported stat value $other")
   }
 
-  /** normalize `file:/p`, `file:///p`, `/p` to one comparable key */
+  /** normalize `file:/p`, `file:///p`, `/p` to one comparable key — for
+    * a path as the manifest records it (a Hadoop `Path` string) */
   private def pathKey(s: String): String = new Path(s).toUri.getPath
+
+  /** [[pathKey]] of a file as a scan's `_metadata.file_path` spells it:
+    * a URI string, percent-encoded (a space reads `%20`), which a `Path`
+    * string would take literally */
+  private def spellingKey(s: String): String = new java.net.URI(s).getPath
 
   // ------------------------------------------------- column mapping (r17)
 
@@ -3095,9 +3072,10 @@ object SnapshotStore {
     sidecarBloomCache.synchronized(sidecarBloomCache.clear())
 
   /** Bulk-load requested sidecar bloom bits: one ord-pushdown parquet
-    * read per TOUCHED sidecar, behind the bounded cache. An unreadable
-    * or dangling sidecar (vacuumed source of a shallow clone) loads
-    * nothing — its files conservatively KEEP, never a wrong answer. */
+    * read per TOUCHED sidecar, on the driver, behind the bounded cache.
+    * An unreadable or dangling sidecar (vacuumed source of a shallow
+    * clone) loads nothing — its files conservatively KEEP, never a wrong
+    * answer. */
   private def loadSidecarBlooms(spark: SparkSession,
                                 needed: Seq[(String, Seq[Long])])
       : Map[(String, Long), org.apache.spark.util.sketch.BloomFilter] = {
@@ -3117,17 +3095,21 @@ object SnapshotStore {
         if (missing.nonEmpty && parts.nonEmpty) try {
           sidecarReadCount.incrementAndGet()
           reads += sc
-          val df = spark.read.schema(BloomSidecarSchema).parquet(parts: _*)
-          // ord pushdown for selective probes; a huge candidate sliver
-          // (a non-selective predicate over one commit) bounds the scan
-          // by ord RANGE instead — an oversized IN list costs more in
-          // the plan than it prunes
-          val filtered =
-            if (missing.size <= 1000) df.filter(col("ord").isin(missing: _*))
-            else df.filter(col("ord").between(missing.min, missing.max))
+          // ord pushdown for selective probes (row groups and pages
+          // skip by their ord statistics); a huge candidate sliver (a
+          // non-selective predicate over one commit) bounds the scan by
+          // ord RANGE instead of a set that large
+          import org.apache.parquet.filter2.predicate.FilterApi
+          import scala.jdk.CollectionConverters._
+          val ordCol = FilterApi.longColumn("ord")
+          val pushed =
+            if (missing.size <= 1000) FilterApi.in(ordCol,
+              missing.map(java.lang.Long.valueOf).toSet.asJava)
+            else FilterApi.and(FilterApi.gtEq(ordCol, java.lang.Long.valueOf(missing.min)),
+              FilterApi.ltEq(ordCol, java.lang.Long.valueOf(missing.max)))
           val want = missing.toSet
-          filtered.select("ord", "bits").collect() // bounded: candidates
-            .foreach { r =>
+          DriverParquet.scan(spark, parts, SidecarProbeSchema, Some(pushed)) {
+            _.foreach { r =>
               val o = r.getLong(0)
               if (want(o)) {
                 val bf = org.apache.spark.util.sketch.BloomFilter
@@ -3137,6 +3119,7 @@ object SnapshotStore {
                 out += ((sc, o)) -> bf
               }
             }
+          }
         } catch { case scala.util.control.NonFatal(_) => () }
       }
     }
@@ -3192,6 +3175,10 @@ object SnapshotStore {
     StructField("col", StringType, nullable = false),
     StructField("t", StringType, nullable = false),
     StructField("bits", BinaryType, nullable = false)))
+
+  /** the two sidecar columns a bloom probe decodes */
+  private val SidecarProbeSchema =
+    StructType(Seq(BloomSidecarSchema("ord"), BloomSidecarSchema("bits")))
 
   /** the commit's bloom sidecar dir — HIDDEN (`_`-prefixed) inside the
     * version directory, so the data listing never surfaces it and
@@ -3470,12 +3457,8 @@ object SnapshotStore {
           }.toMap
         }
       }
-      val spark = df.sparkSession
-      val parts = math.max(1,
-        (sidecarRows.size + CkptRowsPerPart - 1) / CkptRowsPerPart)
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(sidecarRows.toSeq, parts),
-        BloomSidecarSchema).write.mode(SaveMode.Overwrite).parquet(sidecarDir)
+      DriverParquet.write(df.sparkSession, sidecarDir, BloomSidecarSchema,
+        sidecarRows.iterator, CkptRowsPerPart)
     }
     files.map { f =>
       val (rows, cols) =
@@ -5625,7 +5608,7 @@ object SnapshotStore {
         val e = spark.read.schema(DvSchema).parquet(paths.distinct: _*)
         val spellings = e.select(col("file")).distinct()
           .collect() // bounded: one row per marked file
-          .map(_.getString(0)).filter(s => dvKeys(pathKey(s)))
+          .map(_.getString(0)).filter(s => dvKeys(spellingKey(s)))
         if (spellings.isEmpty) none
         else e.filter(col("file").isin(spellings.toSeq: _*))
       }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class ChangeFeedSpec extends SparkSpec {
@@ -57,6 +58,43 @@ class ChangeFeedSpec extends SparkSpec {
 
     val json = ChangeFeed.toJsonPayload(diffed).as[String].head()
     assert(json == """{"Operation":"Update","Item":{"id":1,"user.name":"b"}}""")
+  }
+
+  test("fitsOneTask agrees with the optimized plan's estimate on the " +
+    "delivery fixtures, at the default, a tiny and a disabled threshold") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("cf").toString + "/table"
+    def rows(rs: (Long, Long, String, String)*) =
+      rs.toDF("id", "version", "name", "secret").coalesce(1)
+    graft.storage.SnapshotStore.commit(spark, dir,
+      rows((1L, 1L, "v1", "x"), (2L, 1L, "w1", "x")), "ingest")
+    graft.storage.SnapshotStore.commitAppend(spark, dir, rows((1L, 2L, "v2", "x")), "append")
+    // each fixture is built afresh per check, so no frame is optimized
+    // before fitsOneTask reads it
+    val fixtures: Seq[(String, () => DataFrame)] = Seq(
+      "local rows" -> (() => rows((1L, 1L, "v1", "x"), (2L, 1L, "w1", "x"))),
+      "feed range" -> (() => graft.storage.SnapshotStore.readChangesSince(spark, dir, 0L, 2L)),
+      "deduped feed" -> (() => ChangeFeed.dedupLatest(
+        graft.storage.SnapshotStore.readChangesSince(spark, dir, 0L, 2L)
+          .select("id", "version", "name"), Seq("id"), "version")),
+      "rdd rows" -> (() => spark.createDataFrame(
+        spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(1L))),
+        org.apache.spark.sql.types.StructType.fromDDL("id bigint"))))
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    try Seq(None, Some("1"), Some("-1")).foreach { setting =>
+      setting.fold(saved.fold(spark.conf.unset(key))(spark.conf.set(key, _)))(
+        spark.conf.set(key, _))
+      val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+      fixtures.foreach { case (name, df) =>
+        val optimized = threshold >= 0 &&
+          df().queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
+        assert(ChangeFeed.fitsOneTask(df()) == optimized, s"$name at $setting")
+      }
+      if (setting.isEmpty)
+        assert(fixtures.take(3).forall(f => ChangeFeed.fitsOneTask(f._2())),
+          "the small fixtures fit one task at the default threshold")
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("diff then apply round-trips: old + diff = new") {

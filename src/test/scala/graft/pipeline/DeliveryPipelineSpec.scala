@@ -185,6 +185,31 @@ class DeliveryPipelineSpec extends SparkSpec {
     }
   }
 
+  test("sizing a small batch for one task runs no optimizer pass over the " +
+    "feed frame or the sink's input") {
+    import org.apache.spark.sql.catalyst.QueryPlanningTracker
+    class FrameRecordingSink(inner: DataSyncAction) extends DataSyncAction {
+      var frames = List.empty[DataFrame]
+      override def executeAction(changes: DataFrame, params: Map[String, String]): SinkOutcome = {
+        frames :+= changes
+        inner.executeAction(changes, params)
+      }
+    }
+    withEndpoint { (url, posts) =>
+      val dir = Files.createTempDirectory("dp").toString
+      val batch = twoFileBatch(dir)
+      val sink = new FrameRecordingSink(new HttpPostAction())
+      val (p, _, _, _) = pipeline(sink, dir,
+        Map("baseUrl" -> url, "route" -> "/post", "timeoutMs" -> "10000"))
+      assert(p.deliver(batch, ts(10)) == p.Delivered)
+      assert(posts.size == 1 && docs(posts.peek()._1) == expectedDocs)
+      (batch +: sink.frames).foreach { df =>
+        val phases = df.queryExecution.tracker.phases
+        assert(!phases.contains(QueryPlanningTracker.OPTIMIZATION), phases.keys)
+      }
+    }
+  }
+
   test("above the broadcast threshold the dedup keeps its exchange and the " +
     "sink caches; the POSTed rows are those of the one-task path") {
     class PlanRecordingSink(inner: DataSyncAction) extends DataSyncAction {

@@ -103,5 +103,5 @@ class ParquetFootersSpec extends SparkSpec {
     assert(c("stagesCompleted") == BloomCommitStages, s"$c")
   }
 
-  private val BloomCommitStages = 5L
+  private val BloomCommitStages = 4L
 }
