@@ -18,10 +18,8 @@ object GraftSession {
       // built from them — carried ONE partition and every map stage ran
       // single-threaded on a 32-core host. The floor splits small scans
       // across the cores; at production scale scans are far above it and
-      // the setting is a no-op. Parameterized per deployment; local
-      // default = the session's core count.
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_SCAN_FLOOR", cpus.toString))
+      // the setting is a no-op. The floor is the session's core count.
+      .config("spark.sql.files.minPartitionNum", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       // events.parquet carries TIMESTAMP(NANOS) (see Tables.read)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -34,7 +32,7 @@ object GraftSession {
       // FS execs `chmod` per created file/dir and `ls -ld` per listed file
       // — measured ~13% of snapshot-commit wall (stack samples of the
       // commit path; see NioLocalFileSystem). Same semantics, one syscall
-      // instead of one fork. Kill switch: SPARK_GRAFT_NIO_LOCAL_FS=0.
+      // instead of one fork.
       .config(graft.storage.NioLocalFileSystem.ConfKey,
         graft.storage.NioLocalFileSystem.implClassName)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")

@@ -71,8 +71,9 @@ object Dedup {
     * which the dense scan amortizes by construction — spreads it to
     * min(current shuffle partitions, machine parallelism). No-op when the
     * scan already fills half that target, so an at-scale input (row
-    * groups ≫ cores) never pays the shuffle. Callers invoke it INSIDE
-    * their LoopConf scope so the target is the operator's sized count.
+    * groups ≫ cores) never pays the shuffle. The target is read from
+    * `df.sparkSession`: callers pass the frame their LoopConf scope
+    * rebound, so the target is the operator's sized count.
     *
     * Rejected alternative (round 22, measured): repartitioning every
     * cached TABLE this way — the one-time cache reshape inflated executor
@@ -614,13 +615,12 @@ object Dedup {
     // repairs the read side; the map side still writes one file per
     // configured partition — the measured dominant cost). AQE
     // parallelism-first stays off inside the scope (the round-20 shape).
-    // Lock/override semantics documented on [[graft.operators.LoopConf]].
+    // Session-clone semantics documented on [[graft.operators.LoopConf]].
     // The final relabel join touches the docs table too — both frames
     // feed the hint so a huge corpus with few edges never lands on a
     // single-task shuffle.
-    graft.operators.LoopConf.scopedByInputs(
-        pairs.sparkSession, Seq(pairs, docs)) {
-      connectedComponentsInner(pairs, docs, idCol, maxIterations)
+    graft.operators.LoopConf.scopedByInputs(Seq(pairs, docs)) {
+      case Seq(pairs, docs) => connectedComponentsInner(pairs, docs, idCol, maxIterations)
     }
   }
 
@@ -857,8 +857,9 @@ object Dedup {
     // the pair self-join's output (pair mass) dwarfs its input bytes, so
     // AQE's byte-based merge floor serializes the CPU of the join+count
     // stage on small/mid sets — lower the floor around the execution
-    // (inert at scale); see [[graft.operators.LoopConf.scopedCpuDense]]
-    graft.operators.LoopConf.scopedCpuDense(shingleTable.sparkSession) {
+    // (inert at scale); see [[graft.operators.LoopConf.CpuDense]]
+    graft.operators.LoopConf.scoped(graft.operators.LoopConf.CpuDense,
+        Seq(shingleTable)) { case Seq(shingleTable) =>
     val (pairs, docShingles) = shinglePairCounts(shingleTable, maxDf)
     val result = pairs
       .select(col("doc_a"), col("doc_b"),
@@ -998,7 +999,8 @@ object Dedup {
   def containmentFromShingles(shingleTable: DataFrame, minContainment: Double,
                               maxDf: Long = Long.MaxValue): DataFrame =
     // same pair-mass CPU-density as [[ngramJaccardFromShingles]]
-    graft.operators.LoopConf.scopedCpuDense(shingleTable.sparkSession) {
+    graft.operators.LoopConf.scoped(graft.operators.LoopConf.CpuDense,
+        Seq(shingleTable)) { case Seq(shingleTable) =>
     val (pairs, docShingles) = shinglePairCounts(shingleTable, maxDf)
     val ca = col("n_inter").cast("double") / col("n_a")
     val cb = col("n_inter").cast("double") / col("n_b")
@@ -1052,8 +1054,7 @@ object Dedup {
                      graft.functions.TextAnalysis.unicodeTokens): DataFrame =
     // reduce-side sizing from corpus bytes — the exactSpanDedup
     // rationale (see its doc); scan parallelism is unaffected
-    graft.operators.LoopConf.scopedByInputs(
-        docs.sparkSession, Seq(docs), factor = 32.0) {
+    graft.operators.LoopConf.scopedByInputs(Seq(docs), factor = 32.0) { case Seq(docs) =>
       val (result, intermediates) =
         passageDedupPlan(widened(docs), idCol, textCol, passageTokens,
           maxPassageFreq, salts, tok)
@@ -1194,8 +1195,7 @@ object Dedup {
                           graft.functions.TextAnalysis.unicodeTokens): DataFrame =
     // reduce-side sizing from corpus bytes — the exactSpanDedup
     // rationale (see its doc); scan parallelism is unaffected
-    graft.operators.LoopConf.scopedByInputs(
-        docs.sparkSession, Seq(docs), factor = 32.0) {
+    graft.operators.LoopConf.scopedByInputs(Seq(docs), factor = 32.0) { case Seq(docs) =>
       val (result, intermediates) = boilerplateRemovePlan(
         widened(docs), idCol, textCol, segTokens, minDocFreq, maxSegFreq,
         salts, tok)
@@ -1289,8 +1289,7 @@ object Dedup {
     // the whole family to 1-4 partitions and serialized the gram scan
     // (measured: the gram+stats job at 2 tasks, 1.6 s).
     // At 100 TB the clamp keeps the session's partitioning unchanged.
-    graft.operators.LoopConf.scopedByInputs(
-        docs.sparkSession, Seq(docs), factor = 32.0) {
+    graft.operators.LoopConf.scopedByInputs(Seq(docs), factor = 32.0) { case Seq(docs) =>
       val (result, intermediates) = exactSpanDedupPlan(
         widened(docs), idCol, textCol, spanWords, maxGramFreq, salts,
         tok = tok)

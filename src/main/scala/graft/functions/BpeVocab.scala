@@ -115,7 +115,8 @@ object BpeVocab {
       // vocabulary-sized rounds on a corpus-sized shuffle-partition count
       // are pure scheduling overhead — let AQE size the round stages by
       // measured bytes (single-task at test scale, unchanged at 100 TB)
-      graft.operators.LoopConf.scopedCoalesceBySize(wordCounts.sparkSession) {
+      graft.operators.LoopConf.scoped(graft.operators.LoopConf.CoalesceBySize,
+          Seq(wordCounts)) { case Seq(wordCounts) =>
         trainInner(wordCounts, nMerges)
       }
   }

@@ -55,7 +55,8 @@ object KCore {
     // size the peel rounds' shuffles from the job-free input-byte hint —
     // see [[LoopConf]] (the edge set only shrinks, so the input bound
     // holds for every round)
-    LoopConf.scopedByInputs(pairs.sparkSession, Seq(pairs)) {
+    val (core, exact) =
+      LoopConf.scopedByInputs(Seq(pairs)) { case Seq(pairs) =>
     // symmetric orientation: per-node degree is then one groupBy on src
     var ed = iterCheckpoint(pairs
       .select(explode(array(
@@ -88,8 +89,9 @@ object KCore {
           s"k-core peel unconverged after $maxRounds rounds (k=$k): " +
             "result is the bounded-peel superset; raise maxRounds for the exact core")
     }
-    (ed.groupBy(col("s").as("doc_id"))
-      .agg(count(lit(1)).as("core_degree")), converged)
+    (ed, converged)
     }
+    (LoopConf.rebind(core, pairs.sparkSession).groupBy(col("s").as("doc_id"))
+      .agg(count(lit(1)).as("core_degree")), exact)
   }
 }

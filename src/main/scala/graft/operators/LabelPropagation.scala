@@ -41,7 +41,7 @@ object LabelPropagation {
     // size the loop's shuffles from the job-free input-byte hint — see
     // [[LoopConf]] (toy graphs: single-task rounds; at scale: the
     // session's own partitioning, unchanged)
-    LoopConf.scopedByInputs(pairs.sparkSession, Seq(pairs)) {
+    LoopConf.scopedByInputs(Seq(pairs)) { case Seq(pairs) =>
     val ed = iterCheckpoint(pairs
       .select(explode(array(
         struct(col("doc_a").cast("long").as("s"), col("doc_b").cast("long").as("t")),

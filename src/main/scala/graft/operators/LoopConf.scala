@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.graft.{DatasetBridge, SessionBridge}
 
 /** Scale-adaptive shuffle sizing for ITERATIVE DataFrame loops (the
   * graph family: connected components, PageRank, label propagation,
@@ -17,43 +18,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * only repairs the READ side; the map side still writes one file per
   * configured partition, so the fix must size the shuffle itself.
   *
-  * [[partitionsFor]] derives the loop's partition count from the
-  * measured WORK BYTES (rows x estimated row width) against the
-  * session's own AQE advisory partition size — the "derive from input
-  * size" discipline: a toy graph collapses to single-task stages while
-  * a 100 TB edge set keeps every partition the session config would
-  * have given it (the result is clamped to the session's configured
-  * count, so at scale this NEVER reduces parallelism below today's).
+  * [[partitionsForBytes]] derives the loop's partition count from the
+  * measured WORK BYTES against [[DefaultLoopTaskBytes]] — the "derive
+  * from input size" discipline: a toy graph collapses to single-task
+  * stages while a 100 TB edge set keeps every partition the session
+  * config would have given it (the result is clamped to the session's
+  * configured count, so at scale this NEVER reduces parallelism below
+  * today's).
   *
-  * [[scoped]] applies the count for the duration of one loop via the
-  * session conf (SQLConf has no per-job scope), serialized by a
-  * per-session lock so overlapping loops on one session cannot
-  * interleave their set/restore pairs (independent sessions in one JVM
-  * no longer serialize against each other) — the connectedComponents
-  * discipline, shared. It
-  * also disables AQE's parallelism-first coalescing inside the scope so
-  * the post-shuffle side coalesces to the SAME advisory target the
-  * partition count was derived from.
+  * [[scoped]] plans a loop in a CLONE of the caller's session: the clone
+  * carries its own `SQLConf` with the scope's settings, the body reads
+  * its inputs rebound to the clone, and a returned frame goes back bound
+  * to the caller's session. Physical planning and AQE read
+  * `session.sessionState.conf`, so a per-session conf is the only place
+  * Spark lets one plan carry its own shuffle settings; the caller's
+  * session is never written, so a query racing the loop on the same
+  * session plans with that session's own settings, and any number of
+  * scopes may be open on it at once. The clone shares the caller's
+  * SparkContext and cache: a rebound input still reads the caller's
+  * cached blocks.
   */
 private[graft] object LoopConf {
-
-  // one lock PER SESSION (round 22, advisor finding): the conf being
-  // protected is per-session state, and a JVM-global lock serialized
-  // independent sessions' loops against each other for their full
-  // multi-round duration
-  // (keyed by the session object — SparkSession does not override equals,
-  // so CHM keying is reference identity; sessions per JVM are few and
-  // long-lived, so the strong key reference is not a practical leak)
-  private val locks =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, Object]()
-  private def lockFor(spark: SparkSession): Object =
-    locks.computeIfAbsent(spark, _ => new Object)
-
-  /** estimated serialized bytes per symmetric (long, long) edge row in a
-    * shuffle — 2x8 data + row/codec overhead + the x2 symmetric explode
-    * most loops apply; deliberately generous so the clamp errs towards
-    * parallelism */
-  val EdgeRowBytes: Long = 64L
 
   /** Per-task byte target for LOOP stages — deliberately smaller than
     * the scan-oriented 64 MB AQE advisory: a loop round's reduce side is
@@ -65,30 +50,17 @@ private[graft] object LoopConf {
     * cost +50% wall vs the session default; 8 MB lands near the optimum
     * — see OPTIMIZATION_r21.md). At 100 TB the clamp to the session's
     * own partition count binds long before this target does, so
-    * production partitioning is unchanged. Override per deployment with
-    * `spark.graft.loop.taskBytes`. */
+    * production partitioning is unchanged. */
   val DefaultLoopTaskBytes: Long = 8L * 1024 * 1024
 
-  private[graft] def loopTaskBytes(spark: SparkSession): Long =
-    try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.graft.loop.taskBytes",
-        sys.env.getOrElse("SPARK_GRAFT_LOOP_TASK_BYTES",
-          DefaultLoopTaskBytes.toString)))
-    catch { case scala.util.control.NonFatal(_) => DefaultLoopTaskBytes }
-
-  /** partition count for a loop whose per-round working set is
-    * ~`rows x rowBytes`: ceil(bytes / loopTaskBytes), clamped to
-    * [1, session's configured shuffle partitions] */
-  def partitionsFor(spark: SparkSession, rows: Long,
-                    rowBytes: Long = EdgeRowBytes): Int =
-    partitionsForBytes(spark, math.max(0L, rows) * rowBytes)
-
-  /** [[partitionsFor]] from a direct byte estimate. */
+  /** partition count for a loop whose per-round working set is ~`bytes`:
+    * ceil(bytes / DefaultLoopTaskBytes), clamped to [1, session's
+    * configured shuffle partitions] */
   def partitionsForBytes(spark: SparkSession, bytes: Long): Int = {
     val current = spark.conf.get("spark.sql.shuffle.partitions", "200")
       .trim.toInt
     val ideal = math.ceil(
-      math.max(0L, bytes).toDouble / loopTaskBytes(spark).toDouble).toLong
+      math.max(0L, bytes).toDouble / DefaultLoopTaskBytes.toDouble).toLong
     math.max(1L, math.min(current.toLong, ideal)).toInt
   }
 
@@ -135,114 +107,125 @@ private[graft] object LoopConf {
     else Some(plan.stats.sizeInBytes).filter(_ < UnknownBytes).map(_.toLong)
   } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Run `body` under loop-fitted partitioning derived from the largest
-    * job-free [[bytesHint]] among `inputs`, times `factor` (callers
-    * whose shuffled working set is wider than the raw input — exploded
-    * gram/token tables — pass their expansion estimate; over-estimating
-    * only adds partitions, the safe direction); when no input has a
-    * usable hint, fall back to AQE size-based coalescing only (the
-    * round-20 connectedComponents shape). */
-  def scopedByInputs[T](spark: SparkSession, inputs: Seq[DataFrame],
-                        factor: Double = 1.0)(body: => T): T =
+  /** Settings for a loop of `partitions` shuffle partitions:
+    * `spark.sql.shuffle.partitions = partitions`, AQE's parallelism-first
+    * coalescing off, and the AQE advisory partition size lowered to the
+    * loop task target — without the advisory override, read-side
+    * coalescing (which only ever MERGES partitions) would fold the
+    * size-fitted map partitions straight back to the 64 MB scan advisory
+    * and serialize the loop's CPU-bound reduce stages.
+    *
+    * SINGLE-PARTITION loops (round 22): when the byte hint says the whole
+    * loop state fits ONE task's target, AQE and broadcast joins are pure
+    * driver overhead — AQE materializes every exchange as its own job
+    * submission and runtime-converts the tiny joins to broadcasts, each
+    * build a further job + driver collect + relation build (measured on
+    * the sf0.1 CC star loop: ~10 jobs of 10-30 ms runs per round, gaps >
+    * run time; 58 jobs for a 6-round loop). With AQE off, a round's eager
+    * checkpoint is ONE pipelined job (static broadcast joins stay
+    * available — a relabel join against a big cached table must keep
+    * broadcasting so the big side is never dragged through the loop's
+    * single shuffle partition; measured: forcing SMJ regressed
+    * e_cc_incremental 2.0 → 2.4 s). Scale-safe by construction: AQE goes
+    * off only when the size-derived count is 1, i.e. the hint measured a
+    * working set under one task target; any real corpus clamps to the
+    * session count and keeps AQE (skew splitting, coalescing) exactly as
+    * configured. */
+  def fitted(partitions: Int): Seq[(String, String)] = {
+    val base = Seq(
+      "spark.sql.shuffle.partitions" -> partitions.toString,
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
+        DefaultLoopTaskBytes.toString)
+    if (partitions == 1) base :+ ("spark.sql.adaptive.enabled" -> "false")
+    else base
+  }
+
+  /** AQE parallelism-first off ONLY (no partition override) — the
+    * historical connectedComponents shape, for loops whose first exchange
+    * happens before any size measurement. */
+  val CoalesceBySize: Seq[(String, String)] =
+    Seq("spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false")
+
+  /** AQE's partition-merge FLOOR
+    * (`spark.sql.adaptive.coalescePartitions.minPartitionSize`, default
+    * 1 MB) lowered to 256 KB — for CPU-DENSE reduce stages whose work per
+    * input byte is orders of magnitude above a scan's (set-intersection
+    * verification: ~100 bytes of CPU per byte of shuffle). AQE merges
+    * post-shuffle partitions by BYTES, so on a small or mid-sized working
+    * set the 1 MB floor folds such a stage to a handful of tasks and
+    * serializes pure CPU (measured: the PPJoin verify+checkpoint job ran
+    * 4 tasks on a 32-core session, 0.94 s). Lowering the floor lets
+    * partition count track the session's parallelism; at scale every
+    * partition exceeds any floor and the setting is inert. Partition
+    * count and advisory size are untouched. */
+  val CpuDense: Seq[(String, String)] =
+    Seq("spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
+      (256L * 1024).toString)
+
+  /** Loop-fitted settings from the largest job-free [[bytesHint]] among
+    * `inputs`, times `factor` (callers whose shuffled working set is
+    * wider than the raw input — exploded gram/token tables — pass their
+    * expansion estimate; over-estimating only adds partitions, the safe
+    * direction); when no input has a usable hint, AQE size-based
+    * coalescing only (the round-20 connectedComponents shape). */
+  def sizedBy(inputs: Seq[DataFrame], factor: Double = 1.0)
+      : Seq[(String, String)] =
     inputs.flatMap(bytesHint).maxOption match {
       case Some(b) =>
         val sized = math.ceil(b.toDouble * math.max(factor, 0.0)).toLong
-        scoped(spark, partitionsForBytes(spark, sized))(body)
-      case None => scopedCoalesceBySize(spark)(body)
+        fitted(partitionsForBytes(inputs.head.sparkSession, sized))
+      case None => CoalesceBySize
     }
 
-  /** Run `body` with `spark.sql.shuffle.partitions = partitions`, AQE's
-    * parallelism-first coalescing off, and the AQE advisory partition
-    * size lowered to the loop task target — without the advisory
-    * override, read-side coalescing (which only ever MERGES partitions)
-    * would fold the size-fitted map partitions straight back to the
-    * 64 MB scan advisory and serialize the loop's CPU-bound reduce
-    * stages. All three restored afterwards. Per-session lock: see the
-    * class doc. CAVEAT (blast radius, stated plainly): the override is
-    * SESSION-WIDE for the scope's duration — an unrelated query racing
-    * the loop on the same session whose shuffle is PLANNED inside the
-    * scope gets this partition count (possibly 1), and read-side AQE
-    * coalescing can only merge partitions, never split, so a heavy
-    * rival can serialize. Safe in sequential drivers (the bench, the
-    * entrypoints here); a concurrently-shared session should prefer
-    * `spark.newSession()` per workload, which this lock keying now
-    * respects. */
-  def scoped[T](spark: SparkSession, partitions: Int)(body: => T): T =
-    lockFor(spark).synchronized {
-      val conf = spark.conf
-      val base = Seq(
-        "spark.sql.shuffle.partitions" -> partitions.toString,
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
-          loopTaskBytes(spark).toString)
-      // SINGLE-PARTITION loops (round 22): when the byte hint says the
-      // whole loop state fits ONE task's target, AQE and broadcast joins
-      // are pure driver overhead — AQE materializes every exchange as its
-      // own job submission and runtime-converts the tiny joins to
-      // broadcasts, each build a further job + driver collect + relation
-      // build (measured on the sf0.1 CC star loop: ~10 jobs of 10-30 ms
-      // runs per round, gaps > run time; 58 jobs for a 6-round loop).
-      // With AQE off, a round's eager checkpoint is ONE pipelined job
-      // (static broadcast joins stay available — a relabel join against a
-      // big cached table must keep broadcasting so the big side is never
-      // dragged through the loop's single shuffle partition; measured:
-      // forcing SMJ regressed e_cc_incremental 2.0 → 2.4 s). Scale-safe
-      // by construction: the gate only fires when the size-derived count
-      // is 1, i.e. the hint measured a working set under one task target;
-      // any real corpus clamps to the session count and keeps AQE (skew
-      // splitting, coalescing) exactly as configured.
-      val keys = if (partitions == 1) base :+
-        ("spark.sql.adaptive.enabled" -> "false") else base
-      val olds = keys.map { case (k, _) => k -> conf.getOption(k) }
-      keys.foreach { case (k, v) => conf.set(k, v) }
-      try body
-      finally olds.foreach {
-        case (k, Some(v)) => conf.set(k, v)
-        case (k, None) => conf.unset(k)
-      }
-    }
+  // One clone per (caller, caller's conf, settings), reused by every scope
+  // that asks for it: a fresh clone per scope doubled the loop queries'
+  // executor CPU at sf0.1 and put e_span_dedup_apply at 1.56x its wall
+  // (BENCH_loop_session_ab.json). A clone's conf is written once, when it
+  // is made; a caller whose conf has changed since gets a new clone.
+  // Bodies resolve no names, so the clone's copy of the caller's catalog
+  // may be older than the caller's. Past MaxClones the least recently
+  // used clone is dropped, so no session is held after its last loop.
+  private type CloneKey = (SparkSession, Map[String, String], Seq[(String, String)])
+  private val MaxClones = 32
+  private val clones = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[CloneKey, SparkSession](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[CloneKey, SparkSession]): Boolean =
+        size > MaxClones
+    })
 
-  /** Run `body` with AQE's partition-merge FLOOR
-    * (`spark.sql.adaptive.coalescePartitions.minPartitionSize`, default
-    * 1 MB) lowered to `minBytes` — for CPU-DENSE reduce stages whose
-    * work per input byte is orders of magnitude above a scan's
-    * (set-intersection verification: ~100 bytes of CPU per byte of
-    * shuffle). AQE merges post-shuffle partitions by BYTES, so on a
-    * small or mid-sized working set the 1 MB floor folds such a stage
-    * to a handful of tasks and serializes pure CPU (measured: the
-    * PPJoin verify+checkpoint job ran 4 tasks on a 32-core session,
-    * 0.94 s). Lowering the floor inside the operator lets partition
-    * count track the session's parallelism; at scale every partition
-    * exceeds any floor and the setting is inert. Partition count and
-    * advisory size are untouched. Same lock/restore discipline as
-    * [[scoped]]. */
-  def scopedCpuDense[T](spark: SparkSession,
-                        minBytes: Long = 256L * 1024)(body: => T): T =
-    lockFor(spark).synchronized {
-      val conf = spark.conf
-      val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-      val old = conf.getOption(key)
-      conf.set(key, minBytes.toString)
-      try body
-      finally old match {
-        case Some(v) => conf.set(key, v)
-        case None => conf.unset(key)
-      }
+  /** Run `body` in a clone of the inputs' session with `settings`
+    * applied to the clone only. The body gets `inputs` rebound to the
+    * clone (their `sparkSession`); every other frame it reads must be
+    * rebound too ([[rebind]]), or that frame plans with the caller's
+    * settings. A `DataFrame` result is returned bound to the caller's
+    * session, so a lazy result plans with the caller's settings, as any
+    * frame built after the scope would. */
+  def scoped[T](settings: Seq[(String, String)], inputs: Seq[DataFrame])(
+      body: Seq[DataFrame] => T): T = {
+    val caller = inputs.head.sparkSession
+    val clone = clones.computeIfAbsent((caller, caller.conf.getAll, settings),
+      _ => {
+        val clone = SessionBridge.cloneSession(caller)
+        settings.foreach { case (k, v) => clone.conf.set(k, v) }
+        clone
+      })
+    clone.withActive(body(inputs.map(rebind(_, clone)))) match {
+      case df: Dataset[_] => rebind(df.toDF(), caller).asInstanceOf[T]
+      case other => other
     }
+  }
 
-  /** [[scoped]] with AQE parallelism-first handling ONLY (no partition
-    * override) — the historical connectedComponents shape, kept for
-    * loops whose first exchange happens before any size measurement. */
-  def scopedCoalesceBySize[T](spark: SparkSession)(body: => T): T =
-    lockFor(spark).synchronized {
-      val conf = spark.conf
-      val pfKey = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-      val pfOld = conf.getOption(pfKey)
-      conf.set(pfKey, "false")
-      try body
-      finally pfOld match {
-        case Some(v) => conf.set(pfKey, v)
-        case None => conf.unset(pfKey)
-      }
-    }
+  /** [[scoped]] under [[sizedBy]]`(inputs, factor)`. */
+  def scopedByInputs[T](inputs: Seq[DataFrame], factor: Double = 1.0)(
+      body: Seq[DataFrame] => T): T =
+    scoped(sizedBy(inputs, factor), inputs)(body)
+
+  /** `df`'s analyzed plan as a frame of `spark`, which then plans it
+    * with its own conf; cached data is shared, so a cached or
+    * checkpointed `df` is still read from its blocks. */
+  def rebind(df: DataFrame, spark: SparkSession): DataFrame =
+    if (df.sparkSession eq spark) df
+    else DatasetBridge.ofRows(spark, df.queryExecution.analyzed)
 }

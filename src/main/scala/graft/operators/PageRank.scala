@@ -36,7 +36,7 @@ object PageRank {
     // size the loop's shuffles from the job-free input-byte hint so a
     // toy graph runs single-task rounds while an at-scale one keeps the
     // session's partitioning; see [[LoopConf]]
-    LoopConf.scopedByInputs(e.sparkSession, Seq(e)) {
+    LoopConf.scopedByInputs(Seq(e)) { case Seq(e) =>
     val nodes = e.select(col("src").as("id"))
       .unionByName(e.select(col("dst").as("id")))
       .distinct().persist()

@@ -63,7 +63,7 @@ object RobustStats {
     // shuffles from the measured input instead of the session constant
     // ([[LoopConf]]: at scale the clamp keeps today's partitioning; at
     // bench scale a 33-task stage per tiny window is pure task overhead)
-    LoopConf.scopedByInputs(base.sparkSession, Seq(base)) {
+    LoopConf.scopedByInputs(Seq(base)) { case Seq(base) =>
     // the ONLY pass over the rows; every stage below folds this histogram.
     // The consumers are sequential driver actions, each reading the cache
     // exactly once, so the first (med's collect) materializes it — no

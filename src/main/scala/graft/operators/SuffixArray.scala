@@ -73,8 +73,12 @@ object SuffixArray {
     val sized = pos.agg(count(lit(1)), max(col("widx"))).head()
     val nPos = sized.getLong(0)
     val maxWords = if (sized.isNullAt(1)) 0L else sized.getLong(1)
-    LoopConf.scoped(pos.sparkSession,
-      LoopConf.partitionsFor(pos.sparkSession, nPos, rowBytes = 128L)) {
+    // ~128 shuffled bytes per position row. `pos` was built before the
+    // scope: the body reads it rebound, so its rounds plan with the
+    // fitted count
+    LoopConf.scoped(LoopConf.fitted(
+        LoopConf.partitionsForBytes(pos.sparkSession, nPos * 128L)),
+      Seq(pos)) { case Seq(pos) =>
     val n = nPos
     // the string key bins by its 2-codepoint prefix (monotone under
     // binary order). Round-0 ranks stay LAZY: they feed exactly one

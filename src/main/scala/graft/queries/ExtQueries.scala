@@ -2596,12 +2596,14 @@ object ExtQueries {
     // a 32-core session (0.94 s job). Lower the floor around the
     // build's EXECUTION (AQE reads conf at execution, so the scope must
     // wrap the materialization, not the lazy plan); inert at scale,
-    // where every partition exceeds any floor.
-    (s, d) => graft.operators.LoopConf.scopedCpuDense(s) {
+    // where every partition exceeds any floor. The shingle memo is read
+    // rebound to the scope's session, or the join plans with the
+    // caller's floor.
+    (s, d) => graft.operators.LoopConf.scoped(graft.operators.LoopConf.CpuDense,
+        Seq(docShingleBases(s, d))) { case Seq(bases) =>
       Dedup.materializeAndRelease(
         Dedup.prefixFilterJoin(
-          docShingleBases(s, d).select(col("doc_id"), col("b1").as("sh")),
-          PpjTNum, PpjTDen))
+          bases.select(col("doc_id"), col("b1").as("sh")), PpjTNum, PpjTDen))
     }
   }
 

@@ -100,10 +100,6 @@ object NioLocalFileSystem {
   /** Session conf key (Spark copies `spark.hadoop.*` into the Hadoop conf). */
   val ConfKey = "spark.hadoop.fs.file.impl"
 
-  /** `fs.file.impl` value for entrypoint sessions, honoring the
-    * `SPARK_GRAFT_NIO_LOCAL_FS=0` kill switch (stock Hadoop local FS). */
-  def implClassName: String =
-    if (sys.env.get("SPARK_GRAFT_NIO_LOCAL_FS").contains("0"))
-      classOf[LocalFileSystem].getName
-    else classOf[NioLocalFileSystem].getName
+  /** `fs.file.impl` value for entrypoint sessions. */
+  def implClassName: String = classOf[NioLocalFileSystem].getName
 }

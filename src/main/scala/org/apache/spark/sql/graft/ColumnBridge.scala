@@ -66,3 +66,12 @@ object DatasetBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }
+
+/** Same convention for `cloneSession`: a copy of a session whose
+  * `SQLConf`, catalog and registries are its own while the SparkContext
+  * and cache are shared — the only per-plan conf scope Spark has. */
+object SessionBridge {
+  def cloneSession(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+}
